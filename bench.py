@@ -11,7 +11,7 @@ BENCH_r03.json recorded ``"parsed": null``):
      "detail_file": "BENCH_DETAIL_LAST_RUN.json"}
 
 and writes the full per-query timing map (exact lane + approx lane +
-regression report) to ``BENCH_DETAIL_LAST_RUN.json`` next to this script
+floor-gate report) to ``BENCH_DETAIL_LAST_RUN.json`` next to this script
 (gitignored scratch; override with ``SPARK_GRAFT_BENCH_DETAIL``). The
 COMMITTED ``BENCH_DETAIL.json`` is written only by
 ``tools/bench_median.py`` — it is the detail of the median of n>=3 runs
@@ -19,17 +19,21 @@ with the fresh median evidence embedded — so a driver-initiated or ad-hoc
 bench run can never dirty or replace the committed evidence.
 
 Every query is forced with a FULL-EXECUTION action (a noop-sink write —
-``df.write.format("noop")``) as of round 14; results are never collected
-to the driver, so the timing measures the distributed plan, not driver
-materialization. The pre-r14 action was ``df.count()``, which Catalyst
-exploits to ELIMINATE cardinality-preserving Window/Sort operators — every
-committed window-lane wall before the r14 floor epoch is 1.2–2.4×
-optimistic (sticky note ``count_action_window_pruning``). Floor
-comparisons are ACTION-AWARE: epochs/records measured under one action
-never gate a run under the other (``SPARK_GRAFT_BENCH_ACTION=count``
-reproduces the legacy numbers). Every query is warm-run once at the smallest
-scale factor first, so whole-stage-codegen JIT compilation (seconds for the
-md5/SimHash expression trees) stays out of the timings; the cache is cleared
+``df.write.format("noop")``); results are never collected to the driver,
+so the timing measures the distributed plan, not driver materialization.
+(A ``df.count()`` action would let Catalyst ELIMINATE cardinality-preserving
+Window/Sort operators — sticky note ``count_action_window_pruning``.)
+
+One gate judges the run: every lane (exact and approx) is compared with
+its wall in the frozen floor epoch ``BENCH_FLOOR_r16.json`` and flagged
+when it runs >2x its floor AND >0.5 s slower. A single run's flags are
+PROVISIONAL — this host swings ±20–50 % day to day — and only
+``tools/bench_median.py`` confirms one (flagged in >=2 of n independent
+runs, and not also breached by the cross-tree control).
+
+Every query is warm-run once at the smallest scale factor first, so
+whole-stage-codegen JIT compilation (seconds for the md5/SimHash
+expression trees) stays out of the timings; the cache is cleared
 between queries so persisted intermediates (dedup shingle features) neither
 leak across queries nor accumulate. Engine-level memos that survive
 clearCache by design (the checkpoint-backed cluster-label memos —
@@ -64,56 +68,26 @@ from __spark_entry__ import queries  # noqa: E402
 # and this default is gitignored so no ad-hoc run can dirty the tree.
 DEFAULT_DETAIL_BASENAME = "BENCH_DETAIL_LAST_RUN.json"
 
+# The one bench action, recorded in every artifact's "action" field.
+ACTION = "noop"
+
+# The one floor epoch every run is judged against: the full registry and
+# the approx lanes at sf0.1 under the noop action, medians of n=3 runs on
+# the round-16 tree. The registry is frozen, so no later epoch is cut.
+FLOOR_FILE = "BENCH_FLOOR_r16.json"
+
 # Measured findings that explain counter-intuitive lane timings; emitted
 # into BENCH_DETAIL.json so they survive regeneration.
 _STICKY_NOTES = {
-    "r11_drift_adjudication": (
-        "VERDICT r11 watch item (uniform 1.137x driver-run drift, 127.0 s "
-        "vs the same-tree 109.5 s floor refresh): NOISE, not a code cause. "
-        "n=3 quiet round-12 reruns of the identical r11-registry tree at "
-        "sf0.1 measured totals 105.8 / 107.6 / (run 3 in BENCH_DETAIL) s — "
-        "all BELOW the r10-floor-epoch sum (frozen_headline_ratio 0.887 / "
-        "0.915, i.e. faster than the round-10 freeze), so the round-11 "
-        "persist-audit commits cost nothing at sf0.1. events_zorder_layout "
-        "(the worst driver reading, 1.71x floor at 2.55 s) re-measured "
-        "1.60 / 1.43 s vs its 1.49 s frozen floor — pure load noise in "
-        "the driver's n=1 capture."
-    ),
-
     "count_action_window_pruning": (
-        "FINDING (round 13): the bench action df.count() lets Catalyst "
+        "FINDING (round 13): a df.count() bench action lets Catalyst "
         "ELIMINATE Window and Sort operators (cardinality-preserving), so "
-        "every window lane's committed wall excludes its window exchange + "
-        "sort — user_running_totals' executed count plan has no Window "
-        "node at all. Measured bias at sf0.1 (warm, count vs noop-sink "
-        "full execution): user_daily_streaks 2.35x, user_interarrival_"
-        "stats 1.82x, user_running_totals 1.73x, source_dedup_trend "
-        "1.28x, lm_score_bucket_mix 1.20x; aggregate lanes 1.0x "
-        "(count cannot prune them). Correctness artifacts are unaffected "
-        "(the oracle collects real rows). MIGRATION EXECUTED in round 14: "
-        "the default action is now a noop-sink write (full execution); "
-        "BENCH_FLOOR_r14.json freezes the full registry under the noop "
-        "action (n=3 medians) WITH a same-tree single-run count bridge "
-        "block so the r10-r13 count-epoch numbers stay interpretable; "
-        "floor/regression gates are action-aware (count-measured records "
-        "never gate a noop run and vice versa); SCALE_STRESS and "
-        "SHUFFLE_BYTES were regenerated under the noop action in the "
-        "same pass. tests/test_plans.py::test_count_action_prunes_windows "
-        "pins the count phenomenon; "
-        "test_bench_noop_action_executes_window_nodes pins that the live "
-        "default executes Window nodes."
-    ),
-
-    "r13_host_drift": (
-        "Round-13 benches measure ~1.26x the r10 floor epoch UNIFORMLY "
-        "(totals 142-180 s vs r12's 127 s; frozen_headline_ratio ~1.26, "
-        "zero per-query frozen regressions). Adjudicated as HOST-DAY "
-        "drift, not a code cause, by the r12 playbook's strongest test: "
-        "the UNCHANGED round-12 final tree (commit 16f1b75) re-benched "
-        "on the same day measured 160.2 s vs its committed 127.0 s — "
-        "identical inflation with zero code delta. This is the second "
-        "documented ~20-25% host-day swing (r11 drift was the first); "
-        "cross-tree re-measurement is the standing adjudication method."
+        "a count-forced wall excludes the window exchange + sort. Measured "
+        "bias at sf0.1 (count vs noop-sink full execution): "
+        "user_daily_streaks 2.35x, user_interarrival_stats 1.82x, "
+        "user_running_totals 1.73x; aggregate lanes 1.0x. The bench action "
+        "is therefore a noop-sink write, as is the one floor epoch "
+        "(BENCH_FLOOR_r16.json); tests/test_plans.py pins both halves."
     ),
 
     "lm_bucket_mix_approx": (
@@ -155,45 +129,22 @@ _STICKY_NOTES = {
 }
 
 
-def _action() -> str:
-    """The bench action for this run: ``noop`` (default since round 14 —
-    full execution through a noop sink) or ``count`` (the pre-r14 legacy,
-    kept as an escape hatch for measuring against the old floor epochs).
-    Any other value is an error — a typo silently reverting the migration
-    would un-fix the window under-measure."""
-    a = os.getenv("SPARK_GRAFT_BENCH_ACTION", "noop")
-    if a not in ("noop", "count"):
-        raise SystemExit(f"SPARK_GRAFT_BENCH_ACTION must be noop|count, got {a!r}")
-    return a
-
-
 def _bench_action(df) -> None:
-    """Force a query for timing. Default is a noop-sink write — FULL plan
-    execution, every operator runs — because the previous default
-    ``count()`` let Catalyst eliminate cardinality-preserving Window (and
-    Sort) operators: the executed count plan of e.g. user_running_totals
-    contains NO Window node, so its wall excluded the window exchange +
-    sort entirely (measured at sf0.1 warm: noop walls are 1.2–2.4× the
-    count-pruned walls on window lanes; identical on aggregate lanes,
-    whose plans count() cannot prune).
-    tests/test_plans.py::test_count_action_prunes_windows pins the count
-    phenomenon; test_bench_noop_action_executes_window_nodes pins that
-    the noop action does NOT prune."""
-    if _action() == "count":
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    """Force a query for timing: a noop-sink write, so every operator
+    runs (count() would let Catalyst prune Window/Sort operators and
+    whole projections — tests/test_plans.py pins both the pruning and
+    that this action executes Window nodes)."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
     sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     # no sfN in the path -> sf is UNKNOWN (None), not 0.0: a coalesced 0.0
-    # would let two unrelated custom datasets "match" in the regression
-    # gate's sf check and compare floors across datasets
+    # would let an unrelated custom dataset "match" the floor gate's sf
+    # check and compare against the sf0.1 floors
     sf = float(m.group(1)) if m else None
 
-    action = _action()
     spark = get_test_spark("kafkastreamingetl_spark_bench")
     qs = queries()
 
@@ -295,14 +246,12 @@ def main() -> None:
     # the lane is re-timed immediately (model now hot) and the fit-polluted
     # first wall is recorded under fit["inline_fit_<name>"] instead — so
     # main-lane numbers are serving-only regardless of registry order.
-    from kafkastreamingetl_spark.operators import similarity as _sim
-
     timed_lane_fits: dict[str, list[str]] = {}
     for name, fn in qs.items():
         # clear persisted intermediates (e.g. dedup shingle features) so no
         # query benefits from a predecessor's cache and nothing accumulates
         spark.catalog.clearCache()
-        fit_mark = len(_sim._FIT_LOG)
+        fit_mark = len(sim._FIT_LOG)
         t0 = time.perf_counter()
         try:
             _bench_action(fn(spark, sf_dir))
@@ -310,8 +259,8 @@ def main() -> None:
             errors[name] = f"run: {type(e).__name__}: {e}"
             continue
         timings[name] = round(time.perf_counter() - t0, 4)
-        if len(_sim._FIT_LOG) > fit_mark:
-            kinds = [str(k[0]) for k in _sim._FIT_LOG[fit_mark:]]
+        if len(sim._FIT_LOG) > fit_mark:
+            kinds = [str(k[0]) for k in sim._FIT_LOG[fit_mark:]]
             timed_lane_fits[name] = kinds
             fit[f"inline_fit_{name}"] = timings[name]
             if read_io:
@@ -384,7 +333,7 @@ def main() -> None:
         "metric": "total_query_wall_sec",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "action": action,
+        "action": ACTION,
         "queries": timings,
         "sf": sf,
         "errors": errors,
@@ -395,54 +344,17 @@ def main() -> None:
         "io": io,
         "notes": _STICKY_NOTES,
     }
-    detail.update(_regression_report(timings, sf, action))
     detail.update(
         _frozen_floor_report(
-            timings, sf, {n: d["sec"] for n, d in approx.items()}, action
+            timings, sf, {n: d["sec"] for n, d in approx.items()}
         )
     )
 
-    # Noise adjudication IN the bench (VERDICT r13 item 2): a lane flagged
-    # by a single-run comparison is re-measured twice in-process, and the
-    # flag survives only if the lane breaches its threshold in >=2 of the
-    # 3 samples — this host's documented ±40% day swing made every r13
-    # single-run flag a phantom (driver/judge flag sets were disjoint
-    # across same-tree runs). Provisional flags keep their samples so the
-    # evidence trail survives.
-    approx_fns = dict(APPROX_VARIANTS)
-    confirm_errors: list[str] = []
-
-    def _remeasure(name: str) -> float | None:
-        fn = approx_fns.get(name) or qs.get(name)
-        if fn is None:
-            return None  # unknown lane: no sample, but not an error
-        # exceptions propagate: _confirm_flags counts them per-lane
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _bench_action(fn(spark, sf_dir))
-        return round(time.perf_counter() - t0, 4)
-
-    for key, floor_field, min_slip in (
-        ("regressions", "floor", 1.0),
-        ("frozen_regressions", "frozen_floor", 0.5),
-    ):
-        confirmed, provisional, cerrs = _confirm_flags(
-            detail.get(key, {}), floor_field, min_slip, _remeasure
-        )
-        detail[key] = confirmed
-        if provisional:
-            detail[f"{key}_provisional"] = provisional
-        confirm_errors.extend(cerrs)
-    detail["n_confirm_errors"] = len(confirm_errors)
-    if confirm_errors:
-        detail["confirm_errors"] = confirm_errors
-
     # Median evidence (committed by tools/bench_median.py): when a
-    # matching-(sf, action) BENCH_MEDIAN.json exists, its headline median,
-    # run count and cross-tree control ride along in the detail + summary
-    # so the driver's single-run capture still carries the drift-proof
-    # numbers the gates read.
-    median = _median_evidence(sf, action)
+    # matching-sf BENCH_MEDIAN.json exists, its headline median, run count
+    # and cross-tree control ride along in the detail + summary so the
+    # driver's single-run capture still carries the drift-proof numbers.
+    median = _median_evidence(sf)
     if median:
         detail["median_evidence"] = median
 
@@ -458,60 +370,7 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
 
-    # Compact summary line: keeps the machine-readable contract keys but
-    # bounds the line length so the driver's tail capture can always parse
-    # it; the full map lives in the detail file. The reported `queries`
-    # map is the union of (a) this run's slowest 5 and (b) a STABLE set —
-    # the 12 slowest lanes by the committed per-lane medians (VERDICT r15
-    # item 5: the driver benches at two core counts and intersects the two
-    # runs' `queries` maps to compute per-lane scaling; two top-5-by-this-
-    # run sets rarely intersect, so scaling.per_query came back empty.
-    # The median-derived set is identical across runs of one tree, so the
-    # intersection now carries >= 12 lanes). Additions only: the slowest-5
-    # contract keys are still present, names are never renamed.
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
-    )
-    stable = {}
-    if median and median.get("per_query_median"):
-        stable = {
-            name: timings[name]
-            for name, _ in sorted(
-                median["per_query_median"].items(),
-                key=lambda kv: kv[1],
-                reverse=True,
-            )[:12]
-            if name in timings
-        }
-    slowest = {**stable, **slowest}
-    summary = {
-        "metric": "total_query_wall_sec",
-        "value": detail["value"],
-        "unit": "sec",
-        "sf": sf,
-        "action": action,
-        "n_queries": len(timings),
-        "queries": slowest,
-        "detail_file": os.path.basename(detail_path),
-        "baseline_round": detail.get("baseline_round"),
-        "n_regressions": len(detail.get("regressions", {})),
-        "frozen_floor_round": detail.get("frozen_floor_round"),
-        "frozen_headline_ratio": detail.get("frozen_headline_ratio"),
-        "n_frozen_regressions": len(detail.get("frozen_regressions", {})),
-        "n_provisional_flags": len(detail.get("regressions_provisional", {}))
-        + len(detail.get("frozen_regressions_provisional", {})),
-        "n_timed_lane_fits": len(timed_lane_fits),
-        "n_confirm_errors": len(confirm_errors),
-        "n_errors": len(errors),
-        "n_approx": len(approx),
-    }
-    if median:
-        summary["headline_median"] = median.get("headline_median")
-        summary["median_n"] = median.get("n")
-        summary["cross_tree_ratio"] = (median.get("cross_tree") or {}).get(
-            "ratio"
-        )
-    print(json.dumps(summary))
+    print(json.dumps(_summary(detail, median, os.path.basename(detail_path))))
     spark.stop()
 
 
@@ -562,226 +421,126 @@ def _stage_io_reader(spark):
     return read_new
 
 
-def _regression_report(
-    timings: dict[str, float], sf: float, action: str = "noop"
-) -> dict:
-    """Round-over-round regression gate: compare per-query times against the
-    newest prior round's recorded bench at the SAME scale factor AND the
-    same bench action (records predating the r14 action migration carry no
-    "action" key and default to "count" — a count-pruned window wall must
-    never serve as the floor for a full-execution run, or every window
-    lane would flag spuriously on the first noop round). A query is
-    flagged when it runs > 2x its floor AND slipped by > 1.0 s absolute:
-    identical plans measure ±0.2 s run-to-run warm and up to ~2x under
-    machine load (observed: a loaded run flagged three unchanged
-    sub-second queries a clean rerun cleared), so a ratio alone flags
-    noise at sub-second magnitudes — only a multi-second slip evidences a
-    plan change. Extra keys ride along on the single JSON line; the
-    driver's contract keys are untouched.
-    """
-    here = os.path.dirname(os.path.abspath(__file__))
-    if sf is None:
-        # unknown dataset: no floor comparison is meaningful
-        return {"baseline_round": None, "regressions": {}}
-    floors: dict[str, float] = {}
-    base_round = None
-    # Floor-base preference order (most robust first): the committed
-    # BENCH_MEDIAN.json per-query medians (n>=3 runs — immune to the
-    # single fast/slow hour the last detail rewrite happened to land in),
-    # then the committed BENCH_DETAIL.json single-run map, then the
-    # newest driver-captured BENCH_r*.json. All action-gated.
-    med = _median_evidence(sf, action)
-    if med and med.get("per_query_median"):
-        return {
-            "baseline_round": "committed-median",
-            "regressions": _flag(timings, dict(med["per_query_median"])),
+def _summary(detail: dict, median: dict | None, detail_file: str) -> dict:
+    """The compact summary line: the contract keys at a bounded length so
+    the driver's tail capture can always parse it. `queries` is this
+    run's slowest 5 plus a STABLE set, the 12 slowest lanes by the
+    committed per-lane medians (VERDICT r15 item 5: the driver intersects
+    two runs' `queries` maps for per-lane scaling, and two top-5 sets
+    rarely intersect). The gate keys all derive from the one floor gate:
+    every single-run flag counts as a regression, a frozen regression and
+    a provisional flag alike (only tools/bench_median.py confirms), and
+    nothing is re-measured in-process, so ``n_confirm_errors`` is 0."""
+    timings = detail["queries"]
+    slowest = dict(
+        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
+    )
+    stable = {}
+    if median and median.get("per_query_median"):
+        stable = {
+            name: timings[name]
+            for name, _ in sorted(
+                median["per_query_median"].items(),
+                key=lambda kv: kv[1],
+                reverse=True,
+            )[:12]
+            if name in timings
         }
-    # The committed BENCH_DETAIL.json from the previous round carries the
-    # full per-query map and is always newer than any driver-captured
-    # BENCH_r*.json (it is rewritten at the end of every round) — when it
-    # matches this run's sf, it IS the floor base; the BENCH_r scan below
-    # is the fallback for a missing/mismatched detail file. (Letting old
-    # driver rounds override the detail file compared this round against
-    # floors several rounds stale.)
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            prior = json.load(f)
-        if (
-            prior.get("sf") == sf
-            and prior.get("action", "count") == action
-            and "queries" in prior
-        ):
-            return {
-                "baseline_round": "committed-detail",
-                "regressions": _flag(timings, dict(prior["queries"])),
-            }
-    except (OSError, json.JSONDecodeError):
-        pass
-    for fname in sorted(os.listdir(here)):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fname)
-        if not m:
-            continue
-        try:
-            with open(os.path.join(here, fname)) as f:
-                parsed = json.load(f).get("parsed")
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not parsed or parsed.get("sf") != sf or "queries" not in parsed:
-            continue
-        if parsed.get("action", "count") != action:
-            continue
-        if base_round is None or int(m.group(1)) > base_round:
-            base_round = int(m.group(1))
-            floors = parsed["queries"]
-    if base_round is None:
-        return {"baseline_round": None, "regressions": {}}
-    return {"baseline_round": base_round, "regressions": _flag(timings, floors)}
+    n_flags = len(detail.get("frozen_regressions", {}))
+    summary = {
+        "metric": "total_query_wall_sec",
+        "value": detail["value"],
+        "unit": "sec",
+        "sf": detail["sf"],
+        "action": detail["action"],
+        "n_queries": len(timings),
+        "queries": {**stable, **slowest},
+        "detail_file": detail_file,
+        "baseline_round": detail.get("frozen_floor_round"),
+        "n_regressions": n_flags,
+        "frozen_floor_round": detail.get("frozen_floor_round"),
+        "frozen_headline_ratio": detail.get("frozen_headline_ratio"),
+        "n_frozen_regressions": n_flags,
+        "n_provisional_flags": n_flags,
+        "n_timed_lane_fits": len(detail["timed_lane_fits"]),
+        "n_confirm_errors": 0,
+        "n_errors": len(detail["errors"]),
+        "n_approx": len(detail["approx"]),
+    }
+    if median:
+        summary["headline_median"] = median.get("headline_median")
+        summary["median_n"] = median.get("n")
+        summary["cross_tree_ratio"] = (median.get("cross_tree") or {}).get(
+            "ratio"
+        )
+    return summary
 
 
 def _frozen_floor_report(
     timings: dict[str, float],
-    sf: float,
-    approx_secs: dict[str, float] | None = None,
-    action: str = "noop",
+    sf: float | None,
+    approx_secs: dict[str, float],
 ) -> dict:
-    """Anti-creep gate (VERDICT r10 item 4): the per-round floor refresh
-    only proves "no regression vs LAST round", so a slow multi-round creep
-    would never trip it. BENCH_FLOOR_r{N}.json files freeze per-epoch
-    sf0.1 walls and are NEVER regenerated; every later round's bench
-    compares against ALL of them (r10 = the PLANS.md headline set; r11 =
-    the round-11 sketch lanes, which live in the approx lane and were
-    invisible to the r10 freeze — VERDICT r11 item 7). Flag rule matches
-    the per-round gate's noise analysis (>2x AND >0.5 s absolute — the
-    headline floors start at 0.3 s where a bare ratio flags timer noise);
-    the aggregate ``frozen_headline_ratio`` (sum now / sum frozen, oldest
-    matching epoch — the longest lever) is the creep-proof single number.
-    Epochs are ACTION-AWARE (r14 migration): a file whose ``action``
-    (absent = the pre-r14 "count") differs from this run's action is
-    skipped entirely — count-pruned window walls are 1.2–2.4× lower than
-    full-execution walls, so cross-action comparison would flag phantom
-    regressions on every window lane. Under the noop default the headline
-    therefore pins to the r14 epoch; BENCH_FLOOR_r14.json's count-action
-    bridge block links it to the r10–r13 count history.
-    Reported, not raised: a nonzero bench exit loses the whole round's
-    numbers (round-5 lesson)."""
+    """The bench gate: this run's exact and approx lanes against the one
+    frozen floor epoch (``FLOOR_FILE``). Frozen floors are never
+    regenerated, so a slow multi-round creep still trips the gate, and
+    ``frozen_headline_ratio`` (sum now / sum frozen over the shared exact
+    lanes) is the creep-proof single number. Returns {} when the epoch is
+    missing or measured at another scale factor. Reported, not raised: a
+    nonzero bench exit loses the whole round's numbers (round-5 lesson)."""
     here = os.path.dirname(os.path.abspath(__file__))
     if sf is None:
         return {}
-    approx_secs = approx_secs or {}
-    flagged: dict[str, dict] = {}
-    rounds: list[int] = []
-    ratio = None
-    headline_round = None
-    for fname in sorted(os.listdir(here)):
-        if not re.fullmatch(r"BENCH_FLOOR_r(\d+)\.json", fname):
-            continue
-        try:
-            with open(os.path.join(here, fname)) as f:
-                frozen = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if frozen.get("sf") != sf:
-            continue
-        if frozen.get("action", "count") != action:
-            continue
-        rnd = frozen.get("frozen_at_round")
-        rounds.append(rnd)
-        for lane in ("queries", "approx"):
-            floors = frozen.get(lane, {})
-            now = timings if lane == "queries" else approx_secs
-            shared = {n: t for n, t in now.items() if n in floors}
-            for name, t in shared.items():
-                if t > 2 * floors[name] and t - floors[name] > 0.5:
-                    flagged[name] = {"now": t, "frozen_floor": floors[name]}
-            if lane == "queries" and shared and (
-                headline_round is None or rnd < headline_round
-            ):
-                # headline ratio pins to the OLDEST epoch: longest lever
-                headline_round = rnd
-                ratio = round(
-                    sum(shared.values()) / sum(floors[n] for n in shared), 4
-                )
-    if not rounds:
+    try:
+        with open(os.path.join(here, FLOOR_FILE)) as f:
+            frozen = json.load(f)
+    except (OSError, json.JSONDecodeError):
         return {}
+    if frozen.get("sf") != sf:
+        return {}
+    floors = frozen.get("queries", {})
+    shared = [n for n in timings if n in floors]
+    ratio = None
+    if shared:
+        ratio = round(
+            sum(timings[n] for n in shared) / sum(floors[n] for n in shared), 4
+        )
     return {
-        "frozen_floor_round": headline_round,
-        "frozen_floor_rounds": sorted(rounds),
+        "frozen_floor_round": frozen.get("frozen_at_round"),
         "frozen_headline_ratio": ratio,
-        "frozen_regressions": flagged,
+        "frozen_regressions": {
+            **_flag(timings, floors),
+            **_flag(approx_secs, frozen.get("approx", {})),
+        },
     }
 
 
-def _confirm_flags(
-    flagged: dict[str, dict],
-    floor_field: str,
-    min_slip: float,
-    remeasure,
-) -> tuple[dict, dict, list[str]]:
-    """Split single-run flags into (confirmed, provisional) by re-measuring
-    each flagged lane twice via ``remeasure(name) -> sec | None`` and
-    keeping the flag only when >=2 of the 3 samples breach the gate's own
-    threshold (>2x floor AND >min_slip s absolute). VERDICT r13 item 2:
-    on a host with a measured ±40% day swing, single-run flag sets were
-    DISJOINT across same-tree runs — every r13 flag was noise — so a flag
-    that doesn't reproduce is evidence of the host, not the code. All
-    samples are recorded on both branches so the adjudication trail is in
-    the artifact, not a narrative.
-
-    A ``remeasure`` call that RAISES contributes no sample (a crash
-    confirms nothing) but is counted in the returned ``confirm_errors``
-    list (VERDICT r14 #3): a lane whose confirmation re-measure crashes
-    must not silently become unconfirmable — the counter is emitted into
-    the detail and summary so the gap is visible in the artifact."""
-    confirmed: dict[str, dict] = {}
-    provisional: dict[str, dict] = {}
-    confirm_errors: list[str] = []
-    for name, info in flagged.items():
-        floor = info[floor_field]
-        samples = [info["now"]]
-        for _ in range(2):
-            try:
-                t = remeasure(name)
-            except Exception:  # noqa: BLE001 — counted, not silenced
-                confirm_errors.append(name)
-                t = None
-            if t is not None:
-                samples.append(t)
-        breaches = sum(
-            1 for t in samples if t > 2 * floor and t - floor > min_slip
-        )
-        entry = {**info, "samples": samples, "breaches": breaches}
-        if breaches >= 2 and len(samples) >= 2:
-            confirmed[name] = entry
-        else:
-            provisional[name] = entry
-    return confirmed, provisional, confirm_errors
-
-
-def _median_evidence(sf: float, action: str) -> dict | None:
+def _median_evidence(sf: float | None) -> dict | None:
     """The committed BENCH_MEDIAN.json (tools/bench_median.py: median of
     n>=3 full bench runs + a cross-tree control re-benching the previous
-    round's final tree), surfaced into this run's detail/summary when its
-    (sf, action) matches — so the driver's single-run capture still
-    carries the drift-proof numbers."""
+    round's final tree), surfaced into this run's detail/summary when it
+    was measured at this run's sf under the bench action — so the
+    driver's single-run capture still carries the drift-proof numbers."""
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here, "BENCH_MEDIAN.json")) as f:
             med = json.load(f)
     except (OSError, json.JSONDecodeError):
         return None
-    if med.get("sf") != sf or med.get("action", "count") != action:
+    if med.get("sf") != sf or med.get("action") != ACTION:
         return None
     return med
 
 
-def _flag(timings: dict[str, float], floors: dict[str, float]) -> dict:
+def _flag(now: dict[str, float], floors: dict[str, float]) -> dict:
+    """The one flag rule: a lane runs >2x its floor AND >0.5 s slower.
+    Identical plans measure ±0.2 s run-to-run warm and up to ~2x under
+    machine load, so a bare ratio flags timer noise at sub-second floors;
+    the absolute slip keeps those out."""
     return {
-        name: {"now": t, "floor": floors[name]}
-        for name, t in timings.items()
-        if name in floors
-        and floors[name] >= 0.1
-        and t > 2 * floors[name]
-        and t - floors[name] > 1.0
+        name: {"now": t, "frozen_floor": floors[name]}
+        for name, t in now.items()
+        if name in floors and t > 2 * floors[name] and t - floors[name] > 0.5
     }
 
 

@@ -86,6 +86,15 @@ from pyspark.sql import functions as F
 # come from actual row positions); it only sets balance.
 _FALLBACK_RANK_PARTITIONS = 200
 
+# Most range partitions exact_ntile_cuts derives bounds for, whatever the
+# shuffle width. Its partition id is an unrolled sum of one CASE per
+# bound; thousands of terms overflow the SQL parser and the 64 KB
+# generated-method limit (whole-stage codegen then falls back to the
+# interpreted path; an interpreted form of this sum measured ~5 s at
+# sf0.1 in r16). Exactness never depends on the bound count, only
+# balance does.
+_MAX_CUT_PARTITIONS = 256
+
 # approx_percentile accuracy for the bounds job: affects balance only.
 _BOUNDS_ACCURACY = 10000
 
@@ -135,11 +144,16 @@ def _key_and_ordering(
     when the leading column was given by name — used to render the
     partition-id expression as ONE codegen-friendly parse — and the full
     sort-order list). String leading keys ride an ORDER-PRESERVING 7-byte
-    binary-prefix proxy (UTF-8 byte order equals code-point order, and a
-    prefix can only compare <=, never flip), so partition boundaries
-    still respect the true string order; ties within a proxy value share
-    a partition and are resolved by the in-partition sort on the real
-    column."""
+    binary-prefix proxy: the first 7 UTF-8 bytes, right-padded with
+    x'00' to exactly 7, read as one big-endian integer. UTF-8 byte order
+    equals code-point order, and the padding makes every proxy the same
+    width, so a shorter string compares as if followed by NUL bytes —
+    'az' (0x617A00...) stays below 'b' (0x620000...), where the unpadded
+    bytes would read 0x617A > 0x62. Order is therefore non-decreasing
+    (strings sharing a 7-byte prefix, and '' vs NULL, tie at one proxy
+    value), so partition boundaries respect the true string order; ties
+    within a proxy value share a partition and are resolved by the
+    in-partition sort on the real column."""
     ordering = [
         F.col(c).asc_nulls_first() if isinstance(c, str) else c
         for c in order_cols
@@ -164,19 +178,19 @@ def _key_and_ordering(
         sql = f"unix_date(`{lead}`)" if named else None
         return F.unix_date(lead_col), sql, ordering
     if dtype == "string":
-        # big-endian value of the first 7 UTF-8 bytes: non-negative,
-        # fits a signed bigint, monotone in the string order
+        # big-endian value of the first 7 UTF-8 bytes, zero-padded to 7:
+        # non-negative, fits a signed bigint, monotone in the string order
         sql = (
-            "coalesce(cast(conv(hex(substring(encode(`"
-            f"{lead}`, 'UTF-8'), 1, 7)), 16, 10) as bigint), 0)"
+            "coalesce(cast(conv(hex(rpad(substring(encode(`"
+            f"{lead}`, 'UTF-8'), 1, 7), 7, x'00')), 16, 10) as bigint), 0)"
             if named
             else None
         )
+        prefix = F.rpad(
+            F.substring(F.encode(lead_col, "UTF-8"), 1, 7), 7, F.lit(b"\x00")
+        )
         proxy = F.coalesce(
-            F.conv(
-                F.hex(F.substring(F.encode(lead_col, "UTF-8"), 1, 7)), 16, 10
-            ).cast("bigint"),
-            F.lit(0),
+            F.conv(F.hex(prefix), 16, 10).cast("bigint"), F.lit(0)
         )
         return proxy, sql, ordering
     raise ValueError(
@@ -217,6 +231,25 @@ def _pid_expr(key: Column, key_sql: str | None, bounds: list) -> Column:
     return pid
 
 
+def _partition_counts(base: DataFrame, pids: list[Column]) -> DataFrame:
+    """(d, p, c): row count of range partition ``p`` of cut ``d``, for
+    every cut in one melt (explode of (cut, pid) structs) + one tiny
+    groupBy — at most cuts × width result rows."""
+    melt = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(d).alias("d"), pid.cast("int").alias("p"))
+                for d, pid in enumerate(pids)
+            ]
+        )
+    ).alias("_dp")
+    return (
+        base.select(melt)
+        .groupBy(F.col("_dp.d").alias("d"), F.col("_dp.p").alias("p"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 def exact_ntile_cuts(
     df: DataFrame,
     cuts: list[tuple[int, list, str]],
@@ -226,7 +259,9 @@ def exact_ntile_cuts(
     """``df`` plus one INT bucket column per ``(n, order_cols,
     bucket_col)`` cut, each equal to ``ntile(n) OVER (ORDER BY order_cols
     ASC NULLS FIRST)`` — all cuts sharing ONE persisted base, ONE bounds
-    job and ONE exact-counts job (see module docstring)."""
+    job and ONE exact-counts job (see module docstring). The cut uses at
+    most ``_MAX_CUT_PARTITIONS`` range partitions, whatever
+    ``num_partitions`` asks for."""
     global last_width
     if any(c in df.columns for c in _HELPER_COLS):
         raise ValueError(f"input must not contain helper columns {_HELPER_COLS}")
@@ -237,6 +272,7 @@ def exact_ntile_cuts(
             )
         except (TypeError, ValueError):
             num_partitions = _FALLBACK_RANK_PARTITIONS
+    num_partitions = min(num_partitions, _MAX_CUT_PARTITIONS)
     last_width = num_partitions
 
     base = _persisted_base(df)
@@ -270,32 +306,15 @@ def exact_ntile_cuts(
         _pid_expr(k, s, b) for k, s, b in zip(keys, key_sqls, bounds)
     ]
 
-    # Job 2: EXACT per-partition counts for every cut in one melt
-    # (explode of (cut, pid) structs) + one tiny groupBy — at most
-    # cuts × width result rows collected. The counts become LITERAL rank
-    # offsets, so the returned plan is LINEAR: no offsets branch, no
-    # broadcast join, no materialization barrier. Fork-free by
-    # construction: the only consumers of the partition assignment are
-    # this collected aggregate and the window, and both evaluate the
-    # same deterministic expression over literal bounds.
-    melt = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("d"), pid.cast("int").alias("p")
-                )
-                for d, pid in enumerate(pids)
-            ]
-        )
-    ).alias("_dp")
-    cnt_rows = (
-        base.select(melt)
-        .groupBy(F.col("_dp.d").alias("d"), F.col("_dp.p").alias("p"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
+    # Job 2: EXACT per-partition counts for every cut (see
+    # _partition_counts). The counts become LITERAL rank offsets, so the
+    # returned plan is LINEAR: no offsets branch, no broadcast join, no
+    # materialization barrier. Fork-free by construction: the only
+    # consumers of the partition assignment are this collected aggregate
+    # and the window, and both evaluate the same deterministic expression
+    # over literal bounds.
     cnt: dict[tuple[int, int], int] = {
-        (r["d"], r["p"]): r["c"] for r in cnt_rows
+        (r["d"], r["p"]): r["c"] for r in _partition_counts(base, pids).collect()
     }
     total = sum(c for (d, _), c in cnt.items() if d == 0)
 

@@ -2356,6 +2356,8 @@ def embedding_covariance(
                             .quantize(q4, ROUND_HALF_UP)
                             .scaleb(4)
                         )
+        if n == 0:
+            return  # a task that saw no rows adds no cells
         rows = [
             (
                 i + 1,

@@ -1,6 +1,7 @@
-"""The bench's frozen-floor anti-creep gate: multi-epoch floor files
-(BENCH_FLOOR_r*.json), approx-lane coverage, and the flag rule. Pure
-function tests — no Spark session."""
+"""The one bench gate: every lane against the r16 floor epoch
+(BENCH_FLOOR_r16.json) with one flag rule, the summary keys derived from
+it, and tools/bench_median.py as the only adjudicator (>=2-of-n majority
+plus the cross-tree control). Pure function tests — no Spark session."""
 
 from __future__ import annotations
 
@@ -22,34 +23,44 @@ def _bench_module():
     return mod
 
 
-def _write_floor(
-    tmp_path, rnd, queries=None, approx=None, sf=0.1, action="noop"
-):
-    payload = {"frozen_at_round": rnd, "sf": sf, "queries": queries or {}}
-    if action is not None:  # None = simulate a pre-r14 file with no key
-        payload["action"] = action
+def _bench_median_module():
+    spec = importlib.util.spec_from_file_location(
+        "bench_median_under_test", os.path.join(REPO, "tools", "bench_median.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _write_floor(tmp_path, rnd, queries=None, approx=None, sf=0.1):
+    payload = {"frozen_at_round": rnd, "sf": sf, "action": "noop",
+               "queries": queries or {}}
     if approx is not None:
         payload["approx"] = approx
     with open(tmp_path / f"BENCH_FLOOR_r{rnd}.json", "w") as f:
         json.dump(payload, f)
 
 
-def test_multi_epoch_floors_merge_and_headline_pins_oldest(tmp_path, monkeypatch):
+def test_frozen_floor_report_reads_the_r16_epoch_only(tmp_path, monkeypatch):
     bench = _bench_module()
     monkeypatch.setattr(
         os.path, "dirname", lambda p: str(tmp_path), raising=True
     )
-    _write_floor(tmp_path, 10, queries={"q_old": 1.0, "q_shared": 2.0})
-    _write_floor(tmp_path, 11, queries={"q_new": 1.0}, approx={"a_sketch": 0.5})
+    # an older epoch lying around must not take part: q_shared would flag
+    # against its 0.5 s floor
+    _write_floor(tmp_path, 10, queries={"q_shared": 0.5})
+    _write_floor(
+        tmp_path, 16, queries={"q_old": 1.0, "q_shared": 2.0, "q_new": 1.0},
+        approx={"a_sketch": 0.5},
+    )
     timings = {"q_old": 1.1, "q_shared": 1.9, "q_new": 3.0}  # q_new: >2x, >0.5s
     approx = {"a_sketch": 2.0}  # >2x and >0.5s over its 0.5 floor
     rep = bench._frozen_floor_report(timings, 0.1, approx)
-    assert rep["frozen_floor_rounds"] == [10, 11]
-    # headline ratio pins to the OLDEST epoch (longest lever): r10 only
-    assert rep["frozen_floor_round"] == 10
-    assert rep["frozen_headline_ratio"] == round((1.1 + 1.9) / 3.0, 4)
-    # flags from BOTH epochs and BOTH lanes
+    assert rep["frozen_floor_round"] == 16
+    assert rep["frozen_headline_ratio"] == round(6.0 / 4.0, 4)
+    # flags from BOTH lanes, same rule
     assert set(rep["frozen_regressions"]) == {"q_new", "a_sketch"}
+    assert rep["frozen_regressions"]["q_new"] == {"now": 3.0, "frozen_floor": 1.0}
 
 
 def test_flag_rule_requires_ratio_and_absolute_slip(tmp_path, monkeypatch):
@@ -57,10 +68,14 @@ def test_flag_rule_requires_ratio_and_absolute_slip(tmp_path, monkeypatch):
     monkeypatch.setattr(
         os.path, "dirname", lambda p: str(tmp_path), raising=True
     )
-    _write_floor(tmp_path, 10, queries={"fast": 0.1, "slow": 5.0})
+    _write_floor(
+        tmp_path, 16, queries={"fast": 0.1, "slow": 5.0}, approx={"a": 0.1}
+    )
     # fast: 3x ratio but only 0.2s absolute -> noise, not flagged;
-    # slow: +4s absolute but <2x ratio -> not flagged
-    rep = bench._frozen_floor_report({"fast": 0.3, "slow": 9.0}, 0.1, {})
+    # slow: +4s absolute but <2x ratio -> not flagged; approx alike
+    rep = bench._frozen_floor_report(
+        {"fast": 0.3, "slow": 9.0}, 0.1, {"a": 0.55}
+    )
     assert rep["frozen_regressions"] == {}
 
 
@@ -70,93 +85,66 @@ def test_sf_mismatch_and_missing_files_degrade_to_empty(tmp_path, monkeypatch):
         os.path, "dirname", lambda p: str(tmp_path), raising=True
     )
     assert bench._frozen_floor_report({"q": 1.0}, 0.1, {}) == {}
-    _write_floor(tmp_path, 10, queries={"q": 1.0}, sf=0.01)
+    _write_floor(tmp_path, 16, queries={"q": 1.0}, sf=0.01)
     assert bench._frozen_floor_report({"q": 9.0}, 0.1, {}) == {}
     assert bench._frozen_floor_report({"q": 9.0}, None, {}) == {}
 
 
-def test_floor_epochs_are_action_aware(tmp_path, monkeypatch):
-    """The r14 migration's bridge rule: a count-measured epoch must never
-    gate a noop (full-execution) run — count-pruned window walls are
-    1.2–2.4× lower, so cross-action comparison flags phantom regressions
-    on every window lane. Files with NO action key are pre-r14 = count."""
+def test_majority_rule_confirms_two_of_n_runs():
+    """tools/bench_median.py is the only adjudicator: a lane is confirmed
+    only when >=2 of the n independent runs flag it (r13: single-run flag
+    sets were disjoint across same-tree runs, all noise). The samples
+    ride along; a lane flagged once stays unconfirmed at any n."""
+    bm = _bench_median_module()
+    flag = {"now": 3.0, "frozen_floor": 1.0}
+    samples = {"a": [3.0, 2.9, 1.0], "b": [3.1, 1.0, 1.1]}
+    runs = [{"a": flag, "b": flag}, {"a": flag}, {}]
+    got = bm.confirm_flags(runs, samples)
+    assert got == {
+        "a": {"runs_flagged": 2, "of_runs": 3, "samples": [3.0, 2.9, 1.0]}
+    }
+    # n=5: 2 of 5 confirms, 1 of 5 does not
+    runs5 = [{"a": flag}, {}, {}, {"a": flag, "b": flag}, {}]
+    assert set(bm.confirm_flags(runs5, samples)) == {"a"}
+    assert bm.confirm_flags(runs5, samples)["a"]["of_runs"] == 5
+    assert bm.confirm_flags([{}, {}, {}], samples) == {}
+
+
+# The summary line's keys before the bench gates were collapsed into one;
+# the driver and the round tools read them, so every one must survive.
+_SUMMARY_KEYS = {
+    "metric", "value", "unit", "sf", "action", "n_queries", "queries",
+    "detail_file", "baseline_round", "n_regressions", "frozen_floor_round",
+    "frozen_headline_ratio", "n_frozen_regressions", "n_provisional_flags",
+    "n_timed_lane_fits", "n_confirm_errors", "n_errors", "n_approx",
+}
+
+
+def test_summary_carries_every_contract_key():
+    """Every pre-existing summary key is still emitted, derived from the
+    one floor gate: single-run flags count as regressions, frozen
+    regressions and provisional flags alike, and n_confirm_errors is 0
+    (nothing is re-measured in-process)."""
     bench = _bench_module()
-    monkeypatch.setattr(
-        os.path, "dirname", lambda p: str(tmp_path), raising=True
-    )
-    _write_floor(tmp_path, 10, queries={"q": 1.0}, action=None)  # pre-r14
-    _write_floor(tmp_path, 13, queries={"q": 1.1}, action="count")
-    _write_floor(tmp_path, 14, queries={"q": 1.5}, action="noop")
-    # noop run: only the r14 noop epoch participates
-    rep = bench._frozen_floor_report({"q": 4.0}, 0.1, {}, "noop")
-    assert rep["frozen_floor_rounds"] == [14]
-    assert rep["frozen_floor_round"] == 14
-    assert rep["frozen_headline_ratio"] == round(4.0 / 1.5, 4)
-    # count run: the two count epochs participate, headline pins oldest
-    rep = bench._frozen_floor_report({"q": 4.0}, 0.1, {}, "count")
-    assert rep["frozen_floor_rounds"] == [10, 13]
-    assert rep["frozen_floor_round"] == 10
-
-
-def test_confirm_flags_requires_two_of_three_breaches():
-    """VERDICT r13 item 2: single-run flag sets were disjoint across
-    same-tree runs (all noise), so a flag is only recorded after the lane
-    re-measures slow in >=2 of 3 samples; failed/None re-measures confirm
-    nothing; the samples ride along on both branches."""
-    bench = _bench_module()
-    flags = {"a": {"now": 3.0, "frozen_floor": 1.0}}
-    conf, prov, cerrs = bench._confirm_flags(
-        flags, "frozen_floor", 0.5, lambda n: 2.9
-    )
-    assert set(conf) == {"a"} and conf["a"]["breaches"] == 3
-    assert conf["a"]["samples"] == [3.0, 2.9, 2.9]
-    assert cerrs == []
-    # re-measures come back fast -> host hiccup, provisional only
-    conf, prov, cerrs = bench._confirm_flags(
-        flags, "frozen_floor", 0.5, lambda n: 1.05
-    )
-    assert conf == {} and set(prov) == {"a"} and prov["a"]["breaches"] == 1
-    # re-measure unavailable (unknown lane) -> cannot confirm, NOT an error
-    conf, prov, cerrs = bench._confirm_flags(
-        flags, "frozen_floor", 0.5, lambda n: None
-    )
-    assert conf == {} and set(prov) == {"a"} and cerrs == []
-
-
-def test_confirm_flags_counts_crashed_remeasures():
-    """VERDICT r14 #3: a re-measure that CRASHES contributes no breach
-    (it confirms nothing) but must not vanish — it is counted per attempt
-    in the returned confirm_errors list, which bench.py emits as
-    n_confirm_errors in the detail and summary, so a regression whose
-    confirmation crashed is visible in the artifact, not silently
-    unconfirmed."""
-    bench = _bench_module()
-    flags = {"a": {"now": 3.0, "frozen_floor": 1.0}}
-
-    def _boom(name):
-        raise RuntimeError("executor lost")
-
-    conf, prov, cerrs = bench._confirm_flags(flags, "frozen_floor", 0.5, _boom)
-    # only the single-run sample remains -> flag cannot confirm
-    assert conf == {} and set(prov) == {"a"}
-    assert prov["a"]["samples"] == [3.0]
-    assert cerrs == ["a", "a"]  # both re-measure attempts crashed
-
-    # mixed: first attempt crashes, second breaches -> 2 of 2 samples
-    # breach, flag confirms, and the crash is still counted
-    calls = {"n": 0}
-
-    def _flaky(name):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("transient")
-        return 2.9
-
-    conf, prov, cerrs = bench._confirm_flags(
-        flags, "frozen_floor", 0.5, _flaky
-    )
-    assert set(conf) == {"a"} and conf["a"]["samples"] == [3.0, 2.9]
-    assert cerrs == ["a"]
+    detail = {
+        "value": 5.0, "sf": 0.1, "action": "noop",
+        "queries": {"q": 4.0, "r": 1.0}, "errors": {}, "approx": {},
+        "timed_lane_fits": {}, "frozen_floor_round": 16,
+        "frozen_headline_ratio": 1.25,
+        "frozen_regressions": {"q": {"now": 4.0, "frozen_floor": 1.0}},
+    }
+    s = bench._summary(detail, None, "BENCH_DETAIL_LAST_RUN.json")
+    assert set(s) == _SUMMARY_KEYS
+    assert s["baseline_round"] == s["frozen_floor_round"] == 16
+    assert s["n_regressions"] == s["n_frozen_regressions"] == 1
+    assert s["n_provisional_flags"] == 1 and s["n_confirm_errors"] == 0
+    med = {"headline_median": 5.0, "n": 3, "cross_tree": {"ratio": 1.0},
+           "per_query_median": {"r": 1.0}}
+    s = bench._summary(detail, med, "BENCH_DETAIL_LAST_RUN.json")
+    assert set(s) == _SUMMARY_KEYS | {
+        "headline_median", "median_n", "cross_tree_ratio"
+    }
+    assert s["queries"] == {"q": 4.0, "r": 1.0}
 
 
 def test_default_detail_path_is_untracked_scratch():
@@ -182,7 +170,7 @@ def test_median_evidence_matches_on_sf_and_action(tmp_path, monkeypatch):
     monkeypatch.setattr(
         os.path, "dirname", lambda p: str(tmp_path), raising=True
     )
-    assert bench._median_evidence(0.1, "noop") is None  # no file
+    assert bench._median_evidence(0.1) is None  # no file
     payload = {
         "sf": 0.1,
         "action": "noop",
@@ -192,64 +180,73 @@ def test_median_evidence_matches_on_sf_and_action(tmp_path, monkeypatch):
     }
     with open(tmp_path / "BENCH_MEDIAN.json", "w") as f:
         json.dump(payload, f)
-    assert bench._median_evidence(0.1, "noop") == payload
-    assert bench._median_evidence(0.01, "noop") is None
-    assert bench._median_evidence(0.1, "count") is None
-
-
-def test_regression_floors_prefer_median_over_single_run(
-    tmp_path, monkeypatch
-):
-    """Round-over-round floors use the n>=3 per-query medians when a
-    matching BENCH_MEDIAN.json exists — a committed detail rewritten in
-    an unusually fast hour must not become next round's phantom-flag
-    floor."""
-    bench = _bench_module()
-    monkeypatch.setattr(
-        os.path, "dirname", lambda p: str(tmp_path), raising=True
-    )
+    assert bench._median_evidence(0.1) == payload
+    assert bench._median_evidence(0.01) is None
+    # evidence measured under another action never rides along
     with open(tmp_path / "BENCH_MEDIAN.json", "w") as f:
-        json.dump(
-            {
-                "sf": 0.1,
-                "action": "noop",
-                "per_query_median": {"q": 2.0},
-            },
-            f,
-        )
-    with open(tmp_path / "BENCH_DETAIL.json", "w") as f:
-        json.dump(
-            {"sf": 0.1, "action": "noop", "queries": {"q": 0.9}}, f
-        )
-    # 3.2s: >2x and >1s over the 0.9 single-run floor, but NOT >2x the
-    # 2.0 median floor -> median wins, no flag
-    rep = bench._regression_report({"q": 3.2}, 0.1, "noop")
-    assert rep["baseline_round"] == "committed-median"
-    assert rep["regressions"] == {}
-    # count-action run ignores the noop median AND the noop detail
-    rep = bench._regression_report({"q": 3.2}, 0.1, "count")
-    assert rep["baseline_round"] is None
+        json.dump({**payload, "action": "count"}, f)
+    assert bench._median_evidence(0.1) is None
 
 
-def test_committed_r14_floor_epoch_full_registry_with_count_bridge():
-    """The r14 migration epoch: full registry frozen under the noop
-    action (n=3 medians) plus the same-tree count bridge that links it to
-    the r10–r13 count history. The bridge must actually EVIDENCE the
-    pruning bias the migration fixed — window lanes measurably cheaper
-    under count."""
-    with open(os.path.join(REPO, "BENCH_FLOOR_r14.json")) as f:
+def test_committed_r16_floor_is_the_only_epoch():
+    """One floor file: the r16 epoch freezes the full registry and every
+    approx lane under the noop action."""
+    floors = sorted(
+        f for f in os.listdir(REPO) if f.startswith("BENCH_FLOOR_")
+    )
+    assert floors == ["BENCH_FLOOR_r16.json"]
+    bench = _bench_module()
+    assert bench.FLOOR_FILE == floors[0]
+    with open(os.path.join(REPO, "BENCH_FLOOR_r16.json")) as f:
         floor = json.load(f)
-    assert floor["frozen_at_round"] == 14 and floor["sf"] == 0.1
-    assert floor["action"] == "noop"
+    assert floor["frozen_at_round"] == 16 and floor["sf"] == 0.1
+    assert floor["action"] == bench.ACTION == "noop"
     from kafkastreamingetl_spark.queries import APPROX_VARIANTS, QUERIES
 
     assert set(floor["queries"]) == set(QUERIES)
     assert set(floor["approx"]) == set(APPROX_VARIANTS)
-    bridge = floor["bridge"]
-    assert bridge["action"] == "count"
-    assert set(bridge["queries"]) == set(QUERIES)
-    for lane in ("windowed_agg_sliding", "windowed_agg_tumbling"):
-        assert floor["queries"][lane] > 2 * bridge["queries"][lane], lane
+
+
+def test_committed_r16_floor_covers_the_sketch_lanes():
+    """The sketch lanes first frozen at r11 keep a valid floor in the r16
+    epoch: both are registered approx variants with a positive wall."""
+    with open(os.path.join(REPO, "BENCH_FLOOR_r16.json")) as f:
+        floor = json.load(f)
+    from kafkastreamingetl_spark.queries import APPROX_VARIANTS
+
+    sketch = {"source_overlap_minhash", "user_rfm_segments_approx"}
+    assert sketch <= set(floor["approx"])
+    assert sketch <= set(APPROX_VARIANTS)
+    for lane in sketch:
+        assert floor["approx"][lane] > 0, lane
+
+
+def test_committed_r16_evidence_replays_without_flags():
+    """Replaying the committed evidence through the one gate: the median
+    run's detail (exact and approx lanes) and the per-lane medians of
+    BENCH_MEDIAN.json raise no flag against the r16 floor — the same
+    empty set as BENCH_MEDIAN's confirmed_regressions — and the committed
+    detail sits at 0.968 of the r16 floor headline."""
+    bench = _bench_module()
+    bm = _bench_median_module()
+    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
+        det = json.load(f)
+    with open(os.path.join(REPO, "BENCH_MEDIAN.json")) as f:
+        med = json.load(f)
+    with open(os.path.join(REPO, "BENCH_FLOOR_r16.json")) as f:
+        floor = json.load(f)
+    rep = bench._frozen_floor_report(
+        det["queries"], det["sf"], {n: a["sec"] for n, a in det["approx"].items()}
+    )
+    assert rep["frozen_floor_round"] == 16
+    assert rep["frozen_regressions"] == {}
+    assert round(rep["frozen_headline_ratio"], 3) == 0.968
+    assert bench._flag(med["per_query_median"], floor["queries"]) == {}
+    replayed = bm.confirm_flags(
+        [bench._flag(det["queries"], floor["queries"])] * med["n"],
+        med["per_query_median"],
+    )
+    assert replayed == med["confirmed_regressions"] == {}
 
 
 def test_committed_bench_median_evidence_is_current_and_merged():
@@ -281,19 +278,6 @@ def test_committed_bench_median_evidence_is_current_and_merged():
     assert set(det["queries"]) == set(med["per_query_median"])
 
 
-def test_committed_r11_floor_file_is_valid_and_covers_the_sketch_lanes():
-    with open(os.path.join(REPO, "BENCH_FLOOR_r11.json")) as f:
-        floor = json.load(f)
-    assert floor["frozen_at_round"] == 11 and floor["sf"] == 0.1
-    assert set(floor["approx"]) == {
-        "source_overlap_minhash",
-        "user_rfm_segments_approx",
-    }
-    from kafkastreamingetl_spark.queries import APPROX_VARIANTS
-
-    assert set(floor["approx"]) <= set(APPROX_VARIANTS)
-
-
 def test_host_attribution_demotes_control_breaching_flags():
     """tools/bench_median.py (round 15): the n median runs share one
     machine-day, so a day-level systematic can confirm the same flag in
@@ -303,13 +287,7 @@ def test_host_attribution_demotes_control_breaching_flags():
     byte-identical old code on the same day: if IT breaches the lane's
     frozen floor too (same 2x + 0.5 s rule), the flag is demoted to
     host_attributed with the control measurement attached."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_median_under_test", os.path.join(REPO, "tools", "bench_median.py")
-    )
-    bm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bm)
+    bm = _bench_median_module()
 
     confirmed = {
         "lane_host": {"runs_flagged": 3, "of_runs": 3, "samples": [4.0, 4.2]},

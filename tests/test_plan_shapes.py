@@ -26,8 +26,6 @@ import re
 from kafkastreamingetl_spark.plans import plan_shape_and_text
 from kafkastreamingetl_spark.queries import QUERIES
 
-pytestmark = pytest.mark.slow
-
 _SNAPSHOT = os.path.join(os.path.dirname(os.path.dirname(__file__)), "PLAN_SHAPES.json")
 
 
@@ -84,6 +82,7 @@ def _unpartitioned_window_specs(plan_text: str) -> set[str]:
     return hits
 
 
+@pytest.mark.slow
 def test_plan_shapes_match_snapshot(spark, sf_dir):
     _reset_engine_state(spark)
     with open(_SNAPSHOT) as f:
@@ -110,7 +109,9 @@ def test_plan_shapes_match_snapshot(spark, sf_dir):
 def test_approx_lanes_have_no_unpartitioned_windows(spark, sf_dir):
     """The same invariant over the sketch/production lanes bench.py times
     next to the exact ones — the driver's bench tail must stay free of
-    'No Partition Defined' warnings from ANY benched plan."""
+    'No Partition Defined' warnings from ANY benched plan. Plans only the
+    approx lanes at the default test scale, so it runs in the default
+    tier (the registry-wide sweep above stays slow)."""
     from kafkastreamingetl_spark.queries import APPROX_VARIANTS
 
     _reset_engine_state(spark)

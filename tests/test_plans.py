@@ -226,10 +226,10 @@ def test_lateral_limit_gets_window_group_limit(spark, sf_dir):
 def test_count_action_prunes_windows(spark, sf_dir):
     """Round-13 finding: a count-only action lets Catalyst eliminate
     cardinality-preserving Window (and Sort) operators, so count-forced
-    benchmarks under-measure window lanes. Pinned here so the round-14
-    bench-action migration (SPARK_GRAFT_BENCH_ACTION=noop default) is a
-    deliberate method change — if a Spark upgrade ever stops pruning,
-    this fails and the migration note needs rewording."""
+    benchmarks under-measure window lanes. Pinned here because it is why
+    the bench forces every lane with a noop-sink write — if a Spark
+    upgrade ever stops pruning, this fails and the bench's
+    count_action_window_pruning note needs rewording."""
     from kafkastreamingetl_spark.queries import QUERIES
 
     df = QUERIES["user_running_totals"](spark, sf_dir)
@@ -240,13 +240,13 @@ def test_count_action_prunes_windows(spark, sf_dir):
 
 
 def test_count_action_prunes_unreferenced_projections(spark, sf_dir):
-    """The round-14 bridge's sharper finding: count()'s bias was never
-    just Window/Sort — Catalyst column-prunes ENTIRE expensive
-    projections under a count-only action. doc_fingerprint's executed
-    count plan scans ``ReadSchema: struct<>`` (zero columns — the whole
-    rolling-hash expression never runs; bridge-measured 4.5× wall bias,
-    BENCH_FLOOR_r14.json). Pinned beside the Window twin so the
-    migration's full rationale stays machine-checked."""
+    """The sharper round-14 finding: count()'s bias was never just
+    Window/Sort — Catalyst column-prunes ENTIRE expensive projections
+    under a count-only action. doc_fingerprint's executed count plan
+    scans ``ReadSchema: struct<>`` (zero columns — the whole rolling-hash
+    expression never runs; measured 4.5× wall bias at sf0.1). Pinned
+    beside the Window twin so the noop action's full rationale stays
+    machine-checked."""
     from kafkastreamingetl_spark.queries import QUERIES
 
     df = QUERIES["doc_fingerprint"](spark, sf_dir)
@@ -257,20 +257,19 @@ def test_count_action_prunes_unreferenced_projections(spark, sf_dir):
     assert "ReadSchema: struct<>" in counted
 
 
-def test_bench_noop_action_executes_window_nodes(spark, sf_dir, monkeypatch):
-    """The round-14 migration's positive half: the bench's LIVE default
-    action (noop-sink write) must execute the Window operator count()
-    prunes — checked against the actually-EXECUTED plan via the UI REST
-    /sql surface, not the pre-execution explain. If a Spark upgrade ever
-    teaches the noop sink a count-style pruning, the committed window
-    walls go optimistic again and this fails."""
+def test_bench_noop_action_executes_window_nodes(spark, sf_dir):
+    """The positive half: the bench's action (noop-sink write) must
+    execute the Window operator count() prunes — checked against the
+    actually-EXECUTED plan via the UI REST /sql surface, not the
+    pre-execution explain. If a Spark upgrade ever teaches the noop sink
+    a count-style pruning, the committed window walls go optimistic again
+    and this fails."""
     import json as _json
     import urllib.request
 
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_ACTION", raising=False)
-    assert bench._action() == "noop"
+    assert bench.ACTION == "noop"
     ui = spark.sparkContext.uiWebUrl
     if not ui:
         pytest.skip("Spark UI disabled — executed-plan surface unavailable")

@@ -20,8 +20,6 @@ import pytest
 
 from kafkastreamingetl_spark.queries import QUERIES
 
-pytestmark = pytest.mark.slow
-
 # query -> {file: max distinct scan nodes allowed}. These are the audited
 # minima (SCALE.md "Round-11 plan fixes"); a failure means a plan change
 # reintroduced a redundant corpus scan.
@@ -91,6 +89,7 @@ ALLOWED_AT_3 = {
 }
 
 
+@pytest.mark.slow
 def test_registry_wide_scan_ceiling(spark, sf_dir):
     over: dict[str, dict[str, int]] = {}
     for name, fn in QUERIES.items():
@@ -117,7 +116,8 @@ def test_approx_variant_scan_ceiling(spark, sf_dir):
     lm_bucket_mix_approx at the bigram LM's audited count-then-score
     3-scan minimum (it persists the scores table; the 3 scans are the
     cached pipeline's, shared by both consumers, same carve-out as
-    doc_lm_score in ALLOWED_AT_3)."""
+    doc_lm_score in ALLOWED_AT_3). Plans only the approx lanes at the
+    default test scale, so it runs in the default tier."""
     from kafkastreamingetl_spark.queries import APPROX_VARIANTS
 
     approx_allowed_at_3 = {"lm_bucket_mix_approx"}
@@ -136,6 +136,7 @@ def test_approx_variant_scan_ceiling(spark, sf_dir):
     )
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGET))
 def test_scan_count_stays_within_audit_budget(spark, sf_dir, name):
     try:

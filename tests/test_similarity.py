@@ -270,6 +270,11 @@ def test_embedding_covariance_mapinpandas_bit_equals_relational(spark):
     assert got.dtypes == twin.dtypes
     assert got.exceptAll(twin).count() == 0
     assert twin.exceptAll(got).count() == 0
+    # empty input: no cells at all (the oracle shape), not d² rows with
+    # n=0 and a NULL cov
+    empty = emb.filter(emb.vec_id < 0)
+    assert embedding_covariance(empty).count() == 0
+    assert _embedding_covariance_relational(empty).count() == 0
 
 
 def test_neardup_blocking_width_dial(spark):

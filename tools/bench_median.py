@@ -13,27 +13,30 @@ playbook (VERDICT r13 item 2) and commits its output as
 
 Emits ``{headline_median, n, totals, cross_tree: {commit,
 committed_total, measured_total, ratio}, confirmed_regressions, ...}``.
-bench.py folds a matching-(sf, action) BENCH_MEDIAN.json into its own
+bench.py folds a matching-sf BENCH_MEDIAN.json into its own
 detail/summary (``_median_evidence``), so the driver's single-run
-capture carries these fields too, and the gates read them instead of a
-lone wall number.
+capture carries these fields too.
 
-- **headline_median**: median of the n run totals under the CURRENT
-  default action.
+This tool is the ONLY adjudicator of a lane regression. Each bench run
+flags lanes against the one frozen floor epoch (``BENCH_FLOOR_r16.json``,
+bench.py's ``_flag``: >2x AND >0.5 s); a single run's flags are only
+provisional.
+
+- **headline_median**: median of the n run totals.
 - **cross_tree**: the previous round's final tree (auto: the newest
   commit touching BENCH_DETAIL.json that isn't HEAD when HEAD touched
   it, else HEAD's parent lineage) checked out into a scratch worktree
   and re-benched ONCE with ITS OWN bench.py — its committed total is
   read from ``git show <commit>:BENCH_DETAIL.json``. ratio =
   measured/committed on byte-identical code = pure host drift.
-- **confirmed_regressions**: a lane counts only if bench.py's own
-  confirmed ``frozen_regressions`` (each already 2-of-3 re-measured
-  in-process) flags it in >=2 of the n independent runs, AND the lane
-  does not also breach its frozen floor on the control tree the same
-  day (the n runs share one machine-day, so a day-level systematic can
-  reproduce across all of them; byte-identical old code breaching too
-  proves host, and the flag is demoted to **host_attributed_flags**
-  with the control measurement attached).
+- **confirmed_regressions**: a lane counts only if the runs' single-run
+  ``frozen_regressions`` flag it in >=2 of the n independent runs
+  (``confirm_flags``), AND the lane does not also breach its frozen
+  floor on the control tree the same day (the n runs share one
+  machine-day, so a day-level systematic can reproduce across all of
+  them; byte-identical old code breaching too proves host, and the flag
+  is demoted to **host_attributed_flags** with the control measurement
+  attached).
 
 Every subprocess writes its detail to a scratch path. Since round 15 this
 tool is also the ONLY writer of the committed ``BENCH_DETAIL.json``: the
@@ -49,6 +52,7 @@ headline equals the committed median (silent divergence fails a test).
 from __future__ import annotations
 
 import argparse
+import collections
 import json
 import os
 import shutil
@@ -58,6 +62,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import _flag  # noqa: E402  — the one flag rule
 
 
 def _git(*args: str, cwd: str = REPO) -> str:
@@ -78,22 +85,39 @@ def _bench_once(cwd: str, sf_dir: str, env_extra: dict) -> dict:
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
+def confirm_flags(flags_by_run: list[dict], q_samples: dict) -> dict:
+    """The majority rule: a lane is confirmed when it is flagged in >=2 of
+    the n independent runs. A lane flagged once is host noise until it
+    reproduces (r13: single-run flag sets were disjoint across same-tree
+    runs). Pure function so the rule is unit-testable."""
+    counts = collections.Counter(name for flags in flags_by_run for name in flags)
+    return {
+        name: {
+            "runs_flagged": c,
+            "of_runs": len(flags_by_run),
+            "samples": q_samples.get(name),
+        }
+        for name, c in counts.items()
+        if c >= 2
+    }
+
+
 def demote_host_attributed(
     confirmed: dict, flags_by_run: list[dict], control_queries: dict
 ) -> tuple[dict, dict]:
     """Split multi-run-confirmed flags into (still_confirmed,
     host_attributed): a lane whose byte-identical control-tree run also
-    breaches its frozen floor (same 2x + 0.5 s rule as the bench gate)
-    cannot be a code regression — the n runs share one machine-day, and
-    the control proves the day, not the diff, is slow. Pure function so
-    the adjudication rule is unit-testable."""
+    breaches its frozen floor (bench.py's ``_flag`` rule) cannot be a
+    code regression — the n runs share one machine-day, and the control
+    proves the day, not the diff, is slow. Pure function so the
+    adjudication rule is unit-testable."""
     still = dict(confirmed)
     host: dict[str, dict] = {}
     for name in list(still):
         flag = next((fl[name] for fl in flags_by_run if name in fl), {})
         floor = flag.get("frozen_floor")
         ctrl = control_queries.get(name)
-        if floor and ctrl is not None and ctrl > 2 * floor and ctrl - floor > 0.5:
+        if floor and ctrl is not None and _flag({name: ctrl}, {name: floor}):
             host[name] = {
                 **still.pop(name),
                 "frozen_floor": floor,
@@ -120,16 +144,12 @@ def _control_run(commit: str, sf_dir: str, scratch_dir: str) -> dict:
     wt = os.path.join(scratch_dir, "control_tree")
     _git("worktree", "add", "--detach", wt, commit)
     try:
-        # The control tree runs ITS OWN bench.py under the action its
-        # committed total was measured with (pre-r14 trees default to
-        # count and ignore the detail-path env; that is fine — the
-        # worktree is scratch and discarded).
-        env = {}
-        action = committed.get("action", "count")
-        env["SPARK_GRAFT_BENCH_ACTION"] = action
+        # The control tree runs ITS OWN bench.py (the worktree is scratch
+        # and discarded).
         control_detail_path = os.path.join(scratch_dir, "control_detail.json")
-        env["SPARK_GRAFT_BENCH_DETAIL"] = control_detail_path
-        summary = _bench_once(wt, sf_dir, env)
+        summary = _bench_once(
+            wt, sf_dir, {"SPARK_GRAFT_BENCH_DETAIL": control_detail_path}
+        )
         try:
             with open(control_detail_path) as f:
                 control_queries = json.load(f).get("queries", {})
@@ -139,7 +159,6 @@ def _control_run(commit: str, sf_dir: str, scratch_dir: str) -> dict:
         _git("worktree", "remove", "--force", wt)
     return {
         "commit": commit,
-        "action": action,
         "committed_total": committed["value"],
         "measured_total": summary["value"],
         "ratio": round(summary["value"] / committed["value"], 4),
@@ -176,7 +195,7 @@ def main() -> int:
                 detail = json.load(f)
             details.append(detail)
             totals.append(detail["value"])
-            action = detail.get("action", "count")
+            action = detail["action"]
             sf = detail.get("sf")
             for name, t in detail["queries"].items():
                 q_samples.setdefault(name, []).append(t)
@@ -186,19 +205,7 @@ def main() -> int:
                 file=sys.stderr,
             )
 
-        counts: dict[str, int] = {}
-        for flags in flags_by_run:
-            for name in flags:
-                counts[name] = counts.get(name, 0) + 1
-        confirmed = {
-            name: {
-                "runs_flagged": c,
-                "of_runs": args.runs,
-                "samples": q_samples.get(name),
-            }
-            for name, c in counts.items()
-            if c >= 2
-        }
+        confirmed = confirm_flags(flags_by_run, q_samples)
 
         cross_tree = None
         host_attributed: dict[str, dict] = {}
@@ -240,15 +247,15 @@ def main() -> int:
         "cross_tree": cross_tree,
         "method": (
             "median of n independent bench.py subprocesses (scratch detail "
-            "paths); a lane is a confirmed regression only when the "
-            "bench's own in-process 2-of-3 confirmed frozen_regressions "
-            "flag it in >=2 of the n runs AND the same lane does not also "
-            "breach its frozen floor on the cross-tree control (byte-"
-            "identical previous-round code, same day) — a control breach "
-            "attributes the slip to the host and demotes the flag to "
-            "host_attributed_flags with the evidence retained; cross_tree "
-            "re-benches the previous round's final tree from git under "
-            "its own committed action, so its ratio is pure host drift"
+            "paths); a lane is a confirmed regression only when the runs' "
+            "single-run frozen_regressions (>2x AND >0.5 s over "
+            "BENCH_FLOOR_r16.json) flag it in >=2 of the n runs AND the "
+            "same lane does not also breach its frozen floor on the "
+            "cross-tree control (byte-identical previous-round code, same "
+            "day) — a control breach attributes the slip to the host and "
+            "demotes the flag to host_attributed_flags with the evidence "
+            "retained; cross_tree re-benches the previous round's final "
+            "tree from git, so its ratio is pure host drift"
         ),
     }
     with open(os.path.join(REPO, "BENCH_MEDIAN.json"), "w") as f:

@@ -6,14 +6,17 @@ headline because the closeout recipe lived only in prose):
     python tools/round_close.py --skip-bench # index/anchors/gates only
 
 Steps:
-1. ``tools/bench_median.py`` — n>=3 median + cross-tree control; since
-   r15 the sole writer of BOTH committed bench artifacts
-   (BENCH_MEDIAN.json and BENCH_DETAIL.json). Needs a QUIET machine.
+1. ``tools/bench_median.py`` — n>=3 median + cross-tree control, the only
+   adjudicator of lane regressions against the one floor epoch
+   (BENCH_FLOOR_r16.json); the sole writer of BOTH committed bench
+   artifacts (BENCH_MEDIAN.json and BENCH_DETAIL.json). Needs a QUIET
+   machine.
 2. ``tools/gen_query_index.py`` — QUERY_INDEX.md verification ages.
 3. ``tools/check_anchors.py`` — COVERAGE.md file:line anchors resolve.
 4. The committed-evidence gates: ``pytest tests/test_bench_gates.py
    tests/test_driver_window.py`` — fails if the artifacts just written
-   are incoherent (detail != median run, floors stale, window overflow).
+   are incoherent (detail != median run, committed evidence flagged
+   against the r16 floor, window overflow).
 
 Exit code is non-zero the moment any step fails.
 """

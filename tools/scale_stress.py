@@ -55,7 +55,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from kafkastreamingetl_spark.catalog import load_table  # noqa: E402
 from kafkastreamingetl_spark.session import get_test_spark  # noqa: E402
 from __spark_entry__ import queries  # noqa: E402
-from bench import _bench_action  # noqa: E402  — r14: full-execution action
+from bench import ACTION, _bench_action  # noqa: E402  — r14: full-execution action
 # (the old .count() action let Catalyst prune Window/Sort operators, so
 # pre-r14 SCALE_STRESS walls under-measured window lanes 1.2–2.4×; this
 # artifact is regenerated whenever the action changes)
@@ -378,9 +378,7 @@ def main() -> None:
     spark = get_test_spark("kafkastreamingetl_spark_scale_stress")
     qs = queries()
 
-    from bench import _action
-
-    report: dict = {"base_dir": BASE_DIR, "action": _action(), "scales": {}, "criterion": (
+    report: dict = {"base_dir": BASE_DIR, "action": ACTION, "scales": {}, "criterion": (
         "wall(xK) < K * wall(x1) per query and per fit/prewarm (a "
         "superlinear blowup in candidate volume or state would blow past "
         "K); every run completing on the test heap is the no-OOM evidence"

@@ -174,11 +174,11 @@ def main() -> None:
     sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_test_spark("kafkastreamingetl_spark_shuffle_bytes")
     lanes = measure(spark, sf_dir)
-    from bench import _action
+    from bench import ACTION
 
     report = {
         "sf_dir": sf_dir,
-        "action": _action(),
+        "action": ACTION,
         "tail_lanes": {
             n: lanes[n] for n in sorted(set(lanes) - set(LANES))
         },
