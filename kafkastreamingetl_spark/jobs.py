@@ -14,6 +14,7 @@ op — can run them without writing Python:
     python -m kafkastreamingetl_spark.jobs vacuum-tombstones --path PATH --partition-col COL --older-than TS [--delete]
     python -m kafkastreamingetl_spark.jobs kafka-smoke [--bootstrap HOST:9092] [--n-events N]
     python -m kafkastreamingetl_spark.jobs neardup-ingest --index PATH --batch PARQUET [--out PATH] [--min-jaccard J]
+    python -m kafkastreamingetl_spark.jobs contamination-diff --index PATH --batch PARQUET --out PATH --day DAY [--max-batch-docs N]
 
 Each command prints ONE JSON result line on stdout (row counts / files
 written / partitions expired) — the machine-readable contract a
@@ -202,28 +203,12 @@ def cmd_neardup_ingest(args: argparse.Namespace) -> dict:
 
 
 def cmd_contamination_diff(args: argparse.Namespace) -> dict:
-    """The nightly contamination gate as one scheduler command: report
-    what a new document batch drags in against the accreted hash+gram
-    index (exact re-crawls + 13-gram verbatim passages), then append the
-    batch's own hashes/distinct grams so tomorrow's batch is checked
-    against today's. The same ``contamination_report`` assembly the
-    registered batch operator and the streaming sink run; index layout
-    matches ``streaming.contamination_diff_sink`` (hashes/, grams/) with
-    a day tag in place of batch_id. Index FIRST, report second — the
-    repairable crash direction (a report missing one day regenerates
-    from the index; an index missing a day's grams silently under-flags
-    forever after).
-
-    Replay discipline mirrors the streaming sink's strictly-earlier
-    probe (ADVICE r13): index reads exclude ``day >= args.day``, so
-    re-running a crashed day never checks the batch against its own
-    half-written partition (every doc would self-flag as exact_dup), and
-    backfilling an older day never checks it against later days' data.
-    Index existence is probed by READING (AnalysisException = bootstrap),
-    not os.path.exists — a crash between the hashes and grams writes
-    leaves hashes/ present and grams/ missing, which must bootstrap the
-    gram lane instead of wedging the nightly gate; a path-string check
-    also mis-bootstraps on any non-local filesystem.
+    """The nightly contamination gate as one scheduler command:
+    ``streaming.contamination_step`` tagged by ``--day`` — the same
+    per-batch report and index write-back the streaming sink runs, under
+    the tagged-index rule of the ``streaming`` module docstring (a
+    re-run day rewrites its own partitions and never matches itself; a
+    backfilled day never matches later days).
 
     BROADCAST-DIRECTION CONTRACT: the batch's hash/gram sets are
     broadcast to the index side, so the batch must be ingest-sized
@@ -233,21 +218,11 @@ def cmd_contamination_diff(args: argparse.Namespace) -> dict:
     direction."""
     import os
 
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
-    from .operators.dedup import NGRAM_CONTAM_N, contamination_report
-    from .operators.text import shingle_hashes
+    from .streaming import _earlier, contamination_step
 
     spark = _spark("job_contamination_diff")
     batch = spark.read.parquet(args.batch)
-    text = F.coalesce(F.col("text"), F.lit(""))
-    proj = batch.select(
-        F.col("doc_id"),
-        F.md5(text).alias("_h"),
-        shingle_hashes(text, NGRAM_CONTAM_N).alias("_g"),
-    ).localCheckpoint(eager=True)  # index append below touches read paths
-    n_in = proj.count()
+    n_in = batch.count()
     if args.max_batch_docs and n_in > args.max_batch_docs:
         # RuntimeError, not SystemExit: main()'s scheduler contract turns
         # job exceptions into exit code 1 + one stderr line
@@ -258,62 +233,19 @@ def cmd_contamination_diff(args: argparse.Namespace) -> dict:
             "one ingest day, not a backfill, or raise/disable the guard "
             "deliberately"
         )
-
-    h_path = os.path.join(args.index, "hashes")
-    g_path = os.path.join(args.index, "grams")
-
-    def _read_index(path: str, col: str):
-        """Strictly-earlier index slice, or None when the side does not
-        exist yet (bootstrap-for-that-side)."""
-        try:
-            df = spark.read.parquet(path).where(
-                F.col("day") < F.lit(args.day)
-            )
-            return None if df.limit(1).isEmpty() else df.select(col)
-        except AnalysisException:
-            return None
-
-    idx_h = _read_index(h_path, "_h")
-    idx_g = _read_index(g_path, "g")
-    bootstrap = idx_h is None
-    if bootstrap:
-        report = proj.select(
-            "doc_id",
-            F.size("_g").cast("bigint").alias("n_grams"),
-            F.lit(False).alias("exact_dup"),
-            F.lit(0).cast("bigint").alias("n_gram_collisions"),
-            F.lit(False).alias("contaminated"),
-        )
-    else:
-        if idx_g is None:
-            # hashes written, grams crash-lost: bootstrap the gram lane
-            idx_g = spark.createDataFrame([], "g bigint")
-        report = contamination_report(proj, idx_h, idx_g)
-    report = report.withColumn("day", F.lit(args.day)).localCheckpoint(
-        eager=True
+    seen = _earlier(
+        os.path.join(args.index, "hashes"),
+        "day",
+        args.day,
+        spark.createDataFrame([], "_h string"),
     )
-    n_bad = report.where("contaminated").count()
-    (
-        proj.select("doc_id", "_h")
-        .withColumn("day", F.lit(args.day))
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(h_path)
-    )
-    (
-        proj.select(F.explode("_g").alias("g"))
-        .distinct()
-        .withColumn("day", F.lit(args.day))
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(g_path)
-    )
-    report.write.mode("overwrite").partitionBy("day").parquet(args.out)
+    bootstrapped = seen.isEmpty()
+    report = contamination_step(batch, args.out, args.index, "day", args.day)
     return {
         "job": "contamination-diff",
         "batch_rows": n_in,
-        "contaminated": n_bad,
-        "bootstrapped": bootstrap,
+        "contaminated": report.where("contaminated").count(),
+        "bootstrapped": bootstrapped,
     }
 
 

@@ -96,16 +96,3 @@ def clean_events_streaming(
         .na.fill({value_col: 0.0})
         .dropDuplicatesWithinWatermark([key_col])
     )
-
-
-def fill_defaults(df: DataFrame, defaults: dict) -> DataFrame:
-    """P5: ``na.fill`` passthrough (reference spark/app.py:76)."""
-    return df.na.fill(defaults)
-
-
-def dedup_by_key(df: DataFrame, keys: list[str]) -> DataFrame:
-    """P6/P7: exact dedup on a key subset (reference spark/app.py:79,
-    airflow/dags/kafka_spark_etl.py:93). Hash-shuffles only the key columns'
-    partitioning — Catalyst plans this as a hash aggregate, partial-combined
-    map-side, so it scales linearly."""
-    return df.dropDuplicates(keys)

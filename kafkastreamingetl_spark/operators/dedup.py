@@ -268,11 +268,6 @@ def _minhash_sql(hs_expr: str, a: int, b: int) -> str:
     )
 
 
-def _minhash_col(hs_expr: str, a: int, b: int) -> Column:
-    """One minhash function as a Column (single SQL parse)."""
-    return F.expr(_minhash_sql(hs_expr, a, b))
-
-
 def shingle_features(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

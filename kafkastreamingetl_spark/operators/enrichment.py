@@ -15,31 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def broadcast_enrich(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "left",
-    drop_dim_cols: list[str] | None = None,
-) -> DataFrame:
-    """J1: broadcast left equi-join (reference spark/app.py:136).
-
-    ``drop_dim_cols`` mirrors the reference's pre-join drop of the dim's
-    duplicate-named column (reference spark/app.py:132 — P3).
-    """
-    if drop_dim_cols:
-        dim = dim.drop(*drop_dim_cols)
-    return fact.join(F.broadcast(dim), on, how)
-
-
-def shuffle_enrich(
-    fact: DataFrame, dim: DataFrame, on: str | list[str], how: str = "left"
-) -> DataFrame:
-    """J2: non-hinted equi-join (reference spark/app.py:137) — Catalyst/AQE
-    pick shuffled-hash / sort-merge / broadcast from runtime stats."""
-    return fact.join(dim, on, how)
-
-
 def enrich_events(
     events: DataFrame, customer: DataFrame, nation: DataFrame
 ) -> DataFrame:

@@ -91,9 +91,11 @@ _FALLBACK_RANK_PARTITIONS = 200
 # bound; thousands of terms overflow the SQL parser and the 64 KB
 # generated-method limit (whole-stage codegen then falls back to the
 # interpreted path; an interpreted form of this sum measured ~5 s at
-# sf0.1 in r16). Exactness never depends on the bound count, only
-# balance does.
-_MAX_CUT_PARTITIONS = 256
+# sf0.1 in r16). Below that, HotSpot does not JIT-compile a method over
+# 8000 bytes of bytecode: the counts aggregate's largest method is 5693
+# bytes at 64 bounds and 12995 at 128. Exactness never depends on the
+# bound count, only balance does.
+_MAX_CUT_PARTITIONS = 64
 
 # approx_percentile accuracy for the bounds job: affects balance only.
 _BOUNDS_ACCURACY = 10000
@@ -159,8 +161,8 @@ def _key_and_ordering(
         for c in order_cols
     ]
     lead = order_cols[0]
-    lead_col = F.col(lead) if isinstance(lead, str) else lead
     named = isinstance(lead, str)
+    lead_col = F.col(lead) if named else _sort_key(df, lead)
     if named:
         dtype = dict(df.dtypes).get(lead, "")
     else:
@@ -196,6 +198,29 @@ def _key_and_ordering(
     raise ValueError(
         f"with_exact_ntile: unsupported leading order column type {dtype!r}"
     )
+
+
+def _sort_key(df: DataFrame, lead: Column) -> Column:
+    """The value under a leading sort-order Column: the bounds key of
+    ``F.col("k").asc_nulls_first()`` is ``k`` (a sort order is not a
+    value, and evaluating one fails at run time). Only ASC NULLS FIRST,
+    the cut's own order, is accepted. Other Columns pass through."""
+    from pyspark.sql.classic.column import Column as ClassicColumn
+
+    node = lead._jc.node()
+    if node.getClass().getSimpleName() != "SortOrder":
+        return lead
+    order = (
+        node.sortDirection().getClass().getSimpleName(),
+        node.nullOrdering().getClass().getSimpleName(),
+    )
+    if order != ("Ascending$", "NullsFirst$"):
+        raise ValueError(
+            f"exact_ntile_cuts: leading order column {lead} must sort ASC "
+            "NULLS FIRST"
+        )
+    jvm = df.sparkSession._jvm
+    return ClassicColumn(jvm.org.apache.spark.sql.Column(node.child()))
 
 
 def _bound_literal(b) -> str:

@@ -1,4 +1,4 @@
-"""Skew tools: salted two-phase aggregation and salted broadcast joins.
+"""Skew tools: salted two-phase aggregation and salted shuffle joins.
 
 AQE's skew-join splitting (enabled in session.py) handles skewed *sort-merge
 joins* automatically, but two hot spots remain at 100 TB:
@@ -91,20 +91,6 @@ def salted_agg(
     )
 
 
-def salted_broadcast_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Join a skewed fact table to a small dim without a skewed shuffle:
-    broadcast the dim — no shuffle of the fact side at all, so key skew is
-    irrelevant. (When the dim is too big to broadcast, prefer AQE's
-    skew-join split over manual salting; both are configured in
-    session.get_spark.)"""
-    return skewed.join(F.broadcast(small), key, how)
-
-
 def salted_shuffle_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -113,10 +99,10 @@ def salted_shuffle_join(
     n_salts: int = 16,
     how: str = "inner",
 ) -> DataFrame:
-    """Replicate-and-salt equi-join for the gap the other two tools leave:
-    a skewed fact table against a dim too big to broadcast, in a context
-    where AQE's skew-join split doesn't apply (streaming joins, or plans
-    whose skewed stage AQE can't re-plan). The fact side gets a uniform
+    """Replicate-and-salt equi-join for a skewed fact table against a dim
+    too big to broadcast, in a context where AQE's skew-join split doesn't
+    apply (streaming joins, or plans whose skewed stage AQE can't
+    re-plan). The fact side gets a uniform
     salt in [0, n_salts); the dim side is replicated once per salt via
     ``explode(sequence(...))``; joining on (key, salt) spreads a hot key's
     rows over ``n_salts`` reducers instead of one.

@@ -17,6 +17,23 @@ Checkpoint policy at scale: one checkpoint dir per query (never shared),
 RocksDB state store (set in session.get_spark) so streaming state lives off
 the JVM heap, and ``dropDuplicatesWithinWatermark`` upstream keeps dedup
 state bounded (operators.cleaning).
+
+Tagged indexes. The index-backed ``foreachBatch`` sinks below and the
+``contamination-diff`` job keep their memory across batches, and write
+their outputs, as parquet directories partitioned by a batch tag:
+``batch_id`` in the sinks, ``day`` in the job. One rule makes a batch
+replayed from the checkpoint converge to the same output, neither
+duplicating nor losing rows (the reference's restart contract, spark/
+app.py:189-209; exactly-once via a replayable source plus idempotent
+sinks, as in Structured Streaming):
+
+- a read sees only the tags strictly below the current one
+  (:func:`_earlier`), so a retried batch never matches its own earlier
+  attempt and a backfill never matches later tags; an index that does not
+  exist yet reads as empty;
+- a write overwrites only the current tag's partition
+  (:func:`_write_tagged`, dynamic partition overwrite), so a replay
+  rewrites its rows instead of appending a second copy.
 """
 
 from __future__ import annotations
@@ -372,6 +389,39 @@ def run_available_now(queries: list[StreamingQuery], timeout_sec: int = 300) -> 
             raise q.exception()
 
 
+def _earlier(path: str, tag_col: str, tag, like: DataFrame) -> DataFrame:
+    """The rows of the tagged index at ``path`` whose ``tag_col`` is
+    strictly below ``tag``, projected to ``like``'s columns. While the
+    index does not exist yet, an empty frame of ``like``'s schema."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    spark = like.sparkSession
+    try:
+        index = spark.read.parquet(path)
+    except AnalysisException:
+        return spark.createDataFrame([], like.schema)
+    return index.where(F.col(tag_col) < F.lit(tag)).select(*like.columns)
+
+
+def _write_tagged(df: DataFrame, path: str, tag_col: str, tag) -> None:
+    """Write ``df`` as the ``tag_col = tag`` partition of the tagged index
+    at ``path``, overwriting that partition only."""
+    from pyspark.sql import functions as F
+
+    from .session import ensure_runtime_confs
+
+    # dynamic partition overwrite, applied on THIS session: Spark's
+    # default STATIC mode would truncate every other tag
+    ensure_runtime_confs(df.sparkSession)
+    (
+        df.withColumn(tag_col, F.lit(tag))
+        .write.mode("overwrite")
+        .partitionBy(tag_col)
+        .parquet(path)
+    )
+
+
 def alltime_dedup_sink(
     df: DataFrame,
     out_path: str,
@@ -391,61 +441,33 @@ def alltime_dedup_sink(
     the dedup family: ``dropDuplicatesWithinWatermark`` (bounded horizon,
     operators.cleaning) for in-flight duplicates, THIS for forever ones.
 
-    Per micro-batch:
-
-    1. anti-join the batch against index entries from EARLIER batches
-       only (``batch_id < current`` — partition-pruned read);
-    2. keep the min-id survivor per content within the batch;
-    3. write survivors to ``out_path`` partitioned by the batch id with
-       dynamic partition overwrite — a replayed batch overwrites ITS OWN
-       partition, never appends twice;
-    4. append the survivors' (hash, content, batch_id) to the index.
-
-    Replay safety is the point of the ``batch_id`` discipline: a retried
-    batch excludes its own failed attempt's index rows from the anti-join
-    (so nothing self-suppresses into data loss), recomputes the same
-    survivor set, and overwrites the same output partition — idempotent
-    convergence, asserted in tests. Duplicate index rows from a replay
-    are harmless: the anti-join is a set-membership probe.
+    Per micro-batch: anti-join the batch against the index's earlier
+    batches, keep the min-id survivor per content within the batch, and
+    write the survivors to ``out_path`` and their (hash, content) to the
+    index — both tagged indexes keyed by ``batch_id`` (module docstring),
+    so a replayed batch converges instead of self-suppressing or writing
+    twice.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
     from .functions import hash60
     from .operators.cleaning import dedup_deterministic
-    from .session import ensure_runtime_confs
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        ensure_runtime_confs(spark)  # dynamic partition overwrite
         hashed = batch.withColumn("_h", hash60(F.col(content_col)))
-        try:
-            seen = (
-                spark.read.parquet(index_path)
-                .where(F.col("batch_id") < batch_id)
-                .select("_h", content_col)
-            )
-            fresh = hashed.join(seen, ["_h", content_col], "left_anti")
-        except AnalysisException:
-            fresh = hashed  # first batch: no index yet
-        survivors = dedup_deterministic(
-            fresh, ["_h", content_col], [F.asc(id_col)]
-        ).localCheckpoint(eager=True)
-        (
-            survivors.drop("_h")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        seen = _earlier(
+            index_path, "batch_id", batch_id, hashed.select("_h", content_col)
         )
-        (
-            survivors.select("_h", content_col)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(index_path)
+        survivors = dedup_deterministic(
+            hashed.join(seen, ["_h", content_col], "left_anti"),
+            ["_h", content_col],
+            [F.asc(id_col)],
+        ).localCheckpoint(eager=True)
+        _write_tagged(survivors.drop("_h"), out_path, "batch_id", batch_id)
+        _write_tagged(
+            survivors.select("_h", content_col), index_path, "batch_id", batch_id
         )
 
     return foreach_batch_sink(
@@ -484,45 +506,29 @@ def neardup_flag_sink(
     makes the drop decision — the same candidates→verify split the batch
     dedup family uses, stretched across the stream/batch boundary.
 
-    State discipline mirrors ``alltime_dedup_sink``: executor state zero,
-    horizon = life of the index, the index probe excludes
-    ``batch_id >= current`` so a retried batch never self-suppresses, the
-    report partition is overwritten per batch id (replay-idempotent), and
-    duplicate index rows from a replay are neutralized by the distinct
-    membership probe. Documents too short to shingle have no signatures
-    and no report row (same contract as ``minhash_signatures``)."""
+    The report and the band index are tagged indexes keyed by
+    ``batch_id`` (module docstring): executor state zero, horizon = life
+    of the index, replay-idempotent. Documents too short to shingle have
+    no signatures and no report row (same contract as
+    ``minhash_signatures``)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
     from .operators.dedup import minhash_signatures
-    from .session import ensure_runtime_confs
 
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        ensure_runtime_confs(spark)  # dynamic partition overwrite
         sigs = minhash_signatures(batch, content_col, id_col).localCheckpoint(
             eager=True
         )
-        try:
-            seen = (
-                spark.read.parquet(index_path)
-                .where(F.col("batch_id") < batch_id)
-                .select("band", "sig")
-                .distinct()
-            )
-            idx_hits = (
-                sigs.join(seen, ["band", "sig"])
-                .groupBy(id_col)
-                .agg(F.count_distinct("band").alias("n_index_bands"))
-            )
-        except AnalysisException:  # first batch: no index yet
-            idx_hits = (
-                sigs.select(id_col)
-                .limit(0)
-                .withColumn("n_index_bands", F.lit(0).cast("bigint"))
-            )
+        seen = _earlier(
+            index_path, "batch_id", batch_id, sigs.select("band", "sig")
+        ).distinct()
+        idx_hits = (
+            sigs.join(seen, ["band", "sig"])
+            .groupBy(id_col)
+            .agg(F.count_distinct("band").alias("n_index_bands"))
+        )
         a = sigs.select(F.col(id_col).alias("_a"), "band", "sig")
         batch_hits = (
             a.join(sigs, ["band", "sig"])
@@ -546,15 +552,9 @@ def neardup_flag_sink(
                 "is_neardup",
                 (F.col("n_index_bands") > 0) | (F.col("n_batch_partners") > 0),
             )
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        report.write.mode("overwrite").partitionBy("batch_id").parquet(out_path)
-        (
-            sigs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(index_path)
-        )
+        _write_tagged(report, out_path, "batch_id", batch_id)
+        _write_tagged(sigs, index_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
         df,
@@ -580,7 +580,7 @@ def neardup_ingest_sink(
     """Streaming twin of the daily near-dup ingest loop (the batch
     ``neardup-ingest`` CLI, jobs.py): each micro-batch is deduped against
     the persisted signature index with exact-Jaccard verification, the
-    SURVIVORS' signatures/features are appended back to the index, and
+    SURVIVORS' signatures/features are written back to the index, and
     the survivors land in the corpus — so batch N+1 dedups against
     everything batch N accepted, continuously. Unlike
     :func:`neardup_flag_sink` (candidates-only flagging for a downstream
@@ -590,20 +590,15 @@ def neardup_ingest_sink(
     first-ever batch bootstraps with ``neardup_dedup`` exactly like the
     CLI) — streaming==batch by construction, checked by differential test.
 
-    Replay discipline (the reference's T6 checkpoint-restart contract,
-    ``spark/app.py:189-209``, applied to the LLM dedup lane): every write
-    — corpus, sigs, feats — is partitioned by ``batch_id`` and dynamically
-    OVERWRITTEN, so a batch retried after a mid-batch crash replaces its
-    own partitions instead of double-appending; the index probe excludes
-    ``batch_id >= current`` so a replayed batch never collides with its
-    own previous half-written signatures (the batch CLI's index-first
-    ordering makes a crash *visible*; partition-scoped overwrite makes it
-    *self-healing*). Executor state is zero — the whole loop's state lives
-    in the parquet index, horizon = life of the corpus, daily cost tracks
-    the increment (the base is never re-shingled).
+    The corpus and both index sides (sigs, feats) are tagged indexes
+    keyed by ``batch_id`` (module docstring), so a batch retried after a
+    mid-batch crash rewrites its own partitions and never collides with
+    its own half-written signatures. Executor state is zero — the whole
+    loop's state lives in the parquet index, horizon = life of the
+    corpus, daily cost tracks the increment (the base is never
+    re-shingled).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
+    import os
 
     from .operators.dedup import (
         NEARDUP_MIN_JACCARD,
@@ -612,39 +607,25 @@ def neardup_ingest_sink(
         neardup_dedup,
         shingle_features,
     )
-    from .session import ensure_runtime_confs
 
     mj = NEARDUP_MIN_JACCARD if min_jaccard is None else min_jaccard
+    sigs_path = os.path.join(index_path, "sigs")
+    feats_path = os.path.join(index_path, "feats")
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        ensure_runtime_confs(spark)  # dynamic partition overwrite
-        import os
-
-        sigs_path = os.path.join(index_path, "sigs")
-        feats_path = os.path.join(index_path, "feats")
-        base_sigs = base_feats = None
-        try:
-            base_sigs = (
-                spark.read.parquet(sigs_path)
-                .where(F.col("batch_id") < F.lit(batch_id))
-                .drop("batch_id")
-            )
-            base_feats = (
-                spark.read.parquet(feats_path)
-                .where(F.col("batch_id") < F.lit(batch_id))
-                .drop("batch_id")
-            )
-            # a replayed FIRST batch sees only its own (excluded) rows —
-            # rows-below-current, not path existence, decides bootstrap,
-            # so the replay re-runs the same bootstrap code path
-            if base_sigs.limit(1).isEmpty():
-                base_sigs = None
-        except AnalysisException:
-            base_sigs = None
-        if base_sigs is None:
+        batch_feats = shingle_features(batch, content_col, id_col)
+        base_sigs = _earlier(
+            sigs_path,
+            "batch_id",
+            batch_id,
+            minhash_signatures(batch, content_col, id_col, feats=batch_feats),
+        )
+        base_feats = _earlier(feats_path, "batch_id", batch_id, batch_feats)
+        # rows-below-current, not path existence, decides bootstrap: a
+        # replayed FIRST batch re-runs the same bootstrap code path
+        if base_sigs.isEmpty():
             survivors = neardup_dedup(
                 batch, content_col, id_col, min_jaccard=mj
             )
@@ -663,25 +644,9 @@ def neardup_ingest_sink(
         # index first, corpus second — same crash-ordering rationale as
         # the batch CLI (a corpus missing one batch is visible and
         # repairable; an index missing corpus rows corrupts silently)
-        (
-            sigs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(sigs_path)
-        )
-        (
-            feats.select(F.col(id_col), F.col("_hs"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(feats_path)
-        )
-        (
-            survivors.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(corpus_path)
-        )
+        _write_tagged(sigs, sigs_path, "batch_id", batch_id)
+        _write_tagged(feats, feats_path, "batch_id", batch_id)
+        _write_tagged(survivors, corpus_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
         df,
@@ -690,6 +655,63 @@ def neardup_ingest_sink(
         available_now=available_now,
         trigger_seconds=trigger_seconds,
     )
+
+
+def contamination_step(
+    batch: DataFrame,
+    report_path: str,
+    index_path: str,
+    tag_col: str,
+    tag,
+    *,
+    content_col: str = "text",
+    id_col: str = "doc_id",
+    n: int | None = None,
+) -> DataFrame:
+    """One batch of the accreted-index contamination diff, shared by
+    :func:`contamination_diff_sink` (tag ``batch_id``) and the
+    ``contamination-diff`` job (tag ``day``): report what ``batch`` drags
+    in against the index's earlier tags — exact content-hash re-crawls
+    and ``n``-gram verbatim-passage collisions — then write the batch's
+    own hashes (``index_path/hashes``) and distinct grams
+    (``index_path/grams``), then the report. All three are tagged indexes
+    (module docstring). The report is ``contamination_report``, the same
+    assembly the batch operator runs, so streaming == batch by
+    construction; over an empty index it flags nothing. Returns the
+    report as written (materialized, without the tag column).
+
+    Index first, report second: a report missing one tag regenerates
+    from the index, while an index missing a tag's grams silently
+    under-flags every later batch.
+    """
+    import os
+
+    from pyspark.sql import functions as F
+
+    from .operators.dedup import NGRAM_CONTAM_N, contamination_report
+    from .operators.text import shingle_hashes
+
+    h_path = os.path.join(index_path, "hashes")
+    g_path = os.path.join(index_path, "grams")
+    text = F.coalesce(F.col(content_col), F.lit(""))
+    # eager lineage cuts: the writes below touch the paths a lazy plan
+    # would re-read after Spark's post-write refresh
+    proj = batch.select(
+        F.col(id_col).alias("doc_id"),
+        F.md5(text).alias("_h"),
+        shingle_hashes(text, NGRAM_CONTAM_N if n is None else n).alias("_g"),
+    ).localCheckpoint(eager=True)
+    hashes = proj.select("doc_id", "_h")
+    grams = proj.select(F.explode("_g").alias("g")).distinct()
+    report = contamination_report(
+        proj,
+        _earlier(h_path, tag_col, tag, hashes.select("_h")),
+        _earlier(g_path, tag_col, tag, grams),
+    ).localCheckpoint(eager=True)
+    _write_tagged(hashes, h_path, tag_col, tag)
+    _write_tagged(grams, g_path, tag_col, tag)
+    _write_tagged(report, report_path, tag_col, tag)
+    return report
 
 
 def contamination_diff_sink(
@@ -705,109 +727,29 @@ def contamination_diff_sink(
     trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """Streaming form of ``operators.dedup.batch_contamination_diff``: per
-    micro-batch, report what THIS batch dragged in against the accreted
-    index — exact content-hash re-crawls and 13-gram verbatim-passage
-    collisions — then append the batch's own hashes/distinct grams to the
-    index, so batch N+1 is checked against everything batches ≤ N
-    contributed. The report assembly is the SAME function the batch
-    operator runs (``contamination_report`` — broadcast direction: the
-    ingest-sized batch's sets go out, only matches come back; the index
-    parquet is scanned, never shuffled), so streaming == batch by
-    construction.
+    micro-batch, :func:`contamination_step` tagged by ``batch_id``, so
+    batch N+1 is checked against everything batches ≤ N contributed
+    (broadcast direction: the ingest-sized batch's sets go out, only
+    matches come back; the index parquet is scanned, never shuffled).
 
     State: zero in executors — the loop's whole memory is the parquet
     index (hashes: (doc_id, _h); grams: distinct (g) bigints per batch —
     posting-list-shaped, 8 bytes per distinct gram, the same asymptotics
-    as the gram side of the batch operator's corpus scan). Replay
-    discipline matches ``neardup_ingest_sink``: every write partitioned
-    by ``batch_id`` + dynamic partition overwrite, index probe excludes
-    ``batch_id >= current``, index written BEFORE the report (a replayed
-    batch self-heals its own partitions; a report missing one batch is
-    visible and regenerable from the index, the repairable direction).
+    as the gram side of the batch operator's corpus scan).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
-
-    from .operators.dedup import NGRAM_CONTAM_N, contamination_report
-    from .operators.text import shingle_hashes
-    from .session import ensure_runtime_confs
-
-    width = NGRAM_CONTAM_N if n is None else n
 
     def diff_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        ensure_runtime_confs(spark)  # dynamic partition overwrite
-        import os
-
-        h_path = os.path.join(index_path, "hashes")
-        g_path = os.path.join(index_path, "grams")
-        text = F.coalesce(F.col(content_col), F.lit(""))
-        proj = batch.select(
-            F.col(id_col).alias("doc_id"),
-            F.md5(text).alias("_h"),
-            shingle_hashes(text, width).alias("_g"),
-        ).localCheckpoint(eager=True)  # the index writes below touch the
-        # paths a lazy plan would re-read post-refresh (the ingest-sink trap)
-
-        idx_h = idx_g = None
-        try:
-            idx_h = (
-                spark.read.parquet(h_path)
-                .where(F.col("batch_id") < F.lit(batch_id))
-                .select("_h")
-            )
-            if idx_h.limit(1).isEmpty():
-                idx_h = None
-        except AnalysisException:
-            idx_h = None
-        if idx_h is not None:
-            try:
-                idx_g = (
-                    spark.read.parquet(g_path)
-                    .where(F.col("batch_id") < F.lit(batch_id))
-                    .select("g")
-                )
-            except AnalysisException:
-                # hashes written, grams crash-lost between the two index
-                # writes: bootstrap the gram lane instead of wedging the
-                # stream (ADVICE r13, CLI twin has the same rule)
-                idx_g = spark.createDataFrame([], "g bigint")
-
-        if idx_h is None:
-            # bootstrap: empty index — nothing can be contaminated
-            report = proj.select(
-                "doc_id",
-                F.size("_g").cast("bigint").alias("n_grams"),
-                F.lit(False).alias("exact_dup"),
-                F.lit(0).cast("bigint").alias("n_gram_collisions"),
-                F.lit(False).alias("contaminated"),
-            )
-        else:
-            report = contamination_report(proj, idx_h, idx_g)
-
-        # index first, report second (the repairable crash direction)
-        (
-            proj.select("doc_id", "_h")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(h_path)
-        )
-        (
-            proj.select(F.explode("_g").alias("g"))
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(g_path)
-        )
-        (
-            report.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(report_path)
+        contamination_step(
+            batch,
+            report_path,
+            index_path,
+            "batch_id",
+            batch_id,
+            content_col=content_col,
+            id_col=id_col,
+            n=n,
         )
 
     return foreach_batch_sink(
@@ -897,19 +839,15 @@ def semantic_flag_sink(
     decides — the candidates→verify split stretched across the
     stream/batch boundary, same as the text twin.
 
-    State discipline is the text twin's verbatim: zero executor state,
-    horizon = life of the index, ``batch_id < current`` probe exclusion
-    (a retried batch never self-suppresses), per-batch-id report
-    partition overwrite (replay-idempotent), duplicate index rows
-    neutralized by the distinct membership probe. The index stores only
-    (signature, batch_id) — never vectors. ``n_planes`` is the same
+    State discipline is the text twin's: zero executor state, horizon =
+    life of the index, report and index tagged by ``batch_id`` (module
+    docstring). The index stores only (signature, batch_id) — never
+    vectors. ``n_planes`` is the same
     blocking-width dial as the batch operator (defaults to the session's
     batch default; scale it ~log2(corpus) — ``similarity.planes_for``)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
     from .operators import similarity as sim
-    from .session import ensure_runtime_confs
 
     width = sim.ANN_N_PLANES if n_planes is None else n_planes
     planes = sim.planes_for(width)
@@ -917,8 +855,6 @@ def semantic_flag_sink(
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        ensure_runtime_confs(spark)  # dynamic partition overwrite
         base = batch.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col),
             sim.bucket_signature(F.col(vec_col), planes).alias("_sig"),
@@ -933,24 +869,16 @@ def semantic_flag_sink(
         probes = base.select(
             F.col(id_col), F.explode(probe_arr).alias("_bucket")
         ).localCheckpoint(eager=True)
-        try:
-            seen = (
-                spark.read.parquet(index_path)
-                .where(F.col("batch_id") < batch_id)
-                .select(F.col("_sig").alias("_bucket"))
-                .distinct()
-            )
-            idx_hits = (
-                probes.join(seen, "_bucket")
-                .groupBy(id_col)
-                .agg(F.count_distinct("_bucket").alias("n_index_buckets"))
-            )
-        except AnalysisException:  # first batch: no index yet
-            idx_hits = (
-                probes.select(id_col)
-                .limit(0)
-                .withColumn("n_index_buckets", F.lit(0).cast("bigint"))
-            )
+        seen = (
+            _earlier(index_path, "batch_id", batch_id, base.select("_sig"))
+            .select(F.col("_sig").alias("_bucket"))
+            .distinct()
+        )
+        idx_hits = (
+            probes.join(seen, "_bucket")
+            .groupBy(id_col)
+            .agg(F.count_distinct("_bucket").alias("n_index_buckets"))
+        )
         a = probes.select(F.col(id_col).alias("_a"), "_bucket")
         b = base.select(F.col(id_col), F.col("_sig").alias("_bucket"))
         batch_hits = (
@@ -977,16 +905,9 @@ def semantic_flag_sink(
                 (F.col("n_index_buckets") > 0)
                 | (F.col("n_batch_partners") > 0),
             )
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        report.write.mode("overwrite").partitionBy("batch_id").parquet(out_path)
-        (
-            base.select("_sig")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(index_path)
-        )
+        _write_tagged(report, out_path, "batch_id", batch_id)
+        _write_tagged(base.select("_sig"), index_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
         df,

@@ -185,15 +185,43 @@ def test_exact_ntile_string_keys_of_mixed_length(spark):
     )
 
 
+def test_exact_ntile_sort_order_lead_through_both_entry_points(spark):
+    """A leading sort-order Column in the cut's own order
+    (``asc_nulls_first()``) gives the same buckets as the column itself
+    through both strategies: the multi-cut derives its bounds from the
+    value under the sort order, never from the sort order. Any other
+    order is rejected by the multi-cut, naming the column."""
+    from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
+
+    keys = ["", "az", "b", None, "a", "azzzzzzzz", "b\x00", "zz", "é", "日本語"]
+    df = spark.createDataFrame(
+        [(k, i * len(keys) + j) for i in range(6) for j, k in enumerate(keys)],
+        "k string, uid int",
+    )
+    expected = _reference_ntile(df, 4, ["k", "uid"])
+    lead = F.col("k").asc_nulls_first()
+    _assert_same_rows(
+        expected,
+        exact_ntile_cuts(df, [(4, [lead, "uid"], "bucket")], num_partitions=8),
+    )
+    _assert_same_rows(
+        expected, with_exact_ntile(df, 4, [lead, "uid"], num_partitions=8)
+    )
+    with pytest.raises(ValueError, match="k DESC"):
+        exact_ntile_cuts(df, [(4, [F.col("k").desc(), "uid"], "bucket")])
+
+
 def test_exact_ntile_cuts_wide_shuffle_is_capped_and_stays_codegen(
     spark, monkeypatch
 ):
     """At a cluster-scale shuffle width (2000) the multi-cut derives at
-    most 256 range bounds: its partition id is one unrolled CASE per
+    most 64 range bounds: its partition id is one unrolled CASE per
     bound, and 1999 of them overflowed the SQL parser. The answer stays
     bit-equal, and the counts aggregate keeps whole-stage codegen with
     every generated method under Spark's huge-method limit (above it
-    codegen silently falls back to the interpreted path)."""
+    codegen silently falls back to the interpreted path) and under
+    HotSpot's 8000-byte JIT limit (above it the method stays in the
+    bytecode interpreter)."""
     import re
 
     from kafkastreamingetl_spark.operators import rankstats
@@ -212,7 +240,7 @@ def test_exact_ntile_cuts_wide_shuffle_is_capped_and_stays_codegen(
     got = rankstats.exact_ntile_cuts(
         df, [(10, ["v", "uid"], "bucket")], num_partitions=2000
     )
-    assert rankstats.last_width == 256
+    assert rankstats.last_width == 64
     _assert_same_rows(_reference_ntile(df, 10, ["v", "uid"]), got)
 
     qe = counts[-1]._jdf.queryExecution()
@@ -223,6 +251,7 @@ def test_exact_ntile_cuts_wide_shuffle_is_capped_and_stays_codegen(
     sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(\d+)", codegen)]
     limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535"))
     assert sizes and max(sizes) <= limit, (sizes, limit)
+    assert max(sizes) < 8000, sizes
 
 
 def test_registered_decile_and_zorder_lanes_use_rankstats(spark, sf_dir):

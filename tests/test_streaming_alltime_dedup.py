@@ -59,6 +59,9 @@ def test_replayed_batch_converges(spark, paths):
     _docs(spark, [(1, "alpha"), (2, "beta")]).write.parquet(src)
     _run(spark, src, out, index, ckpt)
     first = _texts(spark, out)
+    n_index = spark.read.parquet(index).count()
 
     _run(spark, src, out, index, ckpt + "_replay")
     assert _texts(spark, out) == first
+    # the replay overwrites its index partition, never appends a copy
+    assert spark.read.parquet(index).count() == n_index

@@ -66,7 +66,10 @@ def test_replayed_batch_converges(spark, paths):
     _run(spark, src, out, index, ckpt)
     first = _report(spark, out)
     assert first == {1: (0, 0, False), 2: (0, 0, False)}
+    n_index = spark.read.parquet(index).count()
 
     _run(spark, src, out, index, ckpt + "_replay")
     assert _report(spark, out) == first
     assert spark.read.parquet(out).count() == 2
+    # the replay overwrites its index partition, never appends a copy
+    assert spark.read.parquet(index).count() == n_index

@@ -73,5 +73,8 @@ def test_replayed_batch_converges(spark, paths):
     _vecs(spark, [(1, VEC_A), (2, VEC_A_NEAR)]).write.parquet(src)
     _run(spark, src, out, index, ckpt)
     first = _report(spark, out)
+    n_index = spark.read.parquet(index).count()
     _run(spark, src, out, index, str(ckpt) + "_replay")
     assert _report(spark, out) == first
+    # the replay overwrites its index partition, never appends a copy
+    assert spark.read.parquet(index).count() == n_index
