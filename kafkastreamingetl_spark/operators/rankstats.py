@@ -10,23 +10,11 @@ airflow/dags/kafka_spark_etl.py:64-78, fits in one process by design), so
 this operator is where the Spark re-expression must diverge from both: the
 semantics of a total order, the execution of a partitioned range cut.
 
-Two execution strategies share the exact ``ntile(n)`` semantics — bucket
-sizes ``ceil(N/n)`` for the first ``N mod n`` buckets, ``floor(N/n)``
-after — and the round-16 A/B (same session, alternating samples, sf0.1)
-decides which one each caller gets:
-
-* :func:`with_exact_ntile` (SINGLE cut) keeps the range-shuffle +
-  ``monotonically_increasing_id`` + lazy-``localCheckpoint`` form. The
-  checkpoint forces one physical-planning pass at construction (~0.7 s),
-  but the deterministic-bounds replacement costs TWO small jobs at
-  construction and measured strictly slower for one cut (ltv 0.97 →
-  1.30 s, zorder 1.51 → 1.91 s) — the negative result is recorded in
-  OPTIMIZATION_r16.md so it is not re-tried.
-* :func:`exact_ntile_cuts` (MULTI cut) uses DETERMINISTIC range bounds:
-  the N-cut chain previously nested a checkpoint per cut (each planning
-  the whole prior pipeline — 2.2 s of the RFM lane's construction);
-  sharing one persisted base, one bounds job and one counts job across
-  all cuts measured 3.01 → 2.04 s on the RFM lane. The strategy:
+One strategy computes the exact ``ntile(n)`` semantics — bucket sizes
+``ceil(N/n)`` for the first ``N mod n`` buckets, ``floor(N/n)`` after —
+for any number of cuts over one frame (:func:`exact_ntile_cuts`; a single
+cut is a one-element list). All cuts share one persisted base, one bounds
+job and one counts job:
 
 1. One small job collects approximate quantile BOUNDS of the leading
    order key (``approx_percentile`` — accuracy only affects balance,
@@ -36,11 +24,10 @@ decides which one each caller gets:
 2. ``_pid`` — the row's range partition — becomes a PURE EXPRESSION over
    those literal bounds (count of bounds strictly below the key; NULLs
    sort first into partition 0). Because the assignment is deterministic,
-   every branch and every recompute of the plan agrees on it — the
-   fork-consistency problem the old ``localCheckpoint`` existed to solve
-   is gone BY CONSTRUCTION, not by materialization barrier. Ties on the
-   leading key all land in one partition, so cross-partition order is
-   respected with any tie-break suffix.
+   every branch and every recompute of the plan agrees on it, with no
+   materialization barrier. Ties on the leading key all land in one
+   partition, so cross-partition order is respected with any tie-break
+   suffix.
 3. A second small job collects the EXACT per-partition counts (one melt
    + tiny groupBy over the persisted frame; <= cuts × width rows), which
    become LITERAL rank offsets — no offsets branch, no broadcast join,
@@ -49,26 +36,17 @@ decides which one each caller gets:
    sf0.1 than this collect, and both are safe because every consumer
    evaluates the same deterministic ``_pid`` expression.)
 4. The ranked frame is ``row_number() OVER (PARTITION BY _pid ORDER BY
-   order_cols)`` — a hash exchange on the partition id (the same
-   per-partition sort work the old range shuffle did, never a global
-   sort; the window is always PARTITIONED, so the plan-shape invariant
-   "no unpartitioned window spec" holds) — plus closed-form integer
-   arithmetic mapping ``offset + _rn`` to the ntile bucket.
+   order_cols)`` — a hash exchange on the partition id and per-partition
+   sorts, never a global sort (the window is always PARTITIONED, so the
+   plan-shape invariant "no unpartitioned window spec" holds) — plus
+   closed-form integer arithmetic mapping ``offset + _rn`` to the ntile
+   bucket.
 
-Exactness never depends on where the bounds fall (either strategy):
-ranks come from actual row positions, so a skewed sample only costs
-balance, never the answer (test-pinned bit-equality across widths
-1/32/200). With a tie-broken (unique) order key the result is
-deterministic; with ties it is exactly as nondeterministic as ``ntile``
-itself.
-
-The single-cut checkpoint path additionally relies on the lazy
-``localCheckpoint`` for fork consistency: without it the rank stream and
-the per-partition-count stream would re-execute the range exchange
-independently and could sample DIFFERENT bounds (observed under AQE as
-rank/total drift). The multi-cut path needs no barrier — its partition
-assignment is a deterministic expression over literal bounds, so every
-branch and recompute agrees by construction.
+Exactness never depends on where the bounds fall: ranks come from actual
+row positions, so a skewed sample only costs balance, never the answer
+(test-pinned bit-equality across widths 1/32/200). With a tie-broken
+(unique) order key the result is deterministic; with ties it is exactly
+as nondeterministic as ``ntile`` itself.
 """
 
 from __future__ import annotations
@@ -77,14 +55,6 @@ from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-# Fallback width of the rank partitioning, used only when the session's
-# ``spark.sql.shuffle.partitions`` is unreadable (e.g. set to "auto" on a
-# vendor runtime). The default tracks the session at CALL time — a
-# hardcoded width would under-parallelize the rank cut on a cluster whose
-# shuffle width is thousands. Exactness never depends on the width (ranks
-# come from actual row positions); it only sets balance.
-_FALLBACK_RANK_PARTITIONS = 200
 
 # Most range partitions exact_ntile_cuts derives bounds for, whatever the
 # shuffle width. Its partition id is an unrolled sum of one CASE per
@@ -100,12 +70,7 @@ _MAX_CUT_PARTITIONS = 64
 # approx_percentile accuracy for the bounds job: affects balance only.
 _BOUNDS_ACCURACY = 10000
 
-# monotonically_increasing_id layout (single-cut checkpoint path):
-# partition id in the upper 31 bits, record-within-partition in the lower 33.
-_MID_OFFSET_BITS = 33
-_MID_OFFSET_MASK = (1 << _MID_OFFSET_BITS) - 1
-
-_HELPER_COLS = ("_mid", "_pid", "_rn", "_off", "_total", "_rank")
+_HELPER_COLS = ("_pid", "_rn", "_rank")
 
 # Persisted-base memo (appId, input plan semanticHash) -> DataFrame, the
 # shingle_features discipline: repeated constructions of the same cut
@@ -196,7 +161,7 @@ def _key_and_ordering(
         )
         return proxy, sql, ordering
     raise ValueError(
-        f"with_exact_ntile: unsupported leading order column type {dtype!r}"
+        f"exact_ntile_cuts: unsupported leading order column type {dtype!r}"
     )
 
 
@@ -284,9 +249,14 @@ def exact_ntile_cuts(
     """``df`` plus one INT bucket column per ``(n, order_cols,
     bucket_col)`` cut, each equal to ``ntile(n) OVER (ORDER BY order_cols
     ASC NULLS FIRST)`` — all cuts sharing ONE persisted base, ONE bounds
-    job and ONE exact-counts job (see module docstring). The cut uses at
-    most ``_MAX_CUT_PARTITIONS`` range partitions, whatever
-    ``num_partitions`` asks for."""
+    job and ONE exact-counts job (see module docstring).
+
+    Each ``order_cols`` should end in a unique tie-breaker for a
+    deterministic answer (the registered callers do: (ltv, user_id),
+    (zval, event_id)). A leading string column cuts in string order. The
+    width defaults to the session's ``spark.sql.shuffle.partitions`` at
+    call time, and is capped at ``_MAX_CUT_PARTITIONS`` whatever
+    ``num_partitions`` asks for; the answer never depends on it."""
     global last_width
     if any(c in df.columns for c in _HELPER_COLS):
         raise ValueError(f"input must not contain helper columns {_HELPER_COLS}")
@@ -296,7 +266,7 @@ def exact_ntile_cuts(
                 df.sparkSession.conf.get("spark.sql.shuffle.partitions")
             )
         except (TypeError, ValueError):
-            num_partitions = _FALLBACK_RANK_PARTITIONS
+            num_partitions = _MAX_CUT_PARTITIONS
     num_partitions = min(num_partitions, _MAX_CUT_PARTITIONS)
     last_width = num_partitions
 
@@ -372,104 +342,7 @@ def exact_ntile_cuts(
                 END AS INT)"""
                 ),
             )
-            .drop("_pid", "_rn", "_rank")
+            .drop(*_HELPER_COLS)
         )
     return out
 
-
-def with_exact_ntile(
-    df: DataFrame,
-    n: int,
-    order_cols: list[str | Column],
-    *,
-    bucket_col: str = "bucket",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``df`` plus an INT ``bucket_col`` equal to
-    ``ntile(n) OVER (ORDER BY order_cols ASC NULLS FIRST)`` — computed
-    with a range shuffle instead of a single-partition global sort.
-
-    ``order_cols`` should end in a unique tie-breaker for a deterministic
-    answer (both registered callers do: (ltv, user_id), (zval, event_id)).
-    String columns are accepted and sort ASC NULLS FIRST — Spark's window
-    default — in both the range partitioner and the in-partition sort.
-
-    Calling this materializes a lazy ``localCheckpoint`` of the ranked
-    frame on first action (required for fork consistency — see module
-    docstring); the block is freed when the returned DataFrame is GC'd.
-    This is the SINGLE-cut strategy the r16 A/B kept: two-job
-    deterministic bounds (the :func:`exact_ntile_cuts` strategy applied
-    to one cut) measured strictly slower here — see the module docstring
-    numbers. Multi-cut callers should use :func:`exact_ntile_cuts`.
-    """
-    global last_width
-    if any(c in df.columns for c in _HELPER_COLS):
-        raise ValueError(f"input must not contain helper columns {_HELPER_COLS}")
-    if num_partitions is None:
-        # track the session's shuffle width at call time; bucket assignment
-        # is width-independent (tests assert bit-equality at 1/32/200)
-        try:
-            num_partitions = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            num_partitions = _FALLBACK_RANK_PARTITIONS
-    last_width = num_partitions
-    ordering = [
-        F.col(c).asc_nulls_first() if isinstance(c, str) else c
-        for c in order_cols
-    ]
-    rn = (
-        df.repartitionByRange(num_partitions, *ordering)
-        .sortWithinPartitions(*ordering)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn(
-            "_pid", F.shiftrightunsigned("_mid", _MID_OFFSET_BITS).cast("int")
-        )
-        .withColumn(
-            "_rn",
-            F.col("_mid").bitwiseAND(F.lit(_MID_OFFSET_MASK)) + F.lit(1),
-        )
-        .drop("_mid")
-        .localCheckpoint(eager=False)
-    )
-
-    counts = rn.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # Cumulative offsets + grand total over the P-row counts frame
-    # (bounded by construction: P = num_partitions) via a P×P broadcast
-    # self-join — NO window functions, so the plan contains zero
-    # unpartitioned window sorts, structurally (a literal partition key
-    # would be constant-folded back into an empty spec and re-trigger
-    # Spark's "No Partition Defined" warning).
-    b = counts.select(
-        F.col("_pid").alias("_bpid"), F.col("_cnt").alias("_bcnt")
-    )
-    offsets = (
-        counts.join(F.broadcast(b))
-        .groupBy("_pid")
-        .agg(
-            F.sum(
-                F.when(F.col("_bpid") < F.col("_pid"), F.col("_bcnt")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("_off"),
-            F.sum("_bcnt").alias("_total"),
-        )
-    )
-
-    ranked = rn.join(F.broadcast(offsets), "_pid")
-    # ntile(n) over N rows: the first N%n buckets take ceil(N/n) rows, the
-    # rest floor(N/n). Integer-exact: DIV keeps everything in bigint; the
-    # global rank is _rn + _off.
-    rank = "(_rn + _off)"
-    bucket = F.expr(
-        f"""CAST(CASE
-            WHEN {rank} <= (_total % {n}) * ((_total DIV {n}) + 1)
-            THEN ({rank} - 1) DIV ((_total DIV {n}) + 1) + 1
-            ELSE (_total % {n})
-                 + ({rank} - (_total % {n}) * ((_total DIV {n}) + 1) - 1)
-                   DIV greatest(_total DIV {n}, 1)
-                 + 1
-        END AS INT)"""
-    )
-    return ranked.withColumn(bucket_col, bucket).drop(*_HELPER_COLS)

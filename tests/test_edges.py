@@ -498,15 +498,47 @@ def test_repetition_stats_flags_degenerate_doc(spark):
     assert rows[2].dup_bigram_frac == 0.0
 
 
+def _window_ntiles(df, cuts):
+    """The exact-ntile cuts as chained global-window ``F.ntile``s."""
+    from pyspark.sql import Window
+
+    for n, cols, name in cuts:
+        w = Window.orderBy(*[F.col(c).asc_nulls_first() for c in cols])
+        df = df.withColumn(name, F.ntile(n).over(w).cast("int"))
+    return df
+
+
 def test_exact_ntile_empty_and_tiny_frames(spark):
-    from kafkastreamingetl_spark.operators.rankstats import with_exact_ntile
+    """Exact ntile at its domain edges, bit-equal to ``F.ntile``: an empty
+    frame (one cut and two cuts), a one-row frame, n > N (every row its
+    own bucket), and a cut whose leading key is entirely NULL (no bounds:
+    one range partition, ordered by the tie-breaker) next to a normal
+    cut."""
+    from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
 
-    empty = spark.createDataFrame([], "v long, uid long")
-    assert with_exact_ntile(empty, 10, ["v", "uid"]).count() == 0
+    def check(df, cuts):
+        got = sorted(exact_ntile_cuts(df, cuts).collect())
+        assert got == sorted(_window_ntiles(df, cuts).collect())
+        return got
 
-    one = spark.createDataFrame([(5, 1)], "v long, uid long")
-    rows = with_exact_ntile(one, 10, ["v", "uid"]).collect()
-    assert [(r.v, r.bucket) for r in rows] == [(5, 1)]
+    one_cut = [(10, ["v", "uid"], "bucket")]
+    two_cuts = [(10, ["v", "uid"], "bv"), (3, ["w", "uid"], "bw")]
+    schema = "v long, w long, uid long"
+    empty = spark.createDataFrame([], schema)
+    assert check(empty, one_cut) == []
+    assert check(empty, two_cuts) == []
+
+    one = spark.createDataFrame([(5, 2, 1)], schema)
+    assert [(r.v, r.bucket) for r in check(one, one_cut)] == [(5, 1)]
+
+    seven = spark.createDataFrame([(v, v % 3, v) for v in range(7)], schema)
+    got = check(seven, one_cut)
+    assert [r.bucket for r in got] == list(range(1, 8))
+
+    rows = [(i * 7 % 11, None, i) for i in range(40)]
+    null_lead = spark.createDataFrame(rows, schema)
+    got = check(null_lead, [(10, ["v", "uid"], "bv"), (4, ["w", "uid"], "bw")])
+    assert {r.bw for r in got} == {1, 2, 3, 4}
 
 
 def test_backlog_empty_lineitem_and_null_days(spark):

@@ -8,12 +8,17 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kafkastreamingetl_spark.operators.rankstats import with_exact_ntile
+from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
 
 
 def _reference_ntile(df, n, cols):
     w = Window.orderBy(*[F.col(c).asc_nulls_first() for c in cols])
     return df.withColumn("bucket", F.ntile(n).over(w).cast("int"))
+
+
+def _ntile(df, n, cols, **kw):
+    """One cut into a ``bucket`` column."""
+    return exact_ntile_cuts(df, [(n, cols, "bucket")], **kw)
 
 
 @pytest.mark.parametrize(
@@ -32,7 +37,7 @@ def test_exact_ntile_matches_window_ntile(spark, rows, n):
         (F.col("id") * 37 % 53).alias("v"), F.col("id").alias("uid")
     )
     expected = _reference_ntile(df, n, ["v", "uid"])
-    got = with_exact_ntile(df, n, ["v", "uid"])
+    got = _ntile(df, n, ["v", "uid"])
     assert expected.exceptAll(got).count() == 0
     assert got.exceptAll(expected).count() == 0
 
@@ -43,7 +48,7 @@ def test_exact_ntile_null_leading_values_bucket_first(spark):
         F.col("id").alias("uid"),
     )
     expected = _reference_ntile(df, 4, ["v", "uid"])
-    got = with_exact_ntile(df, 4, ["v", "uid"])
+    got = _ntile(df, 4, ["v", "uid"])
     assert expected.exceptAll(got).count() == 0
     assert got.exceptAll(expected).count() == 0
 
@@ -56,7 +61,7 @@ def test_exact_ntile_heavy_tie_on_leading_key(spark):
         F.col("id").alias("uid"),
     )
     expected = _reference_ntile(df, 10, ["v", "uid"])
-    got = with_exact_ntile(df, 10, ["v", "uid"])
+    got = _ntile(df, 10, ["v", "uid"])
     assert expected.exceptAll(got).count() == 0
     assert got.exceptAll(expected).count() == 0
 
@@ -69,24 +74,17 @@ def test_exact_ntile_bit_equal_across_widths(spark):
     df = spark.range(997).select(
         (F.col("id") * 37 % 53).alias("v"), F.col("id").alias("uid")
     )
-    base = sorted(
-        with_exact_ntile(df, 10, ["v", "uid"], num_partitions=1).collect()
-    )
+    base = sorted(_ntile(df, 10, ["v", "uid"], num_partitions=1).collect())
     for width in (32, 200, None):
-        got = sorted(
-            with_exact_ntile(
-                df, 10, ["v", "uid"], num_partitions=width
-            ).collect()
-        )
+        got = sorted(_ntile(df, 10, ["v", "uid"], num_partitions=width).collect())
         assert got == base, f"width={width}"
 
 
 def test_exact_ntile_default_width_tracks_session(spark):
     """The default cut width is read from the session's
     spark.sql.shuffle.partitions at call time, not hardcoded. (The
-    PHYSICAL partition count of the output is AQE's business since the
-    r16 deterministic-bounds redesign — the semantic width shows up as
-    the number of quantile bounds the cut derives.)"""
+    PHYSICAL partition count of the output is AQE's business — the width
+    shows up as the number of quantile bounds the cut derives.)"""
     from kafkastreamingetl_spark.operators import rankstats
 
     df = spark.range(50).select(
@@ -95,7 +93,7 @@ def test_exact_ntile_default_width_tracks_session(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        ranked = with_exact_ntile(df, 5, ["v", "uid"])
+        ranked = _ntile(df, 5, ["v", "uid"])
         assert rankstats.last_width == 7
         # and the answer is still exact at that width
         expected = _reference_ntile(df, 5, ["v", "uid"])
@@ -107,34 +105,34 @@ def test_exact_ntile_default_width_tracks_session(spark):
 def test_exact_ntile_rejects_helper_column_collisions(spark):
     df = spark.range(3).select(F.col("id").alias("_rn"), "id")
     with pytest.raises(ValueError):
-        with_exact_ntile(df, 2, ["id"])
+        _ntile(df, 2, ["id"])
 
 
-def test_exact_ntile_plan_has_no_window_operator_at_all(spark):
-    """Single-cut (checkpoint) strategy: the physical plan contains NO
-    window operator — the data-sized sort is a range exchange +
-    in-partition sorts, the offsets come from a P×P broadcast self-join.
-    An empty-partition windowspec anywhere would be the single-task
-    funnel (and would emit Spark's 'No Partition Defined' warning in the
-    driver's bench tail)."""
+def test_exact_ntile_single_cut_plan_is_linear(spark):
+    """One cut plans like many: every window spec is PARTITIONED (by the
+    deterministic range-bound _pid), with no checkpoint barrier (no
+    ExistingRDD scan) and no ntile. An empty-partition windowspec anywhere
+    would be the single-task funnel (and would emit Spark's 'No Partition
+    Defined' warning in the driver's bench tail)."""
+    from test_plan_shapes import _unpartitioned_window_specs
+
     df = spark.range(500).select(
         (F.col("id") % 97).alias("v"), F.col("id").alias("uid")
     )
-    got = with_exact_ntile(df, 10, ["v", "uid"])
+    got = _ntile(df, 10, ["v", "uid"])
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "windowspecdefinition" not in plan
+    assert "windowspecdefinition" in plan
+    assert not _unpartitioned_window_specs(plan)
     assert "ntile" not in plan.lower()
+    assert "ExistingRDD" not in plan
 
 
 def test_exact_ntile_cuts_matches_window_ntile_and_plan_is_linear(spark):
-    """Multi-cut (deterministic-bounds) strategy: bit-equal to three
-    chained window ntiles; every window spec in the plan is PARTITIONED
-    (by the deterministic range-bound _pid) and there is no checkpoint
-    barrier (no ExistingRDD scan) and no broadcast offsets join — the
-    offsets are literals."""
+    """Two cuts over one frame: bit-equal to two chained window ntiles;
+    every window spec in the plan is PARTITIONED (by the deterministic
+    range-bound _pid) and there is no checkpoint barrier (no ExistingRDD
+    scan) and no broadcast offsets join — the offsets are literals."""
     from test_plan_shapes import _unpartitioned_window_specs
-
-    from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
 
     df = spark.range(997).select(
         (F.col("id") * 37 % 53).alias("v"),
@@ -165,10 +163,8 @@ def test_exact_ntile_string_keys_of_mixed_length(spark):
     """String leading keys cut in string order: NULL and '' first, a key
     below every longer key it prefixes, 'az' below 'b' (an unpadded byte
     prefix read 'az' as 0x617A, above 'b' at 0x62), multibyte UTF-8 after
-    ASCII — bit-equal to F.ntile through both strategies and both forms
-    of the leading key (column name and Column)."""
-    from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
-
+    ASCII — bit-equal to F.ntile through both forms of the leading key
+    (column name and Column)."""
     keys = ["", "az", "b", None, "a", "azzzzzzzz", "b\x00", "zz", "é", "日本語"]
     df = spark.createDataFrame(
         [(k, i * len(keys) + j) for i in range(6) for j, k in enumerate(keys)],
@@ -176,23 +172,14 @@ def test_exact_ntile_string_keys_of_mixed_length(spark):
     )
     expected = _reference_ntile(df, 4, ["k", "uid"])
     for lead in ("k", F.col("k")):
-        got = exact_ntile_cuts(
-            df, [(4, [lead, "uid"], "bucket")], num_partitions=8
-        )
-        _assert_same_rows(expected, got)
-    _assert_same_rows(
-        expected, with_exact_ntile(df, 4, ["k", "uid"], num_partitions=8)
-    )
+        _assert_same_rows(expected, _ntile(df, 4, [lead, "uid"], num_partitions=8))
 
 
-def test_exact_ntile_sort_order_lead_through_both_entry_points(spark):
+def test_exact_ntile_sort_order_lead_matches_column_lead(spark):
     """A leading sort-order Column in the cut's own order
-    (``asc_nulls_first()``) gives the same buckets as the column itself
-    through both strategies: the multi-cut derives its bounds from the
-    value under the sort order, never from the sort order. Any other
-    order is rejected by the multi-cut, naming the column."""
-    from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
-
+    (``asc_nulls_first()``) gives the same buckets as the column itself:
+    the bounds come from the value under the sort order, never from the
+    sort order. Any other order is rejected, naming the column."""
     keys = ["", "az", "b", None, "a", "azzzzzzzz", "b\x00", "zz", "é", "日本語"]
     df = spark.createDataFrame(
         [(k, i * len(keys) + j) for i in range(6) for j, k in enumerate(keys)],
@@ -200,22 +187,16 @@ def test_exact_ntile_sort_order_lead_through_both_entry_points(spark):
     )
     expected = _reference_ntile(df, 4, ["k", "uid"])
     lead = F.col("k").asc_nulls_first()
-    _assert_same_rows(
-        expected,
-        exact_ntile_cuts(df, [(4, [lead, "uid"], "bucket")], num_partitions=8),
-    )
-    _assert_same_rows(
-        expected, with_exact_ntile(df, 4, [lead, "uid"], num_partitions=8)
-    )
+    _assert_same_rows(expected, _ntile(df, 4, [lead, "uid"], num_partitions=8))
     with pytest.raises(ValueError, match="k DESC"):
-        exact_ntile_cuts(df, [(4, [F.col("k").desc(), "uid"], "bucket")])
+        _ntile(df, 4, [F.col("k").desc(), "uid"])
 
 
 def test_exact_ntile_cuts_wide_shuffle_is_capped_and_stays_codegen(
     spark, monkeypatch
 ):
-    """At a cluster-scale shuffle width (2000) the multi-cut derives at
-    most 64 range bounds: its partition id is one unrolled CASE per
+    """At a cluster-scale shuffle width (2000) the cut derives at most 64
+    range bounds: its partition id is one unrolled CASE per
     bound, and 1999 of them overflowed the SQL parser. The answer stays
     bit-equal, and the counts aggregate keeps whole-stage codegen with
     every generated method under Spark's huge-method limit (above it
@@ -237,9 +218,7 @@ def test_exact_ntile_cuts_wide_shuffle_is_capped_and_stays_codegen(
     df = spark.range(5000).select(
         (F.col("id") * 37 % 4999).alias("v"), F.col("id").alias("uid")
     )
-    got = rankstats.exact_ntile_cuts(
-        df, [(10, ["v", "uid"], "bucket")], num_partitions=2000
-    )
+    got = _ntile(df, 10, ["v", "uid"], num_partitions=2000)
     assert rankstats.last_width == 64
     _assert_same_rows(_reference_ntile(df, 10, ["v", "uid"]), got)
 
@@ -255,26 +234,21 @@ def test_exact_ntile_cuts_wide_shuffle_is_capped_and_stays_codegen(
 
 
 def test_registered_decile_and_zorder_lanes_use_rankstats(spark, sf_dir):
-    """The two single-cut queries VERDICT r6 flagged as scale-weak route
-    through with_exact_ntile (checkpoint strategy): no window operator
-    anywhere — the checkpointed rank frame shows as an ExistingRDD scan
-    joined to a broadcast offsets side. The multi-cut RFM lane rides
-    exact_ntile_cuts: partitioned windows only, no checkpoint barrier."""
+    """The three ntile lanes (the two single-cut queries VERDICT r6
+    flagged as scale-weak, and the three-cut RFM census) all route
+    through exact_ntile_cuts and share its linear plan: partitioned
+    windows only, no ntile, no checkpoint barrier (ExistingRDD scan)."""
     from test_plan_shapes import _unpartitioned_window_specs
 
     from kafkastreamingetl_spark.queries import QUERIES
 
-    for name in ("user_ltv_deciles", "events_zorder_layout"):
+    for name in ("user_ltv_deciles", "events_zorder_layout", "user_rfm_segments"):
         df = QUERIES[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "windowspecdefinition" not in plan, name
+        assert "windowspecdefinition" in plan, name
+        assert not _unpartitioned_window_specs(plan), name
         assert "ntile" not in plan.lower(), name
-        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan, name
-    rfm = QUERIES["user_rfm_segments"](spark, sf_dir)
-    plan = rfm._jdf.queryExecution().executedPlan().toString()
-    assert not _unpartitioned_window_specs(plan)
-    assert "ntile" not in plan.lower()
-    assert "ExistingRDD" not in plan
+        assert "ExistingRDD" not in plan, name
 
 
 def test_rfm_segments_match_window_ntile_differential(spark, sf_dir):

@@ -367,6 +367,80 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     assert got.count() > first  # run 2 finalized new windows from run 1 state
 
 
+def test_reference_pipeline_restart_matches_uninterrupted_run(
+    spark, tmp_path, sf_dir
+):
+    """The composed pipeline's restart contract (end-to-end exactly-once,
+    as in Structured Streaming): file source replaying one file per
+    micro-batch (``maxFilesPerTrigger=1``) → reference_pipeline → lake. A
+    run over the first 3 of 6 files, restarted on the SAME checkpoint
+    once the other 3 have landed, leaves exactly the lake of one
+    uninterrupted run on a fresh checkpoint: the same multiset of rows,
+    and no (window, key, segment) twice. Event ids are unique across
+    files, and each file starts after the previous one ends, so the
+    within-watermark dedup and the late-row rule see the same input
+    either way."""
+    import shutil
+    import time
+
+    from kafkastreamingetl_spark.catalog import load_table
+    from kafkastreamingetl_spark.sources import EVENT_SCHEMA
+    from kafkastreamingetl_spark.streaming import reference_pipeline
+
+    customer = load_table(spark, sf_dir, "customer")
+    src = tmp_path / "src"
+    src.mkdir()
+    parts = []
+    for i in range(6):
+        stage = tmp_path / f"stage{i}"
+        synthetic_events_batch(
+            spark, 400, seed=80 + i, base_ts=f"2024-01-01 00:{4 * i:02d}:00"
+        ).withColumn("event_id", F.col("event_id") + i * 1_000_000).coalesce(
+            1
+        ).write.parquet(str(stage))
+        (part,) = stage.glob("part-*.parquet")
+        parts.append(part)
+    # the source replays files in modification-time order
+    t0 = time.time() - len(parts)
+
+    def land(lo, hi):
+        for i in range(lo, hi):
+            dst = src / f"part-{i:05d}.parquet"
+            shutil.copy(parts[i], dst)
+            os.utime(dst, (t0 + i, t0 + i))
+
+    def run(name):
+        stream = (
+            spark.readStream.schema(EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        lake = str(tmp_path / f"{name}_lake")
+        run_available_now(
+            reference_pipeline(
+                stream,
+                customer,
+                lake_path=lake,
+                checkpoint_dir=str(tmp_path / f"{name}_ckpt"),
+                available_now=True,
+                trigger_seconds=None,
+            )
+        )
+        return spark.read.parquet(lake)
+
+    land(0, 3)
+    first = run("restarted").count()
+    land(3, 6)
+    restarted = run("restarted")
+    fresh = run("fresh")
+
+    key = ["window_start", "window_end", "event_type_norm", "segment"]
+    assert 0 < first < restarted.count()
+    assert restarted.count() == restarted.select(*key).distinct().count()
+    assert restarted.exceptAll(fresh).count() == 0
+    assert fresh.exceptAll(restarted).count() == 0
+
+
 def test_stream_static_join_rereads_dim_each_batch(spark, tmp_path):
     """Stream-static joins re-resolve the static side per micro-batch: a
     dim update between runs is visible to later batches with NO restart of
