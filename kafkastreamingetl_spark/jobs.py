@@ -13,7 +13,7 @@ op — can run them without writing Python:
     python -m kafkastreamingetl_spark.jobs expire --path PATH --partition-col COL --keep-from VALUE [--delete]
     python -m kafkastreamingetl_spark.jobs vacuum-tombstones --path PATH --partition-col COL --older-than TS [--delete]
     python -m kafkastreamingetl_spark.jobs kafka-smoke [--bootstrap HOST:9092] [--n-events N]
-    python -m kafkastreamingetl_spark.jobs neardup-ingest --index PATH --batch PARQUET [--out PATH] [--min-jaccard J]
+    python -m kafkastreamingetl_spark.jobs neardup-ingest --index PATH --batch PARQUET --out PATH --day DAY [--min-jaccard J]
     python -m kafkastreamingetl_spark.jobs contamination-diff --index PATH --batch PARQUET --out PATH --day DAY [--max-batch-docs N]
 
 Each command prints ONE JSON result line on stdout (row counts / files
@@ -143,62 +143,27 @@ def cmd_kafka_smoke(args: argparse.Namespace) -> dict:
 
 
 def cmd_neardup_ingest(args: argparse.Namespace) -> dict:
-    """The daily near-dup ingest loop as one scheduler command: dedup a
-    new document batch against the persisted signature index
-    (dedup.build_neardup_index layout), optionally append survivors to a
-    corpus directory, and write the survivors' own signatures/features
-    back to the index so tomorrow's batch dedups against today's accepted
-    corpus. First run bootstraps: within-batch near-dup dedup only, then
-    the index is born from the survivors. The base corpus is never
-    rescanned — per-day cost tracks the batch size (dedup.py
-    incremental_neardup_from_index / append_neardup_index)."""
-    import os
-
-    from .operators.dedup import (
-        NEARDUP_MIN_JACCARD,
-        append_neardup_index,
-        build_neardup_index,
-        incremental_neardup_from_index,
-        neardup_dedup,
-    )
+    """The daily near-dup ingest loop as one scheduler command:
+    ``streaming.neardup_ingest_step`` tagged by ``--day`` — the same
+    per-batch dedup, index write-back and corpus write the streaming sink
+    runs, under the tagged-index rule of the ``streaming`` module
+    docstring (a re-run day rewrites its own partitions and never matches
+    itself; a backfilled day never matches later days). The base corpus
+    is never rescanned: per-day cost tracks the batch size."""
+    from .streaming import neardup_ingest_step
 
     spark = _spark("job_neardup_ingest")
-    mj = (
-        NEARDUP_MIN_JACCARD if args.min_jaccard is None else args.min_jaccard
-    )
     batch = spark.read.parquet(args.batch)
     n_in = batch.count()
-    bootstrap = not os.path.exists(os.path.join(args.index, "sigs"))
-    if bootstrap:
-        survivors = neardup_dedup(batch, min_jaccard=mj)
-    else:
-        survivors = incremental_neardup_from_index(
-            spark, args.index, batch, min_jaccard=mj
-        )
-    # Eager localCheckpoint, not persist: the index append below writes to
-    # the very path the survivors' lineage reads, and Spark's post-write
-    # refreshByPath drops any cache whose plan touches that path — a
-    # persisted survivors would silently recompute against the UPDATED
-    # index (colliding with its own signatures → empty corpus append).
-    # Truncating the lineage pins the survivor set once, batch-sized.
-    survivors = survivors.localCheckpoint(eager=True)
-    n_out = survivors.count()
-    # Index FIRST, corpus second (ADVICE r11): if the corpus append fails
-    # after the index write, the corpus is merely missing one day's rows —
-    # visible (row counts disagree with the index) and repairable. The
-    # reverse order corrupts silently and permanently: corpus rows the
-    # index cannot see mean later batches' near-dups survive forever.
-    if bootstrap:
-        build_neardup_index(survivors, args.index)
-    else:
-        append_neardup_index(survivors, args.index)
-    if args.out:
-        survivors.write.mode("append").parquet(args.out)
+    survivors, bootstrapped = neardup_ingest_step(
+        batch, args.out, args.index, "day", args.day,
+        min_jaccard=args.min_jaccard,
+    )
     return {
         "job": "neardup-ingest",
         "batch_rows": n_in,
-        "survivors": n_out,
-        "bootstrapped": bootstrap,
+        "survivors": survivors.count(),
+        "bootstrapped": bootstrapped,
     }
 
 
@@ -216,9 +181,7 @@ def cmd_contamination_diff(args: argparse.Namespace) -> dict:
     (default 2,000,000) fails the job loudly before the broadcast can
     OOM an executor; 0 disables for callers who have re-checked the
     direction."""
-    import os
-
-    from .streaming import _earlier, contamination_step
+    from .streaming import contamination_step
 
     spark = _spark("job_contamination_diff")
     batch = spark.read.parquet(args.batch)
@@ -233,20 +196,22 @@ def cmd_contamination_diff(args: argparse.Namespace) -> dict:
             "one ingest day, not a backfill, or raise/disable the guard "
             "deliberately"
         )
-    seen = _earlier(
-        os.path.join(args.index, "hashes"),
-        "day",
-        args.day,
-        spark.createDataFrame([], "_h string"),
+    report, bootstrapped = contamination_step(
+        batch, args.out, args.index, "day", args.day
     )
-    bootstrapped = seen.isEmpty()
-    report = contamination_step(batch, args.out, args.index, "day", args.day)
     return {
         "job": "contamination-diff",
         "batch_rows": n_in,
         "contaminated": report.where("contaminated").count(),
         "bootstrapped": bootstrapped,
     }
+
+
+_DAY_HELP = (
+    "ISO date tag for this batch; index probes read strictly EARLIER days "
+    "only, so replays self-heal and backfills never compare against the "
+    "future"
+)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -292,11 +257,12 @@ def build_parser() -> argparse.ArgumentParser:
     n = sub.add_parser(
         "neardup-ingest",
         help="daily near-dup dedup of a document batch against the "
-        "persisted index, with survivor append-back",
+        "persisted index, with survivor write-back",
     )
     n.add_argument("--index", required=True)
     n.add_argument("--batch", required=True)
-    n.add_argument("--out", default=None)
+    n.add_argument("--out", required=True)
+    n.add_argument("--day", required=True, help=_DAY_HELP)
     n.add_argument("--min-jaccard", type=float, default=None)
     n.set_defaults(fn=cmd_neardup_ingest)
 
@@ -310,13 +276,7 @@ def build_parser() -> argparse.ArgumentParser:
     cd.add_argument("--index", required=True)
     cd.add_argument("--batch", required=True)
     cd.add_argument("--out", required=True)
-    cd.add_argument(
-        "--day",
-        required=True,
-        help="ISO date tag for this batch; index probes read strictly "
-        "EARLIER days only, so replays self-heal and backfills never "
-        "compare against the future",
-    )
+    cd.add_argument("--day", required=True, help=_DAY_HELP)
     cd.add_argument(
         "--max-batch-docs",
         type=int,

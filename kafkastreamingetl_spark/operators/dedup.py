@@ -126,10 +126,11 @@ def incremental_exact_dedup(
     via a map-side-combined aggregation before the anti-join — at a daily
     cadence the increment is orders of magnitude smaller than the base,
     so AQE broadcasts the increment side of the probe or shuffles hashes
-    only, never base payloads. With :func:`build_dedup_index` the
-    base-side scan disappears entirely: the anti-join probes the
-    persisted hash index (the idiomatic incremental form of the
-    reference's whole-corpus dropDuplicates, reference spark/app.py:79).
+    only, never base payloads. ``streaming.alltime_dedup_sink`` keeps
+    the same (hash, content) set as a persisted tagged index, so the
+    streaming form never rescans the base at all (the idiomatic
+    incremental form of the reference's whole-corpus dropDuplicates,
+    reference spark/app.py:79).
 
     The join key includes the content alongside the 60-bit hash, so a
     birthday collision between different documents cannot suppress a
@@ -178,44 +179,6 @@ def sql_incremental_exact_dedup(
         PARTITION BY h, {content_col} ORDER BY doc_id ASC NULLS FIRST
     ) = 1
     """
-
-
-def build_dedup_index(df: DataFrame, path: str, content_col: str = "text") -> None:
-    """Persist the base corpus's distinct (hash, content) set as parquet —
-    the incremental-dedup sibling of similarity.build_pq_index. A daily
-    job anti-joins each new batch against this index and appends the
-    batch's own distinct set back to it, so dedup cost tracks the
-    increment, not the corpus. Content rides along (not just the hash) to
-    keep the collision-proof join discipline; at extreme scale swap the
-    content column for a second independent hash."""
-    (
-        df.select(hash60(F.col(content_col)).alias("_h"), F.col(content_col))
-        .groupBy("_h", content_col)
-        .agg(F.lit(1).alias("_one"))
-        .drop("_one")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def incremental_exact_dedup_from_index(
-    spark,
-    path: str,
-    increment: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`incremental_exact_dedup` against a persisted index: the
-    base corpus is never scanned — the anti-join probes the (hash,
-    content) parquet, whose scan prunes to exactly those two columns."""
-    seen = spark.read.parquet(path)
-    inc = ensure_parallelism(increment).withColumn(
-        "_h", hash60(F.col(content_col))
-    )
-    fresh = inc.join(seen, ["_h", content_col], "left_anti")
-    return dedup_deterministic(
-        fresh, ["_h", content_col], [F.asc(id_col)]
-    ).drop("_h")
 
 
 def exact_dedup_streaming(
@@ -2032,9 +1995,9 @@ def incremental_neardup(
     the cross-corpus candidate join shuffles (band, sig) keys only — at a
     daily cadence the increment side is orders of magnitude smaller, so
     AQE broadcasts it and the BASE IS NEVER RESHUFFLED; verification joins
-    touch only candidate ids. Like the exact lane, the base signature side
-    can be persisted once (build-index form) so daily cost tracks the
-    increment.
+    touch only candidate ids. ``streaming.neardup_ingest_step`` persists
+    the base's signatures and features once as a tagged index, so daily
+    cost tracks the increment.
     """
     feats_b = (
         base_feats
@@ -2276,55 +2239,6 @@ def sql_neardup_pagerank(
     """
 
 
-def build_neardup_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Persist the base corpus's near-dup probe index as parquet — the
-    lexical sibling of :func:`build_dedup_index`: ``{path}/sigs`` holds
-    the (band, sig, id) signature table candidate generation equi-joins,
-    ``{path}/feats`` the per-doc shingle-hash sets verification reads.
-    A daily job probes this index instead of re-scanning (and
-    re-shingling) the 100 TB base, and appends each deduped batch's own
-    signatures/features back (:func:`append_neardup_index`) so tomorrow's
-    increment probes today's corpus. Signature rows are ~3 small columns
-    and feature sets ~8 bytes per shingle — orders of magnitude smaller
-    than the corpus text."""
-    _write_neardup_index(df, path, "overwrite", text_col, id_col)
-
-
-def append_neardup_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """The write-back half of the daily incremental loop: after
-    :func:`incremental_neardup_from_index` picks a batch's survivors,
-    appending THEIR signatures/features makes tomorrow's increment dedup
-    against today's accepted corpus, not just the original base. Pass
-    survivors only — appending pre-dedup rows would accrete into the
-    index the very duplicates the probe just rejected. Parquet append is
-    a pure file add (no rewrite of the base's index files), so the daily
-    write cost also tracks the increment."""
-    _write_neardup_index(df, path, "append", text_col, id_col)
-
-
-def _write_neardup_index(
-    df: DataFrame, path: str, mode: str, text_col: str, id_col: str
-) -> None:
-    import os
-
-    feats = shingle_features(df, text_col, id_col)
-    sigs = minhash_signatures(df, text_col, id_col, feats=feats)
-    sigs.write.mode(mode).parquet(os.path.join(path, "sigs"))
-    feats.select(F.col(id_col), F.col("_hs")).write.mode(mode).parquet(
-        os.path.join(path, "feats")
-    )
-
-
 def _incremental_neardup_against(
     increment: DataFrame,
     base_sigs: DataFrame,
@@ -2334,8 +2248,9 @@ def _incremental_neardup_against(
     min_jaccard: float,
     inc_feats: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared core of :func:`incremental_neardup` and its index form:
-    survivors of ``increment`` against a base given as (band, sig, id)
+    """Shared core of :func:`incremental_neardup` and the persisted-index
+    loop (``streaming.neardup_ingest_step``): survivors of ``increment``
+    against a base given as (band, sig, id)
     signatures + (id, shingle-set) features. ``inc_feats``: precomputed
     feature view of the increment (see :func:`eval_contamination`'s
     split-table note)."""
@@ -2384,29 +2299,6 @@ def _incremental_neardup_against(
     )
     return increment.join(dup_vs_base, id_col, "left_anti").join(
         dup_within, id_col, "left_anti"
-    )
-
-
-def incremental_neardup_from_index(
-    spark,
-    path: str,
-    increment: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> DataFrame:
-    """:func:`incremental_neardup` against a persisted index: the base
-    corpus is never scanned — candidates equi-join the (band, sig)
-    parquet and verification reads only the candidate ids' feature rows
-    (both scans prune to the probed columns), so daily cost tracks the
-    increment while the base only ever pays its shingling once."""
-    import os
-
-    base_sigs = spark.read.parquet(os.path.join(path, "sigs"))
-    base_feats = spark.read.parquet(os.path.join(path, "feats"))
-    return _incremental_neardup_against(
-        increment, base_sigs, base_feats, text_col, id_col, min_jaccard
     )
 
 

@@ -19,9 +19,12 @@ the JVM heap, and ``dropDuplicatesWithinWatermark`` upstream keeps dedup
 state bounded (operators.cleaning).
 
 Tagged indexes. The index-backed ``foreachBatch`` sinks below and the
-``contamination-diff`` job keep their memory across batches, and write
-their outputs, as parquet directories partitioned by a batch tag:
-``batch_id`` in the sinks, ``day`` in the job. One rule makes a batch
+``neardup-ingest`` and ``contamination-diff`` jobs keep their memory
+across batches, and write their outputs, as parquet directories
+partitioned by a batch tag: ``batch_id`` in the sinks, ``day`` in the
+jobs, each of which runs its sink's per-batch step
+(:func:`neardup_ingest_step`, :func:`contamination_step`). It is the
+package's only persisted dedup-index layout. One rule makes a batch
 replayed from the checkpoint converge to the same output, neither
 duplicating nor losing rows (the reference's restart contract, spark/
 app.py:189-209; exactly-once via a replayable source plus idempotent
@@ -565,38 +568,32 @@ def neardup_flag_sink(
     )
 
 
-def neardup_ingest_sink(
-    df: DataFrame,
+def neardup_ingest_step(
+    batch: DataFrame,
     corpus_path: str,
     index_path: str,
-    checkpoint: str,
+    tag_col: str,
+    tag,
     *,
     content_col: str = "text",
     id_col: str = "doc_id",
     min_jaccard: float | None = None,
-    available_now: bool = False,
-    trigger_seconds: int | None = 30,
-) -> StreamingQuery:
-    """Streaming twin of the daily near-dup ingest loop (the batch
-    ``neardup-ingest`` CLI, jobs.py): each micro-batch is deduped against
-    the persisted signature index with exact-Jaccard verification, the
-    SURVIVORS' signatures/features are written back to the index, and
-    the survivors land in the corpus — so batch N+1 dedups against
-    everything batch N accepted, continuously. Unlike
-    :func:`neardup_flag_sink` (candidates-only flagging for a downstream
-    verifier), this sink makes the DROP decision in-stream, running the
-    identical candidates→verify functions the batch loop runs
-    (``incremental_neardup_from_index`` semantics per micro-batch; the
-    first-ever batch bootstraps with ``neardup_dedup`` exactly like the
-    CLI) — streaming==batch by construction, checked by differential test.
+) -> tuple[DataFrame, bool]:
+    """One batch of the near-dup ingest loop, shared by
+    :func:`neardup_ingest_sink` (tag ``batch_id``) and the
+    ``neardup-ingest`` job (tag ``day``): dedup ``batch`` against the
+    signatures (``index_path/sigs``) and shingle features
+    (``index_path/feats``) of the index's earlier tags with exact-Jaccard
+    verification, then write the survivors' own signatures, features and
+    rows, so the next tag dedups against everything this one accepted.
+    With no rows below the current tag the batch bootstraps: within-batch
+    ``neardup_dedup`` only. The corpus and both index sides are tagged
+    indexes (module docstring). Returns the survivors (materialized,
+    without the tag column) and whether the batch bootstrapped.
 
-    The corpus and both index sides (sigs, feats) are tagged indexes
-    keyed by ``batch_id`` (module docstring), so a batch retried after a
-    mid-batch crash rewrites its own partitions and never collides with
-    its own half-written signatures. Executor state is zero — the whole
-    loop's state lives in the parquet index, horizon = life of the
-    corpus, daily cost tracks the increment (the base is never
-    re-shingled).
+    Index first, corpus second: a corpus missing one tag is visible and
+    repairable by re-running the tag, while an index missing corpus rows
+    silently lets their later near-dups survive.
     """
     import os
 
@@ -611,42 +608,73 @@ def neardup_ingest_sink(
     mj = NEARDUP_MIN_JACCARD if min_jaccard is None else min_jaccard
     sigs_path = os.path.join(index_path, "sigs")
     feats_path = os.path.join(index_path, "feats")
+    batch_feats = shingle_features(batch, content_col, id_col)
+    base_sigs = _earlier(
+        sigs_path,
+        tag_col,
+        tag,
+        minhash_signatures(batch, content_col, id_col, feats=batch_feats),
+    )
+    base_feats = _earlier(feats_path, tag_col, tag, batch_feats)
+    # rows-below-current, not path existence, decides bootstrap: a
+    # replayed FIRST batch re-runs the same bootstrap code path
+    bootstrapped = base_sigs.isEmpty()
+    if bootstrapped:
+        survivors = neardup_dedup(batch, content_col, id_col, min_jaccard=mj)
+    else:
+        survivors = _incremental_neardup_against(
+            batch, base_sigs, base_feats, content_col, id_col, mj
+        )
+    # eager lineage cut: the index writes below touch the very paths the
+    # survivor plan reads; a merely-persisted survivors would be
+    # invalidated by Spark's post-write refreshByPath and silently
+    # recompute against its own written signatures
+    survivors = survivors.localCheckpoint(eager=True)
+    feats = shingle_features(survivors, content_col, id_col)
+    sigs = minhash_signatures(survivors, content_col, id_col, feats=feats)
+    _write_tagged(sigs, sigs_path, tag_col, tag)
+    _write_tagged(feats, feats_path, tag_col, tag)
+    _write_tagged(survivors, corpus_path, tag_col, tag)
+    return survivors, bootstrapped
+
+
+def neardup_ingest_sink(
+    df: DataFrame,
+    corpus_path: str,
+    index_path: str,
+    checkpoint: str,
+    *,
+    content_col: str = "text",
+    id_col: str = "doc_id",
+    min_jaccard: float | None = None,
+    available_now: bool = False,
+    trigger_seconds: int | None = 30,
+) -> StreamingQuery:
+    """Streaming form of the daily near-dup ingest loop: per micro-batch,
+    :func:`neardup_ingest_step` tagged by ``batch_id`` — the step the
+    ``neardup-ingest`` job runs per day, so streaming == batch by
+    construction (checked by differential test). Unlike
+    :func:`neardup_flag_sink` (candidates-only flagging for a downstream
+    verifier), this sink makes the DROP decision in-stream.
+
+    Executor state is zero — the whole loop's state lives in the parquet
+    index, horizon = life of the corpus, per-batch cost tracks the
+    increment (the base is never re-shingled).
+    """
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        batch_feats = shingle_features(batch, content_col, id_col)
-        base_sigs = _earlier(
-            sigs_path,
+        neardup_ingest_step(
+            batch,
+            corpus_path,
+            index_path,
             "batch_id",
             batch_id,
-            minhash_signatures(batch, content_col, id_col, feats=batch_feats),
+            content_col=content_col,
+            id_col=id_col,
+            min_jaccard=min_jaccard,
         )
-        base_feats = _earlier(feats_path, "batch_id", batch_id, batch_feats)
-        # rows-below-current, not path existence, decides bootstrap: a
-        # replayed FIRST batch re-runs the same bootstrap code path
-        if base_sigs.isEmpty():
-            survivors = neardup_dedup(
-                batch, content_col, id_col, min_jaccard=mj
-            )
-        else:
-            survivors = _incremental_neardup_against(
-                batch, base_sigs, base_feats, content_col, id_col, mj
-            )
-        # eager lineage cut: the index writes below touch the very paths
-        # the survivor plan reads; a merely-persisted survivors would be
-        # invalidated by Spark's post-write refreshByPath and silently
-        # recompute against its own appended signatures (same trap the
-        # batch CLI documents)
-        survivors = survivors.localCheckpoint(eager=True)
-        feats = shingle_features(survivors, content_col, id_col)
-        sigs = minhash_signatures(survivors, content_col, id_col, feats=feats)
-        # index first, corpus second — same crash-ordering rationale as
-        # the batch CLI (a corpus missing one batch is visible and
-        # repairable; an index missing corpus rows corrupts silently)
-        _write_tagged(sigs, sigs_path, "batch_id", batch_id)
-        _write_tagged(feats, feats_path, "batch_id", batch_id)
-        _write_tagged(survivors, corpus_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
         df,
@@ -667,7 +695,7 @@ def contamination_step(
     content_col: str = "text",
     id_col: str = "doc_id",
     n: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """One batch of the accreted-index contamination diff, shared by
     :func:`contamination_diff_sink` (tag ``batch_id``) and the
     ``contamination-diff`` job (tag ``day``): report what ``batch`` drags
@@ -678,7 +706,8 @@ def contamination_step(
     (module docstring). The report is ``contamination_report``, the same
     assembly the batch operator runs, so streaming == batch by
     construction; over an empty index it flags nothing. Returns the
-    report as written (materialized, without the tag column).
+    report as written (materialized, without the tag column) and whether
+    the batch bootstrapped (no hash rows below the current tag).
 
     Index first, report second: a report missing one tag regenerates
     from the index, while an index missing a tag's grams silently
@@ -703,15 +732,15 @@ def contamination_step(
     ).localCheckpoint(eager=True)
     hashes = proj.select("doc_id", "_h")
     grams = proj.select(F.explode("_g").alias("g")).distinct()
+    seen = _earlier(h_path, tag_col, tag, hashes.select("_h"))
+    bootstrapped = seen.isEmpty()
     report = contamination_report(
-        proj,
-        _earlier(h_path, tag_col, tag, hashes.select("_h")),
-        _earlier(g_path, tag_col, tag, grams),
+        proj, seen, _earlier(g_path, tag_col, tag, grams)
     ).localCheckpoint(eager=True)
     _write_tagged(hashes, h_path, tag_col, tag)
     _write_tagged(grams, g_path, tag_col, tag)
     _write_tagged(report, report_path, tag_col, tag)
-    return report
+    return report, bootstrapped
 
 
 def contamination_diff_sink(

@@ -96,7 +96,9 @@ def test_neardup_ingest_job_cli_two_days(capsys, spark, tmp_path):
     """Two scheduler runs of the daily loop: day 1 bootstraps the index
     from its own within-batch survivors; day 2 dedups against BOTH the
     bootstrap corpus and nothing else — a day-2 copy of a day-1 survivor
-    is rejected, a fresh doc survives and lands in the corpus dir."""
+    is rejected, a fresh doc survives and lands in the corpus dir. A
+    re-run of day 2 reports and writes exactly what the first run did,
+    and a backfill of an earlier day never matches day 2's docs."""
     schema = "doc_id long, text string"
     base_text = "alpha beta gamma delta epsilon zeta eta theta"
     fresh1 = "one two three four five six seven eight nine"
@@ -110,20 +112,37 @@ def test_neardup_ingest_job_cli_two_days(capsys, spark, tmp_path):
     day2.write.parquet(b2)
     index, out = str(tmp_path / "nd_index"), str(tmp_path / "corpus")
 
-    rc = main(["neardup-ingest", "--index", index, "--batch", b1, "--out", out])
-    assert rc == 0
-    o1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    def ingest(batch, day):
+        rc = main([
+            "neardup-ingest", "--index", index, "--batch", batch,
+            "--out", out, "--day", day,
+        ])
+        assert rc == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    o1 = ingest(b1, "2026-08-15")
     assert o1["bootstrapped"] is True
     assert o1["batch_rows"] == 3 and o1["survivors"] == 2  # 2 dups 1
 
-    rc = main(["neardup-ingest", "--index", index, "--batch", b2, "--out", out])
-    assert rc == 0
-    o2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    o2 = ingest(b2, "2026-08-16")
     assert o2["bootstrapped"] is False
     assert o2["batch_rows"] == 2 and o2["survivors"] == 1  # 10 dups 3
 
     corpus_ids = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert corpus_ids == {1, 3, 11}
+
+    # a retried day 2 probes only earlier days: same result, same corpus
+    assert ingest(b2, "2026-08-16") == o2
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [
+        1, 3, 11
+    ]
+
+    # a backfilled earlier day holding a copy of day 2's survivor 11 sees
+    # no index rows below its own tag, so it bootstraps and keeps the copy
+    b0 = str(tmp_path / "day0")
+    spark.createDataFrame([(20, fresh2)], schema).write.parquet(b0)
+    o0 = ingest(b0, "2026-08-14")
+    assert o0["bootstrapped"] is True and o0["survivors"] == 1
 
 
 def test_neardup_ingest_index_is_written_before_corpus(
@@ -149,20 +168,32 @@ def test_neardup_ingest_index_is_written_before_corpus(
         f.write("not a directory")
 
     rc = main(["neardup-ingest", "--index", index, "--batch", b1,
-               "--out", bad_out])
+               "--out", bad_out, "--day", "2026-08-15"])
     assert rc != 0  # the CLI reports failure (caught, nonzero exit)
     capsys.readouterr()
     # the index write preceded the corpus failure: signatures are there
     assert os.path.isdir(os.path.join(index, "sigs"))
-    assert spark.read.parquet(os.path.join(index, "sigs")).count() > 0
-    # and the repair is a plain re-append of the day's survivors — which
-    # the index can name (it holds their ids); no scan of the base needed
+    n_sigs = spark.read.parquet(os.path.join(index, "sigs")).count()
+    assert n_sigs > 0
+    # and the index can name the day's survivors (it holds their ids)
     ids = {
         r.doc_id
         for r in spark.read.parquet(os.path.join(index, "sigs"))
         .select("doc_id").distinct().collect()
     }
     assert ids == {1}
+
+    # the repair is a plain re-run of the same day: its probe skips the
+    # day's own signatures, so the doc survives again and lands in the
+    # corpus, and the day's index partition is rewritten, not doubled
+    out = str(tmp_path / "corpus")
+    rc = main(["neardup-ingest", "--index", index, "--batch", b1,
+               "--out", out, "--day", "2026-08-15"])
+    assert rc == 0
+    o = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert o["survivors"] == 1
+    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1}
+    assert spark.read.parquet(os.path.join(index, "sigs")).count() == n_sigs
 
 
 def test_contamination_diff_job_cli_two_days(capsys, spark, tmp_path):

@@ -73,9 +73,10 @@ def test_two_day_stream_matches_batch_cli(spark, paths, tmp_path, capsys):
     _docs(spark, day1).write.parquet(b1)
     _docs(spark, day2).write.parquet(b2)
     cli_index, cli_out = str(tmp_path / "cli_index"), str(tmp_path / "cli_out")
-    for b in (b1, b2):
+    for b, day in ((b1, "2026-08-15"), (b2, "2026-08-16")):
         rc = jobs_main(
-            ["neardup-ingest", "--index", cli_index, "--batch", b, "--out", cli_out]
+            ["neardup-ingest", "--index", cli_index, "--batch", b, "--out", cli_out,
+             "--day", day]
         )
         assert rc == 0
     capsys.readouterr()

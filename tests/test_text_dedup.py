@@ -307,16 +307,10 @@ def test_vocab_token_counts_greedy_semantics(spark):
     assert got[3] == (1, 0)
 
 
-def test_incremental_dedup_semantics_and_index_parity(spark, tmp_path):
+def test_incremental_dedup_semantics(spark):
     """Base content suppresses increment duplicates; within the increment
-    the min-id occurrence survives; genuinely new content passes. The
-    persisted-index path returns the identical survivor set without
-    scanning the base."""
-    from kafkastreamingetl_spark.operators.dedup import (
-        build_dedup_index,
-        incremental_exact_dedup,
-        incremental_exact_dedup_from_index,
-    )
+    the min-id occurrence survives; genuinely new content passes."""
+    from kafkastreamingetl_spark.operators.dedup import incremental_exact_dedup
 
     base = spark.createDataFrame(
         [(1, "seen before"), (2, "also seen")], "doc_id long, text string"
@@ -333,12 +327,6 @@ def test_incremental_dedup_semantics_and_index_parity(spark, tmp_path):
     )
     direct = sorted(r.doc_id for r in incremental_exact_dedup(base, inc).collect())
     assert direct == [11, 14]
-
-    path = str(tmp_path / "dedup_index")
-    build_dedup_index(base, path)
-    served_df = incremental_exact_dedup_from_index(spark, path, inc)
-    assert sorted(r.doc_id for r in served_df.collect()) == [11, 14]
-    assert any("dedup_index" in f for f in served_df.inputFiles())
 
 
 def test_eval_contamination_finds_planted_leak(spark):
@@ -721,44 +709,42 @@ def test_doc_char_entropy_bounds(spark, sf_dir):
         assert r.entropy_micro <= cap, (r.doc_id, r.entropy_micro, cap)
 
 
-def test_incremental_neardup_from_index_matches_direct(spark, sf_dir, tmp_path):
-    """The persisted-index form returns exactly the direct form's
-    survivors — the base pays its shingling once, then disappears from
-    the daily plan."""
+def test_neardup_ingest_step_matches_direct(spark, sf_dir, tmp_path):
+    """The persisted tagged-index loop keeps, at each tag, exactly the
+    direct form's survivors against the corpus the earlier tags accepted
+    — the base pays its shingling once, then only its index is probed."""
     from pyspark.sql import functions as F
 
     from kafkastreamingetl_spark.catalog import load_table
-    from kafkastreamingetl_spark.operators.dedup import (
-        build_neardup_index,
-        incremental_neardup,
-        incremental_neardup_from_index,
-    )
+    from kafkastreamingetl_spark.operators.dedup import incremental_neardup
+    from kafkastreamingetl_spark.streaming import neardup_ingest_step
 
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    inc = docs.filter(F.col("doc_id") % 2 == 1)
-    index = str(tmp_path / "nd_index")
-    build_neardup_index(base, index)
-    direct = {
-        r.doc_id for r in incremental_neardup(base, inc).collect()
-    }
-    via_index = {
-        r.doc_id
-        for r in incremental_neardup_from_index(spark, index, inc).collect()
-    }
-    assert via_index == direct and direct
+    corpus, index = str(tmp_path / "corpus"), str(tmp_path / "nd_index")
+    for tag in range(3):
+        batch = docs.filter(F.col("doc_id") % 3 == tag)
+        survivors, bootstrapped = neardup_ingest_step(
+            batch, corpus, index, "batch_id", tag
+        )
+        assert bootstrapped == (tag == 0)
+        if tag:
+            earlier = (
+                spark.read.parquet(corpus)
+                .where(F.col("batch_id") < tag)
+                .drop("batch_id")
+            )
+            direct = {
+                r.doc_id for r in incremental_neardup(earlier, batch).collect()
+            }
+            assert {r.doc_id for r in survivors.collect()} == direct
+            assert 0 < len(direct) < batch.count()
 
 
-def test_neardup_index_append_back_two_day_loop(spark, tmp_path):
-    """The full daily loop build_neardup_index's docstring promises:
-    day-1 survivors are appended back, so day-2's batch dedups against
-    BOTH the original base and day-1's accepted docs (VERDICT r10 item 6).
-    """
-    from kafkastreamingetl_spark.operators.dedup import (
-        append_neardup_index,
-        build_neardup_index,
-        incremental_neardup_from_index,
-    )
+def test_neardup_ingest_step_three_tag_loop(spark, tmp_path):
+    """The full daily loop over three tags (base, day 1, day 2): day-1
+    survivors are written back, so day 2's batch dedups against BOTH the
+    base and day 1's accepted docs (VERDICT r10 item 6)."""
+    from kafkastreamingetl_spark.streaming import neardup_ingest_step
 
     base_text = "alpha beta gamma delta epsilon zeta eta theta"
     day1_fresh = "one two three four five six seven eight nine"
@@ -772,19 +758,18 @@ def test_neardup_index_append_back_two_day_loop(spark, tmp_path):
     day2 = spark.createDataFrame(
         [(20, day1_fresh), (21, base_text), (22, day2_fresh)], schema
     )
-    index = str(tmp_path / "nd_index")
-    build_neardup_index(base, index)
+    corpus, index = str(tmp_path / "corpus"), str(tmp_path / "nd_index")
 
-    s1 = incremental_neardup_from_index(spark, index, day1)
-    assert {r.doc_id for r in s1.collect()} == {11, 12}
+    def ingest(batch, tag):
+        survivors, _ = neardup_ingest_step(batch, corpus, index, "batch_id", tag)
+        return {r.doc_id for r in survivors.collect()}
 
-    append_neardup_index(s1, index)
-
-    s2 = incremental_neardup_from_index(spark, index, day2)
-    # 20 dups a day-1 SURVIVOR (only findable via the append-back),
-    # 21 still dups the ORIGINAL base (append must not clobber it),
-    # 22 is genuinely fresh.
-    assert {r.doc_id for r in s2.collect()} == {22}
+    assert ingest(base, 0) == {1}
+    assert ingest(day1, 1) == {11, 12}
+    # 20 dups a day-1 SURVIVOR (only findable via the write-back),
+    # 21 still dups the ORIGINAL base (the write-back must not clobber
+    # it), 22 is genuinely fresh.
+    assert ingest(day2, 2) == {22}
 
 
 def test_quality_survivor_clusters_argmax_and_ties(spark):
