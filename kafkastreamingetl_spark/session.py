@@ -1,7 +1,8 @@
 """SparkSession construction with the engine's default tuning profile.
 
 Derived from the reference's session bootstrap (reference spark/app.py:13-33)
-with two deliberate departures, both documented in SURVEY.md §7.0:
+with three deliberate departures; the first two are documented in SURVEY.md
+§7.0:
 
 - ``spark.sql.autoBroadcastJoinThreshold`` is left at Spark's default (10 MB)
   instead of the reference's ``-1``: the reference disabled auto-broadcast
@@ -10,6 +11,20 @@ with two deliberate departures, both documented in SURVEY.md §7.0:
 - shuffle partitions default to a caller-tunable value rather than the
   reference's hard-coded 8 (spark/app.py:17), since the right number is a
   function of cluster size and input volume.
+- streaming checkpoints use RocksDB changelog checkpointing and the
+  ``FileSystem``-based checkpoint file manager instead of Spark's defaults
+  (snapshot upload per commit, ``FileContext`` renames). The pip PySpark ships
+  no native ``libhadoop``, so Hadoop's local filesystem spawns a process for
+  each permission or link-status call: ``readlink`` 4 times per FileContext
+  rename, ``chmod`` per file create, ``rm -rf`` per RocksDB snapshot upload.
+  On the paper's stream (source → clean → dim join → watermarked window →
+  lake, 500 events per micro-batch, 4 cores) that was ~264 spawned processes
+  per batch; with both settings it is ~63, nearly all ``chmod`` at file
+  create (SCALE.md "Per-batch checkpoint cost"). The
+  FileSystem-based manager writes a temp file and renames it, refusing to
+  overwrite an existing log entry, so it needs an atomic rename: local POSIX
+  filesystems and HDFS have one (on object stores neither manager is
+  atomic). A caller's ``extra_conf`` still wins over both entries.
 """
 
 from __future__ import annotations
@@ -105,6 +120,20 @@ def get_spark(
         # where the default HDFSBackedStateStore would not (SURVEY.md §4).
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        ),
+        # Per-commit checkpoint cost (module docstring). Without a native
+        # libhadoop every FileContext rename runs `readlink` 4 times and every
+        # RocksDB snapshot upload runs `rm -rf`: ~264 spawned processes per
+        # 500-event batch of the paper's stream, ~63 with these two entries.
+        # Changelog checkpointing writes one changelog per commit instead of
+        # uploading SST files, a zip and their checksums; the FileSystem
+        # manager renames with FileSystem.rename (no link-status checks) and
+        # so needs an atomic rename, which local disks and HDFS give. A
+        # caller's extra_conf overrides either.
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
         ),
     }
     if extra_conf:

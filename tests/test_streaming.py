@@ -9,6 +9,9 @@ the constructs that look right and fail at ``.start()``).
 from __future__ import annotations
 
 import os
+import re
+import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -328,8 +331,6 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     finalized (no duplicates) nor lose the in-flight state (no gaps): the
     union of both runs' parquet output is exactly one row per finalized
     window."""
-    import time
-
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -367,32 +368,28 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     assert got.count() > first  # run 2 finalized new windows from run 1 state
 
 
-def test_reference_pipeline_restart_matches_uninterrupted_run(
-    spark, tmp_path, sf_dir
-):
-    """The composed pipeline's restart contract (end-to-end exactly-once,
-    as in Structured Streaming): file source replaying one file per
-    micro-batch (``maxFilesPerTrigger=1``) → reference_pipeline → lake. A
-    run over the first 3 of 6 files, restarted on the SAME checkpoint
-    once the other 3 have landed, leaves exactly the lake of one
-    uninterrupted run on a fresh checkpoint: the same multiset of rows,
-    and no (window, key, segment) twice. Event ids are unique across
-    files, and each file starts after the previous one ends, so the
-    within-watermark dedup and the late-row rule see the same input
-    either way."""
-    import shutil
-    import time
+# Spark's own checkpoint settings, which session.get_spark's profile replaces
+_SPARK_DEFAULT_CHECKPOINTING = {
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "false",
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    ),
+}
 
-    from kafkastreamingetl_spark.catalog import load_table
-    from kafkastreamingetl_spark.sources import EVENT_SCHEMA
-    from kafkastreamingetl_spark.streaming import reference_pipeline
 
-    customer = load_table(spark, sf_dir, "customer")
-    src = tmp_path / "src"
-    src.mkdir()
+@pytest.fixture(scope="module")
+def six_files(spark, tmp_path_factory):
+    """Six one-file micro-batches for the composed pipeline: 400 events
+    each, event ids unique across files, and each file starting after the
+    previous one ends, so the within-watermark dedup and the late-row rule
+    see the same input however the files are split across runs. Returns
+    the files and their modification times (the file source replays in
+    modification-time order)."""
+    root = tmp_path_factory.mktemp("six_files")
     parts = []
     for i in range(6):
-        stage = tmp_path / f"stage{i}"
+        stage = root / f"stage{i}"
         synthetic_events_batch(
             spark, 400, seed=80 + i, base_ts=f"2024-01-01 00:{4 * i:02d}:00"
         ).withColumn("event_id", F.col("event_id") + i * 1_000_000).coalesce(
@@ -400,45 +397,129 @@ def test_reference_pipeline_restart_matches_uninterrupted_run(
         ).write.parquet(str(stage))
         (part,) = stage.glob("part-*.parquet")
         parts.append(part)
-    # the source replays files in modification-time order
     t0 = time.time() - len(parts)
+    return [(part, t0 + i) for i, part in enumerate(parts)]
 
-    def land(lo, hi):
-        for i in range(lo, hi):
-            dst = src / f"part-{i:05d}.parquet"
-            shutil.copy(parts[i], dst)
-            os.utime(dst, (t0 + i, t0 + i))
 
-    def run(name):
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
+def _land(files, src, lo, hi):
+    src.mkdir(exist_ok=True)
+    for i in range(lo, hi):
+        part, mtime = files[i]
+        dst = src / f"part-{i:05d}.parquet"
+        shutil.copy(part, dst)
+        os.utime(dst, (mtime, mtime))
+
+
+def _run_reference(spark, sf_dir, src, ckpt, lake):
+    """One availableNow run of reference_pipeline over ``src``, one file
+    per micro-batch (``maxFilesPerTrigger=1``); returns the lake."""
+    from kafkastreamingetl_spark.catalog import load_table
+    from kafkastreamingetl_spark.streaming import reference_pipeline
+
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    run_available_now(
+        reference_pipeline(
+            stream,
+            load_table(spark, sf_dir, "customer"),
+            lake_path=str(lake),
+            checkpoint_dir=str(ckpt),
+            available_now=True,
+            trigger_seconds=None,
         )
-        lake = str(tmp_path / f"{name}_lake")
-        run_available_now(
-            reference_pipeline(
-                stream,
-                customer,
-                lake_path=lake,
-                checkpoint_dir=str(tmp_path / f"{name}_ckpt"),
-                available_now=True,
-                trigger_seconds=None,
-            )
-        )
-        return spark.read.parquet(lake)
+    )
+    return spark.read.parquet(str(lake))
 
-    land(0, 3)
-    first = run("restarted").count()
-    land(3, 6)
-    restarted = run("restarted")
-    fresh = run("fresh")
 
+def _state_files(ckpt, suffix):
+    """The lake query's state-store files ending in ``suffix``."""
+    return sorted((ckpt / "lake" / "state").rglob(f"*{suffix}"))
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_lake(spark, sf_dir, six_files, tmp_path_factory):
+    """The lake of one run over all six files on a fresh checkpoint."""
+    root = tmp_path_factory.mktemp("uninterrupted")
+    _land(six_files, root / "src", 0, 6)
+    _run_reference(spark, sf_dir, root / "src", root / "ckpt", root / "lake")
+    return str(root / "lake")
+
+
+def _assert_restart_matches(spark, first_count, restarted, uninterrupted_lake):
+    fresh = spark.read.parquet(uninterrupted_lake)
     key = ["window_start", "window_end", "event_type_norm", "segment"]
-    assert 0 < first < restarted.count()
+    assert 0 < first_count < restarted.count()
     assert restarted.count() == restarted.select(*key).distinct().count()
     assert restarted.exceptAll(fresh).count() == 0
     assert fresh.exceptAll(restarted).count() == 0
+
+
+def test_reference_pipeline_restart_matches_uninterrupted_run(
+    spark, tmp_path, sf_dir, six_files, uninterrupted_lake
+):
+    """The composed pipeline's restart contract (end-to-end exactly-once,
+    as in Structured Streaming): file source → reference_pipeline → lake.
+    A run over the first 3 of 6 files, restarted on the SAME checkpoint
+    once the other 3 have landed, leaves exactly the lake of one
+    uninterrupted run on a fresh checkpoint: the same multiset of rows,
+    and no (window, key, segment) twice."""
+    src, ckpt, lake = tmp_path / "src", tmp_path / "ckpt", tmp_path / "lake"
+    _land(six_files, src, 0, 3)
+    first = _run_reference(spark, sf_dir, src, ckpt, lake).count()
+    _land(six_files, src, 3, 6)
+    restarted = _run_reference(spark, sf_dir, src, ckpt, lake)
+    _assert_restart_matches(spark, first, restarted, uninterrupted_lake)
+
+
+def test_reference_pipeline_restart_across_checkpoint_settings_switch(
+    spark, tmp_path, sf_dir, six_files, uninterrupted_lake
+):
+    """A checkpoint written under Spark's own checkpoint settings (RocksDB
+    snapshot uploads, FileContext renames) resumes under the session
+    profile's (changelog checkpointing, FileSystem renames) without
+    losing or repeating a window: the restarted lake equals the
+    uninterrupted run's. The state files show that each run really used
+    its settings."""
+    src, ckpt, lake = tmp_path / "src", tmp_path / "ckpt", tmp_path / "lake"
+    _land(six_files, src, 0, 3)
+    profile = {k: spark.conf.get(k) for k in _SPARK_DEFAULT_CHECKPOINTING}
+    try:
+        for k, v in _SPARK_DEFAULT_CHECKPOINTING.items():
+            spark.conf.set(k, v)
+        first = _run_reference(spark, sf_dir, src, ckpt, lake).count()
+    finally:
+        for k, v in profile.items():
+            spark.conf.set(k, v)
+    assert _state_files(ckpt, ".zip")
+    assert not _state_files(ckpt, ".changelog")
+
+    _land(six_files, src, 3, 6)
+    restarted = _run_reference(spark, sf_dir, src, ckpt, lake)
+    assert _state_files(ckpt, ".changelog")
+    _assert_restart_matches(spark, first, restarted, uninterrupted_lake)
+
+
+def test_session_profile_checkpoints_with_changelogs_and_filesystem_renames(
+    spark, tmp_path, sf_dir, six_files
+):
+    """session.get_spark's checkpoint profile is in force: a 3-file run of
+    the composed pipeline leaves ``<version>.changelog`` files in its state
+    store, and checkpoint renames go through the FileSystem-based manager
+    (a class Spark 4.1 moved to ``...streaming.checkpointing``; a missing
+    class fails the run at its first checkpoint write)."""
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    _land(six_files, src, 0, 3)
+    assert _run_reference(spark, sf_dir, src, ckpt, tmp_path / "lake").count() > 0
+    changelogs = _state_files(ckpt, ".changelog")
+    assert changelogs
+    assert all(re.fullmatch(r"\d+\.changelog", p.name) for p in changelogs)
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_stream_static_join_rereads_dim_each_batch(spark, tmp_path):
@@ -446,8 +527,6 @@ def test_stream_static_join_rereads_dim_each_batch(spark, tmp_path):
     dim update between runs is visible to later batches with NO restart of
     the pipeline definition — the engine's slowly-changing-dimension
     refresh path (reference's dim is frozen in-memory; spark/app.py:87)."""
-    import time
-
     src = str(tmp_path / "src")
     dim_path = str(tmp_path / "dim")
     ckpt = str(tmp_path / "ckpt")
