@@ -198,7 +198,7 @@ def main() -> None:
         ),
     }
     fit: dict[str, float] = {}
-    sim._MODEL_CACHE.clear()  # all fitted models share the one memo now
+    sim._MODEL_MEMO.clear()  # all fitted models share the one memo now
     for name, fn in fitters.items():
         try:
             t0 = time.perf_counter()

@@ -9,11 +9,11 @@ here are the entry point for the SQL door (reference spark/app.py:140-156).
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import SessionMemo
 from .session import ensure_runtime_confs
 
 TABLES = (
@@ -73,8 +73,7 @@ def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
 # stale handle. The file LISTING is pinned at first construction — callers
 # reading a path whose contents mutate within one session (no registered
 # query or test does) must pass ``refresh=True``.
-_SCAN_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_SCAN_CACHE_MAX = 64
+_SCAN_MEMO = SessionMemo(64)
 
 
 def _cached_scan(
@@ -82,19 +81,15 @@ def _cached_scan(
 ) -> DataFrame:
     """Memoized parquet relation; ``name`` keys the per-table timestamp
     normalization (None = raw, no normalization)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), name)
-    if not refresh:
-        df = _SCAN_CACHE.get(key)
-        if df is not None:
-            _SCAN_CACHE.move_to_end(key)
-            return df
-    df = spark.read.parquet(path)
-    if name is not None:
-        df = _normalize_timestamps(df, name)
-    _SCAN_CACHE[key] = df
-    while len(_SCAN_CACHE) > _SCAN_CACHE_MAX:
-        _SCAN_CACHE.popitem(last=False)
-    return df
+    key = (os.path.abspath(path), name)
+    if refresh:
+        _SCAN_MEMO.drop(spark, key)
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        return df if name is None else _normalize_timestamps(df, name)
+
+    return _SCAN_MEMO.get(spark, key, build)
 
 
 def load_table(
@@ -107,7 +102,7 @@ def load_table(
     correctness of timestamps/window boundaries depends on them even when the
     session was built elsewhere (e.g. the driver's). This is a deliberate,
     documented session-wide side effect. The returned handle is memoized per
-    (session, path) — see :data:`_SCAN_CACHE`.
+    (session, path) — see :data:`_SCAN_MEMO`.
     """
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -126,7 +121,7 @@ def load_events(
     that actually reaches the parquet reader.
 
     The underlying relation handle is memoized per (session, path) — the
-    file LISTING is pinned at first construction (see :data:`_SCAN_CACHE`).
+    file LISTING is pinned at first construction (see :data:`_SCAN_MEMO`).
     A caller that rewrites ``{sf_dir}/events.parquet`` mid-session must
     pass ``refresh=True`` or it will silently read the stale listing
     (ADVICE r15; no registered query or test writes a path it re-reads
@@ -217,33 +212,6 @@ def register_views(
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    *,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed (hash-partitioned-on-disk) table write for co-located joins.
-
-    The scale tool the flat testdata layout can't show: two tables bucketed
-    on their join key with the same bucket count join WITHOUT any Exchange —
-    at 100 TB that deletes the dominant shuffle of fact⋈fact joins (e.g.
-    orders⋈lineitem). ``sortBy`` additionally lets SortMergeJoin skip its
-    sort. Asserted shuffle-free in tests/test_plans.py.
-
-    Buckets land in the session warehouse dir via ``saveAsTable`` (bucketing
-    metadata lives in the catalog; plain ``.parquet(path)`` cannot record
-    it).
-    """
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort:
-        w = w.sortBy(*bucket_cols)
-    w.saveAsTable(table_name)
 
 
 def dim_from_rows(spark: SparkSession, rows, schema) -> DataFrame:

@@ -38,7 +38,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-EVENT_TYPES = ("click", "view", "purchase", "scroll", "hover")
+from .sources import EVENT_TYPES
 
 SYNTH_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "

@@ -9,14 +9,77 @@ per-row boundary identified in SURVEY.md §3.1.5.
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 
-from pyspark.sql import Column, DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-_PAR_PROBE_CACHE: "OrderedDict[tuple, int]" = OrderedDict()
-_PAR_PROBE_CACHE_MAX = 256
+class SessionMemo:
+    """Bounded LRU memo of session artifacts keyed by ``(applicationId, *key)``.
+
+    The package's one memo policy. An entry belongs to one Spark
+    application, so a new session never sees a stale handle. At most
+    ``cap`` entries are kept and the least recently used goes first; the
+    plain form only drops its reference (a checkpointed frame is freed by
+    GC). The ``persisted`` form holds DataFrames: every ``get`` persists
+    the frame (MEMORY_AND_DISK) unless it is already cached (re-persisting
+    a cached plan logs a CacheManager warning), so after an external
+    ``clearCache`` the next use re-persists, and an evicted frame is
+    unpersisted. Values are never ``None``. The lock covers only the
+    bookkeeping, never ``build``: two threads missing one key both build
+    and the first insert wins.
+    """
+
+    def __init__(self, cap: int, *, persisted: bool = False):
+        self.cap = cap
+        self.persisted = persisted
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, spark: SparkSession, key: tuple, build):
+        full = (spark.sparkContext.applicationId, *key)
+        with self._lock:
+            val = self._entries.get(full)
+            if val is not None:
+                self._entries.move_to_end(full)
+        if val is None:
+            built = build()
+            evicted = []
+            with self._lock:
+                val = self._entries.setdefault(full, built)
+                while len(self._entries) > self.cap:
+                    evicted.append(self._entries.popitem(last=False)[1])
+            self._release(evicted)
+        if self.persisted:
+            sl = val.storageLevel
+            if not (sl.useMemory or sl.useDisk):
+                val.persist(StorageLevel.MEMORY_AND_DISK)
+        return val
+
+    def drop(self, spark: SparkSession, key: tuple) -> None:
+        with self._lock:
+            val = self._entries.pop((spark.sparkContext.applicationId, *key), None)
+        self._release([val] if val is not None else [])
+
+    def clear(self) -> None:
+        with self._lock:
+            evicted = list(self._entries.values())
+            self._entries.clear()
+        self._release(evicted)
+
+    def _release(self, values: list) -> None:
+        if self.persisted:
+            for df in values:
+                df.unpersist()
+
+
+_PAR_PROBE_MEMO = SessionMemo(256)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -58,20 +121,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
             "spark.sql.shuffle.partitions",
         )
     )
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        n,
-        split_confs,
+    got = _PAR_PROBE_MEMO.get(
+        df.sparkSession,
+        (df.semanticHash(), n, split_confs),
+        lambda: df.rdd.getNumPartitions(),
     )
-    got = _PAR_PROBE_CACHE.get(key)
-    if got is None:
-        got = df.rdd.getNumPartitions()
-        _PAR_PROBE_CACHE[key] = got
-        while len(_PAR_PROBE_CACHE) > _PAR_PROBE_CACHE_MAX:
-            _PAR_PROBE_CACHE.popitem(last=False)
-    else:
-        _PAR_PROBE_CACHE.move_to_end(key)
     if got < n:
         return df.repartition(n)
     return df

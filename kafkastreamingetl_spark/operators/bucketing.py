@@ -47,6 +47,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import SessionMemo
+
 # Repo-local default warehouse root: explicit per-table paths keep the
 # physical files under the repository even when the caller's session was
 # built elsewhere (a bare driver session's spark.sql.warehouse.dir follows
@@ -61,12 +63,13 @@ _WAREHOUSE = os.path.join(
 # sort buffer.
 DEFAULT_BUCKETS = 8
 
-# (applicationId, sf_dir, n_buckets) -> (orders_table, lineitem_table).
-# The build is per-session because the in-memory catalog forgets table
-# metadata when the session ends (files persist; bucket METADATA does not
-# without a metastore) — so each session rebuilds once, then every query
-# reuses the catalog entry. Bounded: one entry per (sf, width) pair used.
-_BUCKETED_TABLES: dict[tuple, tuple[str, str]] = {}
+# (sf_dir, n_buckets) -> (orders_table, lineitem_table). The build is
+# per-session because the in-memory catalog forgets table metadata when
+# the session ends (files persist; bucket METADATA does not without a
+# metastore) — so each session rebuilds once, then every query reuses the
+# catalog entry. One entry per (sf, width) pair used; callers use at most
+# two, and an evicted pair is simply rebuilt.
+_BUCKETED_MEMO = SessionMemo(16)
 
 
 def write_bucketed(
@@ -117,30 +120,30 @@ def ensure_bucketed_order_tables(
     names. One write per session per (sf, width) — the refresh-time cost
     the serving queries amortize.
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), n_buckets)
-    hit = _BUCKETED_TABLES.get(key)
-    if hit is not None:
-        return hit
     from ..catalog import load_table
 
-    tag = hashlib.md5(f"{key[1]}|{n_buckets}".encode()).hexdigest()[:8]
-    names = (f"bkt_orders_{tag}", f"bkt_lineitem_{tag}")
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"),
-        names[0],
-        "o_orderkey",
-        n_buckets,
-        path_root=path_root,
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem"),
-        names[1],
-        "l_orderkey",
-        n_buckets,
-        path_root=path_root,
-    )
-    _BUCKETED_TABLES[key] = names
-    return names
+    abs_dir = os.path.abspath(sf_dir)
+
+    def build() -> tuple[str, str]:
+        tag = hashlib.md5(f"{abs_dir}|{n_buckets}".encode()).hexdigest()[:8]
+        names = (f"bkt_orders_{tag}", f"bkt_lineitem_{tag}")
+        write_bucketed(
+            load_table(spark, sf_dir, "orders"),
+            names[0],
+            "o_orderkey",
+            n_buckets,
+            path_root=path_root,
+        )
+        write_bucketed(
+            load_table(spark, sf_dir, "lineitem"),
+            names[1],
+            "l_orderkey",
+            n_buckets,
+            path_root=path_root,
+        )
+        return names
+
+    return _BUCKETED_MEMO.get(spark, (abs_dir, n_buckets), build)
 
 
 def order_priority_revenue(orders: DataFrame, lineitem: DataFrame) -> DataFrame:

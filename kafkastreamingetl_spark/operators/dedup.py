@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import ensure_parallelism, hash60, sql_hash60
+from ..functions import SessionMemo, ensure_parallelism, hash60, sql_hash60
 from .cleaning import dedup_deterministic
 from .text import (
     SHINGLE_N,
@@ -63,19 +63,13 @@ LSH_BANDS = 4
 LSH_ROWS = 3
 assert len(MINHASH_COEFFS) == LSH_BANDS * LSH_ROWS
 
-# Memo of persisted shingle-feature DataFrames keyed by
-# (applicationId, plan semanticHash, text_col, id_col) — see
-# :func:`shingle_features`. OrderedDict for LRU eviction.
-from collections import OrderedDict  # noqa: E402
+# Persisted shingle-feature frames keyed by (plan semanticHash, text_col,
+# id_col) — see :func:`shingle_features`.
+_FEATS_MEMO = SessionMemo(8, persisted=True)
 
-_FEATS_CACHE: OrderedDict[tuple[str, int, str, str], DataFrame] = OrderedDict()
-_FEATS_CACHE_MAX = 8
-
-# Memo of resolved cluster-label DataFrames (checkpoint-backed) keyed by
-# (applicationId, plan semanticHash, text_col, id_col, threshold) — see
-# :func:`neardup_clusters`.
-_CLUSTERS_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_CLUSTERS_CACHE_MAX = 8  # its own bound — NOT coupled to _FEATS_CACHE_MAX
+# Resolved cluster-label frames (checkpoint-backed) keyed by (plan
+# semanticHash, text_col, id_col, threshold) — see :func:`neardup_clusters`.
+_CLUSTERS_MEMO = SessionMemo(8)
 
 
 # ---------------------------------------------------------------------------
@@ -255,8 +249,8 @@ def shingle_features(
     instead of persisting a fresh identical plan each time — long-lived
     sessions registering many dedup queries over one corpus hold exactly
     one cached feature set, not one per call ('Asked to cache already
-    cached data' accumulation). The memo is bounded (LRU, `_FEATS_CACHE_MAX`
-    entries); evicted or superseded entries are unpersisted. An external
+    cached data' accumulation). The memo is ``_FEATS_MEMO``, a persisted
+    :class:`SessionMemo`: LRU-bounded, evicted entries are unpersisted. An external
     ``spark.catalog.clearCache()`` (bench.py between queries) simply drops
     the cached blocks — the memoized plan re-persists on next use.
 
@@ -267,31 +261,13 @@ def shingle_features(
     empty ``_hs`` and are excluded downstream by a cheap predicate on the
     materialized signature (see :func:`minhash_signatures`).
     """
-    from pyspark import StorageLevel
-
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        text_col,
-        id_col,
-    )
-    feats = _FEATS_CACHE.get(key)
-    if feats is None:
-        feats = ensure_parallelism(df).select(
+    return _FEATS_MEMO.get(
+        df.sparkSession,
+        (df.semanticHash(), text_col, id_col),
+        lambda: ensure_parallelism(df).select(
             F.col(id_col), shingle_hashes(text_col).alias("_hs")
-        )
-        _FEATS_CACHE[key] = feats
-        while len(_FEATS_CACHE) > _FEATS_CACHE_MAX:
-            _, evicted = _FEATS_CACHE.popitem(last=False)
-            evicted.unpersist()
-    else:
-        _FEATS_CACHE.move_to_end(key)
-    # persist only when not currently cached (re-persisting an already
-    # cached plan logs a CacheManager warning); re-arms after clearCache
-    sl = feats.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        feats.persist(StorageLevel.MEMORY_AND_DISK)
-    return feats
+        ),
+    )
 
 
 def minhash_signatures(
@@ -888,27 +864,20 @@ def neardup_clusters(
     pipelines over one corpus should resolve components once, not once per
     consumer.
     """
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        text_col,
-        id_col,
-        round(min_jaccard, 9),
-    )
-    labels = _CLUSTERS_CACHE.get(key)
-    if labels is None:
+
+    def build() -> DataFrame:
         pairs = neardup_pairs(df, text_col, id_col, min_jaccard=min_jaccard).select(
             "doc_a", "doc_b"
         )
-        labels = connected_components(pairs).select(
+        return connected_components(pairs).select(
             F.col("node").alias(id_col), "cluster_id"
         )
-        _CLUSTERS_CACHE[key] = labels
-        while len(_CLUSTERS_CACHE) > _CLUSTERS_CACHE_MAX:
-            _CLUSTERS_CACHE.popitem(last=False)  # checkpoint RDD freed by GC
-    else:
-        _CLUSTERS_CACHE.move_to_end(key)
-    return labels
+
+    return _CLUSTERS_MEMO.get(
+        df.sparkSession,
+        (df.semanticHash(), text_col, id_col, round(min_jaccard, 9)),
+        build,
+    )
 
 
 def neardup_dedup(
@@ -1517,11 +1486,9 @@ SUBSTRING_MAX_GRAM_DOCS = 50  # hot-gram cap: a gram in more docs than this is
 #                               boilerplate, not copying — drop before the join
 
 
-# Memo of persisted positioned-gram DataFrames, same contract as
-# _FEATS_CACHE (shingle_features): one cached frame per (session, input
-# plan, gram width, columns), LRU-bounded, re-persists after clearCache.
-_GRAMS_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_GRAMS_CACHE_MAX = 8
+# Persisted positioned-gram frames keyed by (input plan, gram width,
+# columns).
+_GRAMS_MEMO = SessionMemo(8, persisted=True)
 
 
 def positioned_gram_features(
@@ -1538,18 +1505,9 @@ def positioned_gram_features(
     the materialization barrier that tokenizes + hashes each document
     once instead of three times. What's cached is (id, pos, hash) —
     never text."""
-    from pyspark import StorageLevel
 
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        gram_n,
-        content_col,
-        id_col,
-    )
-    g = _GRAMS_CACHE.get(key)
-    if g is None:
-        g = (
+    def build() -> DataFrame:
+        return (
             ensure_parallelism(df.filter(F.col(content_col).isNotNull()))
             .select(
                 F.col(id_col).alias("doc_id"),
@@ -1563,16 +1521,12 @@ def positioned_gram_features(
                 hash60(F.col("gram")).alias("gh"),
             )
         )
-        _GRAMS_CACHE[key] = g
-        while len(_GRAMS_CACHE) > _GRAMS_CACHE_MAX:
-            _, evicted = _GRAMS_CACHE.popitem(last=False)
-            evicted.unpersist()
-    else:
-        _GRAMS_CACHE.move_to_end(key)
-    sl = g.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        g.persist(StorageLevel.MEMORY_AND_DISK)
-    return g
+
+    return _GRAMS_MEMO.get(
+        df.sparkSession,
+        (df.semanticHash(), gram_n, content_col, id_col),
+        build,
+    )
 
 
 def substring_run_pairs(
@@ -2669,13 +2623,10 @@ BATCH_MOD = 9
 BATCH_MOD_BASE = 10
 
 
-# Memo of persisted contamination-base projections, same contract as
-# _FEATS_CACHE / _GRAMS_CACHE: one cached frame per (session, input plan,
-# params), LRU-bounded with unpersist-on-evict, re-persists after
-# clearCache. Closes the ADVICE r13 leak: every batch_contamination_diff
-# call persisted a fresh identical projection and never released it.
-_CONTAM_BASE_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_CONTAM_BASE_CACHE_MAX = 4
+# Persisted contamination-base projections keyed by (input plan, params).
+# Closes the ADVICE r13 leak: every batch_contamination_diff call
+# persisted a fresh identical projection and never released it.
+_CONTAM_BASE_MEMO = SessionMemo(4, persisted=True)
 
 
 def batch_contamination_diff(
@@ -2702,42 +2653,27 @@ def batch_contamination_diff(
     the eval_ngram_contamination posture with the roles reversed: output
     is per-BATCH-doc, the small side). The index never shuffles its rows
     or text anywhere. The persisted projection is MEMOIZED per (session,
-    input plan, params) with unpersist-on-evict — the _FEATS_CACHE
-    contract — so repeated invocations (the 179-lane bench, oracle
+    input plan, params) in a persisted :class:`SessionMemo`, so repeated invocations (the 179-lane bench, oracle
     differentials) hold one cached projection, not one leak per call
     (ADVICE r13).
     """
-    from pyspark import StorageLevel
-
     from .text import shingle_hashes
 
-    key = (
-        documents.sparkSession.sparkContext.applicationId,
-        documents.semanticHash(),
-        batch_mod,
-        id_col,
-        text_col,
-        n,
-    )
-    base = _CONTAM_BASE_CACHE.get(key)
-    if base is None:
+    def build() -> DataFrame:
         text = F.coalesce(F.col(text_col), F.lit(""))
-        base = documents.select(
+        return documents.select(
             F.col(id_col).alias("doc_id"),
             ((F.col(id_col) % F.lit(BATCH_MOD_BASE)) == F.lit(batch_mod))
             .alias("_is_batch"),
             F.md5(text).alias("_h"),
             shingle_hashes(text, n).alias("_g"),
         )
-        _CONTAM_BASE_CACHE[key] = base
-        while len(_CONTAM_BASE_CACHE) > _CONTAM_BASE_CACHE_MAX:
-            _, evicted = _CONTAM_BASE_CACHE.popitem(last=False)
-            evicted.unpersist()
-    else:
-        _CONTAM_BASE_CACHE.move_to_end(key)
-    sl = base.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        base.persist(StorageLevel.MEMORY_AND_DISK)
+
+    base = _CONTAM_BASE_MEMO.get(
+        documents.sparkSession,
+        (documents.semanticHash(), batch_mod, id_col, text_col, n),
+        build,
+    )
     batch = base.filter("_is_batch")
     index = base.filter("NOT _is_batch")
     return contamination_report(

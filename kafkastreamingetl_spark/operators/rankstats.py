@@ -51,10 +51,10 @@ as nondeterministic as ``ntile`` itself.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import SessionMemo
 
 # Most range partitions exact_ntile_cuts derives bounds for, whatever the
 # shuffle width. Its partition id is an unrolled sum of one CASE per
@@ -72,13 +72,11 @@ _BOUNDS_ACCURACY = 10000
 
 _HELPER_COLS = ("_pid", "_rn", "_rank")
 
-# Persisted-base memo (appId, input plan semanticHash) -> DataFrame, the
-# shingle_features discipline: repeated constructions of the same cut
-# (bench warm + timed samples) reuse one persisted plan instead of
-# re-registering an identical cache entry each call. Results are never
-# memoized — clearCache drops the blocks and the next action re-scans.
-_NTILE_BASE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_NTILE_BASE_CACHE_MAX = 8
+# Persisted-base memo keyed by the input plan's semanticHash: repeated
+# constructions of the same cut (bench warm + timed samples) reuse one
+# persisted plan instead of re-registering an identical cache entry each
+# call. Results are never memoized.
+_NTILE_BASE_MEMO = SessionMemo(8, persisted=True)
 
 #: width used by the most recent cut (test/telemetry hook; the physical
 #: partition count of the output is AQE's business, not the contract)
@@ -86,22 +84,7 @@ last_width: int | None = None
 
 
 def _persisted_base(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    base = _NTILE_BASE_CACHE.get(key)
-    if base is None:
-        base = df
-        _NTILE_BASE_CACHE[key] = base
-        while len(_NTILE_BASE_CACHE) > _NTILE_BASE_CACHE_MAX:
-            _, evicted = _NTILE_BASE_CACHE.popitem(last=False)
-            evicted.unpersist()
-    else:
-        _NTILE_BASE_CACHE.move_to_end(key)
-    sl = base.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        base.persist(StorageLevel.MEMORY_AND_DISK)
-    return base
+    return _NTILE_BASE_MEMO.get(df.sparkSession, (df.semanticHash(),), lambda: df)
 
 
 def _key_and_ordering(

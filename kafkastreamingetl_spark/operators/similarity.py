@@ -33,7 +33,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import array_lit, bind, cosine, dsum, ensure_parallelism
+from ..functions import SessionMemo, array_lit, bind, cosine, dsum, ensure_parallelism
 
 # Deterministic ±1 hyperplanes (module-level so Spark literals and oracle SQL
 # derive from the same values; Python's Mersenne Twister is seed-stable).
@@ -546,22 +546,17 @@ def sql_embedding_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-from collections import OrderedDict
-
 # Shared memo for every fitted model (label/IVF centroids, PQ codebooks,
-# k-means centroid sets): one key discipline — (applicationId, input plan
-# semanticHash,
-# model kind, hyperparameters) — same bounded-LRU eviction. Entries are
-# model-sized Python lists; nothing is persisted on the cluster, so
-# eviction is pure GC (bounded-memory proof: tests/test_similarity.py
-# churn test). The cap is sized WELL ABOVE the number of distinct fitted
+# k-means centroid sets), keyed by (input plan semanticHash, model kind,
+# hyperparameters). Entries are model-sized Python lists; nothing is
+# persisted on the cluster, so eviction is pure GC (bounded-memory proof:
+# tests/test_similarity.py churn test). The cap is sized WELL ABOVE the number of distinct fitted
 # models one bench/session touches (~a dozen keys: each fitter × each
 # input-plan semanticHash it is called with): VERDICT r13 observed
 # 1.7–3.0× wall spreads on kmeans_centroids that tracked registry ORDER —
 # the old cap of 8 let a long run evict a model mid-session and put a
 # silent refit inside a timed lane.
-_MODEL_CACHE: OrderedDict[tuple, list] = OrderedDict()
-_MODEL_CACHE_MAX = 64
+_MODEL_MEMO = SessionMemo(64)
 
 #: Append-only log of memo MISSES (the (kind, *hyperparams) key tail,
 #: minus the applicationId/semanticHash prefix): bench.py snapshots its
@@ -570,17 +565,16 @@ _MODEL_CACHE_MAX = 64
 _FIT_LOG: list[tuple] = []
 
 
-def _memo(key: tuple, build):
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None:
-        _MODEL_CACHE.move_to_end(key)
-        return hit
-    _FIT_LOG.append(key[2:])
-    val = build()
-    _MODEL_CACHE[key] = val
-    while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
-        _MODEL_CACHE.popitem(last=False)
-    return val
+def _memo(embeddings: DataFrame, tail: tuple, build):
+    """The model fitted on ``embeddings`` for ``tail`` = (kind, *params)."""
+
+    def fit():
+        _FIT_LOG.append(tail)
+        return build()
+
+    return _MODEL_MEMO.get(
+        embeddings.sparkSession, (embeddings.semanticHash(), *tail), fit
+    )
 
 
 def fit_label_centroids(
@@ -599,13 +593,6 @@ def fit_label_centroids(
     ``_memo`` discipline: refitting an identical model for every query in
     a session is wasted jobs.
     """
-    key = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        "label_centroids",
-        label_col,
-        vec_col,
-    )
 
     def build() -> list[tuple[int, list[float]]]:
         long = embeddings.select(
@@ -627,7 +614,7 @@ def fit_label_centroids(
             for lbl, dims in by_label.items()
         )
 
-    return _memo(key, build)
+    return _memo(embeddings, ("label_centroids", label_col, vec_col), build)
 
 
 def ann_ivf_topk(
@@ -1000,25 +987,11 @@ def _explode_sub(df: DataFrame, idc: str, vc: str, out_id: str) -> DataFrame:
 
 # Per-session memo of model FRAMES: createDataFrame of a collected model
 # costs a few hundred ms of Python->JVM conversion per call, and the
-# models themselves are already memoized (_MODEL_CACHE) — rebuilding the
+# models themselves are already memoized (_MODEL_MEMO) — rebuilding the
 # same 8-128-row LocalRelation every query construction is pure driver
-# chatter. DataFrames are immutable lazy plans; keyed by applicationId +
-# frozen model content, same discipline as catalog._SCAN_CACHE.
-_MODEL_DF_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_MODEL_DF_CACHE_MAX = 64
-
-
-def _model_df_memo(spark, kind: str, frozen: tuple, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, kind, frozen)
-    hit = _MODEL_DF_CACHE.get(key)
-    if hit is not None:
-        _MODEL_DF_CACHE.move_to_end(key)
-        return hit
-    df = build()
-    _MODEL_DF_CACHE[key] = df
-    while len(_MODEL_DF_CACHE) > _MODEL_DF_CACHE_MAX:
-        _MODEL_DF_CACHE.popitem(last=False)
-    return df
+# chatter. DataFrames are immutable lazy plans; keyed by frozen model
+# content, like catalog._SCAN_MEMO's table handles.
+_MODEL_DF_MEMO = SessionMemo(64)
 
 
 def _cbl_df(spark, cb: list[tuple[int, int, list[float]]]) -> DataFrame:
@@ -1032,10 +1005,9 @@ def _cbl_df(spark, cb: list[tuple[int, int, list[float]]]) -> DataFrame:
     frozen = tuple(
         (int(s), int(code), tuple(float(v) for v in cvl)) for s, code, cvl in cb
     )
-    return _model_df_memo(
+    return _MODEL_DF_MEMO.get(
         spark,
-        "cbl",
-        frozen,
+        ("cbl", frozen),
         lambda: spark.createDataFrame(
             [(s, code, list(cvl)) for s, code, cvl in frozen],
             schema="s int, code int, cvl array<double>",
@@ -1135,11 +1107,6 @@ def fit_pq_codebook_label(
     label % 16). Only codes with ≥ 1 member exist, exactly like the SQL
     twin's GROUP BY. The collect is model-sized (≤ 1,024 rows); memoized
     per (session, input plan) so a session fits once and serves many."""
-    key = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        "pq_label", id_col, vec_col, label_col,
-    )
 
     def build() -> list[tuple[int, int, list[float]]]:
         sub = _explode_sub(embeddings, id_col, vec_col, "vec_id").join(
@@ -1158,7 +1125,7 @@ def fit_pq_codebook_label(
             (s, code, [js[j] for j in sorted(js)]) for (s, code), js in m.items()
         )
 
-    return _memo(key, build)
+    return _memo(embeddings, ("pq_label", id_col, vec_col, label_col), build)
 
 
 def fit_pq_codebook_kmeans(
@@ -1183,11 +1150,6 @@ def fit_pq_codebook_kmeans(
     (s, code, j) aggregation; the driver only ever holds the model
     (≤ 1,024 rows/iteration) — the same collect boundary as Spark MLlib's
     own KMeans. Memoized per (session, input plan, n_iter)."""
-    key = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        "pq_kmeans", n_iter, id_col, vec_col,
-    )
 
     def build() -> list[tuple[int, int, list[float]]]:
         seeds = sorted(
@@ -1230,7 +1192,7 @@ def fit_pq_codebook_kmeans(
             ]
         return cb
 
-    return _memo(key, build)
+    return _memo(embeddings, ("pq_kmeans", n_iter, id_col, vec_col), build)
 
 
 def pq_topk(
@@ -1545,10 +1507,9 @@ def _km_df(spark, model: list[tuple[int, list[float]]]) -> DataFrame:
     frozen = tuple(
         (int(cl), tuple(float(v) for v in cvl)) for cl, cvl in model
     )
-    return _model_df_memo(
+    return _MODEL_DF_MEMO.get(
         spark,
-        "km",
-        frozen,
+        ("km", frozen),
         lambda: spark.createDataFrame(
             [(cl, list(cvl)) for cl, cvl in frozen],
             schema="cl int, cvl array<double>",
@@ -1613,11 +1574,6 @@ def fit_kmeans(
     (cluster, dim) aggregation; the driver holds only the k×dim model —
     the MLlib KMeans collect boundary. Memoized per (session, input plan,
     k, n_iter)."""
-    key = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        "kmeans", k, n_iter, id_col, vec_col,
-    )
 
     def build() -> list[tuple[int, list[float]]]:
         model = sorted(
@@ -1649,7 +1605,7 @@ def fit_kmeans(
             ]
         return model
 
-    return _memo(key, build)
+    return _memo(embeddings, ("kmeans", k, n_iter, id_col, vec_col), build)
 
 
 def kmeans_centroid_stats(
@@ -2024,11 +1980,10 @@ def sql_cluster_balanced_sample(
 
 
 # Resolved semantic-cluster labels, memoized per (session, input plan,
-# threshold) — same discipline as dedup._CLUSTERS_CACHE: the closure is an
-# eager checkpointed computation, so clusters + scrub + any downstream
-# consumer over one corpus resolve components once, not once per query.
-_EMB_CLUSTERS_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_EMB_CLUSTERS_CACHE_MAX = 8
+# threshold), like dedup._CLUSTERS_MEMO: the closure is an eager
+# checkpointed computation, so clusters + scrub + any downstream consumer
+# over one corpus resolve components once, not once per query.
+_EMB_CLUSTERS_MEMO = SessionMemo(8)
 
 
 def embedding_clusters(
@@ -2048,16 +2003,7 @@ def embedding_clusters(
     ``n_planes`` is the scale dial — see :func:`embedding_neardup_pairs`."""
     from .dedup import connected_components
 
-    key = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        id_col,
-        vec_col,
-        round(min_cos, 9),
-        n_planes,
-    )
-    labels = _EMB_CLUSTERS_CACHE.get(key)
-    if labels is None:
+    def build() -> DataFrame:
         pairs = embedding_neardup_pairs(
             embeddings,
             min_cos=min_cos,
@@ -2065,15 +2011,15 @@ def embedding_clusters(
             vec_col=vec_col,
             n_planes=n_planes,
         )
-        labels = connected_components(
+        return connected_components(
             pairs, src_col="vec_a", dst_col="vec_b"
         ).select(F.col("node").alias(id_col), "cluster_id")
-        _EMB_CLUSTERS_CACHE[key] = labels
-        while len(_EMB_CLUSTERS_CACHE) > _EMB_CLUSTERS_CACHE_MAX:
-            _EMB_CLUSTERS_CACHE.popitem(last=False)  # checkpoint RDD → GC
-    else:
-        _EMB_CLUSTERS_CACHE.move_to_end(key)
-    return labels
+
+    return _EMB_CLUSTERS_MEMO.get(
+        embeddings.sparkSession,
+        (embeddings.semanticHash(), id_col, vec_col, round(min_cos, 9), n_planes),
+        build,
+    )
 
 
 def dedup_embeddings_semantic(

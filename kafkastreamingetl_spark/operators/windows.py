@@ -4,7 +4,9 @@ Re-expresses the reference's windowed aggregate (reference
 spark/app.py:163-181: A1 sliding-window groupBy with sum / approx-distinct /
 max, then window-struct flatten) as a pure transform parameterized by window
 size/slide and grouping keys. The same function runs on a batch events table
-(DuckDB-oracle checkable) and on a watermarked stream.
+(DuckDB-oracle checkable) and on a watermarked stream: a streaming caller
+passes ``stream.withWatermark(ts, delay)`` and, for append mode,
+``approx_distinct=True`` (``streaming.reference_pipeline`` composes it so).
 """
 
 from __future__ import annotations
@@ -135,54 +137,3 @@ def sql_session_agg(
     FROM sess
     GROUP BY {key}, sid
     """
-
-
-def streaming_session_agg(
-    df: DataFrame,
-    *,
-    ts_col: str = "ts",
-    watermark: str = "30 seconds",
-    gap: str = "5 minutes",
-    key: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming session windows: watermark bounds how long an open session
-    can wait for its next event before the state store finalizes it."""
-    return session_agg(
-        df.withWatermark(ts_col, watermark),
-        ts_col=ts_col,
-        gap=gap,
-        key=key,
-        value_col=value_col,
-    )
-
-
-def streaming_windowed_agg(
-    df: DataFrame,
-    *,
-    ts_col: str = "ts",
-    watermark: str = "30 seconds",
-    window: str = "1 minute",
-    slide: str | None = "30 seconds",
-    keys: list[str] | None = None,
-    value_col: str = "value",
-    id_col: str = "event_id",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Streaming twin: watermark (T1) + window (T2) + HLL distinct.
-
-    Append-mode sinks emit each window once the watermark passes its end
-    (reference semantics, spark/app.py:160-197). Distinct counting must be
-    approximate in streaming append mode (SURVEY.md §2.4 note).
-    """
-    return windowed_agg(
-        df.withWatermark(ts_col, watermark),
-        ts_col=ts_col,
-        window=window,
-        slide=slide,
-        keys=keys,
-        value_col=value_col,
-        id_col=id_col,
-        user_col=user_col,
-        approx_distinct=True,
-    )

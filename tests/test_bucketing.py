@@ -107,7 +107,7 @@ def test_ensure_order_tables_memoized_per_session(spark, sf_dir, tmp_path):
     }
     for t in names:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    bucketing._BUCKETED_TABLES.clear()
+    bucketing._BUCKETED_MEMO.clear()
 
 
 def test_rollup_matches_unbucketed_twin(spark, sf_dir, tmp_path):
@@ -140,4 +140,4 @@ def test_rollup_matches_unbucketed_twin(spark, sf_dir, tmp_path):
     assert _exchanges(join_only) == 0
     for t in names:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    bucketing._BUCKETED_TABLES.clear()
+    bucketing._BUCKETED_MEMO.clear()

@@ -37,12 +37,10 @@ def _reset_engine_state(spark) -> None:
     measurement."""
     from kafkastreamingetl_spark.operators import dedup, similarity
 
-    while dedup._FEATS_CACHE:
-        _, df = dedup._FEATS_CACHE.popitem()
-        df.unpersist()
-    dedup._CLUSTERS_CACHE.clear()
-    similarity._EMB_CLUSTERS_CACHE.clear()
-    similarity._MODEL_CACHE.clear()
+    dedup._FEATS_MEMO.clear()  # persisted memo: clear() unpersists
+    dedup._CLUSTERS_MEMO.clear()
+    similarity._EMB_CLUSTERS_MEMO.clear()
+    similarity._MODEL_MEMO.clear()
     spark.catalog.clearCache()
 
 

@@ -14,7 +14,8 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from kafkastreamingetl_spark.catalog import load_table, write_bucketed
+from kafkastreamingetl_spark.catalog import load_table
+from kafkastreamingetl_spark.operators.bucketing import write_bucketed
 from kafkastreamingetl_spark.queries import QUERIES
 
 
@@ -115,8 +116,8 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    write_bucketed(orders, "orders_b", ["o_orderkey"], 8)
-    write_bucketed(lineitem, "lineitem_b", ["l_orderkey"], 8)
+    write_bucketed(orders, "orders_b", "o_orderkey", 8, path_root=str(tmp_path))
+    write_bucketed(lineitem, "lineitem_b", "l_orderkey", 8, path_root=str(tmp_path))
     try:
         ob, lb = spark.table("orders_b"), spark.table("lineitem_b")
         with conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from kafkastreamingetl_spark import catalog
 from kafkastreamingetl_spark.functions import (
-    _PAR_PROBE_CACHE,
+    _PAR_PROBE_MEMO,
     array_lit,
     ensure_parallelism,
 )
@@ -105,9 +105,9 @@ def test_ensure_parallelism_memoized_probe_still_repartitions(spark):
     out1 = ensure_parallelism(df)
     assert out1.rdd.getNumPartitions() > 1
     # second call on the same logical plan hits the memo (same decision)
-    key_hits = len(_PAR_PROBE_CACHE)
+    key_hits = len(_PAR_PROBE_MEMO)
     out2 = ensure_parallelism(df)
-    assert len(_PAR_PROBE_CACHE) == key_hits  # no new probe entry
+    assert len(_PAR_PROBE_MEMO) == key_hits  # no new probe entry
     assert out2.rdd.getNumPartitions() == out1.rdd.getNumPartitions()
     # an already-wide frame passes through untouched
     wide = spark.range(0, 1000, 1, 64)

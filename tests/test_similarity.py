@@ -157,12 +157,12 @@ def test_model_memo_bounded_under_churn(spark, emb, monkeypatch):
     lane)."""
     from kafkastreamingetl_spark.operators import similarity as sim
 
-    monkeypatch.setattr(sim, "_MODEL_CACHE_MAX", 6)
+    monkeypatch.setattr(sim._MODEL_MEMO, "cap", 6)
     for i in range(6 + 3):
         df = emb.filter(emb.vec_id < 16 + i).select("vec_id", "embedding")
         model = sim.fit_kmeans(df, k=2, n_iter=1)
         assert len(model) == 2
-    assert len(sim._MODEL_CACHE) <= 6
+    assert len(sim._MODEL_MEMO) <= 6
 
 
 def test_model_memo_logs_misses_not_hits(spark, emb):
@@ -172,7 +172,7 @@ def test_model_memo_logs_misses_not_hits(spark, emb):
     from kafkastreamingetl_spark.operators import similarity as sim
 
     df = emb.filter(emb.vec_id < 40).select("vec_id", "embedding")
-    sim._MODEL_CACHE.clear()
+    sim._MODEL_MEMO.clear()
     n0 = len(sim._FIT_LOG)
     sim.fit_kmeans(df, k=2, n_iter=1)
     assert len(sim._FIT_LOG) == n0 + 1

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafkastreamingetl_spark.operators.cleaning import clean_events_streaming
-from kafkastreamingetl_spark.operators.windows import streaming_windowed_agg, windowed_agg
+from kafkastreamingetl_spark.operators.windows import session_agg, windowed_agg
 from kafkastreamingetl_spark.sources import (
     EVENT_SCHEMA,
     decode_json_events,
@@ -71,12 +71,12 @@ def test_clean_events_streaming_matches_batch(spark, events_dir):
 def test_streaming_window_agg_append_mode(spark, events_dir):
     """T2/T4: append-mode windows emitted by availableNow are exactly the
     batch twin's rows for every finalized window (watermark semantics)."""
-    agg = streaming_windowed_agg(
-        _stream(spark, events_dir),
-        watermark="30 seconds",
+    agg = windowed_agg(
+        _stream(spark, events_dir).withWatermark("ts", "30 seconds"),
         window="1 minute",
         slide="30 seconds",
         keys=["event_type"],
+        approx_distinct=True,
     )
     q = write_memory_stream(agg, "windowed_stream", output_mode="append")
     run_available_now([q])
@@ -136,7 +136,13 @@ def test_console_sink_starts(spark, events_dir):
     termination, no exception) is the assertable contract."""
     from kafkastreamingetl_spark.streaming import write_console_stream
 
-    agg = streaming_windowed_agg(_stream(spark, events_dir), keys=["event_type"])
+    agg = windowed_agg(
+        _stream(spark, events_dir).withWatermark("ts", "30 seconds"),
+        window="1 minute",
+        slide="30 seconds",
+        keys=["event_type"],
+        approx_distinct=True,
+    )
     q = write_console_stream(agg, available_now=True)
     run_available_now([q])
     assert q.exception() is None
@@ -174,11 +180,10 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
         df.coalesce(1).write.mode("append").parquet(src)
 
     def run_once():
-        agg = streaming_windowed_agg(
-            file_events_source(spark, src),
-            watermark="30 seconds",
+        agg = windowed_agg(
+            file_events_source(spark, src).withWatermark("ts", "30 seconds"),
             window="1 minute",
-            slide=None,
+            approx_distinct=True,
         )
         q = write_parquet_stream(agg, out, chk, available_now=True, trigger_seconds=None)
         run_available_now([q])
@@ -236,11 +241,11 @@ def test_exact_dedup_streaming_by_content(spark, tmp_path):
 
 
 def test_streaming_session_agg_runs(spark, events_dir):
-    from kafkastreamingetl_spark.operators.windows import streaming_session_agg
-
-    q = write_memory_stream(
-        streaming_session_agg(_stream(spark, events_dir)), "sessions_stream"
+    sessions = session_agg(
+        _stream(spark, events_dir).withWatermark("ts", "30 seconds"),
+        gap="5 minutes",
     )
+    q = write_memory_stream(sessions, "sessions_stream")
     run_available_now([q])
     got = spark.table("sessions_stream")
     assert got.count() > 0
@@ -342,12 +347,11 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
         time.sleep(1.1)
 
     def run():
-        agg = streaming_windowed_agg(
-            file_events_source(spark, src),
-            watermark="10 seconds",
+        agg = windowed_agg(
+            file_events_source(spark, src).withWatermark("ts", "10 seconds"),
             window="1 minute",
-            slide=None,
             keys=["event_type"],
+            approx_distinct=True,
         )
         q = write_parquet_stream(
             agg, out, ckpt, available_now=True, trigger_seconds=None

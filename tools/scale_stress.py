@@ -243,7 +243,7 @@ def _time_queries(spark, qs, sf_dir: str, n_planes: int) -> tuple[dict, dict]:
     from kafkastreamingetl_spark.operators import similarity as sim
 
     fit: dict[str, float] = {}
-    sim._MODEL_CACHE.clear()
+    sim._MODEL_MEMO.clear()
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _clusters(sp, d):

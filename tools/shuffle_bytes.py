@@ -124,7 +124,7 @@ def measure(spark, sf_dir: str) -> dict:
 
     qs = queries()
     emb = load_table(spark, sf_dir, "embeddings")
-    sim._MODEL_CACHE.clear()
+    sim._MODEL_MEMO.clear()
     sim.fit_label_centroids(emb)
     sim.fit_kmeans(emb.select("vec_id", "embedding"))
     # bucketed-layout build is refresh-cost, not serve-cost (bench.py's
