@@ -1,17 +1,24 @@
 """Benchmark runner: times every registered query at one scale factor.
 
-Usage: ``python bench.py`` (env: ``SPARK_GRAFT_SF_DIR`` selects the data
-directory, default /root/testdata/sf0.1; ``SPARK_GRAFT_CPUS`` sets local
-parallelism). Prints a COMPACT summary JSON line on stdout FIRST (the
+Usage: ``python bench.py [--lanes NAME ...] [--n N]`` (env:
+``SPARK_GRAFT_SF_DIR`` selects the data directory, default the sf0.1
+testdata; ``SPARK_GRAFT_CPUS`` sets local parallelism). ``--lanes``
+times only the named registry / approx lanes; ``--n`` runs N timed
+passes one after another and records each lane's median and its
+samples. Plain ``python bench.py`` is the full registry, one pass.
+
+Prints a COMPACT summary JSON line on stdout FIRST (the
 73-query detail line outgrew the driver's tail capture in round 3 —
 BENCH_r03.json recorded ``"parsed": null``):
 
     {"metric": "total_query_wall_sec", "value": N, "unit": "sec",
      "sf": 0.1, "n_queries": 73, "queries": {...slowest 5...},
+     "layers": {"construct_s": .., "plan_s": .., "exec_s": ..},
      "detail_file": "BENCH_DETAIL_LAST_RUN.json"}
 
 and writes the full per-query timing map (exact lane + approx lane +
-floor-gate report) to ``BENCH_DETAIL_LAST_RUN.json`` next to this script
+floor-gate report + each lane's ``layers``: construct / plan / exec, and
+its ``samples``) to ``BENCH_DETAIL_LAST_RUN.json`` next to this script
 (gitignored scratch; override with ``SPARK_GRAFT_BENCH_DETAIL``). The
 COMMITTED ``BENCH_DETAIL.json`` is written only by
 ``tools/bench_median.py`` — it is the detail of the median of n>=3 runs
@@ -43,6 +50,11 @@ PRE-WARMED before the timed loop (the `fit` section records the train /
 closure-build cost in isolation), so every main-lane number is
 serving-only and independent of registry order — a reorder can no longer
 move a fit cost onto a different query and mint a phantom swing.
+
+``prepare_serving`` (that pre-warm) and ``time_lane`` (the one lane
+timer) are the only copies: tools/shuffle_bytes.py and
+tools/scale_stress.py call them, and tests/test_one_lane_harness.py
+fails on a second copy under tools/.
 """
 
 from __future__ import annotations
@@ -137,7 +149,101 @@ def _bench_action(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def time_lane(spark, fn, sf_dir: str) -> dict[str, float]:
+    """The one lane timer, cache-cold: ``wall_s`` is the build
+    (``construct_s``) plus the bench action (``exec_s``). ``plan_s``
+    forces the lane's executed plan in an untimed pass AFTER the action,
+    so the timed region stays exactly the wall the r16 floor judges (a
+    plan pass before the write would warm what the write re-plans)."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    _bench_action(df)
+    t2 = time.perf_counter()
+    df._jdf.queryExecution().executedPlan()
+    construct_s, exec_s = round(t1 - t0, 4), round(t2 - t1, 4)
+    return {
+        "construct_s": construct_s,
+        "plan_s": round(time.perf_counter() - t2, 4),
+        "exec_s": exec_s,
+        "wall_s": round(construct_s + exec_s, 4),
+    }
+
+
+def prepare_serving(spark, sf_dir: str, lanes) -> tuple[dict, dict]:
+    """Pay every refresh-time cost before any lane is timed, so each
+    timed lane measures serving only and no registry order can move a fit
+    onto whichever lane happens to run first (VERDICT r8 #3). Returns
+    ``(fit, errors)``: the wall of each step, and the steps that failed.
+
+    - the four model trainers, memo cleared first, at ``sf_dir``: every
+      fitted-model memo is hot afterwards;
+    - the bucketed-layout build: its write-time shuffle is refresh cost,
+      so bucketed_order_rollup measures the join it exists to show;
+    - the two checkpoint-backed cluster memos, built by running
+      ``lanes["neardup_clusters"]`` and ``lanes["embedding_clusters"]``
+      (a caller tunes a builder by passing its own mapping), so every
+      cluster consumer measures its marginal work, not the CC iteration.
+    """
+    from kafkastreamingetl_spark.catalog import load_table
+    from kafkastreamingetl_spark.operators import bucketing as bkt
+    from kafkastreamingetl_spark.operators import similarity as sim
+
+    def _emb():
+        return load_table(spark, sf_dir, "embeddings")
+
+    steps = {
+        "fit_label_centroids": lambda: sim.fit_label_centroids(_emb()),
+        "fit_pq_codebook_label": lambda: sim.fit_pq_codebook_label(_emb()),
+        "fit_kmeans": lambda: sim.fit_kmeans(_emb().select("vec_id", "embedding")),
+        "fit_pq_codebook_kmeans": lambda: sim.fit_pq_codebook_kmeans(
+            _emb().select("vec_id", "embedding")
+        ),
+        "fit_bucketed_order_tables": lambda: bkt.ensure_bucketed_order_tables(
+            spark, sf_dir
+        ),
+    }
+    fit: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    sim._MODEL_MEMO.clear()  # all fitted models share the one memo
+    for name, step in steps.items():
+        try:
+            t0 = time.perf_counter()
+            step()
+            fit[name] = round(time.perf_counter() - t0, 4)
+        except Exception as e:  # noqa: BLE001
+            errors[name] = f"fit: {type(e).__name__}: {e}"
+    for pw in ("neardup_clusters", "embedding_clusters"):
+        if pw not in lanes:
+            continue
+        try:
+            fit[f"prewarm_{pw}"] = time_lane(spark, lanes[pw], sf_dir)["wall_s"]
+        except Exception as e:  # noqa: BLE001
+            errors[pw] = f"prewarm: {type(e).__name__}: {e}"
+    return fit, errors
+
+
+def _median_run(runs: list[dict]) -> dict:
+    """The median pass of a lane's runs, layer by layer: the middle run
+    by wall (the mean of the middle two for an even count), so its
+    ``wall_s`` is the true median and still equals construct + exec."""
+    ordered = sorted(runs, key=lambda r: r["wall_s"])
+    middle = ordered[(len(ordered) - 1) // 2 : len(ordered) // 2 + 1]
+    return {
+        k: round(sum(r[k] for r in middle) / len(middle), 4) for k in middle[0]
+    }
+
+
 def main() -> None:
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--lanes", nargs="+", metavar="NAME",
+                    help="time only these registry / approx lanes")
+    ap.add_argument("--n", type=int, default=1,
+                    help="timed passes; each lane records median + samples")
+    args = ap.parse_args()
     sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     # no sfN in the path -> sf is UNKNOWN (None), not 0.0: a coalesced 0.0
@@ -145,12 +251,20 @@ def main() -> None:
     # check and compare against the sf0.1 floors
     sf = float(m.group(1)) if m else None
 
-    spark = get_test_spark("kafkastreamingetl_spark_bench")
     qs = queries()
+    lanes, approx_lanes = qs, APPROX_VARIANTS
+    if args.lanes:
+        unknown = set(args.lanes) - set(qs) - set(APPROX_VARIANTS)
+        if unknown:
+            raise SystemExit(f"bench: unknown lanes: {sorted(unknown)}")
+        lanes = {n: qs[n] for n in args.lanes if n in qs}
+        approx_lanes = {n: APPROX_VARIANTS[n] for n in args.lanes if n in APPROX_VARIANTS}
+    spark = get_test_spark("kafkastreamingetl_spark_bench")
 
-    # Warm-up: run EVERY query once at the smallest sf so whole-stage-codegen
-    # JIT compilation (seconds for the md5/SimHash expression trees) is paid
-    # outside the timings — the bench measures data processing, not javac.
+    # Warm-up: run every timed lane once at the smallest sf so
+    # whole-stage-codegen JIT compilation (seconds for the md5/SimHash
+    # expression trees) is paid outside the timings — the bench measures
+    # data processing, not javac.
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
@@ -161,7 +275,7 @@ def main() -> None:
     # per-query and the summary line always prints.
     errors: dict[str, str] = {}
     warm_failed: set[str] = set()
-    for name, fn in qs.items():
+    for name, fn in lanes.items():
         try:
             _bench_action(fn(spark, warm_dir))
         except Exception as e:  # noqa: BLE001 — record and keep benching
@@ -172,73 +286,21 @@ def main() -> None:
             errors[name] = f"warmup: {type(e).__name__}: {e}"
             warm_failed.add(name)
 
-    # Fit lane — BEFORE the timed loop (VERDICT r8 #3): the model trainers
-    # timed in isolation (memos cleared first) at the BENCH sf, which leaves
-    # every fitted-model memo hot, so the main-lane number for each
-    # model-backed query measures serving only. Previously the first query
-    # in registry order to trigger a fit absorbed the train cost into its
-    # own timing — any registry reorder then minted a phantom 2x swing on
-    # whichever query newly went first. The train/serve split is also the
-    # split a deployment budgets: fit is paid per corpus refresh, serve per
-    # query.
-    from kafkastreamingetl_spark.catalog import load_table
+    # Fit, bucketed layout and cluster prewarms BEFORE the timed loop
+    # (prepare_serving), against the full registry so the prewarms run
+    # whichever lanes are timed: every main-lane number is serving-only.
+    # The train/serve split is also the split a deployment budgets: fit
+    # is paid per corpus refresh, serve per query.
     from kafkastreamingetl_spark.operators import similarity as sim
 
-    def _emb(sp):
-        return load_table(sp, sf_dir, "embeddings")
-
-    fitters = {
-        "fit_label_centroids": lambda sp: sim.fit_label_centroids(_emb(sp)),
-        "fit_pq_codebook_label": lambda sp: sim.fit_pq_codebook_label(_emb(sp)),
-        "fit_kmeans": lambda sp: sim.fit_kmeans(
-            _emb(sp).select("vec_id", "embedding")
-        ),
-        "fit_pq_codebook_kmeans": lambda sp: sim.fit_pq_codebook_kmeans(
-            _emb(sp).select("vec_id", "embedding")
-        ),
-    }
-    fit: dict[str, float] = {}
-    sim._MODEL_MEMO.clear()  # all fitted models share the one memo now
-    for name, fn in fitters.items():
-        try:
-            t0 = time.perf_counter()
-            fn(spark)
-            fit[name] = round(time.perf_counter() - t0, 4)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = f"fit: {type(e).__name__}: {e}"
-
-    # Same treatment for the bucketed-layout build: the write-time shuffle
-    # is refresh-cost, not serve-cost — pay it here (timed as a fit) so
-    # bucketed_order_rollup's main-lane number measures the join it exists
-    # to demonstrate.
-    from kafkastreamingetl_spark.operators import bucketing as bkt
-
-    try:
-        t0 = time.perf_counter()
-        bkt.ensure_bucketed_order_tables(spark, sf_dir)
-        fit["fit_bucketed_order_tables"] = round(time.perf_counter() - t0, 4)
-    except Exception as e:  # noqa: BLE001
-        errors["bucketed_order_tables"] = f"fit: {type(e).__name__}: {e}"
-
-    # Same treatment for the checkpoint-backed connected-components label
-    # memos: run the canonical cluster builders once untimed-in-main-lane
-    # (timed here as prewarm_*) so every downstream cluster consumer in the
-    # main loop measures its own marginal work, not the CC iteration.
-    for pw in ("neardup_clusters", "embedding_clusters"):
-        if pw not in qs:
-            continue
-        try:
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _bench_action(qs[pw](spark, sf_dir))
-            fit[f"prewarm_{pw}"] = round(time.perf_counter() - t0, 4)
-        except Exception as e:  # noqa: BLE001
-            errors[pw] = f"prewarm: {type(e).__name__}: {e}"
+    fit, prep_errors = prepare_serving(spark, sf_dir, qs)
+    errors.update(prep_errors)
 
     read_io = _stage_io_reader(spark)
     if read_io:
         read_io()  # baseline: consume warm-up + fit stages so query 1 starts clean
-    timings: dict[str, float] = {}
+    runs: dict[str, list[dict]] = {name: [] for name in lanes}
+    dropped: set[str] = set()
     io: dict[str, dict] = {}
     # Serving-only proof (VERDICT r13 item 3): similarity._FIT_LOG appends
     # on every model-memo MISS. A timed lane that triggers a fit (an input
@@ -247,49 +309,52 @@ def main() -> None:
     # first wall is recorded under fit["inline_fit_<name>"] instead — so
     # main-lane numbers are serving-only regardless of registry order.
     timed_lane_fits: dict[str, list[str]] = {}
-    for name, fn in qs.items():
-        # clear persisted intermediates (e.g. dedup shingle features) so no
-        # query benefits from a predecessor's cache and nothing accumulates
-        spark.catalog.clearCache()
-        fit_mark = len(sim._FIT_LOG)
-        t0 = time.perf_counter()
-        try:
-            _bench_action(fn(spark, sf_dir))
-        except Exception as e:  # noqa: BLE001
-            errors[name] = f"run: {type(e).__name__}: {e}"
-            continue
-        timings[name] = round(time.perf_counter() - t0, 4)
-        if len(sim._FIT_LOG) > fit_mark:
-            kinds = [str(k[0]) for k in sim._FIT_LOG[fit_mark:]]
-            timed_lane_fits[name] = kinds
-            fit[f"inline_fit_{name}"] = timings[name]
-            if read_io:
-                read_io()  # drain the fit-polluted run's stages
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            try:
-                _bench_action(fn(spark, sf_dir))
-                timings[name] = round(time.perf_counter() - t0, 4)
-            except Exception as e:  # noqa: BLE001
-                # The only wall we have is fit-polluted (already recorded
-                # under fit["inline_fit_<name>"]); a serving-only number
-                # does not exist for this lane, so drop it to errors
-                # rather than publish the polluted one (VERDICT r14 #2).
-                timings.pop(name, None)
-                errors[name] = f"retime-after-inline-fit: {type(e).__name__}: {e}"
+    # pass after pass (--n), so a burst of host contention hits one pass
+    # of many lanes rather than every sample of one lane
+    for _ in range(args.n):
+        for name, fn in lanes.items():
+            if name in dropped:
                 continue
-        if read_io:
-            stats = read_io()
-            if stats is not None:
-                io[name] = stats
-        if name in warm_failed:
-            # timed run succeeded: the warm failure was warm-dir-specific;
-            # drop the advisory error so the summary's n_errors reflects
-            # queries that actually failed AT the bench sf
-            errors.pop(name, None)
+            fit_mark = len(sim._FIT_LOG)
+            try:
+                run = time_lane(spark, fn, sf_dir)
+            except Exception as e:  # noqa: BLE001
+                errors[name] = f"run: {type(e).__name__}: {e}"
+                dropped.add(name)
+                continue
+            if len(sim._FIT_LOG) > fit_mark:
+                timed_lane_fits[name] = [str(k[0]) for k in sim._FIT_LOG[fit_mark:]]
+                fit[f"inline_fit_{name}"] = run["wall_s"]
+                if read_io:
+                    read_io()  # drain the fit-polluted run's stages
+                try:
+                    run = time_lane(spark, fn, sf_dir)
+                except Exception as e:  # noqa: BLE001
+                    # The only wall we have is fit-polluted (already
+                    # recorded under fit["inline_fit_<name>"]); a
+                    # serving-only number does not exist for this lane, so
+                    # drop it to errors rather than publish the polluted
+                    # one (VERDICT r14 #2).
+                    errors[name] = f"retime-after-inline-fit: {type(e).__name__}: {e}"
+                    dropped.add(name)
+                    continue
+            runs[name].append(run)
+            if read_io:
+                stats = read_io()
+                if stats is not None:
+                    io[name] = stats
+    layers = {
+        name: _median_run(rs) for name, rs in runs.items() if rs and name not in dropped
+    }
+    timings = {name: run["wall_s"] for name, run in layers.items()}
+    # a timed run succeeded: the warm failure was warm-dir-specific; drop
+    # the advisory error so the summary's n_errors reflects queries that
+    # actually failed AT the bench sf
+    for name in warm_failed - dropped:
+        errors.pop(name, None)
 
     # Warm-serving lane: re-times the model-backed queries memo-hot. With
-    # the fit lane now running BEFORE the main loop, these should closely
+    # the fit lane running BEFORE the main loop, these should closely
     # match the main-lane numbers — a divergence flags an unintended
     # per-query refit.
     model_queries = (
@@ -301,13 +366,10 @@ def main() -> None:
     )
     warm_serving: dict[str, float] = {}
     for name in model_queries:
-        if name not in qs or name in errors:
+        if name not in lanes or name in errors:
             continue
         try:
-            spark.catalog.clearCache()  # memos survive; caches don't
-            t0 = time.perf_counter()
-            _bench_action(qs[name](spark, sf_dir))
-            warm_serving[name] = round(time.perf_counter() - t0, 4)
+            warm_serving[name] = time_lane(spark, lanes[name], sf_dir)["wall_s"]
         except Exception as e:  # noqa: BLE001
             errors[name] = f"warm: {type(e).__name__}: {e}"
 
@@ -316,13 +378,10 @@ def main() -> None:
     # reported beside their exact oracle-checkable twins, so the per-round
     # numbers cover the path a 100 TB deployment actually runs.
     approx: dict[str, dict] = {}
-    for name, fn in APPROX_VARIANTS.items():
+    for name, fn in approx_lanes.items():
         try:
             _bench_action(fn(spark, warm_dir))
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _bench_action(fn(spark, sf_dir))
-            t = round(time.perf_counter() - t0, 4)
+            t = time_lane(spark, fn, sf_dir)["wall_s"]
         except Exception as e:  # noqa: BLE001
             errors[name] = f"approx: {type(e).__name__}: {e}"
             continue
@@ -335,6 +394,8 @@ def main() -> None:
         "unit": "sec",
         "action": ACTION,
         "queries": timings,
+        "layers": layers,
+        "samples": {name: [r["wall_s"] for r in runs[name]] for name in timings},
         "sf": sf,
         "errors": errors,
         "approx": approx,
@@ -430,7 +491,8 @@ def _summary(detail: dict, median: dict | None, detail_file: str) -> dict:
     rarely intersect). The gate keys all derive from the one floor gate:
     every single-run flag counts as a regression, a frozen regression and
     a provisional flag alike (only tools/bench_median.py confirms), and
-    nothing is re-measured in-process, so ``n_confirm_errors`` is 0."""
+    nothing is re-measured in-process, so ``n_confirm_errors`` is 0.
+    ``layers`` totals each lane's construct / plan / exec split."""
     timings = detail["queries"]
     slowest = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
@@ -466,6 +528,10 @@ def _summary(detail: dict, median: dict | None, detail_file: str) -> dict:
         "n_confirm_errors": 0,
         "n_errors": len(detail["errors"]),
         "n_approx": len(detail["approx"]),
+        "layers": {
+            k: round(sum(r[k] for r in detail.get("layers", {}).values()), 4)
+            for k in ("construct_s", "plan_s", "exec_s")
+        },
     }
     if median:
         summary["headline_median"] = median.get("headline_median")

@@ -482,6 +482,51 @@ def alltime_dedup_sink(
     )
 
 
+def _flag_report(
+    ids: DataFrame,
+    probes: DataFrame,
+    keyed: DataFrame,
+    seen: DataFrame,
+    keys: list[str],
+    id_col: str,
+    hits_col: str,
+) -> DataFrame:
+    """The near-dup flag report shared by :func:`neardup_flag_sink` and
+    :func:`semantic_flag_sink`: one row per id in ``ids`` with
+    ``hits_col`` (distinct index keys its ``probes`` hit in ``seen``, the
+    earlier batches' keys), ``n_batch_partners`` (distinct lower ids in
+    this batch whose ``keyed`` rows share a probed key) and
+    ``is_neardup`` (either count above 0). ``probes`` and ``keyed`` are
+    ``(id_col, *keys)`` frames; the first key is the one counted."""
+    from pyspark.sql import functions as F
+
+    idx_hits = (
+        probes.join(seen, keys)
+        .groupBy(id_col)
+        .agg(F.count_distinct(keys[0]).alias(hits_col))
+    )
+    a = probes.select(F.col(id_col).alias("_a"), *keys)
+    batch_hits = (
+        a.join(keyed, keys)
+        .where(F.col("_a") < F.col(id_col))
+        .groupBy(id_col)
+        .agg(F.count_distinct("_a").alias("n_batch_partners"))
+    )
+    return (
+        ids.join(idx_hits, id_col, "left")
+        .join(batch_hits, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(hits_col, F.lit(0)).alias(hits_col),
+            F.coalesce("n_batch_partners", F.lit(0)).alias("n_batch_partners"),
+        )
+        .withColumn(
+            "is_neardup",
+            (F.col(hits_col) > 0) | (F.col("n_batch_partners") > 0),
+        )
+    )
+
+
 def neardup_flag_sink(
     df: DataFrame,
     out_path: str,
@@ -514,8 +559,6 @@ def neardup_flag_sink(
     of the index, replay-idempotent. Documents too short to shingle have
     no signatures and no report row (same contract as
     ``minhash_signatures``)."""
-    from pyspark.sql import functions as F
-
     from .operators.dedup import minhash_signatures
 
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
@@ -527,34 +570,9 @@ def neardup_flag_sink(
         seen = _earlier(
             index_path, "batch_id", batch_id, sigs.select("band", "sig")
         ).distinct()
-        idx_hits = (
-            sigs.join(seen, ["band", "sig"])
-            .groupBy(id_col)
-            .agg(F.count_distinct("band").alias("n_index_bands"))
-        )
-        a = sigs.select(F.col(id_col).alias("_a"), "band", "sig")
-        batch_hits = (
-            a.join(sigs, ["band", "sig"])
-            .where(F.col("_a") < F.col(id_col))
-            .groupBy(id_col)
-            .agg(F.count_distinct("_a").alias("n_batch_partners"))
-        )
-        report = (
-            sigs.select(id_col)
-            .distinct()
-            .join(idx_hits, id_col, "left")
-            .join(batch_hits, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("n_index_bands", F.lit(0)).alias("n_index_bands"),
-                F.coalesce("n_batch_partners", F.lit(0)).alias(
-                    "n_batch_partners"
-                ),
-            )
-            .withColumn(
-                "is_neardup",
-                (F.col("n_index_bands") > 0) | (F.col("n_batch_partners") > 0),
-            )
+        report = _flag_report(
+            sigs.select(id_col).distinct(), sigs, sigs, seen, ["band", "sig"],
+            id_col, "n_index_bands",
         )
         _write_tagged(report, out_path, "batch_id", batch_id)
         _write_tagged(sigs, index_path, "batch_id", batch_id)
@@ -903,37 +921,10 @@ def semantic_flag_sink(
             .select(F.col("_sig").alias("_bucket"))
             .distinct()
         )
-        idx_hits = (
-            probes.join(seen, "_bucket")
-            .groupBy(id_col)
-            .agg(F.count_distinct("_bucket").alias("n_index_buckets"))
-        )
-        a = probes.select(F.col(id_col).alias("_a"), "_bucket")
-        b = base.select(F.col(id_col), F.col("_sig").alias("_bucket"))
-        batch_hits = (
-            a.join(b, "_bucket")
-            .where(F.col("_a") < F.col(id_col))
-            .groupBy(id_col)
-            .agg(F.count_distinct("_a").alias("n_batch_partners"))
-        )
-        report = (
-            base.select(id_col)
-            .join(idx_hits, id_col, "left")
-            .join(batch_hits, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("n_index_buckets", F.lit(0)).alias(
-                    "n_index_buckets"
-                ),
-                F.coalesce("n_batch_partners", F.lit(0)).alias(
-                    "n_batch_partners"
-                ),
-            )
-            .withColumn(
-                "is_neardup",
-                (F.col("n_index_buckets") > 0)
-                | (F.col("n_batch_partners") > 0),
-            )
+        keyed = base.select(F.col(id_col), F.col("_sig").alias("_bucket"))
+        report = _flag_report(
+            base.select(id_col), probes, keyed, seen, ["_bucket"],
+            id_col, "n_index_buckets",
         )
         _write_tagged(report, out_path, "batch_id", batch_id)
         _write_tagged(base.select("_sig"), index_path, "batch_id", batch_id)

@@ -1,7 +1,8 @@
 """Regenerate QUERY_INDEX.md from the query registry + driver records.
 
 Emits one row per registered query with its docstring summary AND its
-latest-green driver round (from CORRECTNESS_r*.json) — the window-age
+latest green round (``__spark_entry__.latest_green_rounds``, the one
+green rule over CORRECTNESS_r*.json) — the window-age
 telemetry that keeps each round's 50-slot deferral decisions visible
 (VERDICT r6 item 8). Run after adding queries or after a driver round:
 
@@ -10,8 +11,6 @@ telemetry that keeps each round's 50-slot deferral decisions visible
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 import sys
@@ -20,25 +19,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SUMMARY_WIDTH = 170
-
-
-def latest_green_rounds() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
 
 
 def summary_of(fn) -> str:
@@ -54,7 +34,7 @@ def main() -> int:
     import __spark_entry__ as entry
 
     ordered = list(entry.queries())
-    green = latest_green_rounds()
+    green = entry.latest_green_rounds()
 
     ages: dict[str, int] = {}
     for name in ordered:

@@ -55,10 +55,11 @@ from pyspark.sql import functions as F  # noqa: E402
 from kafkastreamingetl_spark.catalog import load_table  # noqa: E402
 from kafkastreamingetl_spark.session import get_test_spark  # noqa: E402
 from __spark_entry__ import queries  # noqa: E402
-from bench import ACTION, _bench_action  # noqa: E402  — r14: full-execution action
-# (the old .count() action let Catalyst prune Window/Sort operators, so
-# pre-r14 SCALE_STRESS walls under-measured window lanes 1.2–2.4×; this
-# artifact is regenerated whenever the action changes)
+# bench's one serving preparation and one lane timer (noop-sink action
+# since r14: the old .count() action let Catalyst prune Window/Sort
+# operators, so pre-r14 SCALE_STRESS walls under-measured window lanes
+# 1.2–2.4×; this artifact is regenerated whenever the action changes)
+from bench import ACTION, prepare_serving, time_lane  # noqa: E402
 
 BASE_DIR = "/root/testdata/sf0.1"
 WORK_DIR = "/tmp/spark_graft_scale_stress"
@@ -228,9 +229,10 @@ def build_scaled_dir(spark, k: int) -> str:
 
 
 def _time_queries(spark, qs, sf_dir: str, n_planes: int) -> tuple[dict, dict]:
-    """(serving walls, fit walls) at sf_dir. Mirrors bench.py: trainers and
-    cluster-closure builds are timed separately FIRST so per-query numbers
-    are serving-only.
+    """(serving walls, fit walls) at sf_dir, prepared and timed by
+    bench.py's own helpers: ``prepare_serving`` times the trainers, the
+    bucketed-layout build and the cluster-closure builds FIRST so
+    per-query numbers are serving-only.
 
     ``n_planes`` tunes the embedding near-dup blocking width to the corpus
     size (≈ 8 + log2(K)) — the dial :func:`similarity.planes_for` documents.
@@ -238,51 +240,25 @@ def _time_queries(spark, qs, sf_dir: str, n_planes: int) -> tuple[dict, dict]:
     every scale and caught the quadratic: 15 s → 560 s closure build for
     5× the vectors (recorded under "found" in the report). Scaling the
     width is the fix, so the committed numbers measure the tuned
-    configuration; everything else runs the registered queries verbatim.
+    configuration (its builder replaces the registered
+    ``embedding_clusters`` lane, prewarm included); everything else runs
+    the registered queries verbatim.
     """
     from kafkastreamingetl_spark.operators import similarity as sim
-
-    fit: dict[str, float] = {}
-    sim._MODEL_MEMO.clear()
-    emb = load_table(spark, sf_dir, "embeddings")
 
     def _clusters(sp, d):
         return sim.embedding_clusters(
             load_table(sp, d, "embeddings"), n_planes=n_planes
         )
-    for name, fn in (
-        ("fit_label_centroids", lambda: sim.fit_label_centroids(emb)),
-        (
-            "fit_kmeans",
-            lambda: sim.fit_kmeans(emb.select("vec_id", "embedding")),
-        ),
-        ("fit_pq_codebook_label", lambda: sim.fit_pq_codebook_label(emb)),
-        (
-            "fit_pq_codebook_kmeans",
-            lambda: sim.fit_pq_codebook_kmeans(
-                emb.select("vec_id", "embedding")
-            ),
-        ),
-    ):
-        t0 = time.perf_counter()
-        fn()
-        fit[name] = round(time.perf_counter() - t0, 3)
-    for pw, fn in (
-        ("neardup_clusters", qs["neardup_clusters"]),
-        ("embedding_clusters", _clusters),
-    ):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _bench_action(fn(spark, sf_dir))
-        fit[f"prewarm_{pw}"] = round(time.perf_counter() - t0, 3)
 
-    walls: dict[str, float] = {}
-    for name in HEAVY_QUERIES:
-        fn = _clusters if name == "embedding_clusters" else qs[name]
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _bench_action(fn(spark, sf_dir))
-        walls[name] = round(time.perf_counter() - t0, 3)
+    lanes = {**qs, "embedding_clusters": _clusters}
+    fit, errors = prepare_serving(spark, sf_dir, lanes)
+    if errors:
+        raise SystemExit(f"serving preparation failed: {errors}")
+    walls = {
+        name: time_lane(spark, lanes[name], sf_dir)["wall_s"]
+        for name in HEAVY_QUERIES
+    }
     return walls, fit
 
 
@@ -299,10 +275,7 @@ def _time_sketch_lanes(spark, qs, sf_dir: str) -> dict:
             ("sketch_sec", APPROX_VARIANTS[sketch]),
             ("exact_sec", qs[exact]),
         ):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _bench_action(fn(spark, sf_dir))
-            lanes[label] = round(time.perf_counter() - t0, 3)
+            lanes[label] = time_lane(spark, fn, sf_dir)["wall_s"]
         lanes["speedup"] = round(
             lanes["exact_sec"] / max(lanes["sketch_sec"], 1e-3), 2
         )
@@ -363,10 +336,7 @@ def _time_lang_fanout(spark, qs, scaled_dir: str) -> dict:
         ("sketch_sec", APPROX_VARIANTS["lm_bucket_mix_approx"]),
         ("quality_percentile_filter_sec", qs["quality_percentile_filter"]),
     ):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _bench_action(fn(spark, fdir))
-        out[label] = round(time.perf_counter() - t0, 3)
+        out[label] = time_lane(spark, fn, fdir)["wall_s"]
     out["speedup"] = round(out["exact_sec"] / max(out["sketch_sec"], 1e-3), 2)
     return out
 

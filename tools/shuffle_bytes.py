@@ -13,9 +13,12 @@ It measures EVERY registered lane (full 179-query registry — frozen, so
 full coverage is a stable contract; round 14 extended the artifact past
 VERDICT r13 item 5's top-50 ask) under the r14 full-execution noop
 action (window-lane shuffles a count() action let Catalyst prune are in
-the gate), plus the three sketch lanes NEXT TO their exact twins, each
-cache-cold after the same fit/prewarm split bench.py uses, at the
-driver sf (default /root/testdata/sf0.1). The report keeps two blocks:
+the gate), plus the three sketch lanes NEXT TO their exact twins, at
+sf0.1 unless ``SPARK_GRAFT_SF_DIR`` names another scale factor. It
+prepares and times lanes with bench.py's own helpers, so the split is bench.py's by construction:
+``prepare_serving`` fits all four models (both PQ codebooks included),
+builds the bucketed tables and prewarms the two cluster memos, then
+``time_lane`` runs each lane cache-cold. The report keeps two blocks:
 ``lanes`` (the PINNED top-50 by measured shuffle — the stable
 round-over-round comparison set) and ``tail_lanes`` (everything else).
 
@@ -112,30 +115,17 @@ SKETCH_PAIRS = {
 
 def measure(spark, sf_dir: str) -> dict:
     """{lane: {shuffle_write_mb, shuffle_read_mb, input_mb, wall_sec}} for
-    every pinned lane + sketch pair member, serving-only (fit/prewarm paid
-    first, exactly bench.py's split)."""
-    from bench import _bench_action, _stage_io_reader
-    from kafkastreamingetl_spark.catalog import load_table
-    from kafkastreamingetl_spark.operators import similarity as sim
+    every pinned lane + sketch pair member, serving-only: bench.py's
+    ``prepare_serving`` pays every fit, the bucketed-layout build and the
+    cluster prewarms first, and ``time_lane`` times each lane."""
+    from bench import _stage_io_reader, prepare_serving, time_lane
     from kafkastreamingetl_spark.queries import APPROX_VARIANTS
     from __spark_entry__ import queries
 
-    from kafkastreamingetl_spark.operators import bucketing as bkt
-
     qs = queries()
-    emb = load_table(spark, sf_dir, "embeddings")
-    sim._MODEL_MEMO.clear()
-    sim.fit_label_centroids(emb)
-    sim.fit_kmeans(emb.select("vec_id", "embedding"))
-    # bucketed-layout build is refresh-cost, not serve-cost (bench.py's
-    # fit split): without this, bucketed_order_rollup's measured lane
-    # absorbs the one-time 30 MB bucketing write shuffle and the
-    # zero-exchange JOIN it demonstrates looks like the heaviest shuffler
-    # in the registry
-    bkt.ensure_bucketed_order_tables(spark, sf_dir)
-    for pw in ("neardup_clusters", "embedding_clusters"):
-        spark.catalog.clearCache()
-        _bench_action(qs[pw](spark, sf_dir))
+    _, errors = prepare_serving(spark, sf_dir, qs)
+    if errors:
+        raise SystemExit(f"serving preparation failed: {errors}")
 
     read_io = _stage_io_reader(spark)
     if read_io is None:
@@ -156,10 +146,7 @@ def measure(spark, sf_dir: str) -> dict:
     ))
     for name in targets:
         fn = APPROX_VARIANTS[name] if name in APPROX_VARIANTS else qs[name]
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _bench_action(fn(spark, sf_dir))
-        wall = round(time.perf_counter() - t0, 3)
+        wall = time_lane(spark, fn, sf_dir)["wall_s"]
         stats = None
         for _ in range(10):  # REST publication can lag the action slightly
             stats = read_io()

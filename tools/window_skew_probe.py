@@ -35,6 +35,8 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import _bench_action  # noqa: E402
+
 X100_DIR = "/tmp/spark_graft_scale_stress/x100"
 FUNNEL_SHARE = 0.9      # max-task/total above this = single-task funnel
 NOISE_FLOOR_MB = 0.25   # ignore stages smaller than this
@@ -75,10 +77,11 @@ def funnel_stages(spark, fn, sf_dir: str) -> list[dict]:
 
     before = max([s.get("stageId", -1) for s in stages()] or [-1])
     spark.catalog.clearCache()
-    # noop sink, NOT count(): a count-only action lets Catalyst eliminate
-    # the very Window operator this probe exists to measure (the round-13
-    # bench finding, pinned by test_count_action_prunes_windows)
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # the bench action (noop sink), NOT count(): a count-only action lets
+    # Catalyst eliminate the very Window operator this probe exists to
+    # measure (the round-13 bench finding, pinned by
+    # test_count_action_prunes_windows)
+    _bench_action(fn(spark, sf_dir))
     found = []
     for s in stages():
         sid = s.get("stageId", -1)
