@@ -126,7 +126,8 @@ def test_summary_carries_every_contract_key():
     one floor gate: single-run flags count as regressions, frozen
     regressions and provisional flags alike, and n_confirm_errors is 0
     (nothing is re-measured in-process). The one added key is the
-    ``layers`` block: construct / plan / exec totals over the lanes."""
+    ``layers`` block: construct / plan / exec and compile totals over the
+    lanes."""
     bench = _bench_module()
     detail = {
         "value": 5.0, "sf": 0.1, "action": "noop",
@@ -135,15 +136,20 @@ def test_summary_carries_every_contract_key():
         "frozen_headline_ratio": 1.25,
         "frozen_regressions": {"q": {"now": 4.0, "frozen_floor": 1.0}},
         "layers": {
-            "q": {"construct_s": 1.5, "plan_s": 0.25, "exec_s": 2.5, "wall_s": 4.0},
-            "r": {"construct_s": 0.25, "plan_s": 0.5, "exec_s": 0.75, "wall_s": 1.0},
+            "q": {"construct_s": 1.5, "plan_s": 0.25, "exec_s": 2.5, "wall_s": 4.0,
+                  "compiles": 7},
+            "r": {"construct_s": 0.25, "plan_s": 0.5, "exec_s": 0.75, "wall_s": 1.0,
+                  "compiles": 0},
         },
     }
     s = bench._summary(detail, None, "BENCH_DETAIL_LAST_RUN.json")
     assert set(s) == _SUMMARY_KEYS
     # the layers block totals the per-lane split; construct + exec is the
-    # headline, plan is the untimed pass
-    assert s["layers"] == {"construct_s": 1.75, "plan_s": 0.75, "exec_s": 3.25}
+    # headline, plan is the untimed pass, compiles the generated classes
+    # the timed lanes compiled
+    assert s["layers"] == {
+        "construct_s": 1.75, "plan_s": 0.75, "exec_s": 3.25, "compiles": 7
+    }
     assert s["layers"]["construct_s"] + s["layers"]["exec_s"] == s["value"]
     assert s["baseline_round"] == s["frozen_floor_round"] == 16
     assert s["n_regressions"] == s["n_frozen_regressions"] == 1

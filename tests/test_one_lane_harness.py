@@ -10,7 +10,8 @@ the only code that prepares and times a registry lane.
 - serving-only (sf0.001): after ``prepare_serving`` the model-backed
   lanes construct and run without a single fit.
 - the bench CLI modes: ``--lanes`` / ``--n`` record each lane's median,
-  its samples and its construct / plan / exec split.
+  its samples, its construct / plan / exec split and the generated
+  classes it compiled.
 """
 
 from __future__ import annotations
@@ -159,13 +160,17 @@ def test_bench_lanes_and_n_modes(tmp_path, sf_dir):
     assert len(out) == 1, out
     summary = json.loads(out[0])
     assert summary["n_queries"] == 2 and summary["n_errors"] == 0
-    assert set(summary["layers"]) == {"construct_s", "plan_s", "exec_s"}
+    assert set(summary["layers"]) == {"construct_s", "plan_s", "exec_s", "compiles"}
     with open(detail_path) as f:
         detail = json.load(f)
     assert set(detail["queries"]) == set(lanes)
     for name in lanes:
         wall = detail["queries"][name]
         layer = detail["layers"][name]
-        assert {"construct_s", "plan_s", "exec_s"} <= set(layer)
+        assert {"construct_s", "plan_s", "exec_s", "compiles"} <= set(layer)
         assert abs(layer["construct_s"] + layer["exec_s"] - wall) <= 0.02 * wall
+        # the warm-up compiled every class these lanes generate, and the
+        # session profile's codegen cache keeps them across the passes
+        assert layer["compiles"] == 0
         assert len(detail["samples"][name]) == 2
+    assert summary["layers"]["compiles"] == 0
