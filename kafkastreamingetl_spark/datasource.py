@@ -20,13 +20,11 @@ as tables:
 
 The per-row Python cost confines this to landing/testing duty — exactly
 like the CSV/JSONL landing sources, convert once to parquet and query
-that. Arrow-batched generation (yielding pa.RecordBatch) is the documented
-upgrade when a Python source must feed real volume.
+that.
 """
 
 from __future__ import annotations
 
-import hashlib
 from datetime import datetime, timedelta
 
 from pyspark.sql.datasource import (
@@ -38,20 +36,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .functions import py_hash60
 from .sources import EVENT_TYPES
 
 SYNTH_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
-
-
-def _h(seed: int, i: int, field: str) -> int:
-    """Deterministic 60-bit int from (seed, row, field) — the same
-    md5-derived construction as functions.hash60, usable driver/executor
-    side without a SparkSession."""
-    d = hashlib.md5(f"{seed}:{i}:{field}".encode()).hexdigest()
-    return int(d[:15], 16)
 
 
 class _RangePartition(InputPartition):
@@ -89,19 +80,19 @@ def _gen_rows(seed: int, start: int, end: int):
         # cleans exactly these): every 97th row repeats the previous
         # event_id; every 13th has a null type; every 11th a null value
         event_id = i - 1 if (i % 97 == 0 and i > 0) else i
-        ts = base + timedelta(seconds=int(_h(seed, i, "ts") % 2_592_000))
-        user_id = int(_h(seed, i, "u") % 500)
+        ts = base + timedelta(seconds=int(py_hash60(f"{seed}:{i}:ts") % 2_592_000))
+        user_id = int(py_hash60(f"{seed}:{i}:u") % 500)
         event_type = (
             None
             if i % 13 == 0
-            else EVENT_TYPES[_h(seed, i, "t") % len(EVENT_TYPES)]
+            else EVENT_TYPES[py_hash60(f"{seed}:{i}:t") % len(EVENT_TYPES)]
         )
         value = (
             None
             if i % 11 == 0
-            else round((_h(seed, i, "v") % 100_000) / 100.0, 2)
+            else round((py_hash60(f"{seed}:{i}:v") % 100_000) / 100.0, 2)
         )
-        props = "{}" if i % 3 == 0 else f'{{"k": {_h(seed, i, "k") % 100}}}'
+        props = "{}" if i % 3 == 0 else f'{{"k": {py_hash60(f"{seed}:{i}:k") % 100}}}'
         yield (event_id, ts, user_id, event_type, value, props)
 
 
@@ -110,7 +101,6 @@ class SyntheticEventsReader(DataSourceReader):
         self.rows = int(options.get("rows", 1000))
         self.n_parts = max(1, int(options.get("partitions", 8)))
         self.seed = int(options.get("seed", 7))
-        self.arrow = str(options.get("arrow", "false")).lower() == "true"
 
     def partitions(self):
         if self.rows <= 0:
@@ -123,30 +113,7 @@ class SyntheticEventsReader(DataSourceReader):
         ]
 
     def read(self, partition: _RangePartition):
-        if not self.arrow:
-            yield from _gen_rows(self.seed, partition.start, partition.end)
-            return
-        # Arrow lane (option("arrow", "true")): the per-row values are the
-        # SAME pure function of (seed, index), but the partition ships to
-        # the JVM as one RecordBatch instead of per-row pickled tuples —
-        # the fast path when a Python source must feed real volume (the
-        # engine accepts yielded pyarrow.RecordBatch directly).
-        import pyarrow as pa
-
-        cols = list(zip(*_gen_rows(self.seed, partition.start, partition.end)))
-        if not cols:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(cols[0], pa.int64()),
-                pa.array(cols[1], pa.timestamp("us")),
-                pa.array(cols[2], pa.int64()),
-                pa.array(cols[3], pa.string()),
-                pa.array(cols[4], pa.float64()),
-                pa.array(cols[5], pa.string()),
-            ],
-            names=["event_id", "ts", "user_id", "event_type", "value", "props"],
-        )
+        yield from _gen_rows(self.seed, partition.start, partition.end)
 
 
 def register_synthetic_source(spark) -> None:

@@ -741,9 +741,8 @@ def _slim(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     copy-pasted per stage."""
     return ensure_parallelism(df).select(
         # bigint here, not at the Arrow boundary: FEATURE_SCHEMA declares
-        # doc_id bigint, and the mapInArrow lane passes the column through
-        # untouched — an int32 id would crash it at runtime where the
-        # pandas lane silently coerces
+        # doc_id bigint, and the lanes pass the column through as read, so
+        # an int32 id would otherwise rely on Arrow's coercion
         F.col(id_col).cast("bigint").alias("doc_id"),
         F.col(payload_col).alias("payload"),
     )
@@ -755,16 +754,6 @@ def _opt_bytes(p) -> bytes | None:
     null outputs (the engines' shared NULL-in/NULL-out contract), not
     fail the task."""
     return None if p is None else bytes(p)
-
-
-def _features_from_raws(raws: list):
-    """(n_bytes, digests, dims) per payload — ONE definition of the
-    feature derivation shared by the pandas and Arrow lanes, so the lanes
-    cannot drift (their differential test would then fail confusingly)."""
-    digests = [None if r is None else hashlib.md5(r).hexdigest() for r in raws]
-    dims = [(None, None) if d is None else _fake_decode(d) for d in digests]
-    n_bytes = [None if r is None else len(r) for r in raws]
-    return n_bytes, digests, dims
 
 
 def extract_features(
@@ -780,7 +769,11 @@ def extract_features(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             raws = [_opt_bytes(p) for p in pdf["payload"]]
-            n_bytes, digests, dims = _features_from_raws(raws)
+            digests = [
+                None if r is None else hashlib.md5(r).hexdigest() for r in raws
+            ]
+            dims = [(None, None) if d is None else _fake_decode(d) for d in digests]
+            n_bytes = [None if r is None else len(r) for r in raws]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -1026,46 +1019,3 @@ def decode_audio_features(
             yield pd.DataFrame({"doc_id": pdf["doc_id"], **rows})
 
     return slim.mapInPandas(decode, schema=AUDIO_SCHEMA)
-
-
-def extract_features_arrow(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """:func:`extract_features` on the ``mapInArrow`` lane: the worker
-    receives ``pyarrow.RecordBatch`` directly — no Arrow→pandas→Arrow
-    round trip, no pandas object-dtype boxing of the binary payloads.
-    For wide binary columns the pandas conversion is real overhead (every
-    payload becomes a Python bytes object inside a pandas series even
-    when the UDF only needs a buffer view); the Arrow lane keeps the
-    batch zero-copy until the loop touches each value. Same output
-    schema, same NULL-in/NULL-out contract — differential-tested against
-    the pandas lane (tests/test_multimodal.py)."""
-    import pyarrow as pa
-
-    slim = _slim(df, id_col, payload_col)
-
-    def extract(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            payloads = batch.column("payload")
-            raws = [
-                None if not v.is_valid else v.as_py() for v in payloads
-            ]
-            n_bytes, digests, dims = _features_from_raws(raws)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(digests, pa.string()),
-                    pa.array([w for w, _ in dims], pa.int32()),
-                    pa.array([h for _, h in dims], pa.int32()),
-                ],
-                names=[
-                    "doc_id",
-                    "n_bytes",
-                    "content_md5",
-                    "fake_width",
-                    "fake_height",
-                ],
-            )
-
-    return slim.mapInArrow(extract, schema=FEATURE_SCHEMA)

@@ -2273,8 +2273,8 @@ def embedding_covariance(
     (serialized as strings — 38-digit headroom beats int64 at corpus
     scale), merged as DECIMAL(38,0), and the final cov evaluates in the
     same expression order as the oracle. Pinned bit-identical against
-    the relational twin (:func:`_embedding_covariance_relational`) in
-    tests/test_similarity.py."""
+    the DuckDB oracle (:func:`sql_embedding_covariance`) by the
+    registry's oracle differential, which compares floats exactly."""
     from decimal import ROUND_HALF_UP, Decimal
 
     d = n_dims
@@ -2345,62 +2345,6 @@ def embedding_covariance(
                 / F.col("n")
             )
         ).alias("cov"),
-    )
-
-
-def _embedding_covariance_relational(
-    embeddings: DataFrame,
-    *,
-    n_dims: int = COV_DIMS,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The pre-r16 relational execution (in-row d² fan-out + one
-    map-side-combined decimal aggregation) — kept as the JVM-side twin
-    the parity test pins :func:`embedding_covariance` against, mirroring
-    the oracle SQL shape expression-for-expression."""
-    pairs = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(n_dims)),
-            lambda i: F.struct(
-                i.alias("i"),
-                F.element_at(F.col(vec_col), i).cast("double").alias("xi"),
-            ),
-        )
-    )
-    rows = embeddings.select(F.col(vec_col)).select(
-        F.col(vec_col), pairs.alias("p")
-    )
-    inner = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(n_dims)),
-            lambda j: F.struct(
-                j.alias("j"),
-                F.element_at(F.col(vec_col), j).cast("double").alias("xj"),
-            ),
-        )
-    )
-    cells = rows.select(
-        F.col("p.i").alias("dim_i"),
-        F.col("p.xi").alias("xi"),
-        inner.alias("q"),
-    ).select("dim_i", "xi", F.col("q.j").alias("dim_j"), F.col("q.xj").alias("xj"))
-    n = F.count(F.lit(1))
-    return (
-        cells.groupBy("dim_i", "dim_j")
-        .agg(
-            dsum(F.col("xi") * F.col("xj"), "sxy"),
-            dsum("xi", "sx"),
-            dsum("xj", "sy"),
-            n.alias("n"),
-        )
-        .select(
-            F.col("dim_i").cast("int").alias("dim_i"),
-            F.col("dim_j").cast("int").alias("dim_j"),
-            (
-                F.col("sxy") / F.col("n")
-                - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))
-            ).alias("cov"),
-        )
     )
 
 

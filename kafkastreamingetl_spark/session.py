@@ -54,6 +54,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # Spark has no nanosecond timestamp type; read parquet TIMESTAMP(NANOS)
     # (testdata events.ts) as long and convert in catalog.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Adaptive Query Execution (reference spark/app.py:20-22)
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -97,6 +98,9 @@ def get_spark(
         builder = builder.master(master)
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     conf = {
+        # the runtime confs, also as builder confs so a JVM this call
+        # launches starts with them
+        **RUNTIME_CONFS,
         # Heap for the single local-mode JVM (driver == all executors).
         # Spark's default is 1g — at local[32] that is ~30 MB of execution
         # memory per concurrent task, which OOMs legitimate plans an order
@@ -108,21 +112,10 @@ def get_spark(
         # shuffle / parallelism (reference spark/app.py:17-18)
         "spark.sql.shuffle.partitions": str(n_shuffle),
         "spark.default.parallelism": str(n_shuffle),
-        # Adaptive Query Execution (reference spark/app.py:20-22)
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
         # Dynamic Partition Pruning (reference spark/app.py:24)
         "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
-        # UTC everywhere: event-time windows / to_date must be computed on
-        # the same wall clock as oracle engines reading naive parquet ts.
-        "spark.sql.session.timeZone": "UTC",
         # Arrow for pandas UDF extension points — the vectorized Python path
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Spark has no nanosecond timestamp type; read parquet
-        # TIMESTAMP(NANOS) (testdata events.ts) as long and convert in
-        # catalog.load_table.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Streaming state at scale: RocksDB bounds driver/executor heap usage
         # where the default HDFSBackedStateStore would not (SURVEY.md §4).
         "spark.sql.streaming.stateStore.providerClass": (

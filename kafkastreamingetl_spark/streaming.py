@@ -1,4 +1,4 @@
-"""Streaming runtime: sink policies, multi-sink fan-out, deterministic runs.
+"""Streaming runtime: sink policies, one trigger rule, deterministic runs.
 
 Re-expresses the reference's streaming main program (reference
 spark/app.py:184-209) as composable policy functions:
@@ -6,12 +6,20 @@ spark/app.py:184-209) as composable policy functions:
 - S4  parquet append sink with checkpoint + trigger + hive partitioning
 - S5  console sink (update mode)
 - S8  Kafka producer sink (``to_json(struct(*))`` → value bytes)
-- T4  output modes, T5 triggers, T6 checkpointing, T8 multi-sink fan-out
+- T4  output modes, T5 triggers, T6 checkpointing; T8 multi-sink fan-out
+  is starting several sinks off one lineage, each its own query
 - a ``foreachBatch`` bridge so batch operators (e.g. the daily rollup) can
   run continuously against micro-batches
 - :func:`run_available_now` — the test harness path: processes everything
   available, then stops (deterministic; SURVEY.md §5.2), replacing
   wall-clock triggers with replayable runs.
+
+One trigger rule for every sink that takes ``available_now``:
+``available_now=True`` runs ``trigger(availableNow=True)`` (tests,
+backfills), anything else the reference's fixed 30 s processing-time
+trigger (:data:`TRIGGER`). The console sink keeps Spark's default
+trigger, as the reference does. These are the two triggers of Structured
+Streaming the engine needs: periodic and run-once.
 
 Checkpoint policy at scale: one checkpoint dir per query (never shared),
 RocksDB state store (set in session.get_spark) so streaming state lives off
@@ -44,7 +52,22 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+#: The reference stream's fixed literals (spark/app.py): the 30 s
+#: watermark (:160), the 1 min window sliding every 30 s (:165) and the
+#: 30 s processing-time trigger (:195).
+WATERMARK = "30 seconds"
+WINDOW = "1 minute"
+SLIDE = "30 seconds"
+TRIGGER = "30 seconds"
+
+
+def _start(w: DataStreamWriter, available_now: bool) -> StreamingQuery:
+    """Start ``w`` under the trigger rule (module docstring)."""
+    if available_now:
+        return w.trigger(availableNow=True).start()
+    return w.trigger(processingTime=TRIGGER).start()
 
 
 def write_parquet_stream(
@@ -53,16 +76,13 @@ def write_parquet_stream(
     checkpoint: str,
     *,
     partition_by: str | list[str] | None = None,
-    trigger_seconds: int | None = 30,
     available_now: bool = False,
-    output_mode: str = "append",
 ) -> StreamingQuery:
     """S4/H5/T4/T5/T6: the reference's parquet lake sink
-    (spark/app.py:189-197): append mode, checkpointed, hive-partitioned,
-    micro-batch trigger. ``available_now=True`` swaps the wall-clock trigger
-    for a process-everything-then-stop run (tests, backfills)."""
+    (spark/app.py:189-197): append mode (the only mode a file sink
+    accepts), checkpointed, hive-partitioned, under the trigger rule."""
     w = (
-        df.writeStream.outputMode(output_mode)
+        df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
@@ -70,27 +90,19 @@ def write_parquet_stream(
     if partition_by:
         cols = [partition_by] if isinstance(partition_by, str) else partition_by
         w = w.partitionBy(*cols)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
+    return _start(w, available_now)
 
 
 def write_console_stream(
-    df: DataFrame,
-    *,
-    output_mode: str = "update",
-    truncate: bool = False,
-    available_now: bool = False,
+    df: DataFrame, *, available_now: bool = False
 ) -> StreamingQuery:
     """S5: debug console sink, update mode, untruncated (reference
     spark/app.py:200-205). Default trigger is as-fast-as-possible, as the
     reference leaves it."""
     w = (
-        df.writeStream.outputMode(output_mode)
+        df.writeStream.outputMode("update")
         .format("console")
-        .option("truncate", str(truncate).lower())
+        .option("truncate", "false")
     )
     if available_now:
         w = w.trigger(availableNow=True)
@@ -110,9 +122,7 @@ def write_memory_stream(
     production path.
     """
     w = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(w, available_now)
 
 
 def write_kafka_stream(
@@ -144,17 +154,18 @@ def foreach_batch_sink(
     checkpoint: str,
     *,
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """The foreachBatch bridge: run arbitrary *batch* logic (e.g. the daily
-    rollup, multi-table writes) against each micro-batch — the idiomatic way
-    to reuse batch operators in streaming (SURVEY.md §2.1 S8 note)."""
-    w = df.writeStream.foreachBatch(batch_fn).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
+    rollup, multi-table writes) against each non-empty micro-batch — the
+    idiomatic way to reuse batch operators in streaming (SURVEY.md §2.1 S8
+    note)."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            batch_fn(batch, batch_id)
+
+    w = df.writeStream.foreachBatch(run).option("checkpointLocation", checkpoint)
+    return _start(w, available_now)
 
 
 def upsert_parquet_sink(
@@ -167,7 +178,6 @@ def upsert_parquet_sink(
     partition_col: str,
     delete_col: str | None = None,
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """Exactly-once keyed upsert into a hive-partitioned parquet table.
 
@@ -229,8 +239,6 @@ def upsert_parquet_sink(
         )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         # dynamic partition overwrite is load-bearing for step 4; apply it
         # on THIS session — the sink must not depend on the caller having
@@ -275,11 +283,7 @@ def upsert_parquet_sink(
         ).parquet(path)
 
     return foreach_batch_sink(
-        df,
-        merge_batch,
-        checkpoint,
-        available_now=available_now,
-        trigger_seconds=trigger_seconds,
+        df, merge_batch, checkpoint, available_now=available_now
     )
 
 
@@ -299,39 +303,25 @@ def read_upserted(spark, path: str, *, delete_col: str | None = None) -> DataFra
     return df
 
 
-def fan_out(
-    df: DataFrame, sinks: list[Callable[[DataFrame], StreamingQuery]]
-) -> list[StreamingQuery]:
-    """T8: start several sinks off one lineage (reference spark/app.py:
-    189-209 runs parquet + console concurrently). Each sink is an
-    independent StreamingQuery with its own checkpoint/trigger; the source
-    is re-read per query (Kafka replays; file sources re-list)."""
-    return [make_sink(df) for make_sink in sinks]
-
-
 def reference_pipeline(
     events_stream: DataFrame,
     user_dim: DataFrame,
     *,
     lake_path: str,
     checkpoint_dir: str,
-    watermark: str = "30 seconds",
-    window: str = "1 minute",
-    slide: str | None = "30 seconds",
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
-    with_console: bool = False,
 ) -> list[StreamingQuery]:
     """The reference's complete streaming program (spark/app.py:main,
     53-209) as one composition: decoded events → clean (normalize/fill/
     watermarked dedup) → enrich (stream⋈static dim join) → sliding window
-    aggregate → parquet lake sink (+ optional console), fan-out off one
-    lineage.
+    aggregate → parquet lake sink, with the reference's fixed watermark,
+    window and slide (:data:`WATERMARK`, :data:`WINDOW`, :data:`SLIDE`).
+    Returns the one started query as a list.
 
     ``events_stream`` is any decoded event stream (Kafka via
     sources.kafka_source + decode_json_events, file source, or the rate
     generator); ``user_dim`` is a static dim joined stream-static (J1 —
-    broadcast by AQE when dim-sized). Each sink gets its own checkpoint
+    broadcast by AQE when dim-sized). The sink checkpoints in its own
     subdirectory (T6: never share checkpoints between queries).
     """
     import os
@@ -341,7 +331,7 @@ def reference_pipeline(
     from .operators.cleaning import clean_events_streaming
     from .operators.windows import windowed_agg
 
-    cleaned = clean_events_streaming(events_stream, watermark=watermark)
+    cleaned = clean_events_streaming(events_stream, watermark=WATERMARK)
     dim = user_dim.select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -352,28 +342,22 @@ def reference_pipeline(
     # so the window aggregate reuses it (HLL distinct, append-safe)
     agg = windowed_agg(
         enriched,
-        window=window,
-        slide=slide,
+        window=WINDOW,
+        slide=SLIDE,
         keys=["event_type_norm", "segment"],
         approx_distinct=True,
     )
-    sinks: list[Callable[[DataFrame], StreamingQuery]] = [
-        lambda df: write_parquet_stream(
-            df,
+    return [
+        write_parquet_stream(
+            agg,
             lake_path,
             os.path.join(checkpoint_dir, "lake"),
             # hive layout by the dim attribute, as the reference partitions
             # its lake by the joined country column (spark/app.py:194)
             partition_by="segment",
             available_now=available_now,
-            trigger_seconds=trigger_seconds,
         )
     ]
-    if with_console:
-        sinks.append(
-            lambda df: write_console_stream(df, available_now=available_now)
-        )
-    return fan_out(agg, sinks)
 
 
 def run_available_now(queries: list[StreamingQuery], timeout_sec: int = 300) -> None:
@@ -434,7 +418,6 @@ def alltime_dedup_sink(
     content_col: str = "text",
     id_col: str = "doc_id",
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """UNBOUNDED all-time streaming dedup with bounded state: the semantics
     of the reference's whole-stream ``dropDuplicates`` (reference
@@ -457,8 +440,6 @@ def alltime_dedup_sink(
     from .operators.cleaning import dedup_deterministic
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         hashed = batch.withColumn("_h", hash60(F.col(content_col)))
         seen = _earlier(
             index_path, "batch_id", batch_id, hashed.select("_h", content_col)
@@ -474,11 +455,7 @@ def alltime_dedup_sink(
         )
 
     return foreach_batch_sink(
-        df,
-        dedup_batch,
-        checkpoint,
-        available_now=available_now,
-        trigger_seconds=trigger_seconds,
+        df, dedup_batch, checkpoint, available_now=available_now
     )
 
 
@@ -536,7 +513,6 @@ def neardup_flag_sink(
     content_col: str = "text",
     id_col: str = "doc_id",
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """Streaming NEAR-duplicate detection with zero executor state: the
     LSH-banding complement to :func:`alltime_dedup_sink` (which only
@@ -562,8 +538,6 @@ def neardup_flag_sink(
     from .operators.dedup import minhash_signatures
 
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         sigs = minhash_signatures(batch, content_col, id_col).localCheckpoint(
             eager=True
         )
@@ -578,11 +552,7 @@ def neardup_flag_sink(
         _write_tagged(sigs, index_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
-        df,
-        flag_batch,
-        checkpoint,
-        available_now=available_now,
-        trigger_seconds=trigger_seconds,
+        df, flag_batch, checkpoint, available_now=available_now
     )
 
 
@@ -666,7 +636,6 @@ def neardup_ingest_sink(
     id_col: str = "doc_id",
     min_jaccard: float | None = None,
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """Streaming form of the daily near-dup ingest loop: per micro-batch,
     :func:`neardup_ingest_step` tagged by ``batch_id`` — the step the
@@ -679,27 +648,14 @@ def neardup_ingest_sink(
     index, horizon = life of the corpus, per-batch cost tracks the
     increment (the base is never re-shingled).
     """
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        neardup_ingest_step(
-            batch,
-            corpus_path,
-            index_path,
-            "batch_id",
-            batch_id,
-            content_col=content_col,
-            id_col=id_col,
-            min_jaccard=min_jaccard,
-        )
-
     return foreach_batch_sink(
         df,
-        ingest_batch,
+        lambda batch, batch_id: neardup_ingest_step(
+            batch, corpus_path, index_path, "batch_id", batch_id,
+            content_col=content_col, id_col=id_col, min_jaccard=min_jaccard,
+        ),
         checkpoint,
         available_now=available_now,
-        trigger_seconds=trigger_seconds,
     )
 
 
@@ -771,7 +727,6 @@ def contamination_diff_sink(
     id_col: str = "doc_id",
     n: int | None = None,
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """Streaming form of ``operators.dedup.batch_contamination_diff``: per
     micro-batch, :func:`contamination_step` tagged by ``batch_id``, so
@@ -784,27 +739,14 @@ def contamination_diff_sink(
     posting-list-shaped, 8 bytes per distinct gram, the same asymptotics
     as the gram side of the batch operator's corpus scan).
     """
-
-    def diff_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        contamination_step(
-            batch,
-            report_path,
-            index_path,
-            "batch_id",
-            batch_id,
-            content_col=content_col,
-            id_col=id_col,
-            n=n,
-        )
-
     return foreach_batch_sink(
         df,
-        diff_batch,
+        lambda batch, batch_id: contamination_step(
+            batch, report_path, index_path, "batch_id", batch_id,
+            content_col=content_col, id_col=id_col, n=n,
+        ),
         checkpoint,
         available_now=available_now,
-        trigger_seconds=trigger_seconds,
     )
 
 
@@ -866,7 +808,6 @@ def semantic_flag_sink(
     id_col: str = "vec_id",
     n_planes: int | None = None,
     available_now: bool = False,
-    trigger_seconds: int | None = 30,
 ) -> StreamingQuery:
     """Streaming SEMANTIC near-duplicate flagging — the embedding-space
     twin of :func:`neardup_flag_sink`, completing the batch/streaming
@@ -900,8 +841,6 @@ def semantic_flag_sink(
     planes = sim.planes_for(width)
 
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         base = batch.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col),
             sim.bucket_signature(F.col(vec_col), planes).alias("_sig"),
@@ -930,9 +869,5 @@ def semantic_flag_sink(
         _write_tagged(base.select("_sig"), index_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
-        df,
-        flag_batch,
-        checkpoint,
-        available_now=available_now,
-        trigger_seconds=trigger_seconds,
+        df, flag_batch, checkpoint, available_now=available_now
     )

@@ -87,16 +87,6 @@ def test_streaming_reader_resumes_from_checkpoint(spark, tmp_path):
     assert got == want
 
 
-def test_arrow_lane_matches_row_lane(spark):
-    """option("arrow", "true") ships partitions as RecordBatches; the data
-    must be bit-identical to the per-row tuple lane."""
-    rowwise = sorted(map(tuple, _read(spark, rows=250, partitions=3).collect()))
-    arrow = sorted(
-        map(tuple, _read(spark, rows=250, partitions=3, arrow="true").collect())
-    )
-    assert rowwise == arrow
-
-
 # ---------------------------------------------------------------------------
 # writer half of the connector API (jsonl_dir sink)
 # ---------------------------------------------------------------------------

@@ -245,39 +245,19 @@ def test_null_payload_propagates_not_crashes(spark):
     assert len(frames) > 0
 
 
-def test_arrow_lane_matches_pandas_lane(spark):
-    """extract_features_arrow (mapInArrow, zero pandas round-trip) returns
-    byte-identical features to the mapInPandas lane, nulls included."""
+def test_arrow_lane_accepts_non_bigint_ids(spark):
+    """An int32 id column must not break the Arrow-batched feature lane:
+    _slim casts ids to bigint JVM-side so the lane sees the declared
+    schema."""
     from kafkastreamingetl_spark.operators.multimodal import (
         extract_features,
-        extract_features_arrow,
-        with_binary_payload,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, ""), (3, None), (4, "payload bytes here")],
-        "doc_id long, text string",
-    )
-    payloads = with_binary_payload(docs)
-    a = extract_features(payloads)
-    b = extract_features_arrow(payloads)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_arrow_lane_accepts_non_bigint_ids(spark):
-    """An int32 id column must not crash the Arrow lane: _slim casts ids
-    to bigint JVM-side so both lanes see the declared schema."""
-    from kafkastreamingetl_spark.operators.multimodal import (
-        extract_features_arrow,
         with_binary_payload,
     )
 
     docs = spark.createDataFrame(
         [(1, "abc"), (2, "def")], "doc_id int, text string"
     )
-    rows = extract_features_arrow(with_binary_payload(docs)).collect()
+    rows = extract_features(with_binary_payload(docs)).collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert all(r.n_bytes == 3 for r in rows)
 

@@ -248,33 +248,17 @@ def test_embedding_covariance_symmetric_positive_diagonal(spark):
             assert abs(cells[(i, j)] - cells[(j, i)]) < 1e-9  # symmetry
 
 
-def test_embedding_covariance_mapinpandas_bit_equals_relational(spark):
-    """The r16 mapInPandas partials execution must reproduce the
-    relational d²-explode twin (= the oracle SQL shape) BIT-for-bit:
-    Python's Decimal(repr(x)).quantize(4, HALF_UP) is the same value as
-    Spark's double→DECIMAL(18,4) cast (both round the double's shortest
-    decimal form), partial sums are exact ints, and the final cov
-    evaluates in the same expression order."""
+def test_embedding_covariance_empty_input_has_no_cells(spark, sf_dir):
+    """An empty input yields no cells at all (the oracle shape), not d²
+    rows with n=0 and a NULL cov. The non-empty values are pinned exactly
+    against the DuckDB oracle by
+    test_oracle_differential::test_query_matches_oracle[embedding_covariance]."""
     from kafkastreamingetl_spark.catalog import load_table
-    from kafkastreamingetl_spark.operators.similarity import (
-        _embedding_covariance_relational,
-        embedding_covariance,
-    )
+    from kafkastreamingetl_spark.operators.similarity import embedding_covariance
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    got = embedding_covariance(emb)
-    twin = _embedding_covariance_relational(emb)
-    # dtypes, not full schema: mapInPandas output fields are nullable by
-    # declaration while the explode's cast indices are not — the driver's
-    # compare (and the oracle gate) key on names + types
-    assert got.dtypes == twin.dtypes
-    assert got.exceptAll(twin).count() == 0
-    assert twin.exceptAll(got).count() == 0
-    # empty input: no cells at all (the oracle shape), not d² rows with
-    # n=0 and a NULL cov
+    emb = load_table(spark, sf_dir, "embeddings")
     empty = emb.filter(emb.vec_id < 0)
     assert embedding_covariance(empty).count() == 0
-    assert _embedding_covariance_relational(empty).count() == 0
 
 
 def test_neardup_blocking_width_dial(spark):

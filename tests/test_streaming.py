@@ -26,7 +26,6 @@ from kafkastreamingetl_spark.sources import (
     synthetic_events_stream,
 )
 from kafkastreamingetl_spark.streaming import (
-    fan_out,
     foreach_batch_sink,
     run_available_now,
     write_memory_stream,
@@ -105,29 +104,39 @@ def test_streaming_window_agg_append_mode(spark, events_dir):
 
 
 def test_multi_sink_fan_out(spark, events_dir, tmp_path):
-    """T8 + S4/H5/T6: one lineage, two sinks (parquet + memory), each with
-    its own checkpoint; partitioned lake layout verified on disk."""
+    """T8 + S4/H5/T6: one lineage, two sinks (parquet + memory) started
+    off it, each its own query with its own checkpoint; partitioned lake
+    layout verified on disk."""
     cleaned = clean_events_streaming(_stream(spark, events_dir))
     lake = str(tmp_path / "lake")
     chk = str(tmp_path / "chk")
-    queries = fan_out(
-        cleaned,
-        [
-            lambda df: write_parquet_stream(
-                df,
-                lake,
-                chk,
-                partition_by="event_type_norm",
-                available_now=True,
-            ),
-            lambda df: write_memory_stream(df, "fanout_mem"),
-        ],
-    )
-    run_available_now(queries)
+    run_available_now([
+        write_parquet_stream(
+            cleaned, lake, chk, partition_by="event_type_norm", available_now=True
+        ),
+        write_memory_stream(cleaned, "fanout_mem"),
+    ])
     dirs = {d for d in os.listdir(lake) if d.startswith("event_type_norm=")}
     assert len(dirs) >= 3  # hive layout, one dir per event type
     n_lake = spark.read.parquet(lake).count()
     assert n_lake == spark.table("fanout_mem").count() > 0
+
+
+def test_sinks_default_to_the_reference_30s_trigger(spark, tmp_path):
+    """T5: a sink started without ``available_now`` runs the reference's
+    fixed 30 s processing-time trigger (spark/app.py:195)."""
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    queries = [
+        write_parquet_stream(rate, str(tmp_path / "out"), str(tmp_path / "chk")),
+        foreach_batch_sink(rate, lambda batch, batch_id: None, str(tmp_path / "fb")),
+    ]
+    try:
+        for q in queries:
+            trigger = q._jsq.streamingQuery().trigger().toString()
+            assert trigger == "ProcessingTimeTrigger(30000)"
+    finally:
+        for q in queries:
+            q.stop()
 
 
 def test_console_sink_starts(spark, events_dir):
@@ -185,7 +194,7 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
             window="1 minute",
             approx_distinct=True,
         )
-        q = write_parquet_stream(agg, out, chk, available_now=True, trigger_seconds=None)
+        q = write_parquet_stream(agg, out, chk, available_now=True)
         run_available_now([q])
 
     # run 1: window [10:00,10:01) gets 2 events; watermark ends at
@@ -269,7 +278,6 @@ def test_reference_pipeline_end_to_end(spark, events_dir, tmp_path, sf_dir):
         lake_path=lake,
         checkpoint_dir=str(tmp_path / "ref_chk"),
         available_now=True,
-        trigger_seconds=None,
     )
     run_available_now(queries)
     out = spark.read.parquet(lake)
@@ -353,9 +361,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
             keys=["event_type"],
             approx_distinct=True,
         )
-        q = write_parquet_stream(
-            agg, out, ckpt, available_now=True, trigger_seconds=None
-        )
+        q = write_parquet_stream(agg, out, ckpt, available_now=True)
         run_available_now([q])
 
     feed(1_500, 0, "overwrite", "2024-01-01 00:00:00")
@@ -432,7 +438,6 @@ def _run_reference(spark, sf_dir, src, ckpt, lake):
             lake_path=str(lake),
             checkpoint_dir=str(ckpt),
             available_now=True,
-            trigger_seconds=None,
         )
     )
     return spark.read.parquet(str(lake))
