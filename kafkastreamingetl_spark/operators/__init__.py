@@ -10,7 +10,7 @@ Each module covers one slice of the reference's operator inventory
 - ``dedup``       — exact / MinHash-LSH / SimHash / n-gram-Jaccard dedup
 - ``similarity``  — brute-force + hyperplane-LSH + IVF cosine top-k search
 - ``text``        — language-guess, quality scoring, token counts, fingerprints
-- ``multimodal``  — binary-column decode/feature plumbing (stubbed decode)
+- ``multimodal``  — binary-column feature, resize and frame-sample plumbing
 - ``skew``        — salted two-phase aggregation for hot-key groupBys
 - ``corpus``      — training-corpus prep: splits, sampling, packing, TF-IDF,
   boilerplate/PII scrubs, budgeted mixtures, deterministic shuffle
@@ -24,7 +24,6 @@ Each module covers one slice of the reference's operator inventory
 - ``quality``     — one-scan rule reports, column profiles, winsorized stats
 - ``maintenance`` — compaction and partition retention
 - ``pipeline``    — composed training-set / corpus-refresh jobs
-- ``stateful``    — applyInPandasWithState + transformWithState operators
 
 Every function is pure (no session state), takes and returns DataFrames, and
 works on both batch and streaming inputs unless documented otherwise.

@@ -1881,101 +1881,6 @@ def sql_frequent_tokens_sketch(
     """
 
 
-def frequent_tokens_stream(
-    df: DataFrame,
-    *,
-    capacity: int = MG_CAPACITY,
-    n_groups: int = 8,
-    text_col: str = "text",
-):
-    """Streaming Misra-Gries heavy hitters: the running candidate set over
-    an unbounded document stream, with BOUNDED state — the trending-token
-    monitor whose batch twin is :func:`frequent_tokens_sketch`.
-
-    A naive streaming word count keys state by token: the state store
-    grows with the vocabulary, which is exactly what MG exists to avoid.
-    Here tokens hash into ``n_groups`` state groups (``pmod(xxhash64)``,
-    so a token's ENTIRE substream lands in one group), and each group
-    holds ONE weighted MG summary (:func:`_mg_partition`'s trim) in
-    ``applyInPandasWithState`` state: total state is n_groups x
-    (capacity+1) entries FOREVER, at the cost of a fixed n_groups-way
-    shuffle per batch. The guarantee survives keyed splitting: a token
-    with all-time count > n/(k+1) has count_g > n_g/(k+1) in its own
-    group (n_g <= n), so it always survives that group's summary — the
-    union of group survivors is a superset of every all-time heavy
-    hitter (exactness, as in batch, is a verify-scan's job). Each batch
-    emits every group's current survivors with their residual counters
-    and the group's running total (update output mode); state persists
-    across restarts via the checkpoint.
-    """
-    import pandas as pd  # noqa: F401 — worker-side
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .text import tokens as _tokens
-
-    out_schema = T.StructType(
-        [
-            T.StructField("grp", T.LongType()),
-            T.StructField("token", T.StringType()),
-            T.StructField("weight", T.LongType()),
-            T.StructField("grp_total", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("toks", T.ArrayType(T.StringType())),
-            T.StructField("cnts", T.ArrayType(T.LongType())),
-            T.StructField("total", T.LongType()),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        grp = key[0]
-        counters: dict = {}
-        total = 0
-        if state.exists:
-            toks, cnts, total = state.get
-            counters = dict(zip(list(toks), (int(c) for c in cnts)))
-        for pdf in pdfs:
-            total += int(len(pdf))
-            for tok, cnt in pdf["token"].value_counts().items():
-                counters[tok] = counters.get(tok, 0) + int(cnt)
-            over = len(counters) - capacity
-            if over > 0:
-                vals = np.fromiter(
-                    counters.values(), dtype=np.int64, count=len(counters)
-                )
-                delta = int(np.partition(vals, over - 1)[over - 1])
-                counters = {t: c - delta for t, c in counters.items() if c > delta}
-        state.update(
-            (
-                list(counters.keys()),
-                [int(v) for v in counters.values()],
-                int(total),
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "grp": [grp] * len(counters),
-                "token": list(counters.keys()),
-                "weight": [int(v) for v in counters.values()],
-                "grp_total": [int(total)] * len(counters),
-            }
-        )
-
-    toks = df.select(F.explode(_tokens(F.col(text_col))).alias("token"))
-    keyed = toks.withColumn(
-        "grp", F.pmod(F.xxhash64("token"), F.lit(n_groups))
-    )
-    return keyed.groupBy("grp").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 # ---------------------------------------------------------------------------
 # bigram PMI: collocation mining for phrase/vocabulary building
 # ---------------------------------------------------------------------------

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from ..functions import SessionMemo, ensure_parallelism, hash60, sql_hash60
 from .cleaning import dedup_deterministic
 from .text import (
-    SHINGLE_N,
     gram_strings,
     shingle_hashes,
     simhash_from_hashes,
@@ -173,36 +172,6 @@ def sql_incremental_exact_dedup(
         PARTITION BY h, {content_col} ORDER BY doc_id ASC NULLS FIRST
     ) = 1
     """
-
-
-def exact_dedup_streaming(
-    df: DataFrame,
-    content_col: str = "text",
-    *,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of :func:`exact_dedup`: drop content-duplicates
-    arriving within the watermark horizon.
-
-    The dedup key is the 60-bit content hash, so the state store keeps
-    8-byte keys instead of document text — at corpus scale that is the
-    difference between state that fits RocksDB and state that doesn't.
-    Unlike batch :func:`exact_dedup` (which groups by (hash, content) and
-    is collision-proof), the state key here is the hash alone — a
-    deliberate trade: state only spans one watermark horizon, so n is
-    events-per-horizon rather than corpus size, and the 60-bit collision
-    odds within a horizon are negligible (~n²/2⁶¹). Horizon semantics
-    follow ``dropDuplicatesWithinWatermark`` (operators/cleaning.py): a
-    duplicate arriving later than the watermark horizon is NOT caught —
-    cross-horizon exactness needs the batch pass.
-    """
-    return (
-        df.withWatermark(ts_col, watermark)
-        .withColumn("_h", hash60(F.col(content_col)))
-        .dropDuplicatesWithinWatermark(["_h"])
-        .drop("_h")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,7 @@ Both cut the scan to the delta; both shuffle only key-grained rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import DEC, sql_dsum

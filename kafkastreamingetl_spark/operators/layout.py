@@ -13,7 +13,7 @@ eligible, no UDF).
 :func:`zvalue` builds the code; :func:`zorder_layout_report` assigns
 range buckets (stand-ins for output files) and reports each bucket's
 per-dimension bounding box — the measurable artifact of clustering
-quality; :func:`zorder_write` is the physical write path.
+quality.
 """
 
 from __future__ import annotations
@@ -156,17 +156,3 @@ def sql_zorder_layout_report(n_buckets: int = 32) -> str:
     GROUP BY 1
     """
 
-
-def zorder_write(events: DataFrame, path: str, n_files: int = 32) -> None:
-    """Physical z-ordered write: range-partition by Morton code (sampled
-    bounds — no global sort barrier), sort within partitions so row groups
-    inside each file are tight too, then write. Reading back with a
-    predicate on either dimension prunes most files via row-group stats
-    (asserted in tests/test_temporal_incremental.py)."""
-    z = events_zcoded(events)
-    (
-        z.repartitionByRange(n_files, F.col("zval"))
-        .sortWithinPartitions("zval")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

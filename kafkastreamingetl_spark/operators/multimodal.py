@@ -1,27 +1,11 @@
 """Multimodal-column plumbing: opaque binary payloads + typed metadata.
 
 Design for media at 100 TB: image/audio/video bytes ride as an opaque
-``binary`` column next to typed metadata columns; per-item work (decode,
-feature-extract, resize, frame-sample) runs as Arrow-batched Python over
+``binary`` column next to typed metadata columns; per-item work
+(feature-extract, resize, frame-sample) runs as Arrow-batched Python over
 ``mapInPandas`` — the sanctioned Python path, since media codecs are not
 expressible as Catalyst expressions. The Spark-side contract (schema,
 batch iteration, column pruning before the Python stage) is real and tested.
-
-Codec status (round 15): REAL pure-stdlib decode for binary PPM (P6),
-24-bit uncompressed BMP, non-interlaced 8-bit RGB/RGBA PNG (stdlib
-``zlib`` inflate + the five per-row filter unapplications), AND
-baseline-sequential JPEG (T.81 SOF0/SOF1: Huffman entropy decode,
-dequant, de-zigzag, separable IDCT, chroma upsample, YCbCr→RGB —
-grayscale + 4:4:4/4:2:2/4:2:0, restart markers) via
-:func:`decode_image`; PCM WAV via :func:`decode_audio` — all running
-inside the same Arrow batch loop (:func:`decode_image_features` /
-:func:`decode_audio_features`). No ``NotImplementedError`` remains;
-genuinely out-of-scope encodings (MP3/AAC psychoacoustics, progressive/
-arithmetic JPEG, video containers) return ``None`` — a data-quality
-fact, not a crash. :func:`extract_features` keeps the
-deterministic md5-fake lane as the oracle twin (which makes that operator
-oracle-checkable end-to-end — a rare property for a Python-UDF stage);
-the real decoders are differential-tested on planted payloads.
 
 Scale notes:
 - the ``mapInPandas`` input is projected to exactly (id, payload) before the
@@ -50,663 +34,6 @@ from ..functions import ensure_parallelism
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, content_md5 string, fake_width int, fake_height int"
 )
-
-
-def decode_image(payload: bytes) -> dict | None:
-    """Decode an uncompressed image payload with stdlib only.
-
-    Supported: binary PPM (``P6``, 8-bit maxval, comment-tolerant header),
-    BMP (``BM``, BITMAPINFOHEADER, 24-bit, BI_RGB uncompressed, bottom-up
-    or top-down), PNG (8-bit-per-channel truecolor RGB/RGBA,
-    non-interlaced — the deflate stream is stdlib ``zlib``, the five
-    per-row filters are unapplied here; VERDICT r13 item 4 flipped the
-    "needs an image library" claim), and baseline-sequential JPEG
-    (SOF0/SOF1, Huffman, 8-bit, grayscale or YCbCr at 4:4:4 / 4:2:2 /
-    4:2:0, restart markers — entropy decode, dequant, de-zigzag,
-    separable IDCT, chroma upsample, YCbCr→RGB, all stdlib; round 15
-    retired the last ``NotImplementedError``, VERDICT r14 missing #2).
-    Returns ``{format, width, height, mean_r, mean_g, mean_b, px00}``
-    where ``px00`` is the (r, g, b) of the TOP-LEFT pixel — orientation
-    evidence a mean cannot give (BMP rows are stored bottom-up unless
-    height is negative). Returns ``None`` for payloads that are not a
-    supported format or fail to parse (truncated pixel data, wrong bit
-    depth, compressed BMP, palette/16-bit/interlaced PNG,
-    progressive/arithmetic/hierarchical/12-bit JPEG).
-    """
-    if payload is None:
-        return None
-    if payload[:2] == b"P6":
-        return _decode_ppm(payload)
-    if payload[:2] == b"BM":
-        return _decode_bmp(payload)
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        return _decode_jpeg(payload)
-    return None
-
-
-def _decode_ppm(payload: bytes) -> dict | None:
-    """Binary PPM (P6): ASCII header of 4 whitespace-separated tokens
-    (magic, width, height, maxval; ``#`` comments allowed), then
-    width*height*3 raw RGB bytes."""
-    import re as _re
-
-    # header: strip comments token-wise without touching pixel bytes —
-    # scan forward collecting the 4 header tokens, tracking the offset
-    pos, tokens = 0, []
-    while len(tokens) < 4 and pos < len(payload):
-        c = payload[pos : pos + 1]
-        if c.isspace():
-            pos += 1
-        elif c == b"#":
-            nl = payload.find(b"\n", pos)
-            if nl < 0:
-                return None
-            pos = nl + 1
-        else:
-            m = _re.match(rb"[^\s#]+", payload[pos:])
-            tokens.append(m.group(0))
-            pos += len(m.group(0))
-    if len(tokens) < 4 or tokens[0] != b"P6":
-        return None
-    try:
-        width, height, maxval = (int(t) for t in tokens[1:4])
-    except ValueError:
-        return None
-    if width <= 0 or height <= 0 or maxval != 255:
-        return None
-    pos += 1  # exactly ONE whitespace byte separates maxval from pixels
-    pixels = payload[pos : pos + width * height * 3]
-    if len(pixels) < width * height * 3:
-        return None
-    return _pixel_stats("ppm", width, height, pixels, row_stride=width * 3,
-                        bottom_up=False)
-
-
-def _decode_bmp(payload: bytes) -> dict | None:
-    """BMP: 14-byte file header + BITMAPINFOHEADER (40 bytes), 24-bit
-    BI_RGB only. Rows are 4-byte aligned; positive height = bottom-up
-    storage. Pixel order in the file is BGR."""
-    import struct
-
-    if len(payload) < 54:
-        return None
-    data_offset = struct.unpack_from("<I", payload, 10)[0]
-    header_size, width, raw_height = struct.unpack_from("<Iii", payload, 14)
-    planes, bits = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if header_size < 40 or planes != 1 or bits != 24 or compression != 0:
-        return None
-    bottom_up = raw_height > 0
-    height = abs(raw_height)
-    if width <= 0 or height == 0:
-        return None
-    row_stride = (width * 3 + 3) & ~3  # rows padded to 4 bytes
-    pixels = payload[data_offset : data_offset + row_stride * height]
-    if len(pixels) < row_stride * height:
-        return None
-    return _pixel_stats("bmp", width, height, pixels, row_stride=row_stride,
-                        bottom_up=bottom_up, bgr=True)
-
-
-def _pixel_stats(
-    fmt: str,
-    width: int,
-    height: int,
-    pixels: bytes,
-    *,
-    row_stride: int,
-    bottom_up: bool,
-    bgr: bool = False,
-    channels: int = 3,
-) -> dict:
-    """RGB stats over interleaved rows; ``channels`` > 3 (RGBA) skips the
-    extra channels — means and px00 are always the RGB triple."""
-    sums = [0, 0, 0]
-    for y in range(height):
-        row = pixels[y * row_stride : y * row_stride + width * channels]
-        sums[0] += sum(row[0::channels])
-        sums[1] += sum(row[1::channels])
-        sums[2] += sum(row[2::channels])
-    if bgr:
-        sums = sums[::-1]
-    n = width * height
-    top_row = (height - 1) * row_stride if bottom_up else 0
-    px = pixels[top_row : top_row + 3]
-    px00 = (px[2], px[1], px[0]) if bgr else (px[0], px[1], px[2])
-    return {
-        "format": fmt,
-        "width": width,
-        "height": height,
-        "mean_r": sums[0] / n,
-        "mean_g": sums[1] / n,
-        "mean_b": sums[2] / n,
-        "px00": px00,
-    }
-
-
-def _decode_png(payload: bytes) -> dict | None:
-    """PNG via stdlib only: signature + big-endian chunk walk (IHDR →
-    IDAT* → IEND), ``zlib.decompress`` of the concatenated IDAT bodies,
-    then the five per-row filters (None/Sub/Up/Average/Paeth, PNG spec
-    §9) unapplied scanline-by-scanline. Supported: bit depth 8, color
-    type 2 (RGB) or 6 (RGBA — alpha ignored for the RGB stats), interlace
-    0. Palette/grayscale/16-bit/Adam7 payloads return ``None`` (a
-    data-quality fact, same contract as a compressed BMP); CRCs are not
-    verified — a decode gate, not an integrity audit."""
-    import struct
-    import zlib
-
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos, ihdr, idat = 8, None, bytearray()
-    while pos + 8 <= len(payload):
-        length, ctype = struct.unpack_from(">I4s", payload, pos)
-        body = payload[pos + 8 : pos + 8 + length]
-        if len(body) < length:
-            return None
-        if ctype == b"IHDR":
-            if length < 13:
-                return None
-            ihdr = struct.unpack_from(">IIBBBBB", body, 0)
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # 4 length + 4 type + body + 4 crc
-    if ihdr is None or not idat:
-        return None
-    width, height, bit_depth, color_type, _comp, _filt, interlace = ihdr
-    if (
-        width <= 0
-        or height <= 0
-        or bit_depth != 8
-        or color_type not in (2, 6)
-        or interlace != 0
-    ):
-        return None
-    n_ch = 3 if color_type == 2 else 4
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error:
-        return None
-    stride = width * n_ch
-    if len(raw) < height * (stride + 1):
-        return None
-    out = bytearray(height * stride)
-    prev = bytearray(stride)
-    for y in range(height):
-        base = y * (stride + 1)
-        ftype = raw[base]
-        line = bytearray(raw[base + 1 : base + 1 + stride])
-        if ftype == 1:  # Sub: + left
-            for i in range(n_ch, stride):
-                line[i] = (line[i] + line[i - n_ch]) & 0xFF
-        elif ftype == 2:  # Up: + above
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average: + floor((left + above) / 2)
-            for i in range(stride):
-                a = line[i - n_ch] if i >= n_ch else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth predictor
-            for i in range(stride):
-                a = line[i - n_ch] if i >= n_ch else 0
-                b = prev[i]
-                c = prev[i - n_ch] if i >= n_ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-        elif ftype != 0:
-            return None
-        out[y * stride : (y + 1) * stride] = line
-        prev = line
-    return _pixel_stats(
-        "png",
-        width,
-        height,
-        bytes(out),
-        row_stride=stride,
-        bottom_up=False,
-        channels=n_ch,
-    )
-
-
-# JPEG spec (ITU-T T.81) constants: zigzag scan order (zigzag index ->
-# raster index) and the separable IDCT basis B[u][x] = c(u)/2 *
-# cos((2x+1)u*pi/16), c(0)=1/sqrt(2) — orthonormal, so the encoder used
-# in tests is exactly the transpose.
-_JPEG_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-
-def _jpeg_idct_basis() -> list[list[float]]:
-    import math
-
-    return [
-        [
-            (1.0 / (2.0 * math.sqrt(2.0)) if u == 0 else 0.5)
-            * math.cos((2 * x + 1) * u * math.pi / 16.0)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ]
-
-
-_IDCT_B = _jpeg_idct_basis()
-
-
-def _jpeg_build_huff(counts: list[int], symbols: list[int]) -> dict:
-    """Canonical Huffman decode table from a DHT segment: (length, code)
-    -> symbol, per T.81 Annex C code assignment."""
-    table: dict[tuple[int, int], int] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return table
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over an entropy segment (byte stuffing already
-    removed)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.buf = 0
-        self.nbits = 0
-
-    def bits(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("entropy data exhausted")
-            self.buf = (self.buf << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        self.nbits -= n
-        return (self.buf >> self.nbits) & ((1 << n) - 1)
-
-    def huff(self, table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.bits(1)
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid huffman code")
-
-
-def _jpeg_extend(v: int, s: int) -> int:
-    # T.81 F.2.2.1: map the s magnitude bits to a signed amplitude
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-
-
-def _jpeg_block(br: _JpegBitReader, dc_tab, ac_tab, q, pred: int):
-    """Decode one 8x8 block: DC diff + AC run/size, dequantized in zigzag
-    order. Returns (new DC predictor, zigzag-ordered coefficient list)."""
-    zz = [0] * 64
-    s = br.huff(dc_tab)
-    if s:
-        pred += _jpeg_extend(br.bits(s), s)
-    zz[0] = pred * q[0]
-    k = 1
-    while k < 64:
-        rs = br.huff(ac_tab)
-        r, size = rs >> 4, rs & 15
-        if size == 0:
-            if r == 15:  # ZRL: 16 zeros
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("AC coefficient index out of range")
-        zz[k] = _jpeg_extend(br.bits(size), size) * q[k]
-        k += 1
-    return pred, zz
-
-
-def _jpeg_idct_block(zz: list[int]) -> list[int]:
-    """De-zigzag + separable 2D IDCT + level shift + clamp -> 64 samples
-    in raster order."""
-    F = [0.0] * 64
-    for i, ri in enumerate(_JPEG_ZIGZAG):
-        F[ri] = zz[i]
-    B = _IDCT_B
-    tmp = [[0.0] * 8 for _ in range(8)]
-    for v in range(8):
-        Fr = F[v * 8 : v * 8 + 8]
-        for x in range(8):
-            acc = 0.0
-            for u in range(8):
-                fu = Fr[u]
-                if fu:
-                    acc += B[u][x] * fu
-            tmp[v][x] = acc
-    out = [0] * 64
-    for x in range(8):
-        col = [tmp[v][x] for v in range(8)]
-        for y in range(8):
-            acc = 0.0
-            for v in range(8):
-                cv = col[v]
-                if cv:
-                    acc += B[v][y] * cv
-            val = int(round(acc)) + 128
-            out[y * 8 + x] = 0 if val < 0 else (255 if val > 255 else val)
-    return out
-
-
-def _decode_jpeg(payload: bytes) -> dict | None:
-    """Baseline-sequential JPEG (T.81 SOF0/SOF1): marker walk (DQT, DHT,
-    DRI, SOF, SOS), Huffman entropy decode with byte-unstuffing and
-    restart-marker segmentation, dequant, de-zigzag, separable IDCT,
-    nearest-neighbor chroma upsample, YCbCr->RGB. Grayscale (1
-    component) and YCbCr (3 components, interleaved single scan, any
-    sampling factors incl. 4:4:4 / 4:2:2 / 4:2:0). Returns ``None`` for
-    progressive/arithmetic/hierarchical/lossless/12-bit payloads,
-    multi-scan non-interleaved color, and any parse/entropy failure —
-    the same decode-gate contract as the other codecs (not an integrity
-    audit)."""
-    try:
-        return _decode_jpeg_inner(payload)
-    except (ValueError, IndexError, KeyError, ZeroDivisionError):
-        return None
-
-
-def _decode_jpeg_inner(payload: bytes) -> dict | None:
-    import struct
-
-    pos = 2  # past SOI
-    qt: dict[int, list[int]] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    frame = None
-    restart_interval = 0
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            return None
-        marker = payload[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:  # EOI before any scan
-            return None
-        if pos + 4 > len(payload):
-            return None
-        length = struct.unpack_from(">H", payload, pos + 2)[0]
-        body = payload[pos + 4 : pos + 2 + length]
-        if length < 2 or len(body) != length - 2:
-            return None
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 15
-                i += 1
-                if pq == 0:
-                    tab = list(body[i : i + 64])
-                    i += 64
-                else:
-                    if i + 128 > len(body):
-                        return None
-                    tab = [
-                        struct.unpack_from(">H", body, i + 2 * k)[0]
-                        for k in range(64)
-                    ]
-                    i += 128
-                if len(tab) < 64:
-                    return None
-                qt[tq] = tab
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i + 17 <= len(body):
-                tc, th = body[i] >> 4, body[i] & 15
-                counts = list(body[i + 1 : i + 17])
-                n = sum(counts)
-                symbols = list(body[i + 17 : i + 17 + n])
-                if len(symbols) < n:
-                    return None
-                tab = _jpeg_build_huff(counts, symbols)
-                (huff_dc if tc == 0 else huff_ac)[th] = tab
-                i += 17 + n
-        elif marker in (0xC0, 0xC1):  # baseline / extended sequential
-            precision = body[0]
-            h, w = struct.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            if precision != 8 or ncomp not in (1, 3) or w == 0 or h == 0:
-                return None
-            comps = []
-            for c in range(ncomp):
-                hv = body[7 + 3 * c]
-                comps.append(
-                    {
-                        "id": body[6 + 3 * c],
-                        "h": hv >> 4,
-                        "v": hv & 15,
-                        "tq": body[8 + 3 * c],
-                    }
-                )
-            if any(c["h"] < 1 or c["v"] < 1 for c in comps):
-                return None
-            frame = (w, h, comps)
-        elif marker in (
-            0xC2, 0xC3, 0xC5, 0xC6, 0xC7,  # progressive / lossless seq.
-            0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF,  # arithmetic / hierarchical
-        ):
-            return None
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack_from(">H", body, 0)[0]
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                return None
-            ns = body[0]
-            if ns != len(frame[2]):
-                return None  # non-interleaved multi-scan color: unsupported
-            scan = []
-            for c in range(ns):
-                cs, tt = body[1 + 2 * c], body[2 + 2 * c]
-                scan.append((cs, tt >> 4, tt & 15))
-            return _jpeg_decode_scan(
-                payload,
-                pos + 2 + length,
-                frame,
-                scan,
-                qt,
-                huff_dc,
-                huff_ac,
-                restart_interval,
-            )
-        pos += 2 + length
-    return None
-
-
-def _jpeg_decode_scan(
-    payload: bytes,
-    scan_start: int,
-    frame,
-    scan,
-    qt,
-    huff_dc,
-    huff_ac,
-    restart_interval: int,
-) -> dict | None:
-    w, h, comps = frame
-    # entropy segments: unstuff FF00, split at RSTn, stop at any other
-    # marker (EOI)
-    segments: list[bytes] = []
-    cur = bytearray()
-    i = scan_start
-    while i < len(payload):
-        b = payload[i]
-        if b != 0xFF:
-            cur.append(b)
-            i += 1
-            continue
-        nxt = payload[i + 1] if i + 1 < len(payload) else None
-        if nxt == 0x00:
-            cur.append(0xFF)
-            i += 2
-        elif nxt is not None and 0xD0 <= nxt <= 0xD7:
-            segments.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:
-            break
-    segments.append(bytes(cur))
-
-    # scan order = frame comps matched by id; each carries its table ids
-    order = []
-    for cs, td, ta in scan:
-        comp = next((c for c in comps if c["id"] == cs), None)
-        if comp is None:
-            return None
-        order.append((comp, huff_dc[td], huff_ac[ta], qt[comp["tq"]]))
-
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if len(comps) == 1:
-        # single-component scan: MCU is one block over the component's
-        # own grid (T.81 A.2.2); declared sampling factors don't tile
-        hmax = vmax = 1
-        order[0][0]["h"] = order[0][0]["v"] = 1
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    total_mcus = mcux * mcuy
-
-    planes = []
-    for comp, *_ in order:
-        pw, ph = mcux * 8 * comp["h"], mcuy * 8 * comp["v"]
-        planes.append(bytearray(pw * ph))
-
-    mcu = 0
-    for seg in segments:
-        if mcu >= total_mcus:
-            break
-        br = _JpegBitReader(seg)
-        preds = [0] * len(order)
-        n_here = restart_interval or (total_mcus - mcu)
-        for _ in range(n_here):
-            if mcu >= total_mcus:
-                break
-            my, mx = divmod(mcu, mcux)
-            for ci, (comp, dc_tab, ac_tab, q) in enumerate(order):
-                ch, cv = comp["h"], comp["v"]
-                pw = mcux * 8 * ch
-                for by in range(cv):
-                    for bx in range(ch):
-                        preds[ci], zz = _jpeg_block(
-                            br, dc_tab, ac_tab, q, preds[ci]
-                        )
-                        block = _jpeg_idct_block(zz)
-                        ox = (mx * ch + bx) * 8
-                        oy = (my * cv + by) * 8
-                        plane = planes[ci]
-                        for row in range(8):
-                            start = (oy + row) * pw + ox
-                            plane[start : start + 8] = bytes(
-                                block[row * 8 : row * 8 + 8]
-                            )
-            mcu += 1
-    if mcu < total_mcus:
-        return None  # truncated / missing restart segments
-
-    rgb = bytearray(w * h * 3)
-    if len(order) == 1:
-        plane = planes[0]
-        pw = mcux * 8
-        for y in range(h):
-            base = y * pw
-            for x in range(w):
-                g = plane[base + x]
-                o = (y * w + x) * 3
-                rgb[o] = rgb[o + 1] = rgb[o + 2] = g
-    else:
-        geo = []
-        for comp, *_ in order:
-            geo.append((comp["h"], comp["v"], mcux * 8 * comp["h"]))
-        for y in range(h):
-            o = y * w * 3
-            for x in range(w):
-                samples = []
-                for ci in range(3):
-                    ch, cv, pw = geo[ci]
-                    sx = x * ch // hmax
-                    sy = y * cv // vmax
-                    samples.append(planes[ci][sy * pw + sx])
-                yy, cb, cr = samples
-                r = yy + 1.402 * (cr - 128)
-                g = yy - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-                b = yy + 1.772 * (cb - 128)
-                idx = o + x * 3
-                for j, val in enumerate((r, g, b)):
-                    v = int(round(val))
-                    rgb[idx + j] = 0 if v < 0 else (255 if v > 255 else v)
-    return _pixel_stats(
-        "jpeg", w, h, bytes(rgb), row_stride=w * 3, bottom_up=False
-    )
-
-
-def decode_audio(payload: bytes) -> dict | None:
-    """Decode a PCM WAV payload with stdlib only: RIFF/WAVE chunk walk,
-    ``fmt `` (audioFormat=1, 8/16-bit) + ``data``. Returns ``{format,
-    n_channels, sample_rate, bits, n_samples, duration_ms,
-    mean_abs_amplitude}`` (n_samples counts FRAMES — one per channel
-    set; mean_abs over all channel samples, 16-bit signed / 8-bit
-    unsigned-offset). ``None`` for non-WAV or unparseable payloads;
-    compressed encodings (MP3/AAC/…) are out of scope in this container.
-    """
-    import struct
-
-    if payload is None or len(payload) < 12:
-        return None
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    pos, fmt_chunk, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid, size = payload[pos : pos + 4], struct.unpack_from("<I", payload, pos + 4)[0]
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt_chunk = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt_chunk is None or data is None:
-        return None
-    audio_format, n_channels, sample_rate, _, _, bits = fmt_chunk
-    if audio_format != 1 or bits not in (8, 16) or n_channels < 1:
-        return None
-    bytes_per = bits // 8
-    frame_bytes = n_channels * bytes_per
-    n_samples = len(data) // frame_bytes
-    usable = data[: n_samples * frame_bytes]
-    if bits == 16:
-        vals = struct.unpack(f"<{n_samples * n_channels}h", usable)
-        mean_abs = (
-            sum(abs(v) for v in vals) / len(vals) if vals else 0.0
-        )
-    else:
-        mean_abs = (
-            sum(abs(b - 128) for b in usable) / len(usable) if usable else 0.0
-        )
-    return {
-        "format": "wav",
-        "n_channels": n_channels,
-        "sample_rate": sample_rate,
-        "bits": bits,
-        "n_samples": n_samples,
-        "duration_ms": (n_samples * 1000) // sample_rate if sample_rate else 0,
-        "mean_abs_amplitude": mean_abs,
-    }
 
 
 def _fake_decode(digest_hex: str) -> tuple[int, int]:
@@ -945,77 +272,3 @@ def sql_sample_frames(
     FROM exploded
     WHERE frame_idx % {stride} = 0
     """
-
-
-IMAGE_SCHEMA = (
-    "doc_id bigint, format string, width int, height int, "
-    "mean_r double, mean_g double, mean_b double, px00_rgb string"
-)
-
-AUDIO_SCHEMA = (
-    "doc_id bigint, format string, n_channels int, sample_rate int, "
-    "bits int, n_samples bigint, duration_ms bigint, mean_abs_amplitude double"
-)
-
-
-def decode_image_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL image decode over the Arrow batch loop: :func:`decode_image`
-    (stdlib PPM/BMP) per payload, nulls for undecodable/compressed/null
-    payloads — the row always survives (a corrupt file is a data-quality
-    FACT to aggregate, not a task failure). Same plan shape as
-    :func:`extract_features`: (id, payload) projection → one Python
-    stage, per-row independent, no shuffle at any width."""
-    slim = _slim(df, id_col, payload_col)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "format", "width", "height", "mean_r", "mean_g", "mean_b",
-                "px00_rgb",
-            )}
-            for p in pdf["payload"]:
-                raw = _opt_bytes(p)
-                try:
-                    d = None if raw is None else decode_image(raw)
-                except NotImplementedError:  # no codec raises today (r15:
-                    d = None  # JPEG decodes); kept so a future boundary
-                    # format degrades to a data-quality null, not a crash
-                rows["format"].append(d["format"] if d else None)
-                rows["width"].append(d["width"] if d else None)
-                rows["height"].append(d["height"] if d else None)
-                rows["mean_r"].append(d["mean_r"] if d else None)
-                rows["mean_g"].append(d["mean_g"] if d else None)
-                rows["mean_b"].append(d["mean_b"] if d else None)
-                rows["px00_rgb"].append(
-                    "%02x%02x%02x" % d["px00"] if d else None
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], **rows})
-
-    return slim.mapInPandas(decode, schema=IMAGE_SCHEMA)
-
-
-def decode_audio_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL audio decode over the Arrow batch loop: :func:`decode_audio`
-    (stdlib PCM WAV) per payload, nulls for undecodable payloads. Same
-    contract as :func:`decode_image_features`."""
-    slim = _slim(df, id_col, payload_col)
-    cols = (
-        "format", "n_channels", "sample_rate", "bits", "n_samples",
-        "duration_ms", "mean_abs_amplitude",
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for p in pdf["payload"]:
-                raw = _opt_bytes(p)
-                d = None if raw is None else decode_audio(raw)
-                for k in cols:
-                    rows[k].append(d[k] if d else None)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], **rows})
-
-    return slim.mapInPandas(decode, schema=AUDIO_SCHEMA)

@@ -1241,20 +1241,6 @@ def pq_topk(
     )
     cbl = _cbl_df(embeddings.sparkSession, cb)
     codes = _assign_codes(embeddings, cbl, id_col, vec_col)
-    return _pq_adc_rank(codes, cbl, queries, k, query_id_col, query_vec_col)
-
-
-def _pq_adc_rank(
-    codes: DataFrame,
-    cbl: DataFrame,
-    queries: DataFrame,
-    k: int,
-    query_id_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """LUT + ADC + two-stage ascending top-k over an encoded corpus — the
-    serving tail shared by :func:`pq_topk` (encode inline) and
-    :func:`pq_topk_from_index` (codes read from a persisted index)."""
     lut = F.broadcast(
         queries.select(
             F.col(query_id_col), F.col(query_vec_col).alias("_qv")
@@ -1285,54 +1271,6 @@ def _pq_adc_rank(
         .filter(F.col("rank") <= k)
         .select(query_id_col, "vec_id", "adc", "rank")
     )
-
-
-def build_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    *,
-    codebook: list[tuple[int, int, list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> None:
-    """The INDEXING job the pq_topk docstring prescribes at corpus-refresh
-    cadence: fit (or accept) a codebook, encode the corpus once, and
-    persist both as parquet (``<path>/codebook``, ``<path>/codes``).
-    Serving (:func:`pq_topk_from_index`) then never touches the vector
-    column — its scan reads 3 int columns per corpus row, the 64×
-    storage/shuffle shrink made durable instead of recomputed per session.
-    Overwrites idempotently, so a refresh job can re-run safely."""
-    cb = (
-        codebook
-        if codebook is not None
-        else fit_pq_codebook_label(
-            embeddings, id_col=id_col, vec_col=vec_col, label_col=label_col
-        )
-    )
-    cbl = _cbl_df(embeddings.sparkSession, cb)
-    cbl.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
-    _assign_codes(embeddings, cbl, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
-
-
-def pq_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """PQ serving from a persisted index: identical results to
-    :func:`pq_topk` over the same corpus/codebook (asserted in tests), but
-    the corpus-side input is the (vec_id, s, code) codes table — no
-    embedding column anywhere in the plan."""
-    cbl = spark.read.parquet(f"{path}/codebook")
-    codes = spark.read.parquet(f"{path}/codes")
-    return _pq_adc_rank(codes, cbl, queries, k, query_id_col, query_vec_col)
 
 
 # --- DuckDB twins for the PQ pipeline -------------------------------------

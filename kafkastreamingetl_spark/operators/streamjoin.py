@@ -17,9 +17,10 @@ back to a broadcast-nested-loop over unbounded state — the batch twin
 below asserts the keyed shape instead.
 
 The pair producer is engine-agnostic (same expressions batch or
-streaming); the batch form is the oracle twin the driver checks, the
-streaming form is differentially tested against it in
-tests/test_streamjoin.py.
+streaming): watermark the stream once, split it with
+:func:`split_typed_legs` (both legs inherit the watermark), then
+:func:`interval_pairs`. The batch form is the oracle-checked twin;
+tests/test_streamjoin.py runs the streaming form against it.
 """
 
 from __future__ import annotations
@@ -101,38 +102,12 @@ def attribution_rollup(pairs: DataFrame, value_col: str = "purchase_value") -> D
 def purchase_attribution(events: DataFrame, *, horizon: str = "10 minutes") -> DataFrame:
     """Batch twin: clicks ⋈ purchases within ``horizon``, rolled up per
     user. This exact plan is the driver-checked oracle twin of the
-    streaming join below."""
+    streaming join."""
     clicks, purchases = split_typed_legs(events)
     pairs = interval_pairs(
         clicks, purchases, left_ts="click_ts", right_ts="purchase_ts", horizon=horizon
     )
     return attribution_rollup(pairs)
-
-
-def purchase_attribution_pairs_streaming(
-    events_stream: DataFrame,
-    *,
-    horizon: str = "10 minutes",
-    watermark: str = "30 seconds",
-    ts_col: str = "ts",
-    how: str = "inner",
-) -> DataFrame:
-    """Streaming stream-stream join: watermark the lineage once (both legs
-    inherit it), split, interval-join. Emits each (click, purchase) pair as
-    soon as both sides arrive (append mode); state for a click is evicted
-    once the watermark passes ``click_ts + horizon``. With
-    ``how="left_outer"``, evicted-unmatched clicks emit null-extended at
-    that same point — the funnel's "clicked, never purchased" stream."""
-    wm = events_stream.withWatermark(ts_col, watermark)
-    clicks, purchases = split_typed_legs(wm)
-    return interval_pairs(
-        clicks,
-        purchases,
-        left_ts="click_ts",
-        right_ts="purchase_ts",
-        horizon=horizon,
-        how=how,
-    )
 
 
 def sql_purchase_attribution(horizon_sql: str = "INTERVAL 10 MINUTE") -> str:

@@ -20,11 +20,9 @@ from pyspark.sql import functions as F
 
 from .catalog import load_events, load_table, register_views
 from .functions import (
-    davg,
     dsum,
     hash60,
     normalize_string,
-    sql_davg,
     sql_dsum,
     sql_hash60,
 )
@@ -993,8 +991,7 @@ def q_csv_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     serializes each row (the ``tagged`` column embeds a comma, forcing the
     writer to quote), ``from_csv`` parses it back to typed columns. The
     oracle is the identity projection — lossless round-trip is the claim.
-    Covers the CSV landing format's codec (sources.csv_source covers the
-    file-source path; tested in test_sources_formats.py)."""
+    Covers the CSV landing format's codec."""
     nation = _t(spark, sf_dir, "nation")
     tagged = nation.withColumn(
         "tagged", F.concat_ws(",", "n_name", F.col("n_regionkey").cast("string"))
@@ -2763,7 +2760,7 @@ def q_events_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleave of (user_id, minute-of-epoch), per-bucket bounding boxes in
     both dimensions — the data-skipping layout for two-dimensional
     predicates, as pure shift/mask Catalyst expressions
-    (operators/layout.py; physical write path: zorder_write)."""
+    (operators/layout.py)."""
     return layout_ops.zorder_layout_report(_t(spark, sf_dir, "events"))
 
 

@@ -1,11 +1,12 @@
-"""Sources: Kafka adapters, file-stream twins, synthetic event generation.
+"""Sources: Kafka adapters and synthetic event generation.
 
 Covers the reference's source surface (SURVEY.md §2.1):
 
 - S1 Kafka streaming source (reference spark/app.py:53-59) — adapter that
   builds the reader; needs the spark-sql-kafka connector + a broker at
-  runtime, neither of which exists in the test container, so tests exercise
-  the file-source twin instead (same downstream lineage).
+  runtime, neither of which exists in the test container, so tests read a
+  parquet file stream with ``EVENT_SCHEMA`` instead (same downstream
+  lineage).
 - S2 JSON decode + envelope flatten (reference spark/app.py:61-63).
 - S9 synthetic event generator (reference producer/producer.py:19-44) —
   re-expressed as Spark-native column expressions over ``range`` (batch,
@@ -82,112 +83,6 @@ def decode_json_events(
     return df.select(
         F.from_json(F.col(value_col).cast("string"), schema).alias("data")
     ).select("data.*")
-
-
-def file_events_source(
-    spark: SparkSession, path: str, schema: T.StructType = EVENT_SCHEMA
-) -> DataFrame:
-    """Streaming file source over a parquet directory — the deterministic
-    test twin of the Kafka source (SURVEY.md §5.2): same downstream lineage,
-    replayable, no broker. Streaming file sources require an explicit
-    schema."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-# ---------------------------------------------------------------------------
-# Landing formats: CSV / JSON-lines (engine extension beyond the reference's
-# Kafka+parquet surface)
-# ---------------------------------------------------------------------------
-#
-# Row-parsed text formats are LANDING formats, not lake formats: a CSV/JSON
-# scan reads and parses every byte of every row (no column pruning, no
-# row-group statistics, limited predicate pushdown), so at 100 TB the
-# pipeline shape is land-as-text -> convert once to parquet -> query parquet.
-# Both readers default to PERMISSIVE parsing with a corrupt-record column so
-# one malformed row quarantines instead of failing the job — the same policy
-# the JSON envelope decode uses (decode_json_events).
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def _with_corrupt_col(schema: T.StructType) -> T.StructType:
-    """Schema + the PERMISSIVE-mode quarantine column (must be declared in
-    the read schema for the parser to populate it)."""
-    if CORRUPT_COL in schema.fieldNames():
-        return schema
-    return T.StructType([*schema.fields, T.StructField(CORRUPT_COL, T.StringType())])
-
-
-def csv_source(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = EVENT_SCHEMA,
-    *,
-    header: bool = True,
-    streaming: bool = False,
-    quarantine: bool = True,
-) -> DataFrame:
-    """CSV landing source, batch or streaming file-source (same lineage
-    downstream either way). Explicit schema always — schema inference is a
-    full extra pass over the data and is banned at scale."""
-    read_schema = _with_corrupt_col(schema) if quarantine else schema
-    reader = spark.readStream if streaming else spark.read
-    return (
-        reader.schema(read_schema)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        # preserve field whitespace byte-for-byte (dirty landing data keeps
-        # its padding for the cleaning stage to normalize; note Spark's CSV
-        # *writer* trims by default — set the same two options false there)
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .csv(path)
-    )
-
-
-def jsonl_source(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = EVENT_SCHEMA,
-    *,
-    streaming: bool = False,
-    quarantine: bool = True,
-) -> DataFrame:
-    """JSON-lines landing source (one object per line — the splittable JSON
-    layout; multiline JSON documents are not splittable and don't scale)."""
-    read_schema = _with_corrupt_col(schema) if quarantine else schema
-    reader = spark.readStream if streaming else spark.read
-    return (
-        reader.schema(read_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-    )
-
-
-def quarantine_split(
-    df: DataFrame, *, materialize: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """(good rows without the corrupt column, quarantined raw lines).
-
-    Spark refuses plans over raw CSV/JSON that reference ONLY the internal
-    corrupt-record column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_
-    COLUMN), so the parsed frame is persisted before splitting — both halves
-    then read the one parse. At 100 TB the same rule applies with storage
-    instead of cache: land the parsed frame to parquet once, split from
-    that; pass ``materialize=False`` when the input is already materialized.
-
-    Streaming frames cannot persist (and a streaming split re-reads the
-    source per sink anyway — that IS the materialization), so the cache is
-    batch-only; both halves of a streaming split stay valid readStream
-    lineage.
-    """
-    if materialize and not df.isStreaming:
-        df = df.persist()
-    good = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
-    return good, bad
 
 
 # ---------------------------------------------------------------------------

@@ -4,12 +4,11 @@ escape hatch demo.
 The engine's production 1→N operators are all relational
 (``posexplode(sequence(...))`` — operators/corpus.chunk_documents,
 multimodal.sample_frames): JVM-side, codegen-eligible, no Python in the
-hot path. The UDTF here exists to cover the remaining Spark 4 Python API
-surface (alongside the custom DataSource, VariantType, and
-transformWithState): a table function whose row expansion is imperative
-Python. It deliberately reimplements ``chunk_documents``'s exact
-semantics so the test can differential it against the relational form —
-same answer, different execution tier.
+hot path. The UDTF here covers the Spark 4 Python table-function API: a
+table function whose row expansion is imperative Python. It deliberately
+reimplements ``chunk_documents``'s exact semantics so the test can
+differential it against the relational form — same answer, different
+execution tier.
 
 Cost model (why this is the escape hatch, not the default): each input
 row crosses into a Python worker and yields rows one at a time — no

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from kafkastreamingetl_spark import monitoring
 from kafkastreamingetl_spark.operators.cleaning import clean_events_streaming
-from kafkastreamingetl_spark.sources import file_events_source, synthetic_events_batch
+from kafkastreamingetl_spark.sources import EVENT_SCHEMA, synthetic_events_batch
 from kafkastreamingetl_spark.streaming import run_available_now, write_memory_stream
 
 
@@ -19,9 +19,8 @@ def test_progress_recorder_captures_batches(spark, tmp_path):
 
     rec = monitoring.attach(spark)
     try:
-        q = write_memory_stream(
-            clean_events_streaming(file_events_source(spark, src)), "mon_stream"
-        )
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
+        q = write_memory_stream(clean_events_streaming(stream), "mon_stream")
         run_available_now([q])
         # listener callbacks are async wrt awaitTermination
         deadline = time.time() + 30

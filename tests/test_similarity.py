@@ -181,43 +181,6 @@ def test_model_memo_logs_misses_not_hits(spark, emb):
     assert len(sim._FIT_LOG) == n0 + 1
 
 
-def test_pq_index_serving_matches_inline_and_never_reads_vectors(
-    spark, emb, tmp_path
-):
-    """The persisted-index path is the same math: build_pq_index then
-    pq_topk_from_index returns row-for-row what inline pq_topk returns,
-    and the serving plan's file inputs are only the index — the embedding
-    column (the 64× bigger payload) is out of the serving path entirely."""
-    from kafkastreamingetl_spark.operators.similarity import (
-        build_pq_index,
-        pq_topk,
-        pq_topk_from_index,
-    )
-
-    path = str(tmp_path / "pq_index")
-    build_pq_index(emb, path)
-    # literal query set: the served plan must then have ZERO non-index
-    # file inputs — vectors appear nowhere on the corpus side
-    q = spark.createDataFrame(
-        [
-            (int(r.query_id), [float(x) for x in r.query_vec])
-            for r in self_queries(emb, 4).collect()
-        ],
-        "query_id long, query_vec array<double>",
-    )
-    inline = sorted(
-        (r.query_id, r.rank, r.vec_id, r.adc)
-        for r in pq_topk(emb, q, k=5).collect()
-    )
-    served_df = pq_topk_from_index(spark, path, q, k=5)
-    served = sorted(
-        (r.query_id, r.rank, r.vec_id, r.adc) for r in served_df.collect()
-    )
-    assert served == inline
-    files = served_df.inputFiles()
-    assert files and all("pq_index" in f for f in files), files
-
-
 def test_int8_topk_recall_near_exact(spark, emb):
     """The '~1% recall loss' claim for int8 serving, measured: recall@10
     vs float cosine top-k on real embeddings (1.0 at sf0.01 — pinned at

@@ -1,44 +1,20 @@
-"""Landing-format sources: CSV / JSON-lines / ORC round-trips and the
-PERMISSIVE quarantine path.
+"""Columnar lake formats: the ORC round-trip and additive parquet schema
+evolution.
 
-Round-trip claim: write the dirty synthetic events out in each format, read
-back through the source adapter with the canonical schema, and get exactly
-the same rows (timestamps are ms-precision in the generator, inside every
-format's text resolution).
+Round-trip claim: write the dirty synthetic events out as ORC, read back
+with Spark's native reader, and get exactly the same rows.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
-from kafkastreamingetl_spark.sources import (
-    CORRUPT_COL,
-    EVENT_SCHEMA,
-    csv_source,
-    jsonl_source,
-    quarantine_split,
-    synthetic_events_batch,
-)
+from kafkastreamingetl_spark.sources import EVENT_SCHEMA, synthetic_events_batch
 
 
 @pytest.fixture(scope="module")
 def events(spark):
     return synthetic_events_batch(spark, 1_000, seed=31)
-
-
-def _write_csv(df, path):
-    """Whitespace-preserving CSV write (Spark's CSV writer TRIMS fields by
-    default — the generator's padded dirty values must survive landing)."""
-    (
-        df.write.option("header", "true")
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .mode("overwrite")
-        .csv(path)
-    )
 
 
 def _sorted_rows(df):
@@ -49,21 +25,6 @@ def _sorted_rows(df):
     )
 
 
-def test_csv_roundtrip(spark, events, tmp_path):
-    path = str(tmp_path / "events_csv")
-    _write_csv(events, path)
-    back = csv_source(spark, path, quarantine=False)
-    assert back.schema == EVENT_SCHEMA
-    assert _sorted_rows(back) == _sorted_rows(events)
-
-
-def test_jsonl_roundtrip(spark, events, tmp_path):
-    path = str(tmp_path / "events_jsonl")
-    events.write.mode("overwrite").json(path)
-    back = jsonl_source(spark, path, quarantine=False)
-    assert _sorted_rows(back) == _sorted_rows(events)
-
-
 def test_orc_roundtrip(spark, events, tmp_path):
     """ORC is a first-class columnar alternative Spark supports natively —
     same reader/writer contract as parquet, no adapter needed."""
@@ -71,85 +32,6 @@ def test_orc_roundtrip(spark, events, tmp_path):
     events.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     assert _sorted_rows(back) == _sorted_rows(events)
-
-
-def test_csv_streaming_source_same_lineage(spark, events, tmp_path):
-    """The streaming CSV file source feeds the identical downstream lineage
-    (availableNow + memory sink == batch read)."""
-    from kafkastreamingetl_spark.streaming import run_available_now, write_memory_stream
-
-    path = str(tmp_path / "events_csv_stream")
-    _write_csv(events, path)
-    q = write_memory_stream(
-        csv_source(spark, path, streaming=True, quarantine=False), "csv_stream"
-    )
-    run_available_now([q])
-    assert _sorted_rows(spark.table("csv_stream")) == _sorted_rows(events)
-
-
-def test_jsonl_quarantine_splits_corrupt_lines(spark, tmp_path):
-    """One malformed line lands in quarantine; every well-formed row
-    survives — a bad record must never fail the 100 TB ingest job."""
-    path = tmp_path / "landing_jsonl"
-    path.mkdir()
-    good = '{"event_id": 1, "user_id": 7, "event_type": "click"}'
-    bad = '{"event_id": oops not json'
-    (path / "part-0.json").write_text(f"{good}\n{bad}\n")
-    df = jsonl_source(spark, str(path))
-    ok, quarantined = quarantine_split(df)
-    assert ok.count() == 1 and ok.collect()[0].event_id == 1
-    assert CORRUPT_COL not in ok.columns
-    q = quarantined.collect()
-    assert len(q) == 1 and "oops" in q[0][CORRUPT_COL]
-
-
-def test_csv_quarantine_on_type_mismatch(spark, tmp_path):
-    """CSV PERMISSIVE mode quarantines a row whose field fails the typed
-    parse instead of nulling silently-everything or aborting."""
-    path = tmp_path / "landing_csv"
-    path.mkdir()
-    (path / "part-0.csv").write_text(
-        "event_id,ts,user_id,event_type,value,props\n"
-        "1,2024-01-01 00:00:00,7,click,1.5,{}\n"
-        "not_a_long,2024-01-01 00:00:00,7,click,1.5,{}\n"
-    )
-    ok, quarantined = quarantine_split(csv_source(spark, str(path)))
-    assert ok.count() == 1
-    assert quarantined.count() == 1
-    assert "not_a_long" in quarantined.collect()[0][CORRUPT_COL]
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    """Additive schema evolution: a newer writer adds a column; readers get
-    the superset with nulls for old files (mergeSchema). The option costs a
-    footer read per file, so at scale it belongs on the CONVERT step that
-    unifies the lake's schema, not on every query's scan — queries read the
-    declared schema (catalog.load_table)."""
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, 10.0)], "event_id long, value double").write.parquet(
-        path
-    )
-    spark.createDataFrame(
-        [(2, 20.0, "mobile")], "event_id long, value double, device string"
-    ).write.mode("append").parquet(path)
-
-    merged = spark.read.option("mergeSchema", "true").parquet(path)
-    assert set(merged.columns) == {"event_id", "value", "device"}
-    got = {r.event_id: r.device for r in merged.collect()}
-    assert got == {1: None, 2: "mobile"}
-
-
-def test_csv_source_never_infers(spark, events, tmp_path):
-    """The adapter reads with the declared schema even when the file has a
-    header — no inference pass (banned at scale)."""
-    path = str(tmp_path / "events_csv_schema")
-    _write_csv(events, path)
-    df = csv_source(spark, path)
-    assert [f.name for f in df.schema.fields][:-1] == [
-        f.name for f in EVENT_SCHEMA.fields
-    ]
-    assert df.schema[CORRUPT_COL].dataType.typeName() == "string"
-    assert dict(df.dtypes)["ts"] == "timestamp"
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

@@ -8,6 +8,7 @@ the constructs that look right and fail at ``.start()``).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -21,7 +22,6 @@ from kafkastreamingetl_spark.operators.windows import session_agg, windowed_agg
 from kafkastreamingetl_spark.sources import (
     EVENT_SCHEMA,
     decode_json_events,
-    file_events_source,
     synthetic_events_batch,
     synthetic_events_stream,
 )
@@ -42,8 +42,10 @@ def events_dir(spark, tmp_path_factory):
     return path
 
 
-def _stream(spark, events_dir):
-    return file_events_source(spark, events_dir)
+def _stream(spark, path):
+    """Streaming file source over a parquet directory: the broker-free
+    stand-in for the Kafka source (file sources need an explicit schema)."""
+    return spark.readStream.schema(EVENT_SCHEMA).parquet(path)
 
 
 def test_file_source_is_streaming(spark, events_dir):
@@ -190,7 +192,7 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
 
     def run_once():
         agg = windowed_agg(
-            file_events_source(spark, src).withWatermark("ts", "30 seconds"),
+            _stream(spark, src).withWatermark("ts", "30 seconds"),
             window="1 minute",
             approx_distinct=True,
         )
@@ -225,28 +227,41 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
     assert len(w5) == 1 and float(w5.total_value.iloc[0]) == 4.0
 
 
-def test_exact_dedup_streaming_by_content(spark, tmp_path):
-    """LLM-pipeline streaming: duplicate document *content* (different ids)
-    is dropped within the watermark horizon; the dedup key is the 8-byte
-    content hash, not the text."""
-    from kafkastreamingetl_spark.operators.dedup import exact_dedup_streaming
+def test_clean_events_streaming_drops_a_duplicate_across_micro_batches(
+    spark, tmp_path
+):
+    """T3 across batches: file 2 repeats file 1's ``event_id`` 1 inside the
+    30 s watermark, and the dedup state carried between micro-batches drops
+    it. ``maxFilesPerTrigger=1`` makes each file its own micro-batch."""
+    src = str(tmp_path / "src")
+    cols = "event_id long, ts string, user_id long, event_type string, value double"
 
-    src = str(tmp_path / "docs_src")
-    spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00", "alpha beta gamma"),
-            (2, "2024-01-01 10:00:05", "alpha beta gamma"),   # dup content
-            (3, "2024-01-01 10:00:10", "totally different"),
-            (4, "2024-01-01 10:00:15", "alpha beta gamma"),   # dup again
-        ],
-        "doc_id long, ts string, text string",
-    ).withColumn("ts", F.to_timestamp("ts")).write.parquet(src)
-    stream = spark.readStream.schema("doc_id long, ts timestamp, text string").parquet(src)
-    q = write_memory_stream(exact_dedup_streaming(stream), "docs_dedup")
+    def feed(rows):
+        df = spark.createDataFrame(rows, cols).withColumn("props", F.lit("{}"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1)
+        df.write.mode("append").parquet(src)
+        time.sleep(1.1)  # distinct mtimes: deterministic per-file batch order
+
+    feed([
+        (1, "2024-01-01 00:00:10", 7, "click", 1.0),
+        (2, "2024-01-01 00:00:20", 8, "view", 2.0),
+    ])
+    feed([
+        (1, "2024-01-01 00:00:25", 7, " Click", 9.0),  # repeat, within 30 s
+        (3, "2024-01-01 00:00:30", 9, "view", 3.0),
+    ])
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = write_memory_stream(clean_events_streaming(stream), "t3_two_batches")
     run_available_now([q])
-    got = spark.table("docs_dedup").toPandas()
-    assert len(got) == 2
-    assert sorted(got.text) == ["alpha beta gamma", "totally different"]
+    fed = [json.loads(p.json)["numInputRows"] for p in q.recentProgress]
+    assert [n for n in fed if n] == [2, 2]
+    got = spark.table("t3_two_batches").collect()
+    assert sorted(r.event_id for r in got) == [1, 2, 3]
+    assert {r.event_id: r.value for r in got}[1] == 1.0  # the first arrival
 
 
 def test_streaming_session_agg_runs(spark, events_dir):
@@ -356,7 +371,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
 
     def run():
         agg = windowed_agg(
-            file_events_source(spark, src).withWatermark("ts", "10 seconds"),
+            _stream(spark, src).withWatermark("ts", "10 seconds"),
             window="1 minute",
             keys=["event_type"],
             approx_distinct=True,
@@ -559,7 +574,7 @@ def test_stream_static_join_rereads_dim_each_batch(spark, tmp_path):
 
     def run():
         dim = spark.read.parquet(dim_path)
-        joined = file_events_source(spark, src).join(dim, "user_id", "left")
+        joined = _stream(spark, src).join(dim, "user_id", "left")
         q = (
             joined.writeStream.outputMode("append")
             .format("parquet")

@@ -216,89 +216,6 @@ def test_semantic_flag_sink_50_batches_flat_latency_bounded_checkpoint(
     print("SCALE.md numbers:", stats)
 
 
-def test_frequent_tokens_stream_50_batches_flat_latency_bounded_state(
-    spark, tmp_path
-):
-    """The stateful MG stream under the same 50-batch gate — with the
-    assertion its design actually makes: state is BOUNDED (n_groups
-    summaries of <= capacity+1 entries, never the vocabulary), not zero.
-    The vocabulary grows every batch (fresh cold tokens), so a token-keyed
-    streaming count would grow state linearly; the summary stays fixed and
-    per-batch latency flat."""
-    import random
-    import statistics
-
-    from kafkastreamingetl_spark.operators.corpus import (
-        frequent_tokens_stream,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    cap, groups = 15, 4
-    rng = random.Random(9)
-    for i in range(N_BATCHES):
-        # hot head + batch-fresh cold tail: vocabulary grows 60 words per
-        # batch (~3000 over the run) while the summaries must not
-        vocab = ["hot1", "hot2", "hot3"] * 8 + [
-            f"b{i}w{j}" for j in range(60)
-        ]
-        texts = [
-            (i * 10 + j, " ".join(rng.choices(vocab, k=25)))
-            for j in range(10)
-        ]
-        spark.createDataFrame(
-            texts, "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = frequent_tokens_stream(stream, capacity=cap, n_groups=groups)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mg_state_scale")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_available_now([q], timeout_sec=900)
-
-    durs = _batch_durations(q)
-    assert len(durs) == N_BATCHES
-    head = statistics.median(durs[5 : N_BATCHES // 2])
-    tail = statistics.median(durs[N_BATCHES // 2 :])
-    assert tail < 3 * head, f"latency trend {head:.2f}s -> {tail:.2f}s"
-
-    # bounded state: the store exists (unlike the foreachBatch sinks) but
-    # holds n_groups MG summaries, not the ~3000-word vocabulary — KB-scale
-    # after 50 batches including retained versions
-    state_dir = os.path.join(ckpt, "state")
-    assert os.path.isdir(state_dir)
-    state_bytes = _dir_bytes(state_dir)
-    assert state_bytes < 8 * 1024 * 1024, f"state {state_bytes}B"
-
-    # final emissions: <= capacity entries per group, hot head present
-    emissions = spark.sql("select * from mg_state_scale").toPandas()
-    latest = {}
-    for grp, g in emissions.groupby("grp"):
-        latest[grp] = g[g["grp_total"] == g["grp_total"].max()]
-    assert all(len(g) <= cap for g in latest.values())
-    survivors = {t for g in latest.values() for t in g["token"]}
-    assert {"hot1", "hot2", "hot3"} <= survivors
-    print(
-        "SCALE.md numbers:",
-        {
-            "label": "frequent_tokens_stream",
-            "median_head_s": round(head, 3),
-            "median_tail_s": round(tail, 3),
-            "state_kb": round(state_bytes / 1024, 1),
-        },
-    )
-
-
 def test_neardup_ingest_sink_50_batches_flat_latency_bounded_checkpoint(
     spark, tmp_path
 ):

@@ -14,10 +14,9 @@ from kafkastreamingetl_spark.operators.streamjoin import (
     attribution_rollup,
     interval_pairs,
     purchase_attribution,
-    purchase_attribution_pairs_streaming,
     split_typed_legs,
 )
-from kafkastreamingetl_spark.sources import file_events_source, synthetic_events_batch
+from kafkastreamingetl_spark.sources import EVENT_SCHEMA, synthetic_events_batch
 from kafkastreamingetl_spark.streaming import run_available_now, write_memory_stream
 
 
@@ -26,6 +25,15 @@ def events_dir(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("sj_events_src"))
     synthetic_events_batch(spark, 4_000, seed=23).write.mode("overwrite").parquet(path)
     return path
+
+
+def _stream_pairs(events_stream, *, watermark, how="inner"):
+    """The streaming form of the pair producer: watermark the lineage once
+    (both legs inherit it), split, interval-join."""
+    clicks, purchases = split_typed_legs(events_stream.withWatermark("ts", watermark))
+    return interval_pairs(
+        clicks, purchases, left_ts="click_ts", right_ts="purchase_ts", how=how
+    )
 
 
 def _mk_events(spark, rows):
@@ -80,8 +88,9 @@ def test_purchase_can_attribute_to_many_clicks(spark):
 def test_streaming_pairs_match_batch_twin(spark, events_dir):
     """The watermarked stream-stream join over a fully-available source
     yields exactly the batch twin's pair set."""
-    stream_pairs = purchase_attribution_pairs_streaming(
-        file_events_source(spark, events_dir), watermark="10 seconds"
+    stream_pairs = _stream_pairs(
+        spark.readStream.schema(EVENT_SCHEMA).parquet(events_dir),
+        watermark="10 seconds",
     )
     q = write_memory_stream(stream_pairs, "sj_pairs", output_mode="append")
     run_available_now([q])
@@ -104,8 +113,6 @@ def test_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
     completes inside a single run, exactly as a continuously-triggered
     production query experiences it.
     """
-    from kafkastreamingetl_spark.sources import EVENT_SCHEMA
-
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
 
@@ -139,7 +146,7 @@ def test_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
     # file 3: a batch AFTER the advance, in which eviction actually runs
     feed([(10, "2024-01-01 02:00:00", 99, "purchase", 0.0)], "append")
 
-    stream = purchase_attribution_pairs_streaming(
+    stream = _stream_pairs(
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src),

@@ -146,36 +146,6 @@ def test_snapshot_diff_same_snapshot_all_unchanged(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_zorder_write_prunes_on_either_dimension(spark, events, tmp_path):
-    """The physical payoff: after a z-ordered write, a predicate on EITHER
-    dimension touches a minority of files (row-group stats line up with
-    the Morton clustering). An unclustered single-dimension sort can only
-    deliver this for its own sort key."""
-    path = str(tmp_path / "zordered")
-    layout_ops.zorder_write(events, path, n_files=16)
-    back = spark.read.parquet(path)
-    n_files = len(back.inputFiles())
-    assert n_files >= 8  # layout actually fanned out
-
-    # user predicate: files whose [user_min,user_max] box intersects
-    stats = back.groupBy(F.input_file_name().alias("f")).agg(
-        F.min("user_id").alias("umin"),
-        F.max("user_id").alias("umax"),
-        F.min("ts").alias("tmin"),
-        F.max("ts").alias("tmax"),
-    )
-    rows = stats.collect()
-    lo, hi = 10, 19  # a 10-user slice
-    user_hits = sum(1 for r in rows if r["umin"] <= hi and r["umax"] >= lo)
-    assert user_hits < n_files  # pruning exists on the user axis
-
-    t0 = events.agg(F.min("ts")).collect()[0][0]
-    t1 = events.agg(F.max("ts")).collect()[0][0]
-    cut = t0 + (t1 - t0) / 8  # first eighth of the time range
-    time_hits = sum(1 for r in rows if r["tmin"] <= cut)
-    assert time_hits < n_files  # pruning exists on the time axis too
-
-
 def test_zvalue_matches_python_reference(spark):
     """Morton code spot-check against a pure-Python interleave."""
 
