@@ -115,16 +115,14 @@ def load_events(
     *,
     ts_start: str | None = None,
     ts_end: str | None = None,
-    refresh: bool = False,
 ) -> DataFrame:
     """Events scan with an optional half-open ``[ts_start, ts_end)`` slice
     that actually reaches the parquet reader.
 
     The underlying relation handle is memoized per (session, path) — the
     file LISTING is pinned at first construction (see :data:`_SCAN_MEMO`).
-    A caller that rewrites ``{sf_dir}/events.parquet`` mid-session must
-    pass ``refresh=True`` or it will silently read the stale listing
-    (ADVICE r15; no registered query or test writes a path it re-reads
+    A caller that rewrites ``{sf_dir}/events.parquet`` mid-session reads
+    the stale listing (ADVICE r15; no registered query or test writes a path it re-reads
     through this function).
 
     The nanos→timestamp conversion in :func:`load_table` is an expression,
@@ -140,9 +138,7 @@ def load_events(
     from datetime import datetime, timezone
 
     ensure_runtime_confs(spark)
-    df = _cached_scan(
-        spark, os.path.join(sf_dir, "events.parquet"), None, refresh=refresh
-    )
+    df = _cached_scan(spark, os.path.join(sf_dir, "events.parquet"), None)
     raw_type = dict(df.dtypes).get("ts")
     raw_ns = raw_type == "bigint"
 
@@ -197,18 +193,18 @@ def load_events(
 
 
 def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = TABLES
+    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR
 ) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
+    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = TABLES
+    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR
 ) -> dict[str, DataFrame]:
     """Register each table as a temp view (reference spark/app.py:140) so
     ``spark.sql`` queries resolve against the same lineage as the DataFrame
     API."""
-    tables = load_tables(spark, sf_dir, names)
+    tables = load_tables(spark, sf_dir)
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables

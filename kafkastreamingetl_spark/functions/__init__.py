@@ -82,7 +82,7 @@ class SessionMemo:
 _PAR_PROBE_MEMO = SessionMemo(256)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition IF the input is under-partitioned (batch only).
 
     Small single-file tables scan as ONE partition, so expression-heavy
@@ -107,7 +107,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     mis-skip/mis-add the repartition — a performance heuristic, never a
     correctness input.
     """
-    n = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     # The probe result also depends on the session's file-split confs
     # (ADVICE r15): fold them into the key so a mid-session conf change
     # re-probes instead of returning a stale partition count.
@@ -135,14 +135,14 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 # ---------------------------------------------------------------------------
 
 
-def normalize_string(col: str | Column, default: str = "unknown") -> Column:
+def normalize_string(col: str | Column) -> Column:
     """null -> default, else trim+lowercase.
 
     Built-in replacement for the reference's Python UDF ``normalize_device``
     (reference spark/app.py:66-70): Catalyst-optimizable, codegen-friendly.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(F.lower(F.trim(c)), F.lit(default))
+    return F.coalesce(F.lower(F.trim(c)), F.lit("unknown"))
 
 
 # ---------------------------------------------------------------------------

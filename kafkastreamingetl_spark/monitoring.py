@@ -91,8 +91,8 @@ class ProgressRecorder(StreamingQueryListener):
         return out
 
 
-def attach(spark: SparkSession, max_events: int = 10_000) -> ProgressRecorder:
-    rec = ProgressRecorder(max_events)
+def attach(spark: SparkSession) -> ProgressRecorder:
+    rec = ProgressRecorder(10_000)
     spark.streams.addListener(rec)
     return rec
 

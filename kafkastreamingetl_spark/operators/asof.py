@@ -37,7 +37,6 @@ def asof_join(
     right: DataFrame,
     keys: list[str],
     *,
-    ts_col: str = "ts",
     prefix: str = "asof_",
     direction: str = "backward",
     tolerance_sec: int | None = None,
@@ -71,17 +70,17 @@ def asof_join(
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown as-of direction: {direction!r}")
-    rpayload = [c for c in right.columns if c not in keys and c != ts_col]
+    rpayload = [c for c in right.columns if c not in keys and c != "ts"]
     rstruct = F.struct(
-        F.col(ts_col).alias(f"{prefix}{ts_col}"),
+        F.col("ts").alias(f"{prefix}ts"),
         *[F.col(c).alias(f"{prefix}{c}") for c in rpayload],
     )
     rstruct_type = right.select(rstruct.alias("_r")).schema["_r"].dataType
 
-    lpayload = [c for c in left.columns if c not in keys and c != ts_col]
+    lpayload = [c for c in left.columns if c not in keys and c != "ts"]
     l_tagged = left.select(
         *keys,
-        ts_col,
+        "ts",
         F.lit(1).alias("_is_left"),
         F.lit(None).cast(rstruct_type).alias("_r"),
         *lpayload,
@@ -93,9 +92,9 @@ def asof_join(
     # sort before every right row in BOTH window directions (nulls first),
     # so their fill is empty and they come back unmatched, preserving the
     # forward(t) == backward(-t) symmetry (negation maps NULL to NULL).
-    r_tagged = right.filter(F.col(ts_col).isNotNull()).select(
+    r_tagged = right.filter(F.col("ts").isNotNull()).select(
         *keys,
-        ts_col,
+        "ts",
         F.lit(0).alias("_is_left"),
         rstruct.alias("_r"),
         *[
@@ -107,12 +106,12 @@ def asof_join(
     # right before left at equal ts => inclusive (<=/>=) as-of semantics
     w_back = (
         Window.partitionBy(*keys)
-        .orderBy(F.asc_nulls_first(ts_col), F.asc("_is_left"))
+        .orderBy(F.asc_nulls_first("ts"), F.asc("_is_left"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_fwd = (
         Window.partitionBy(*keys)
-        .orderBy(F.desc_nulls_first(ts_col), F.asc("_is_left"))
+        .orderBy(F.desc_nulls_first("ts"), F.asc("_is_left"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     if direction == "backward":
@@ -128,12 +127,12 @@ def asof_join(
             "_mb", F.last("_r", ignorenulls=True).over(w_back)
         ).withColumn("_mf", F.last("_r", ignorenulls=True).over(w_fwd))
         gap_b = F.abs(
-            F.unix_micros(F.col(ts_col))
-            - F.unix_micros(F.col(f"_mb.{prefix}{ts_col}"))
+            F.unix_micros(F.col("ts"))
+            - F.unix_micros(F.col(f"_mb.{prefix}ts"))
         )
         gap_f = F.abs(
-            F.unix_micros(F.col(f"_mf.{prefix}{ts_col}"))
-            - F.unix_micros(F.col(ts_col))
+            F.unix_micros(F.col(f"_mf.{prefix}ts"))
+            - F.unix_micros(F.col("ts"))
         )
         if tolerance_sec is not None:
             # merge_asof parity: tolerance filters each DIRECTION before
@@ -153,8 +152,8 @@ def asof_join(
         ).drop("_mb", "_mf")
     if tolerance_sec is not None and direction != "nearest":
         gap = F.abs(
-            F.unix_micros(F.col(f"_m.{prefix}{ts_col}"))
-            - F.unix_micros(F.col(ts_col))
+            F.unix_micros(F.col(f"_m.{prefix}ts"))
+            - F.unix_micros(F.col("ts"))
         )
         filled = filled.withColumn(
             "_m",
@@ -165,9 +164,9 @@ def asof_join(
         )
     return filled.filter(F.col("_is_left") == 1).select(
         *keys,
-        ts_col,
+        "ts",
         *lpayload,
-        F.col(f"_m.{prefix}{ts_col}").alias(f"{prefix}{ts_col}"),
+        F.col(f"_m.{prefix}ts").alias(f"{prefix}ts"),
         *[F.col(f"_m.{prefix}{c}").alias(f"{prefix}{c}") for c in rpayload],
     )
 
@@ -191,11 +190,11 @@ def events_last_purchase(events: DataFrame) -> DataFrame:
     return asof_join(left, purchases, ["user_id"], prefix="last_")
 
 
-def sql_events_last_purchase(table: str = "events") -> str:
-    return f"""
+def sql_events_last_purchase() -> str:
+    return """
     WITH purch AS (
         SELECT user_id, ts, value AS purchase_value
-        FROM {table}
+        FROM events
         WHERE event_type = 'purchase'
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY user_id, ts ORDER BY event_id DESC NULLS LAST
@@ -203,6 +202,6 @@ def sql_events_last_purchase(table: str = "events") -> str:
     )
     SELECT e.user_id, e.ts, e.event_id, e.event_type, e.value,
            p.ts AS last_ts, p.purchase_value AS last_purchase_value
-    FROM {table} e
+    FROM events e
     ASOF LEFT JOIN purch p ON e.user_id = p.user_id AND e.ts >= p.ts
     """

@@ -78,7 +78,6 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int,
     *,
-    sort: bool = True,
     path_root: str | None = None,
 ) -> None:
     """Materialize ``df`` as a parquet table bucketed (and bucket-sorted)
@@ -96,16 +95,15 @@ def write_bucketed(
     # write task holds exactly one bucket → one file per bucket, so the
     # read-back scan can trust the per-bucket sort instead of re-sorting
     # (M input partitions × n buckets small files otherwise).
-    writer = (
+    (
         df.repartition(n_buckets, F.col(bucket_col))
         .write.format("parquet")
         .mode("overwrite")
         .option("path", path)
         .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
     )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
 
 
 def ensure_bucketed_order_tables(

@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 from ..functions import normalize_string
 
 
-def dedup_deterministic(
-    df: DataFrame, keys: list[str], order_by: list, *, rn_col: str = "_rn"
-) -> DataFrame:
+def dedup_deterministic(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
     """Keep exactly one row per key, chosen by an explicit total order.
 
     ``dropDuplicates`` (reference spark/app.py:79) keeps an *arbitrary* row
@@ -28,20 +26,13 @@ def dedup_deterministic(
     """
     w = Window.partitionBy(*keys).orderBy(*order_by)
     return (
-        df.withColumn(rn_col, F.row_number().over(w))
-        .filter(F.col(rn_col) == 1)
-        .drop(rn_col)
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 
-def clean_events(
-    df: DataFrame,
-    *,
-    type_col: str = "event_type",
-    value_col: str = "value",
-    key_col: str = "event_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def clean_events(df: DataFrame) -> DataFrame:
     """Normalize the categorical column, fill null metrics, dedup by key.
 
     Mirrors reference spark/app.py:72-79 (P2 withColumn, P5 na.fill, P6
@@ -56,26 +47,20 @@ def clean_events(
       and divergent from the oracle); with it, the pick is hash-stable for
       any input (the reference's dropDuplicates pick is arbitrary).
     """
-    cleaned = df.withColumn(f"{type_col}_norm", normalize_string(type_col)).na.fill(
-        {value_col: 0.0}
+    cleaned = df.withColumn("event_type_norm", normalize_string("event_type")).na.fill(
+        {"value": 0.0}
     )
-    lead = [ts_col, value_col]
-    tail = [c for c in cleaned.columns if c not in (*lead, key_col)]
+    lead = ["ts", "value"]
+    tail = [c for c in cleaned.columns if c not in (*lead, "event_id")]
     return dedup_deterministic(
         cleaned,
-        [key_col],
+        ["event_id"],
         [F.asc_nulls_first(c) for c in (*lead, *tail)],
     )
 
 
 def clean_events_streaming(
-    df: DataFrame,
-    *,
-    ts_col: str = "ts",
-    watermark: str = "30 seconds",
-    key_col: str = "event_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
+    df: DataFrame, *, watermark: str = "30 seconds"
 ) -> DataFrame:
     """Streaming twin of :func:`clean_events` with bounded dedup state.
 
@@ -91,8 +76,8 @@ def clean_events_streaming(
     micro-batch, not in executor memory.
     """
     return (
-        df.withWatermark(ts_col, watermark)
-        .withColumn(f"{type_col}_norm", normalize_string(type_col))
-        .na.fill({value_col: 0.0})
-        .dropDuplicatesWithinWatermark([key_col])
+        df.withWatermark("ts", watermark)
+        .withColumn("event_type_norm", normalize_string("event_type"))
+        .na.fill({"value": 0.0})
+        .dropDuplicatesWithinWatermark(["event_id"])
     )

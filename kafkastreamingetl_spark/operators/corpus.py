@@ -40,11 +40,7 @@ LONGNUM_RE = r"[0-9][0-9()\- ]{5,}[0-9]"  # phone/account-shaped digit runs
 
 
 def train_test_split(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    train_pct: int = 80,
-    salt: str = "split:v1",
+    df: DataFrame, *, train_pct: int = 80, salt: str = "split:v1"
 ) -> DataFrame:
     """Assign each row a stable split by salted id-hash bucket.
 
@@ -54,41 +50,35 @@ def train_test_split(
     re-draws the split; bumping ``train_pct`` only *moves the boundary*
     (train ⊆ new train), enabling monotone split growth.
     """
-    bucket = split_bucket_col(id_col, salt=salt).alias("split_bucket")
+    bucket = split_bucket_col(salt=salt).alias("split_bucket")
     split = (
         F.when(F.col("split_bucket") < train_pct, F.lit("train"))
         .otherwise(F.lit("test"))
         .alias("split")
     )
-    return df.select(id_col, bucket).select("*", split)
+    return df.select("doc_id", bucket).select("*", split)
 
 
-def split_bucket_col(id_col: str = "doc_id", *, salt: str = "split:v1") -> Column:
+def split_bucket_col(*, salt: str = "split:v1") -> Column:
     """The split-membership expression itself (salted id-hash bucket), for
     callers that want the split as a derived COLUMN on an existing frame —
     a join against :func:`train_test_split`'s projection would re-execute
     the caller's whole upstream plan for the join's right side (no
     cross-branch CSE) to recompute what is a pure function of the id."""
     return (
-        hash60(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+        hash60(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
         % SPLIT_BUCKETS
     )
 
 
-def sql_train_test_split(
-    table: str = "documents",
-    *,
-    id_col: str = "doc_id",
-    train_pct: int = 80,
-    salt: str = "split:v1",
-) -> str:
-    h = sql_hash60(f"'{salt}' || CAST({id_col} AS VARCHAR)")
+def sql_train_test_split() -> str:
+    h = sql_hash60("'split:v1' || CAST(doc_id AS VARCHAR)")
     return f"""
-    SELECT {id_col},
+    SELECT doc_id,
            ({h}) % {SPLIT_BUCKETS} AS split_bucket,
-           CASE WHEN ({h}) % {SPLIT_BUCKETS} < {train_pct}
+           CASE WHEN ({h}) % {SPLIT_BUCKETS} < 80
                 THEN 'train' ELSE 'test' END AS split
-    FROM {table}
+    FROM documents
     """
 
 
@@ -105,12 +95,7 @@ DEFAULT_MIX_RATE = 0.10
 
 
 def training_mix_sample(
-    df: DataFrame,
-    rates: dict[str, float] | None = None,
-    *,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    salt: str = "mix:v1",
+    df: DataFrame, rates: dict[str, float] | None = None
 ) -> DataFrame:
     """Deterministic mixture sampling: keep a ``rates[source]`` fraction of
     each source by salted id-hash threshold.
@@ -124,34 +109,26 @@ def training_mix_sample(
     """
     r = rates if rates is not None else MIX_RATES
     bucket = hash60(
-        F.concat(F.lit(salt), F.col(id_col).cast("string"))
+        F.concat(F.lit("mix:v1"), F.col("doc_id").cast("string"))
     ) % SPLIT_BUCKETS
     rate = F.lit(DEFAULT_MIX_RATE * SPLIT_BUCKETS)
     # build the CASE back-to-front; dict order is documentation order only
     for src, keep in reversed(list(r.items())):
         rate = F.when(
-            F.col(source_col) == src, F.lit(keep * SPLIT_BUCKETS)
+            F.col("source") == src, F.lit(keep * SPLIT_BUCKETS)
         ).otherwise(rate)
-    return df.select(id_col, source_col).where(bucket < rate)
+    return df.select("doc_id", "source").where(bucket < rate)
 
 
-def sql_training_mix_sample(
-    table: str = "documents",
-    rates: dict[str, float] | None = None,
-    *,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    salt: str = "mix:v1",
-) -> str:
-    r = rates if rates is not None else MIX_RATES
-    h = sql_hash60(f"'{salt}' || CAST({id_col} AS VARCHAR)")
+def sql_training_mix_sample() -> str:
+    h = sql_hash60("'mix:v1' || CAST(doc_id AS VARCHAR)")
     whens = "\n             ".join(
-        f"WHEN {source_col} = '{src}' THEN {keep * SPLIT_BUCKETS}"
-        for src, keep in r.items()
+        f"WHEN source = '{src}' THEN {keep * SPLIT_BUCKETS}"
+        for src, keep in MIX_RATES.items()
     )
     return f"""
-    SELECT {id_col}, {source_col}
-    FROM {table}
+    SELECT doc_id, source
+    FROM documents
     WHERE ({h}) % {SPLIT_BUCKETS} <
           CASE {whens}
                ELSE {DEFAULT_MIX_RATE * SPLIT_BUCKETS} END
@@ -164,12 +141,7 @@ def sql_training_mix_sample(
 
 
 def chunk_documents(
-    df: DataFrame,
-    *,
-    chunk_chars: int = 200,
-    overlap: int = 40,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    df: DataFrame, *, chunk_chars: int = 200, overlap: int = 40
 ) -> DataFrame:
     """Slice each document into ``chunk_chars``-wide windows advancing by
     ``chunk_chars - overlap``: the fixed-stride context-window expansion
@@ -183,41 +155,34 @@ def chunk_documents(
     if not 0 <= overlap < chunk_chars:
         raise ValueError("need 0 <= overlap < chunk_chars")
     step = chunk_chars - overlap
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     starts = F.sequence(
         F.lit(1), F.greatest(F.length(c), F.lit(1)), F.lit(step)
     )
     return df.select(
-        id_col,
+        "doc_id",
         c.alias("_text"),
         F.posexplode(starts).alias("chunk_id", "start"),
     ).select(
-        id_col,
+        "doc_id",
         "chunk_id",
         F.col("_text").substr(F.col("start"), F.lit(chunk_chars)).alias("chunk"),
     )
 
 
-def sql_chunk_documents(
-    table: str = "documents",
-    *,
-    chunk_chars: int = 200,
-    overlap: int = 40,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    step = chunk_chars - overlap
-    c = f"coalesce({text_col}, '')"
+def sql_chunk_documents() -> str:
+    step = 200 - 40
+    c = "coalesce(text, '')"
     return f"""
     WITH starts AS (
-        SELECT {id_col}, {text_col},
+        SELECT doc_id, text,
                unnest(generate_series(1, greatest(length({c}), 1), {step}))
                    AS start
-        FROM {table}
+        FROM documents
     )
-    SELECT {id_col},
+    SELECT doc_id,
            ((start - 1) // {step})::INT AS chunk_id,
-           substring({c}, start, {chunk_chars}) AS chunk
+           substring({c}, start, 200) AS chunk
     FROM starts
     """
 
@@ -227,19 +192,19 @@ def sql_chunk_documents(
 # ---------------------------------------------------------------------------
 
 
-def pii_redact(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Redact emails and long digit runs, with per-doc redaction counts.
 
     Email replacement runs FIRST (addresses contain digits); counts are
     computed on the original text so they report what was actually
     removed. One scan, no shuffle.
     """
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     red = F.regexp_replace(
         F.regexp_replace(c, EMAIL_RE, "<EMAIL>"), LONGNUM_RE, "<NUM>"
     )
     return df.select(
-        id_col,
+        "doc_id",
         red.alias("text_redacted"),
         F.regexp_count(c, F.lit(EMAIL_RE)).cast("int").alias("n_emails"),
         F.regexp_count(
@@ -248,21 +213,19 @@ def pii_redact(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def sql_pii_redact(
-    table: str = "documents", *, id_col: str = "doc_id", text_col: str = "text"
-) -> str:
-    c = f"coalesce({text_col}, '')"
+def sql_pii_redact() -> str:
+    c = "coalesce(text, '')"
     email = EMAIL_RE.replace("'", "''")
     num = LONGNUM_RE.replace("'", "''")
     return f"""
-    SELECT {id_col},
+    SELECT doc_id,
            regexp_replace(regexp_replace({c}, '{email}', '<EMAIL>', 'g'),
                           '{num}', '<NUM>', 'g') AS text_redacted,
            len(regexp_extract_all({c}, '{email}'))::INT AS n_emails,
            len(regexp_extract_all(
                regexp_replace({c}, '{email}', '<EMAIL>', 'g'), '{num}'
            ))::INT AS n_numbers
-    FROM {table}
+    FROM documents
     """
 
 
@@ -273,13 +236,7 @@ def sql_pii_redact(
 IDF_MICRO = 1_000_000  # idf quantization: integer micro-units
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    *,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, *, k: int = 3) -> DataFrame:
     """Top-``k`` TF-IDF terms per document.
 
     Plan shape: one explode → hash-aggregate to (doc, term, tf) → second
@@ -290,9 +247,9 @@ def tfidf_top_terms(
     tf multiply, so ranking compares exact integers and can never flip on
     a float ulp between engines. Ties break by term text.
     """
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     terms = df.select(
-        F.col(id_col), F.explode(F.split(c, TOKEN_SEP)).alias("term")
+        F.col("doc_id"), F.explode(F.split(c, TOKEN_SEP)).alias("term")
     ).where(F.col("term") != "")
     # tf feeds both the document-frequency rollup and the scoring join;
     # persisting the collapsed (doc, term, tf) table keeps the tokenize
@@ -300,7 +257,7 @@ def tfidf_top_terms(
     # with an empty read schema — parquet footers only). Round-11 scan
     # audit: was three corpus scans.
     tf = (
-        terms.groupBy(id_col, "term")
+        terms.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
         .persist()
     )
@@ -315,55 +272,47 @@ def tfidf_top_terms(
         ).cast("bigint").alias("idf_micro"),
     )
     scored = tf.join(idf, "term").select(
-        id_col,
+        "doc_id",
         "term",
         "tf",
         (F.col("tf") * F.col("idf_micro")).alias("score_micro"),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("score_micro"), F.asc("term")
-    )
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score_micro"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tf", "score_micro")
+        .select("doc_id", "rank", "term", "tf", "score_micro")
     )
 
 
-def sql_tfidf_top_terms(
-    table: str = "documents",
-    *,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    c = f"coalesce({text_col}, '')"
+def sql_tfidf_top_terms() -> str:
+    c = "coalesce(text, '')"
     return f"""
     WITH terms AS (
-        SELECT {id_col}, unnest(string_split({c}, '{TOKEN_SEP}')) AS term
-        FROM {table}
+        SELECT doc_id, unnest(string_split({c}, '{TOKEN_SEP}')) AS term
+        FROM documents
     ),
     tf AS (
-        SELECT {id_col}, term, COUNT(*) AS tf
+        SELECT doc_id, term, COUNT(*) AS tf
         FROM terms WHERE term <> '' GROUP BY 1, 2
     ),
     idf AS (
         SELECT term,
-               CAST(round(ln((SELECT COUNT(*) + 1.0 FROM {table})
+               CAST(round(ln((SELECT COUNT(*) + 1.0 FROM documents)
                              / (COUNT(*) + 1.0)) * {IDF_MICRO}) AS BIGINT)
                    AS idf_micro
         FROM tf GROUP BY term
     )
-    SELECT tf.{id_col},
+    SELECT tf.doc_id,
            (ROW_NUMBER() OVER (
-               PARTITION BY tf.{id_col}
+               PARTITION BY tf.doc_id
                ORDER BY tf.tf * idf.idf_micro DESC NULLS LAST,
                         tf.term ASC NULLS FIRST))::INT AS rank,
            tf.term,
            tf.tf,
            tf.tf * idf.idf_micro AS score_micro
     FROM tf JOIN idf USING (term)
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 3
     """
 
 
@@ -374,14 +323,7 @@ def sql_tfidf_top_terms(
 PACK_BUDGET_TOKENS = 256
 
 
-def pack_token_bins(
-    df: DataFrame,
-    *,
-    budget: int = PACK_BUDGET_TOKENS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def pack_token_bins(df: DataFrame, *, budget: int = PACK_BUDGET_TOKENS) -> DataFrame:
     """(doc_id, source, n_tokens, bin_id): concat-and-split sequence
     packing — the batch-construction step between a tokenized corpus and
     training. Documents are laid end-to-end in deterministic (source,
@@ -398,42 +340,37 @@ def pack_token_bins(
     """
     from .text import tokens
 
-    n_tok = F.size(tokens(F.col(text_col))).cast("bigint")
+    n_tok = F.size(tokens(F.col("text"))).cast("bigint")
     w = (
-        Window.partitionBy(source_col)
-        .orderBy(F.asc(id_col))
+        Window.partitionBy("source")
+        .orderBy(F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum_excl = F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("bigint"))
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(source_col).alias("source"),
+            F.col("doc_id"),
+            F.col("source"),
             n_tok.alias("n_tokens"),
         )
         .withColumn("bin_id", F.floor(cum_excl / budget).cast("bigint"))
     )
 
 
-def sql_pack_token_bins(
-    table: str = "documents",
-    *,
-    budget: int = PACK_BUDGET_TOKENS,
-    text_col: str = "text",
-) -> str:
+def sql_pack_token_bins() -> str:
     from .text import sql_tokens
 
     return f"""
     WITH t AS (
         SELECT doc_id, source,
-               CAST(len({sql_tokens(text_col)}) AS BIGINT) AS n_tokens
-        FROM {table}
+               CAST(len({sql_tokens('text')}) AS BIGINT) AS n_tokens
+        FROM documents
     )
     SELECT doc_id, source, n_tokens,
            CAST(FLOOR(COALESCE(SUM(n_tokens) OVER (
                PARTITION BY source ORDER BY doc_id ASC
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) / {budget}) AS BIGINT) AS bin_id
+           ), 0) / {PACK_BUDGET_TOKENS}) AS BIGINT) AS bin_id
     FROM t
     """
 
@@ -443,21 +380,16 @@ def sql_pack_token_bins(
 # ---------------------------------------------------------------------------
 
 
-def dedup_rate_by_source(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def dedup_rate_by_source(df: DataFrame) -> DataFrame:
     """(source, n_docs, n_distinct, n_dups, dup_rate): the corpus-health
     report a data pipeline reads before deciding where to spend dedup
     budget — exact content-hash distinct per source. One map-side-combined
     aggregation; the shuffle carries (source, hash) partial states, never
     text. dup_rate is a ratio of exact BIGINTs, so the double division is
     bit-identical across engines."""
-    h = hash60(F.col(text_col))
+    h = hash60(F.col("text"))
     return (
-        df.groupBy(F.col(source_col).alias("source"))
+        df.groupBy(F.col("source"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count_distinct(h).alias("n_distinct"),
@@ -475,16 +407,14 @@ def dedup_rate_by_source(
     )
 
 
-def sql_dedup_rate_by_source(
-    table: str = "documents", *, text_col: str = "text"
-) -> str:
+def sql_dedup_rate_by_source() -> str:
     return f"""
     WITH g AS (
         SELECT source,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(COUNT(DISTINCT {sql_hash60(text_col)}) AS BIGINT)
+               CAST(COUNT(DISTINCT {sql_hash60('text')}) AS BIGINT)
                  AS n_distinct
-        FROM {table}
+        FROM documents
         GROUP BY 1
     )
     SELECT source, n_docs, n_distinct,
@@ -505,13 +435,7 @@ QW_BUCKETS = 1_000_000
 
 
 def quality_weighted_sample(
-    df: DataFrame,
-    *,
-    base_rate: float = QW_BASE_RATE,
-    salt: str = QW_SALT,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
+    df: DataFrame, *, base_rate: float = QW_BASE_RATE
 ) -> DataFrame:
     """Deterministic importance sampling: keep each document with
     probability ``base_rate × quality_weight`` — the continuous-weight
@@ -529,40 +453,34 @@ def quality_weighted_sample(
     — the differential is exact despite the 'randomness'."""
     from .text import tokens
 
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     weight = F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
     u = (
-        hash60(F.concat(F.lit(salt), F.col(id_col).cast("string"))) % QW_BUCKETS
+        hash60(F.concat(F.lit(QW_SALT), F.col("doc_id").cast("string"))) % QW_BUCKETS
     ).cast("double") / F.lit(float(QW_BUCKETS))
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(source_col).alias("source"),
+        F.col("doc_id"),
+        F.col("source"),
         weight.alias("quality_weight"),
         u.alias("u"),
     ).where(F.col("u") < base_rate * F.col("quality_weight")).drop("u")
 
 
-def sql_quality_weighted_sample(
-    table: str = "documents",
-    *,
-    base_rate: float = QW_BASE_RATE,
-    salt: str = QW_SALT,
-    text_col: str = "text",
-) -> str:
+def sql_quality_weighted_sample() -> str:
     from .text import sql_tokens
 
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     return f"""
     WITH t AS (
         SELECT doc_id, source,
                CAST(len(list_distinct({toks})) AS DOUBLE)
                  / CAST(len({toks}) AS DOUBLE) AS quality_weight,
-               CAST({sql_hash60(f"'{salt}' || CAST(doc_id AS VARCHAR)")}
+               CAST({sql_hash60(f"'{QW_SALT}' || CAST(doc_id AS VARCHAR)")}
                     % {QW_BUCKETS} AS DOUBLE) / {float(QW_BUCKETS)} AS u
-        FROM {table}
+        FROM documents
     )
     SELECT doc_id, source, quality_weight
-    FROM t WHERE u < {base_rate} * quality_weight
+    FROM t WHERE u < {QW_BASE_RATE} * quality_weight
     """
 
 
@@ -574,13 +492,7 @@ WS_MICRO = 1_000_000  # sample-key quantization: integer micro-nats
 
 
 def weighted_doc_sample(
-    df: DataFrame,
-    *,
-    k: int = WS_K,
-    salt: str = WS_SALT,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
+    df: DataFrame, *, k: int = WS_K, salt: str = WS_SALT
 ) -> DataFrame:
     """Exactly-``k`` weighted sampling WITHOUT replacement
     (Efraimidis–Spirakis exponential keys): each document draws priority
@@ -604,20 +516,20 @@ def weighted_doc_sample(
     """
     from .text import tokens
 
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     weight = (
         F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
     )
     u = (
-        (hash60(F.concat(F.lit(salt), F.col(id_col).cast("string"))) % QW_BUCKETS)
+        (hash60(F.concat(F.lit(salt), F.col("doc_id").cast("string"))) % QW_BUCKETS)
         + 1
     ).cast("double") / F.lit(float(QW_BUCKETS + 1))
     key_micro = F.round(F.log(u) / weight * WS_MICRO).cast("bigint")
     return (
-        df.filter(F.col(text_col).isNotNull())
+        df.filter(F.col("text").isNotNull())
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(source_col).alias("source"),
+            F.col("doc_id"),
+            F.col("source"),
             weight.alias("quality_weight"),
             key_micro.alias("sample_key_micro"),
         )
@@ -626,19 +538,13 @@ def weighted_doc_sample(
     )
 
 
-def sql_weighted_doc_sample(
-    table: str = "documents",
-    *,
-    k: int = WS_K,
-    salt: str = WS_SALT,
-    text_col: str = "text",
-) -> str:
+def sql_weighted_doc_sample() -> str:
     """DuckDB twin of :func:`weighted_doc_sample` (same hash, same
     micro-nat quantization, same tie-break)."""
     from .text import sql_tokens
 
-    toks = sql_tokens(text_col)
-    h = sql_hash60(f"'{salt}' || CAST(doc_id AS VARCHAR)")
+    toks = sql_tokens("text")
+    h = sql_hash60(f"'{WS_SALT}' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH t AS (
         SELECT doc_id, source,
@@ -646,14 +552,14 @@ def sql_weighted_doc_sample(
                  / CAST(len({toks}) AS DOUBLE) AS quality_weight,
                CAST(({h}) % {QW_BUCKETS} + 1 AS DOUBLE)
                  / {float(QW_BUCKETS + 1)} AS u
-        FROM {table} WHERE {text_col} IS NOT NULL
+        FROM documents WHERE text IS NOT NULL
     )
     SELECT doc_id, source, quality_weight,
            CAST(ROUND(ln(u) / quality_weight * {WS_MICRO}) AS BIGINT)
                AS sample_key_micro
     FROM t
     ORDER BY sample_key_micro DESC, doc_id ASC
-    LIMIT {k}
+    LIMIT {WS_K}
     """
 
 
@@ -666,12 +572,7 @@ HOT_NGRAM_TOP = 20
 
 
 def hot_ngrams(
-    df: DataFrame,
-    *,
-    min_docs: int = HOT_NGRAM_MIN_DOCS,
-    top: int = HOT_NGRAM_TOP,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, *, min_docs: int = HOT_NGRAM_MIN_DOCS, top: int = HOT_NGRAM_TOP
 ) -> DataFrame:
     """(gram, n_docs, n_occurrences): the word n-grams repeated across the
     most documents — the corpus-wide boilerplate report (nav bars, cookie
@@ -690,8 +591,8 @@ def hot_ngrams(
 
     per_doc = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(gram_strings(F.col(text_col))).alias("gram"),
+            F.col("doc_id"),
+            F.explode(gram_strings(F.col("text"))).alias("gram"),
         )
         .groupBy("gram", "doc_id")
         .agg(F.count(F.lit(1)).alias("occ"))
@@ -712,18 +613,12 @@ def hot_ngrams(
     )
 
 
-def sql_hot_ngrams(
-    table: str = "documents",
-    *,
-    min_docs: int = HOT_NGRAM_MIN_DOCS,
-    top: int = HOT_NGRAM_TOP,
-    text_col: str = "text",
-) -> str:
+def sql_hot_ngrams() -> str:
     from .text import sql_gram_strings_over_w, sql_tokens
 
     return f"""
     WITH toks AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     g AS (
         SELECT doc_id, unnest({sql_gram_strings_over_w()}) AS gram FROM toks
@@ -736,11 +631,11 @@ def sql_hot_ngrams(
            CAST(SUM(occ) AS BIGINT) AS n_occurrences
     FROM pd
     GROUP BY 1
-    HAVING COUNT(*) >= {min_docs}
+    HAVING COUNT(*) >= {HOT_NGRAM_MIN_DOCS}
     ORDER BY n_docs DESC NULLS LAST,
              n_occurrences DESC NULLS LAST,
              gram ASC NULLS FIRST
-    LIMIT {top}
+    LIMIT {HOT_NGRAM_TOP}
     """
 
 
@@ -751,17 +646,10 @@ def sql_hot_ngrams(
 QP_CUTOFF = 0.25  # drop the bottom quartile of each language
 
 
-def quality_percentile_filter(
-    df: DataFrame,
-    *,
-    cutoff: float = QP_CUTOFF,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
+def quality_percentile_filter(df: DataFrame) -> DataFrame:
     """Documents above the per-language quality percentile: score = the
     type-token ratio (repetition penalty), rank = percent_rank WITHIN each
-    language, keep everything at or above ``cutoff``.
+    language, keep everything at or above ``QP_CUTOFF``.
 
     Ranking per language instead of globally is the point: a single global
     threshold lets high-resource languages crowd out low-resource ones
@@ -776,7 +664,7 @@ def quality_percentile_filter(
     exact distincts; the exact form stays for the oracle."""
     from .text import tokens
 
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     score = (
         F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
     )
@@ -785,30 +673,25 @@ def quality_percentile_filter(
     )
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(lang_col).alias("lang"),
+            F.col("doc_id"),
+            F.col("lang"),
             score.alias("score"),
         )
         .withColumn("pct", F.cume_dist().over(w))
-        .filter(F.col("pct") > cutoff)
+        .filter(F.col("pct") > QP_CUTOFF)
     )
 
 
-def sql_quality_percentile_filter(
-    table: str = "documents",
-    *,
-    cutoff: float = QP_CUTOFF,
-    text_col: str = "text",
-) -> str:
+def sql_quality_percentile_filter() -> str:
     from .text import sql_tokens
 
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     return f"""
     WITH s AS (
         SELECT doc_id, lang,
                CAST(len(list_distinct({toks})) AS DOUBLE)
                  / CAST(len({toks}) AS DOUBLE) AS score
-        FROM {table}
+        FROM documents
     )
     SELECT doc_id, lang, score,
            cume_dist() OVER (
@@ -816,7 +699,7 @@ def sql_quality_percentile_filter(
                ORDER BY score ASC NULLS FIRST, doc_id ASC NULLS FIRST
            ) AS pct
     FROM s
-    QUALIFY pct > {cutoff}
+    QUALIFY pct > {QP_CUTOFF}
     """
 
 
@@ -827,20 +710,14 @@ def sql_quality_percentile_filter(
 VOCAB_TOP = 32
 
 
-def vocab_top_tokens(
-    df: DataFrame,
-    *,
-    top: int = VOCAB_TOP,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_top_tokens(df: DataFrame) -> DataFrame:
     """(token, n_docs, n_occurrences, rank): the corpus frequency table a
     tokenizer trainer reads first — the *building* side of the vocab pair
     whose *inference* side is :func:`text.vocab_token_counts` (greedy
     longest-match against a fixed vocab).
 
     Same two-level aggregation as :func:`hot_ngrams` (map-side collapse to
-    (token, doc), then per-token counts). The global top-``top`` is a
+    (token, doc), then per-token counts). The global top-``VOCAB_TOP`` is a
     ``Sort+Limit`` pair Spark plans as TakeOrderedAndProject — per-partition
     top-k then a k×partitions merge, so not even the vocabulary-sized
     aggregate funnels through one sort (the last unpartitioned window in
@@ -851,8 +728,8 @@ def vocab_top_tokens(
 
     per_doc = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.col(text_col))).alias("token"),
+            F.col("doc_id"),
+            F.explode(tokens(F.col("text"))).alias("token"),
         )
         .groupBy("token", "doc_id")
         .agg(F.count(F.lit(1)).alias("occ"))
@@ -863,7 +740,7 @@ def vocab_top_tokens(
     )
     topk = counts.orderBy(
         F.col("n_occurrences").desc_nulls_last(), F.col("token").asc_nulls_first()
-    ).limit(top)
+    ).limit(VOCAB_TOP)
     ahead = topk.select(
         F.col("token").alias("_t2"), F.col("n_occurrences").alias("_n2")
     )
@@ -877,17 +754,12 @@ def vocab_top_tokens(
     )
 
 
-def sql_vocab_top_tokens(
-    table: str = "documents",
-    *,
-    top: int = VOCAB_TOP,
-    text_col: str = "text",
-) -> str:
+def sql_vocab_top_tokens() -> str:
     from .text import sql_tokens
 
     return f"""
     WITH t AS (
-        SELECT doc_id, unnest({sql_tokens(text_col)}) AS token FROM {table}
+        SELECT doc_id, unnest({sql_tokens('text')}) AS token FROM documents
     ),
     pd AS (
         SELECT token, doc_id, COUNT(*) AS occ FROM t GROUP BY 1, 2
@@ -903,7 +775,7 @@ def sql_vocab_top_tokens(
                ORDER BY n_occurrences DESC NULLS LAST, token ASC NULLS FIRST
            ) AS INT) AS rank
     FROM c
-    QUALIFY rank <= {top}
+    QUALIFY rank <= {VOCAB_TOP}
     """
 
 
@@ -914,13 +786,7 @@ def sql_vocab_top_tokens(
 OOV_VOCAB_TOP = 256
 
 
-def doc_oov_rate(
-    df: DataFrame,
-    *,
-    top: int = OOV_VOCAB_TOP,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_oov_rate(df: DataFrame, *, top: int = OOV_VOCAB_TOP) -> DataFrame:
     """(doc_id, n_tokens, n_oov, oov_rate): the fraction of each
     document's token INSTANCES that fall outside the corpus's top-``top``
     vocabulary — the coverage/quality signal tokenizer and mixing
@@ -939,9 +805,9 @@ def doc_oov_rate(
     """
     from .text import tokens
 
-    t = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("token"),
+    t = df.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("token"),
     )
     counts = t.groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
     vocab = (
@@ -962,7 +828,7 @@ def doc_oov_rate(
             .alias("n_oov"),
         )
         .select(
-            F.col("doc_id").alias(id_col),
+            F.col("doc_id"),
             "n_tokens",
             "n_oov",
             (
@@ -972,18 +838,13 @@ def doc_oov_rate(
     )
 
 
-def sql_doc_oov_rate(
-    table: str = "documents",
-    *,
-    top: int = OOV_VOCAB_TOP,
-    text_col: str = "text",
-) -> str:
+def sql_doc_oov_rate() -> str:
     from .text import sql_tokens
 
     return f"""
     WITH t AS (
-        SELECT doc_id, unnest({sql_tokens(text_col)}) AS token
-        FROM {table} WHERE {text_col} IS NOT NULL
+        SELECT doc_id, unnest({sql_tokens('text')}) AS token
+        FROM documents WHERE text IS NOT NULL
     ),
     c AS (
         SELECT token, CAST(COUNT(*) AS BIGINT) AS n_occurrences
@@ -992,7 +853,7 @@ def sql_doc_oov_rate(
     vocab AS (
         SELECT token FROM c
         ORDER BY n_occurrences DESC NULLS LAST, token ASC NULLS FIRST
-        LIMIT {top}
+        LIMIT {OOV_VOCAB_TOP}
     )
     SELECT t.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -1011,12 +872,7 @@ def sql_doc_oov_rate(
 
 
 def strip_boilerplate(
-    df: DataFrame,
-    *,
-    min_docs: int = HOT_NGRAM_MIN_DOCS,
-    top: int = HOT_NGRAM_TOP,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, *, min_docs: int = HOT_NGRAM_MIN_DOCS
 ) -> DataFrame:
     """(doc_id, text_clean, n_tokens, n_removed): documents with every
     token covered by a hot-n-gram occurrence removed — the scrub step the
@@ -1035,9 +891,7 @@ def strip_boilerplate(
     from .text import SHINGLE_N, TOKEN_SEP, _grams_over, tokens
 
     n = SHINGLE_N
-    hot = hot_ngrams(
-        df, min_docs=min_docs, top=top, text_col=text_col, id_col=id_col
-    ).select("gram")
+    hot = hot_ngrams(df, min_docs=min_docs).select("gram")
     hotset = hot.agg(F.collect_set("gram").alias("_hot"))
 
     def clean(t: Column, hotarr: Column) -> Column:
@@ -1073,9 +927,9 @@ def strip_boilerplate(
         )
 
     out = df.crossJoin(F.broadcast(hotset)).select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         bind(
-            tokens(F.col(text_col)),
+            tokens(F.col("text")),
             lambda t: F.struct(
                 F.size(t).alias("n_tokens"),
                 clean(t, F.col("_hot")).alias("cleaned"),
@@ -1092,24 +946,16 @@ def strip_boilerplate(
     )
 
 
-def sql_strip_boilerplate(
-    table: str = "documents",
-    *,
-    min_docs: int = HOT_NGRAM_MIN_DOCS,
-    top: int = HOT_NGRAM_TOP,
-    text_col: str = "text",
-) -> str:
+def sql_strip_boilerplate() -> str:
     from .text import SHINGLE_N, sql_gram_strings_over_w, sql_tokens
 
     n = SHINGLE_N
-    hot_sql = sql_hot_ngrams(
-        table, min_docs=min_docs, top=top, text_col=text_col
-    )
+    hot_sql = sql_hot_ngrams()
     return f"""
     WITH hotrep AS ({hot_sql}),
     hotset AS (SELECT list(gram) AS hot FROM hotrep),
     docs AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     marked AS (
         SELECT doc_id, w,
@@ -1138,14 +984,7 @@ def sql_strip_boilerplate(
 TEMP_ALPHA = 0.5  # alpha < 1 flattens the source distribution
 
 
-def temperature_mix_sample(
-    df: DataFrame,
-    *,
-    alpha: float = TEMP_ALPHA,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    salt: str = "temp:v1",
-) -> DataFrame:
+def temperature_mix_sample(df: DataFrame, *, alpha: float = TEMP_ALPHA) -> DataFrame:
     """Temperature (alpha) sampling across sources: keep each source at a
     rate proportional to ``share^(alpha-1)`` so the SAMPLED distribution
     follows ``share^alpha`` — the standard multilingual/multi-source
@@ -1170,7 +1009,7 @@ def temperature_mix_sample(
     # the counts and once for the sampling pass (round-11 scan audit: it
     # was five corpus scans before)
     counts = (
-        df.groupBy(F.col(source_col).alias("_src"))
+        df.groupBy(F.col("source").alias("_src"))
         .agg(F.count(F.lit(1)).alias("_n"))
         .persist()
     )
@@ -1189,13 +1028,13 @@ def temperature_mix_sample(
         "_src", (F.col("_raw") / F.col("_mx")).alias("keep_rate")
     )
     u = (
-        hash60(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+        hash60(F.concat(F.lit("temp:v1"), F.col("doc_id").cast("string")))
         % QW_BUCKETS
     ).cast("double") / F.lit(float(QW_BUCKETS))
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(source_col).alias("source"),
+            F.col("doc_id"),
+            F.col("source"),
             u.alias("_u"),
         )
         .join(F.broadcast(rates), F.col("source") == F.col("_src"))
@@ -1204,21 +1043,16 @@ def temperature_mix_sample(
     )
 
 
-def sql_temperature_mix_sample(
-    table: str = "documents",
-    *,
-    alpha: float = TEMP_ALPHA,
-    salt: str = "temp:v1",
-) -> str:
-    h = sql_hash60(f"'{salt}' || CAST(doc_id AS VARCHAR)")
+def sql_temperature_mix_sample() -> str:
+    h = sql_hash60("'temp:v1' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH counts AS (
-        SELECT source AS _src, COUNT(*) AS _n FROM {table} GROUP BY 1
+        SELECT source AS _src, COUNT(*) AS _n FROM documents GROUP BY 1
     ),
     rated AS (
         SELECT _src,
                pow(CAST(_n AS DOUBLE) / (SELECT SUM(_n) FROM counts),
-                   {alpha - 1.0}) AS _raw
+                   {TEMP_ALPHA - 1.0}) AS _raw
         FROM counts
     ),
     rates AS (
@@ -1226,7 +1060,7 @@ def sql_temperature_mix_sample(
         FROM rated
     )
     SELECT d.doc_id, d.source, r.keep_rate
-    FROM {table} d JOIN rates r ON d.source = r._src
+    FROM documents d JOIN rates r ON d.source = r._src
     WHERE CAST(({h}) % {QW_BUCKETS} AS DOUBLE) / {float(QW_BUCKETS)}
           < r.keep_rate
     """
@@ -1239,13 +1073,7 @@ def sql_temperature_mix_sample(
 LM_MICRO = 1_000_000  # log-prob quantization: integer micro-nats
 
 
-def doc_lm_score(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def doc_lm_score(df: DataFrame, *, carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, n_bigrams, avg_nll_micro): each document scored under a
     bigram language model TRAINED ON THE CORPUS ITSELF — the
     perplexity-proxy quality filter (CCNet's trick with KenLM, here with
@@ -1271,7 +1099,7 @@ def doc_lm_score(
     # bigram-stream passes, count-then-score, are the model's inherent
     # minimum since c(w1 w2) must be global before any doc can be scored)
     uni = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+        df.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
         .persist()
@@ -1281,9 +1109,9 @@ def doc_lm_score(
     # lang), so composers (lm_score_bucket_mix) don't pay a fourth corpus
     # scan just to re-join them.
     big = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(cc) for cc in carry_cols],
-        F.explode(gram_strings(F.col(text_col), 2)).alias("g"),
+        F.explode(gram_strings(F.col("text"), 2)).alias("g"),
     )
     bigc = big.groupBy("g").agg(F.count(F.lit(1)).alias("c2"))
     nll_micro = F.round(
@@ -1308,14 +1136,12 @@ def doc_lm_score(
     )
 
 
-def sql_doc_lm_score(
-    table: str = "documents", *, text_col: str = "text"
-) -> str:
+def sql_doc_lm_score() -> str:
     from .text import sql_gram_strings_over_w, sql_tokens
 
     return f"""
     WITH toks AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     uni AS (
         SELECT t.tok AS w, COUNT(*) AS c1
@@ -1350,9 +1176,7 @@ def sql_doc_lm_score(
 # ---------------------------------------------------------------------------
 
 
-def corpus_shuffle(
-    docs: DataFrame, *, seed: str = "shuffle:42", n_shards: int = 16
-) -> DataFrame:
+def corpus_shuffle(docs: DataFrame) -> DataFrame:
     """Deterministic global random permutation of a corpus, materialized as
     (shard, position-within-shard) — the training-order randomization step
     before examples are fed to a data loader.
@@ -1362,14 +1186,14 @@ def corpus_shuffle(
     seeded 60-bit content-independent hash key; ``shard = key % n_shards``
     spreads docs uniformly with NO total sort (hash-partition shuffle
     only), and a per-shard rank orders within shards. Reading shards in
-    order replays one fixed permutation; changing ``seed`` is a fresh
+    order replays one fixed permutation; changing the ``shuffle:42`` seed is a fresh
     epoch's permutation. Shard counts scale with the cluster, the per-
     shard sort stays partition-local, and the hash key doubles as the
     resume cursor (skip (shard, pos) pairs already consumed).
     """
     keyed = docs.select(
         "doc_id",
-        hash60(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string"))).alias(
+        hash60(F.concat(F.lit("shuffle:42:"), F.col("doc_id").cast("string"))).alias(
             "shuffle_key"
         ),
     )
@@ -1377,22 +1201,22 @@ def corpus_shuffle(
         F.asc("shuffle_key"), F.asc("doc_id")
     )
     return (
-        keyed.withColumn("shard", (F.col("shuffle_key") % n_shards).cast("int"))
+        keyed.withColumn("shard", (F.col("shuffle_key") % 16).cast("int"))
         .withColumn("pos", F.row_number().over(w))
         .select("doc_id", "shuffle_key", "shard", "pos")
     )
 
 
-def sql_corpus_shuffle(seed: str = "shuffle:42", n_shards: int = 16) -> str:
-    key = sql_hash60(f"'{seed}:' || CAST(doc_id AS VARCHAR)")
+def sql_corpus_shuffle() -> str:
+    key = sql_hash60("'shuffle:42:' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH keyed AS (
         SELECT doc_id, {key} AS shuffle_key FROM documents
     )
     SELECT doc_id, shuffle_key,
-           CAST(shuffle_key % {n_shards} AS INT) AS shard,
+           CAST(shuffle_key % 16 AS INT) AS shard,
            CAST(ROW_NUMBER() OVER (
-               PARTITION BY shuffle_key % {n_shards}
+               PARTITION BY shuffle_key % 16
                ORDER BY shuffle_key ASC NULLS FIRST, doc_id ASC NULLS FIRST
            ) AS INT) AS pos
     FROM keyed
@@ -1406,17 +1230,10 @@ def sql_corpus_shuffle(seed: str = "shuffle:42", n_shards: int = 16) -> str:
 BUDGET_TOKENS_PER_SOURCE = 800
 
 
-def token_budget_sample(
-    docs: DataFrame,
-    *,
-    budget: int = BUDGET_TOKENS_PER_SOURCE,
-    text_col: str = "text",
-    source_col: str = "source",
-    seed: str = "budget:v1",
-) -> DataFrame:
+def token_budget_sample(docs: DataFrame) -> DataFrame:
     """Cap each source's contribution at a token budget: docs are taken in
     seeded-hash order (an unbiased sample, not first-N file order) until
-    the source's running token total passes ``budget``; the doc that
+    the source's running token total passes ``BUDGET_TOKENS_PER_SOURCE``; the doc that
     crosses the line is kept so every source with data reaches its budget.
 
     This is the budgeted-mixture step a real pretraining recipe runs —
@@ -1435,32 +1252,30 @@ def token_budget_sample(
     # ONE token definition engine-wide: text.tokens()/TOKEN_SEP (the same
     # counter pack_token_bins budgets by) — a second hardcoded separator
     # here would let the two samplers disagree about what a token is.
-    toks = F.size(tokens(F.col(text_col)))
+    toks = F.size(tokens(F.col("text")))
     keyed = docs.select(
         "doc_id",
-        source_col,
+        "source",
         toks.alias("n_tokens"),
         hash60(
-            F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string"))
+            F.concat(F.lit("budget:v1:"), F.col("doc_id").cast("string"))
         ).alias("_k"),
     )
     w = (
-        Window.partitionBy(source_col)
+        Window.partitionBy("source")
         .orderBy(F.asc("_k"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = keyed.withColumn("cum_tokens", F.sum("n_tokens").over(w))
     return cum.filter(
-        F.col("cum_tokens") - F.col("n_tokens") < budget
-    ).select("doc_id", source_col, "n_tokens", "cum_tokens")
+        F.col("cum_tokens") - F.col("n_tokens") < BUDGET_TOKENS_PER_SOURCE
+    ).select("doc_id", "source", "n_tokens", "cum_tokens")
 
 
-def sql_token_budget_sample(
-    budget: int = BUDGET_TOKENS_PER_SOURCE, seed: str = "budget:v1"
-) -> str:
+def sql_token_budget_sample() -> str:
     from .text import sql_tokens
 
-    key = sql_hash60(f"'{seed}:' || CAST(doc_id AS VARCHAR)")
+    key = sql_hash60("'budget:v1:' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH keyed AS (
         SELECT doc_id, source,
@@ -1479,7 +1294,7 @@ def sql_token_budget_sample(
     )
     SELECT doc_id, source, n_tokens, cum_tokens
     FROM cum
-    WHERE cum_tokens - n_tokens < {budget}
+    WHERE cum_tokens - n_tokens < {BUDGET_TOKENS_PER_SOURCE}
     """
 
 
@@ -1544,9 +1359,7 @@ def token_posting_lists(
     )
 
 
-def sql_token_posting_lists(
-    top_tokens: int = POSTING_TOP_TOKENS, cap: int = POSTING_CAP
-) -> str:
+def sql_token_posting_lists() -> str:
     from .text import sql_tokens
 
     return f"""
@@ -1561,7 +1374,7 @@ def sql_token_posting_lists(
     ),
     top AS (
         SELECT token, df FROM dfreq
-        ORDER BY df DESC, token ASC LIMIT {top_tokens}
+        ORDER BY df DESC, token ASC LIMIT {POSTING_TOP_TOKENS}
     ),
     capped AS (
         SELECT tok.token, top.df, tok.doc_id,
@@ -1573,7 +1386,7 @@ def sql_token_posting_lists(
     )
     SELECT token, df,
            array_to_string(list_sort(list(doc_id)), ',') AS postings
-    FROM capped WHERE rn <= {cap}
+    FROM capped WHERE rn <= {POSTING_CAP}
     GROUP BY token, df
     """
 
@@ -1583,13 +1396,7 @@ def sql_token_posting_lists(
 # ---------------------------------------------------------------------------
 
 
-def corpus_snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    content_col: str = "text",
-) -> DataFrame:
+def corpus_snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """(status, n_docs): added / removed / changed / unchanged counts
     between two corpus snapshots, comparing 60-bit content hashes per
     document id — the audit line a corpus-refresh job emits so a mixing
@@ -1605,8 +1412,8 @@ def corpus_snapshot_diff(
     snapshots is `changed`, not silently `unchanged`).
     """
     h = lambda c: hash60(F.coalesce(F.col(c), F.lit("")))  # noqa: E731
-    o = old.select(F.col(id_col).alias("doc_id"), h(content_col).alias("_h_old"))
-    n = new.select(F.col(id_col).alias("doc_id"), h(content_col).alias("_h_new"))
+    o = old.select(F.col("doc_id"), h("text").alias("_h_old"))
+    n = new.select(F.col("doc_id"), h("text").alias("_h_new"))
     status = (
         F.when(F.col("_h_old").isNull(), F.lit("added"))
         .when(F.col("_h_new").isNull(), F.lit("removed"))
@@ -1622,25 +1429,20 @@ def corpus_snapshot_diff(
 
 
 def sql_corpus_snapshot_diff(
-    old_where: str,
-    new_where: str,
-    new_text: str = "text",
-    table: str = "documents",
-    *,
-    content_col: str = "text",
+    old_where: str, new_where: str, new_text: str = "text"
 ) -> str:
     """DuckDB twin of :func:`corpus_snapshot_diff` over two filtered
-    views of ``table`` (``old_where`` / ``new_where`` pick the snapshot
+    views of ``documents`` (``old_where`` / ``new_where`` pick the snapshot
     rows; ``new_text`` lets the new side rewrite text, mirroring how the
     registered query synthesizes a changed cohort)."""
-    h_old = sql_hash60(f"COALESCE({content_col}, '')")
+    h_old = sql_hash60("COALESCE(text, '')")
     h_new = sql_hash60(f"COALESCE({new_text}, '')")
     return f"""
     WITH o AS (
-        SELECT doc_id, {h_old} AS h_old FROM {table} WHERE {old_where}
+        SELECT doc_id, {h_old} AS h_old FROM documents WHERE {old_where}
     ),
     n AS (
-        SELECT doc_id, {h_new} AS h_new FROM {table} WHERE {new_where}
+        SELECT doc_id, {h_new} AS h_new FROM documents WHERE {new_where}
     )
     SELECT CASE WHEN h_old IS NULL THEN 'added'
                 WHEN h_new IS NULL THEN 'removed'
@@ -1758,9 +1560,7 @@ def _mg_merge(capacity: int):
 _MG_SUMMARY_SCHEMA = "token string, weight long"
 
 
-def mg_summary(
-    df: DataFrame, *, capacity: int = MG_CAPACITY, text_col: str = "text"
-) -> DataFrame:
+def mg_summary(df: DataFrame, *, capacity: int = MG_CAPACITY) -> DataFrame:
     """The corpus-wide Misra-Gries summary as a <= capacity+1 row frame.
 
     Tree shape: per-partition summaries (zero shuffle, O(capacity) state
@@ -1773,7 +1573,7 @@ def mg_summary(
     """
     from .text import tokens
 
-    stream = df.select(F.explode(tokens(F.col(text_col))).alias("token"))
+    stream = df.select(F.explode(tokens(F.col("text"))).alias("token"))
     sketch = stream.mapInPandas(_mg_partition(capacity), _MG_SUMMARY_SCHEMA)
     if sketch.rdd.getNumPartitions() > 32:
         sketch = sketch.repartition(32, F.col("token")).mapInPandas(
@@ -1784,12 +1584,7 @@ def mg_summary(
     )
 
 
-def frequent_tokens_sketch(
-    df: DataFrame,
-    *,
-    capacity: int = MG_CAPACITY,
-    text_col: str = "text",
-) -> DataFrame:
+def frequent_tokens_sketch(df: DataFrame, *, capacity: int = MG_CAPACITY) -> DataFrame:
     """(token, n_occ, share): every token whose corpus-wide occurrence
     share strictly exceeds 1/(capacity+1), with EXACT counts — found
     without ever shuffling the vocabulary.
@@ -1822,10 +1617,10 @@ def frequent_tokens_sketch(
     from .text import tokens
 
     def stream():
-        return df.select(F.explode(tokens(F.col(text_col))).alias("token"))
+        return df.select(F.explode(tokens(F.col("text"))).alias("token"))
 
     rows = mg_summary(
-        df, capacity=capacity, text_col=text_col
+        df, capacity=capacity
     ).collect()  # O(capacity): <= capacity+1 rows at any partitioning
     n_total = sum(r.weight for r in rows if r.token is None)
     cands = [(r.token,) for r in rows if r.token is not None]
@@ -1855,12 +1650,7 @@ def frequent_tokens_sketch(
     )
 
 
-def sql_frequent_tokens_sketch(
-    table: str = "documents",
-    *,
-    capacity: int = MG_CAPACITY,
-    text_col: str = "text",
-) -> str:
+def sql_frequent_tokens_sketch() -> str:
     """DuckDB twin: the brute-force full groupBy with the same strict
     share threshold — equality with the sketch+verify path is the MG
     superset guarantee made testable."""
@@ -1868,7 +1658,7 @@ def sql_frequent_tokens_sketch(
 
     return f"""
     WITH t AS (
-        SELECT unnest({sql_tokens(text_col)}) AS token FROM {table}
+        SELECT unnest({sql_tokens('text')}) AS token FROM documents
     ),
     tot AS (SELECT COUNT(*) AS n FROM t),
     c AS (
@@ -1877,7 +1667,7 @@ def sql_frequent_tokens_sketch(
     SELECT token, n_occ,
            CAST(n_occ AS DOUBLE) / (SELECT n FROM tot) AS share
     FROM c
-    WHERE CAST(n_occ AS HUGEINT) * {capacity + 1} > (SELECT n FROM tot)
+    WHERE CAST(n_occ AS HUGEINT) * {MG_CAPACITY + 1} > (SELECT n FROM tot)
     """
 
 
@@ -1891,11 +1681,7 @@ PMI_TOP_K = 50
 
 
 def bigram_pmi(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    min_pair: int = PMI_MIN_PAIR,
-    k: int = PMI_TOP_K,
+    df: DataFrame, *, min_pair: int = PMI_MIN_PAIR, k: int = PMI_TOP_K
 ) -> DataFrame:
     """Top-``k`` adjacent-token collocations by pointwise mutual
     information — the statistical step behind phrase detection and
@@ -1927,14 +1713,12 @@ def bigram_pmi(
     # (caught in the round-11 PLANS.md audit). Now exactly two corpus
     # scans: one per explode.
     uni = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+        df.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
         .persist()
     )
-    big = df.select(
-        F.explode(gram_strings(F.col(text_col), 2)).alias("g")
-    )
+    big = df.select(F.explode(gram_strings(F.col("text"), 2)).alias("g"))
     bigc = big.groupBy("g").agg(F.count(F.lit(1)).alias("c2")).persist()
     # both corpus scalars derive from the persisted aggregates by exact
     # bigint identity — every token occurrence is counted once in uni
@@ -1983,18 +1767,12 @@ def bigram_pmi(
     )
 
 
-def sql_bigram_pmi(
-    table: str = "documents",
-    *,
-    text_col: str = "text",
-    min_pair: int = PMI_MIN_PAIR,
-    k: int = PMI_TOP_K,
-) -> str:
+def sql_bigram_pmi() -> str:
     from .text import sql_gram_strings_over_w, sql_tokens
 
     return f"""
     WITH toks AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     uni AS (
         SELECT t.tok AS w, COUNT(*) AS c1
@@ -2012,7 +1790,7 @@ def sql_bigram_pmi(
     bigc AS (SELECT g, COUNT(*) AS c2 FROM big GROUP BY 1),
     pairs AS (
         SELECT split_part(g, ' ', 1) AS w1, split_part(g, ' ', 2) AS w2, c2
-        FROM bigc WHERE c2 >= {min_pair}
+        FROM bigc WHERE c2 >= {PMI_MIN_PAIR}
     )
     SELECT p.w1, p.w2,
            CAST(p.c2 AS BIGINT) AS n_pair,
@@ -2024,7 +1802,7 @@ def sql_bigram_pmi(
     JOIN uni b ON p.w2 = b.w
     CROSS JOIN tot
     ORDER BY pmi_micro DESC NULLS LAST, w1 ASC NULLS FIRST, w2 ASC NULLS FIRST
-    LIMIT {k}
+    LIMIT {PMI_TOP_K}
     """
 
 
@@ -2033,9 +1811,7 @@ def sql_bigram_pmi(
 # ---------------------------------------------------------------------------
 
 
-def length_bucket_stats(
-    documents: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def length_bucket_stats(documents: DataFrame) -> DataFrame:
     """Power-of-two token-length buckets with padding-waste accounting —
     the report behind length-bucketed batch assembly: sequences padded to
     their bucket capacity waste ``capacity − n_tokens`` positions, and
@@ -2053,7 +1829,7 @@ def length_bucket_stats(
     """
     from .text import tokens
 
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     n_tok = F.size(tokens(text))
     bucket = (F.length(F.bin(n_tok.cast("bigint"))) - F.lit(1)).cast("int")
     return (
@@ -2080,16 +1856,14 @@ def length_bucket_stats(
     )
 
 
-def sql_length_bucket_stats(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_length_bucket_stats() -> str:
     from .text import sql_tokens
 
     return f"""
     WITH toks AS (
-        SELECT len({sql_tokens(f"COALESCE({text_col}, '')")})::BIGINT AS n
-        FROM {table}
-        WHERE length(trim(COALESCE({text_col}, ''))) > 0
+        SELECT len({sql_tokens("COALESCE(text, '')")})::BIGINT AS n
+        FROM documents
+        WHERE length(trim(COALESCE(text, ''))) > 0
     ),
     b AS (
         SELECT n,
@@ -2112,11 +1886,7 @@ def sql_length_bucket_stats(
 # ---------------------------------------------------------------------------
 
 
-def source_audit_report(
-    documents: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_audit_report(documents: DataFrame) -> DataFrame:
     """Per-source dataset card in ONE corpus scan: volume (docs, chars),
     language spread, and the exact duplicate rate (1 − distinct content
     hashes / docs) — the per-ingest-source summary a data curator reads
@@ -2128,9 +1898,9 @@ def source_audit_report(
     never the text. At 100 TB the cost driver is the corpus scan itself,
     which every column here shares.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     return (
-        documents.groupBy(F.col(source_col).alias("source"))
+        documents.groupBy(F.col("source"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.length(text)).alias("n_chars_total"),
@@ -2145,20 +1915,18 @@ def source_audit_report(
     )
 
 
-def sql_source_audit_report(
-    table: str = "documents", text_col: str = "text"
-) -> str:
-    return f"""
+def sql_source_audit_report() -> str:
+    return """
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(length(COALESCE({text_col}, ''))) AS BIGINT)
+           CAST(SUM(length(COALESCE(text, ''))) AS BIGINT)
                AS n_chars_total,
            CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-           CAST(COUNT(DISTINCT md5(COALESCE({text_col}, ''))) AS BIGINT)
+           CAST(COUNT(DISTINCT md5(COALESCE(text, ''))) AS BIGINT)
                AS n_distinct_texts,
-           CAST(CAST(1.0 - COUNT(DISTINCT md5(COALESCE({text_col}, '')))::DOUBLE
+           CAST(CAST(1.0 - COUNT(DISTINCT md5(COALESCE(text, '')))::DOUBLE
                     / COUNT(*)::DOUBLE AS DECIMAL(18,4)) AS DOUBLE) AS dup_frac
-    FROM {table} GROUP BY 1
+    FROM documents GROUP BY 1
     """
 
 
@@ -2176,12 +1944,7 @@ BM25_TOP_K = 5
 
 
 def bm25_topk(
-    documents: DataFrame,
-    *,
-    k: int = BM25_TOP_K,
-    n_query_docs: int = BM25_QUERY_DOCS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    documents: DataFrame, *, k: int = BM25_TOP_K, n_query_docs: int = BM25_QUERY_DOCS
 ) -> DataFrame:
     """Per-query BM25 top-``k`` documents — the lexical-retrieval twin of
     the embedding ANN tier (``similarity.cosine_topk``). The query set is
@@ -2231,7 +1994,7 @@ def bm25_topk(
     from ..functions import bind
     from .text import tokens
 
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
 
     def run_length_pairs(st: Column, n: Column) -> Column:
         # st is sorted, so equal terms are adjacent: a run starts where
@@ -2260,7 +2023,7 @@ def bm25_topk(
 
     base = (
         documents.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             bind(
                 F.array_sort(F.filter(tokens(c), lambda x: x != "")),
                 lambda st: bind(
@@ -2366,14 +2129,7 @@ def bm25_topk(
     )
 
 
-def sql_bm25_topk(
-    table: str = "documents",
-    *,
-    k: int = BM25_TOP_K,
-    n_query_docs: int = BM25_QUERY_DOCS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def sql_bm25_topk() -> str:
     from .text import sql_tokens
 
     k1p1_b_den = float((BM25_K1_NUM + BM25_K1_DEN) * BM25_B_DEN)  # 44
@@ -2382,9 +2138,9 @@ def sql_bm25_topk(
     k1n_bn = float(BM25_K1_NUM * BM25_B_NUM)  # 18
     return f"""
     WITH tok AS (
-        SELECT {id_col} AS doc_id, t.term
-        FROM {table},
-             unnest({sql_tokens(f"COALESCE({text_col}, '')")}) AS t(term)
+        SELECT doc_id AS doc_id, t.term
+        FROM documents,
+             unnest({sql_tokens("COALESCE(text, '')")}) AS t(term)
         WHERE t.term <> ''
     ),
     tf AS (
@@ -2395,7 +2151,7 @@ def sql_bm25_topk(
         SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1
     ),
     scal AS (
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM {table}) AS n_docs,
+        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
                (SELECT CAST(SUM(dl) AS BIGINT) FROM dl) AS total_len
     ),
     dfreq AS (
@@ -2403,7 +2159,7 @@ def sql_bm25_topk(
     ),
     qterms AS (
         SELECT DISTINCT doc_id AS query_id, term
-        FROM tf WHERE doc_id < {n_query_docs}
+        FROM tf WHERE doc_id < {BM25_QUERY_DOCS}
     ),
     idf AS (
         SELECT q.query_id, q.term,
@@ -2439,7 +2195,7 @@ def sql_bm25_topk(
                ) AS rank
         FROM scored
     )
-    WHERE rank <= {k}
+    WHERE rank <= {BM25_TOP_K}
     """
 
 
@@ -2448,13 +2204,7 @@ def sql_bm25_topk(
 # ---------------------------------------------------------------------------
 
 
-def lm_score_bucket_mix(
-    documents: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
+def lm_score_bucket_mix(documents: DataFrame) -> DataFrame:
     """CCNet's perplexity bucketing (Wenzek et al. 2020): score every
     document under the corpus bigram LM (:func:`doc_lm_score`), then cut
     each LANGUAGE into exact head/middle/tail tertiles by score — head =
@@ -2480,11 +2230,7 @@ def lm_score_bucket_mix(
     Documents with < 2 tokens have no LM score and no row, matching
     doc_lm_score.
     """
-    scores = doc_lm_score(
-        documents, text_col=text_col, id_col=id_col, carry_cols=(lang_col,)
-    )
-    if lang_col != "lang":
-        scores = scores.withColumnRenamed(lang_col, "lang")
+    scores = doc_lm_score(documents, carry_cols=("lang",))
     w = Window.partitionBy("lang").orderBy(
         F.col("avg_nll_micro").asc_nulls_first(), F.col("doc_id").asc_nulls_first()
     )
@@ -2503,24 +2249,19 @@ def lm_score_bucket_mix(
     )
 
 
-def sql_lm_score_bucket_mix(
-    table: str = "documents",
-    *,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> str:
-    lm = sql_doc_lm_score(table, text_col=text_col)
+def sql_lm_score_bucket_mix() -> str:
+    lm = sql_doc_lm_score()
     return f"""
     WITH lm AS ({lm}),
     ranked AS (
-        SELECT lm.doc_id, d.{lang_col} AS lang, lm.avg_nll_micro,
+        SELECT lm.doc_id, d.lang AS lang, lm.avg_nll_micro,
                ROW_NUMBER() OVER (
-                   PARTITION BY d.{lang_col}
+                   PARTITION BY d.lang
                    ORDER BY lm.avg_nll_micro ASC NULLS FIRST,
                             lm.doc_id ASC NULLS FIRST
                ) AS _r,
-               COUNT(*) OVER (PARTITION BY d.{lang_col}) AS _n
-        FROM lm JOIN {table} d ON lm.doc_id = d.doc_id
+               COUNT(*) OVER (PARTITION BY d.lang) AS _n
+        FROM lm JOIN documents d ON lm.doc_id = d.doc_id
     )
     SELECT doc_id, lang, avg_nll_micro,
            CASE WHEN 3 * (_r - 1) < _n THEN 'head'
@@ -2540,15 +2281,9 @@ def sql_lm_score_bucket_mix(
 ZIPF_TOP_RANKS = 1000
 
 
-def vocab_zipf_slope(
-    documents: DataFrame,
-    *,
-    top_ranks: int = ZIPF_TOP_RANKS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_zipf_slope(documents: DataFrame) -> DataFrame:
     """One-row corpus-health report: the OLS slope of ln(frequency) on
-    ln(rank) over the top-``top_ranks`` tokens — natural language sits
+    ln(rank) over the top-``ZIPF_TOP_RANKS`` tokens — natural language sits
     near the Zipf line (slope ≈ −1); template/boilerplate-dominated or
     synthetic corpora bend it, and a drifting slope between snapshots is
     an early corruption signal no per-document filter sees.
@@ -2566,11 +2301,11 @@ def vocab_zipf_slope(
     token_posting_lists discipline) → ranks by the k×k broadcast
     count-ahead join (the ``vocab_top_tokens`` pattern — the registry has
     banned unpartitioned windows since round 7) → one 5-sum aggregate
-    over ≤ ``top_ranks`` rows. The regression state is O(1).
+    over ≤ ``ZIPF_TOP_RANKS`` rows. The regression state is O(1).
     """
     from .text import tokens
 
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     # the ≤ top_ranks-row result feeds BOTH sides of the count-ahead rank
     # join; persisted so the tokenize+agg pipeline isn't re-inlined per
     # side (the round-11 persist discipline — unpersisted this scanned
@@ -2581,7 +2316,7 @@ def vocab_zipf_slope(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("token").asc())
-        .limit(top_ranks)
+        .limit(ZIPF_TOP_RANKS)
         .persist()
     )
     ahead = counts.select(
@@ -2620,23 +2355,18 @@ def vocab_zipf_slope(
     )
 
 
-def sql_vocab_zipf_slope(
-    table: str = "documents",
-    *,
-    top_ranks: int = ZIPF_TOP_RANKS,
-    text_col: str = "text",
-) -> str:
+def sql_vocab_zipf_slope() -> str:
     from .text import sql_tokens
 
     return f"""
     WITH counts AS (
         SELECT t.token, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM {table},
-             unnest({sql_tokens(f"COALESCE({text_col}, '')")}) AS t(token)
+        FROM documents,
+             unnest({sql_tokens("COALESCE(text, '')")}) AS t(token)
         WHERE t.token <> ''
         GROUP BY 1
         ORDER BY cnt DESC, token ASC
-        LIMIT {top_ranks}
+        LIMIT {ZIPF_TOP_RANKS}
     ),
     xy AS (
         SELECT CAST(round(ln(CAST(ROW_NUMBER() OVER (
@@ -2678,14 +2408,7 @@ def sql_vocab_zipf_slope(
 TREND_DAYS = 7
 
 
-def source_dedup_trend(
-    documents: DataFrame,
-    day: Column | None = None,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def source_dedup_trend(documents: DataFrame) -> DataFrame:
     """(source, ingest_day, n_docs, n_dup, dup_frac): per-source exact-
     duplicate rate per ingest day AGAINST EVERYTHING INGESTED BEFORE —
     the temporal twin of :func:`source_audit_report`. A doc counts as a
@@ -2702,15 +2425,14 @@ def source_dedup_trend(
     source, id); then one map-side-combined (source, day) aggregate.
     dup_frac is one double division of exact counts.
     """
-    if day is None:
-        day = (F.col(id_col) % F.lit(TREND_DAYS)).cast("int")
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    day = (F.col("doc_id") % F.lit(TREND_DAYS)).cast("int")
+    text = F.coalesce(F.col("text"), F.lit(""))
     w = Window.partitionBy("_h").orderBy(
-        F.col("ingest_day").asc(), F.col(id_col).asc()
+        F.col("ingest_day").asc(), F.col("doc_id").asc()
     )
     ranked = documents.select(
-        F.col(id_col),
-        F.col(source_col).alias("source"),
+        F.col("doc_id"),
+        F.col("source"),
         day.alias("ingest_day"),
         F.md5(text).alias("_h"),
     ).withColumn("_rn", F.row_number().over(w))
@@ -2731,18 +2453,16 @@ def source_dedup_trend(
     )
 
 
-def sql_source_dedup_trend(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_source_dedup_trend() -> str:
     return f"""
     WITH ranked AS (
         SELECT source,
                CAST(doc_id % {TREND_DAYS} AS INT) AS ingest_day,
                ROW_NUMBER() OVER (
-                   PARTITION BY md5(COALESCE({text_col}, ''))
+                   PARTITION BY md5(COALESCE(text, ''))
                    ORDER BY doc_id % {TREND_DAYS} ASC, doc_id ASC
                ) AS rn
-        FROM {table}
+        FROM documents
     )
     SELECT source, ingest_day,
            CAST(COUNT(*) AS BIGINT) AS n_docs,

@@ -62,12 +62,12 @@ LSH_BANDS = 4
 LSH_ROWS = 3
 assert len(MINHASH_COEFFS) == LSH_BANDS * LSH_ROWS
 
-# Persisted shingle-feature frames keyed by (plan semanticHash, text_col,
-# id_col) — see :func:`shingle_features`.
+# Persisted shingle-feature frames keyed by plan semanticHash — see
+# :func:`shingle_features`.
 _FEATS_MEMO = SessionMemo(8, persisted=True)
 
 # Resolved cluster-label frames (checkpoint-backed) keyed by (plan
-# semanticHash, text_col, id_col, threshold) — see :func:`neardup_clusters`.
+# semanticHash, threshold) — see :func:`neardup_clusters`.
 _CLUSTERS_MEMO = SessionMemo(8)
 
 
@@ -76,9 +76,7 @@ _CLUSTERS_MEMO = SessionMemo(8)
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(
-    df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep one deterministic survivor (min id) per identical content.
 
     The hash routes rows to reducers (fixed-width shuffle KEY), but the
@@ -87,29 +85,24 @@ def exact_dedup(
     therefore cannot merge them; colliding-but-distinct texts form separate
     groups on the same reducer. The full row crosses the exchange either
     way, so the extra grouping column costs nothing. Survivor choice is the
-    minimum ``id_col`` (reproducible, oracle-expressible as
+    minimum ``doc_id`` (reproducible, oracle-expressible as
     ``QUALIFY row_number() = 1``).
     """
-    hashed = ensure_parallelism(df).withColumn("_h", hash60(F.col(content_col)))
-    return dedup_deterministic(hashed, ["_h", content_col], [F.asc(id_col)]).drop("_h")
+    hashed = ensure_parallelism(df).withColumn("_h", hash60(F.col("text")))
+    return dedup_deterministic(hashed, ["_h", "text"], [F.asc("doc_id")]).drop("_h")
 
 
-def sql_exact_dedup(table: str = "documents", content_col: str = "text") -> str:
+def sql_exact_dedup() -> str:
     return f"""
-    SELECT * FROM {table}
+    SELECT * FROM documents
     QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY {sql_hash60(content_col)}, {content_col}
+        PARTITION BY {sql_hash60('text')}, text
         ORDER BY doc_id ASC NULLS FIRST
     ) = 1
     """
 
 
-def incremental_exact_dedup(
-    base: DataFrame,
-    increment: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_exact_dedup(base: DataFrame, increment: DataFrame) -> DataFrame:
     """The production shape of exact dedup: a NEW batch deduped against an
     already-deduplicated base WITHOUT reprocessing the base — rows of
     ``increment`` survive iff their content appears nowhere in ``base``
@@ -130,46 +123,35 @@ def incremental_exact_dedup(
     genuinely new one — identical discipline to :func:`exact_dedup`.
     """
     seen = (
-        base.select(
-            hash60(F.col(content_col)).alias("_h"), F.col(content_col)
-        )
-        .groupBy("_h", content_col)
+        base.select(hash60(F.col("text")).alias("_h"), F.col("text"))
+        .groupBy("_h", "text")
         .agg(F.lit(1).alias("_one"))
         .drop("_one")
     )
-    inc = ensure_parallelism(increment).withColumn(
-        "_h", hash60(F.col(content_col))
-    )
-    fresh = inc.join(seen, ["_h", content_col], "left_anti")
-    return dedup_deterministic(
-        fresh, ["_h", content_col], [F.asc(id_col)]
-    ).drop("_h")
+    inc = ensure_parallelism(increment).withColumn("_h", hash60(F.col("text")))
+    fresh = inc.join(seen, ["_h", "text"], "left_anti")
+    return dedup_deterministic(fresh, ["_h", "text"], [F.asc("doc_id")]).drop("_h")
 
 
-def sql_incremental_exact_dedup(
-    base_pred: str,
-    inc_pred: str,
-    table: str = "documents",
-    content_col: str = "text",
-) -> str:
+def sql_incremental_exact_dedup(base_pred: str, inc_pred: str) -> str:
     """DuckDB twin of :func:`incremental_exact_dedup` where base and
     increment are predicate-split slices of one table."""
     return f"""
     WITH seen AS (
-        SELECT DISTINCT {sql_hash60(content_col)} AS h, {content_col}
-        FROM {table} WHERE {base_pred}
+        SELECT DISTINCT {sql_hash60('text')} AS h, text
+        FROM documents WHERE {base_pred}
     ),
     inc AS (
-        SELECT *, {sql_hash60(content_col)} AS h
-        FROM {table} WHERE {inc_pred}
+        SELECT *, {sql_hash60('text')} AS h
+        FROM documents WHERE {inc_pred}
     ),
     fresh AS (
         SELECT inc.* FROM inc
-        ANTI JOIN seen ON inc.h = seen.h AND inc.{content_col} = seen.{content_col}
+        ANTI JOIN seen ON inc.h = seen.h AND inc.text = seen.text
     )
     SELECT * EXCLUDE (h) FROM fresh
     QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY h, {content_col} ORDER BY doc_id ASC NULLS FIRST
+        PARTITION BY h, text ORDER BY doc_id ASC NULLS FIRST
     ) = 1
     """
 
@@ -194,9 +176,7 @@ def _minhash_sql(hs_expr: str, a: int, b: int) -> str:
     )
 
 
-def shingle_features(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def shingle_features(df: DataFrame) -> DataFrame:
     """(id, _hs): per-doc shingle-hash sets, persisted (H3 cache).
 
     Persisting here is load-bearing twice over:
@@ -214,7 +194,7 @@ def shingle_features(
 
     Callers composing several dedup stages should build this once and pass
     it to each stage via the ``feats=`` parameter. Repeated calls for the
-    SAME (session, input plan, columns) return the SAME memoized DataFrame
+    SAME (session, input plan) return the SAME memoized DataFrame
     instead of persisting a fresh identical plan each time — long-lived
     sessions registering many dedup queries over one corpus hold exactly
     one cached feature set, not one per call ('Asked to cache already
@@ -232,20 +212,14 @@ def shingle_features(
     """
     return _FEATS_MEMO.get(
         df.sparkSession,
-        (df.semanticHash(), text_col, id_col),
+        (df.semanticHash(),),
         lambda: ensure_parallelism(df).select(
-            F.col(id_col), shingle_hashes(text_col).alias("_hs")
+            F.col("doc_id"), shingle_hashes("text").alias("_hs")
         ),
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    feats: DataFrame | None = None,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, *, feats: DataFrame | None = None) -> DataFrame:
     """(id, band, sig): one row per document per LSH band.
 
     Projection + ``posexplode`` over the cached feature sets —
@@ -256,7 +230,7 @@ def minhash_signatures(
     instead of re-deriving the shingle pipeline (see
     :func:`shingle_features`).
     """
-    feats = feats if feats is not None else shingle_features(df, text_col, id_col)
+    feats = feats if feats is not None else shingle_features(df)
     # The whole 4-band × 3-row signature array as ONE SQL parse (see
     # _minhash_sql) — node-identical to the previous F.array/F.concat_ws
     # composition, ~0.3 s less driver wall per construction.
@@ -270,18 +244,12 @@ def minhash_signatures(
         for k in range(LSH_BANDS)
     ]
     bands = F.expr("array(" + ", ".join(band_sqls) + ")")
-    return feats.select(F.col(id_col), F.posexplode(bands).alias("band", "sig")).filter(
+    return feats.select(F.col("doc_id"), F.posexplode(bands).alias("band", "sig")).filter(
         F.col("sig") != ""
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    feats: DataFrame | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(df: DataFrame, *, feats: DataFrame | None = None) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one band signature.
 
     Self-equi-join on (band, sig): Spark shuffles both sides on the band
@@ -290,9 +258,9 @@ def lsh_candidate_pairs(
     same cached feature sets (see :func:`shingle_features`). The final
     ``dropDuplicates`` collapses pairs that collide in multiple bands.
     """
-    sigs = minhash_signatures(df, text_col, id_col, feats=feats)
-    a = sigs.select(F.col(id_col).alias("doc_a"), "band", "sig")
-    b = sigs.select(F.col(id_col).alias("doc_b"), "band", "sig")
+    sigs = minhash_signatures(df, feats=feats)
+    a = sigs.select(F.col("doc_id").alias("doc_a"), "band", "sig")
+    b = sigs.select(F.col("doc_id").alias("doc_b"), "band", "sig")
     return (
         a.join(b, ["band", "sig"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -335,13 +303,13 @@ def _sql_sigs_cte(table: str, text_col: str, prefix: str = "") -> str:
     """
 
 
-def sql_minhash_signatures(table: str = "documents", text_col: str = "text") -> str:
-    return f"WITH {_sql_sigs_cte(table, text_col)} SELECT doc_id, band::INT AS band, sig FROM sigs"
+def sql_minhash_signatures() -> str:
+    return f"WITH {_sql_sigs_cte('documents', 'text')} SELECT doc_id, band::INT AS band, sig FROM sigs"
 
 
-def sql_lsh_candidate_pairs(table: str = "documents", text_col: str = "text") -> str:
+def sql_lsh_candidate_pairs() -> str:
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)}
+    WITH {_sql_sigs_cte('documents', 'text')}
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
     WHERE a.doc_id < b.doc_id
@@ -354,12 +322,7 @@ def sql_lsh_candidate_pairs(table: str = "documents", text_col: str = "text") ->
 
 
 def neardup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_jaccard: float = 0.0,
-    feats: DataFrame | None = None,
+    df: DataFrame, *, min_jaccard: float = 0.0, feats: DataFrame | None = None
 ) -> DataFrame:
     """LSH candidates with exact shingle-set Jaccard similarity.
 
@@ -371,11 +334,11 @@ def neardup_pairs(
     double division of two exact ints, bit-identical across engines.
     """
     feats = (
-        feats if feats is not None else shingle_features(df, text_col, id_col)
+        feats if feats is not None else shingle_features(df)
     )
-    cands = lsh_candidate_pairs(df, text_col, id_col, feats=feats)
-    fa = feats.select(F.col(id_col).alias("doc_a"), F.col("_hs").alias("hs_a"))
-    fb = feats.select(F.col(id_col).alias("doc_b"), F.col("_hs").alias("hs_b"))
+    cands = lsh_candidate_pairs(df, feats=feats)
+    fa = feats.select(F.col("doc_id").alias("doc_a"), F.col("_hs").alias("hs_a"))
+    fb = feats.select(F.col("doc_id").alias("doc_b"), F.col("_hs").alias("hs_b"))
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
     union = F.size(F.array_union("hs_a", "hs_b"))
     return (
@@ -390,14 +353,9 @@ def neardup_pairs(
     )
 
 
-def sql_neardup_pairs(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = 0.0,
-) -> str:
+def sql_neardup_pairs() -> str:
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     cands AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -410,7 +368,7 @@ def sql_neardup_pairs(
     JOIN feats x ON c.doc_a = x.doc_id
     JOIN feats y ON c.doc_b = y.doc_id
     WHERE len(list_intersect(x.hs, y.hs))::DOUBLE
-            / len(list_distinct(list_concat(x.hs, y.hs))) >= {min_jaccard}
+            / len(list_distinct(list_concat(x.hs, y.hs))) >= 0.0
     """
 
 
@@ -420,10 +378,7 @@ DECON_MIN_JACCARD = 0.5
 def eval_contamination(
     train: DataFrame,
     eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
-    min_jaccard: float = DECON_MIN_JACCARD,
     train_feats: DataFrame | None = None,
     eval_feats: DataFrame | None = None,
 ) -> DataFrame:
@@ -451,28 +406,26 @@ def eval_contamination(
     tf = (
         train_feats
         if train_feats is not None
-        else shingle_features(train, text_col, id_col)
+        else shingle_features(train)
     )
     ef = (
         eval_feats
         if eval_feats is not None
-        else shingle_features(eval_df, text_col, id_col)
+        else shingle_features(eval_df)
     )
-    tsig = minhash_signatures(train, text_col, id_col, feats=tf)
-    esig = minhash_signatures(eval_df, text_col, id_col, feats=ef)
+    tsig = minhash_signatures(train, feats=tf)
+    esig = minhash_signatures(eval_df, feats=ef)
     cands = (
-        tsig.select(F.col(id_col).alias("train_doc"), "band", "sig")
+        tsig.select(F.col("doc_id").alias("train_doc"), "band", "sig")
         .join(
-            F.broadcast(
-                esig.select(F.col(id_col).alias("eval_doc"), "band", "sig")
-            ),
+            F.broadcast(esig.select(F.col("doc_id").alias("eval_doc"), "band", "sig")),
             ["band", "sig"],
         )
         .select("train_doc", "eval_doc")
         .dropDuplicates()
     )
-    fa = tf.select(F.col(id_col).alias("train_doc"), F.col("_hs").alias("hs_a"))
-    fb = ef.select(F.col(id_col).alias("eval_doc"), F.col("_hs").alias("hs_b"))
+    fa = tf.select(F.col("doc_id").alias("train_doc"), F.col("_hs").alias("hs_a"))
+    fb = ef.select(F.col("doc_id").alias("eval_doc"), F.col("_hs").alias("hs_b"))
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
     union = F.size(F.array_union("hs_a", "hs_b"))
     return (
@@ -483,18 +436,11 @@ def eval_contamination(
             "eval_doc",
             (inter.cast("double") / union).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= F.lit(min_jaccard))
+        .filter(F.col("jaccard") >= F.lit(DECON_MIN_JACCARD))
     )
 
 
-def sql_eval_contamination(
-    train_pred: str,
-    eval_pred: str,
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = DECON_MIN_JACCARD,
-) -> str:
+def sql_eval_contamination(train_pred: str, eval_pred: str) -> str:
     """DuckDB twin of :func:`eval_contamination` where train and eval are
     predicate-split slices of one table."""
     jac = (
@@ -502,7 +448,7 @@ def sql_eval_contamination(
         " / len(list_distinct(list_concat(x.hs, y.hs)))"
     )
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     cands AS (
         SELECT DISTINCT a.doc_id AS train_doc, b.doc_id AS eval_doc
         FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -512,17 +458,11 @@ def sql_eval_contamination(
     FROM cands c
     JOIN feats x ON c.train_doc = x.doc_id
     JOIN feats y ON c.eval_doc = y.doc_id
-    WHERE {jac} >= {min_jaccard}
+    WHERE {jac} >= {DECON_MIN_JACCARD}
     """
 
 
-def neardup_pairs_containment(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_containment: float = 0.0,
-) -> DataFrame:
+def neardup_pairs_containment(df: DataFrame) -> DataFrame:
     """LSH candidates scored by shingle-set CONTAINMENT: |A∩B| / min(|A|,|B|).
 
     Symmetric Jaccard under-scores subset duplication — a page embedded
@@ -532,10 +472,10 @@ def neardup_pairs_containment(
     bucketed candidate set and cached features as :func:`neardup_pairs`;
     only the scoring expression differs.
     """
-    feats = shingle_features(df, text_col, id_col)
-    cands = lsh_candidate_pairs(df, text_col, id_col, feats=feats)
-    fa = feats.select(F.col(id_col).alias("doc_a"), F.col("_hs").alias("hs_a"))
-    fb = feats.select(F.col(id_col).alias("doc_b"), F.col("_hs").alias("hs_b"))
+    feats = shingle_features(df)
+    cands = lsh_candidate_pairs(df, feats=feats)
+    fa = feats.select(F.col("doc_id").alias("doc_a"), F.col("_hs").alias("hs_a"))
+    fb = feats.select(F.col("doc_id").alias("doc_b"), F.col("_hs").alias("hs_b"))
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
     smaller = F.least(F.size("hs_a"), F.size("hs_b"))
     return (
@@ -546,18 +486,13 @@ def neardup_pairs_containment(
             "doc_b",
             (inter.cast("double") / smaller).alias("containment"),
         )
-        .filter(F.col("containment") >= F.lit(min_containment))
+        .filter(F.col("containment") >= F.lit(0.0))
     )
 
 
-def sql_neardup_pairs_containment(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_containment: float = 0.0,
-) -> str:
+def sql_neardup_pairs_containment() -> str:
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     cands AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -570,7 +505,7 @@ def sql_neardup_pairs_containment(
     JOIN feats x ON c.doc_a = x.doc_id
     JOIN feats y ON c.doc_b = y.doc_id
     WHERE len(list_intersect(x.hs, y.hs))::DOUBLE
-            / least(len(x.hs), len(y.hs)) >= {min_containment}
+            / least(len(x.hs), len(y.hs)) >= 0.0
     """
 
 
@@ -591,15 +526,8 @@ assert SIMHASH_BANDS * SIMHASH_BAND_BITS == 60  # hash60 width
 _BAND_MASK = (1 << SIMHASH_BAND_BITS) - 1
 
 
-def simhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    feats: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming): pairs within ``max_hamming`` SimHash bits.
+def simhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming): pairs within ``SIMHASH_MAX_HAMMING`` SimHash bits.
 
     The cheap near-dup path: one 8-byte fingerprint per document (vs 12
     minhashes + shingle sets), banded self-equi-join on (band, band value)
@@ -609,17 +537,17 @@ def simhash_candidate_pairs(
     integer op per candidate — no second join back to feature sets, which
     is what makes this tier cheaper than MinHash+Jaccard.
 
-    With the default ``max_hamming = SIMHASH_BANDS - 1`` the result is
-    EXACT (pigeonhole — see the constants above). Raising ``max_hamming``
-    beyond that trades recall for reach: more-distant pairs surface only
-    when their differing bits cluster into few bands. Empty-shingle
+    With ``SIMHASH_MAX_HAMMING = SIMHASH_BANDS - 1`` the result is
+    EXACT (pigeonhole — see the constants above). Raising it beyond that
+    trades recall for reach: more-distant pairs surface only when their
+    differing bits cluster into few bands. Empty-shingle
     documents (< SHINGLE_N tokens) are excluded — their all-zero
     fingerprints would otherwise pairwise-collide every short doc into one
     giant skewed bucket.
     """
-    feats = feats if feats is not None else shingle_features(df, text_col, id_col)
+    feats = shingle_features(df)
     fps = feats.filter(F.size("_hs") > 0).select(
-        F.col(id_col), simhash_from_hashes(F.col("_hs")).alias("simhash")
+        F.col("doc_id"), simhash_from_hashes(F.col("_hs")).alias("simhash")
     )
     band_vals = F.array(
         *[
@@ -630,36 +558,31 @@ def simhash_candidate_pairs(
         ]
     )
     bands = fps.select(
-        id_col, "simhash", F.posexplode(band_vals).alias("band", "bval")
+        "doc_id", "simhash", F.posexplode(band_vals).alias("band", "bval")
     )
     a = bands.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "bval"
+        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "bval"
     )
     b = bands.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "bval"
+        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "bval"
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         a.join(b, ["band", "bval"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
-        .filter(hamming <= max_hamming)
+        .filter(hamming <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
     )
 
 
-def sql_simhash_candidate_pairs(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-) -> str:
+def sql_simhash_candidate_pairs() -> str:
     from .text import sql_simhash_over_hs
 
     band_ids = ", ".join(str(b) for b in range(SIMHASH_BANDS))
     return f"""
     WITH toks AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     feats AS (
         SELECT doc_id, {sql_shingle_hashes_over_w()} AS hs FROM toks
@@ -681,7 +604,7 @@ def sql_simhash_candidate_pairs(
     )
     SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b))::INT AS hamming
     FROM cand
-    WHERE bit_count(xor(sh_a, sh_b)) <= {max_hamming}
+    WHERE bit_count(xor(sh_a, sh_b)) <= {SIMHASH_MAX_HAMMING}
     """
 
 
@@ -731,11 +654,7 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    *,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iter: int = 25,
+    edges: DataFrame, *, src_col: str = "doc_a", dst_col: str = "doc_b"
 ) -> DataFrame:
     """(node, cluster_id): connected components by alternating
     large-star/small-star contraction (Kiveris et al., "Connected
@@ -791,7 +710,7 @@ def connected_components(
     connected_components.last_rounds = 0
     if witness[0] == 0:
         return e.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
-    for i in range(max_iter):
+    for i in range(25):
         e_next = _small_star(_large_star(e)).localCheckpoint(eager=False)
         new_witness = tuple(e_next.agg(*witness_aggs).collect()[0])
         e, prev, witness = e_next, witness, new_witness
@@ -799,9 +718,7 @@ def connected_components(
         if new_witness == prev:
             break
     else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
+        raise RuntimeError("connected_components did not converge in 25 rounds")
     # fixpoint = disjoint stars: every edge points node -> component min;
     # the root itself only appears on the dst side
     return (
@@ -813,11 +730,7 @@ def connected_components(
 
 
 def neardup_clusters(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
+    df: DataFrame, *, min_jaccard: float = NEARDUP_MIN_JACCARD
 ) -> DataFrame:
     """(doc_id, cluster_id) for every document in ≥ 1 verified near-dup
     pair; cluster_id = min doc id of the connected component.
@@ -827,7 +740,7 @@ def neardup_clusters(
     cluster even if A and C never shared a band.
 
     The resolved label table is memoized per (session, input plan,
-    columns, threshold), exactly like ``shingle_features``: the closure is
+    threshold), exactly like ``shingle_features``: the closure is
     an eager iterative computation (checkpointed — ``clearCache`` does not
     drop it), and a session composing clusters + dedup corpus + downstream
     pipelines over one corpus should resolve components once, not once per
@@ -835,26 +748,20 @@ def neardup_clusters(
     """
 
     def build() -> DataFrame:
-        pairs = neardup_pairs(df, text_col, id_col, min_jaccard=min_jaccard).select(
-            "doc_a", "doc_b"
-        )
+        pairs = neardup_pairs(df, min_jaccard=min_jaccard).select("doc_a", "doc_b")
         return connected_components(pairs).select(
-            F.col("node").alias(id_col), "cluster_id"
+            F.col("node").alias("doc_id"), "cluster_id"
         )
 
     return _CLUSTERS_MEMO.get(
         df.sparkSession,
-        (df.semanticHash(), text_col, id_col, round(min_jaccard, 9)),
+        (df.semanticHash(), round(min_jaccard, 9)),
         build,
     )
 
 
 def neardup_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
+    df: DataFrame, *, min_jaccard: float = NEARDUP_MIN_JACCARD
 ) -> DataFrame:
     """The deduplicated corpus at near-dup strength: one canonical survivor
     (the min-id member) per duplicate cluster, all singletons untouched.
@@ -865,9 +772,9 @@ def neardup_dedup(
     proportional to the duplicate fraction, not the corpus — so AQE
     broadcasts it in the common case and the corpus never reshuffles.
     """
-    clusters = neardup_clusters(df, text_col, id_col, min_jaccard=min_jaccard)
-    losers = clusters.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-    return df.join(losers, id_col, "left_anti")
+    clusters = neardup_clusters(df, min_jaccard=min_jaccard)
+    losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
+    return df.join(losers, "doc_id", "left_anti")
 
 
 def _sql_components_ctes(
@@ -911,29 +818,19 @@ def _sql_components_ctes(
     """
 
 
-def sql_neardup_clusters(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_neardup_clusters() -> str:
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(table, text_col, min_jaccard)}
+    WITH RECURSIVE {_sql_components_ctes('documents', 'text', NEARDUP_MIN_JACCARD)}
     SELECT node AS doc_id, cluster_id FROM clusters
     """
 
 
-def sql_neardup_cluster_sizes(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_neardup_cluster_sizes() -> str:
     """Cluster-size histogram over the recursive-CTE transitive closure —
     the second-lens oracle for the star-contraction components (a single
     wrong membership shifts two histogram cells)."""
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(table, text_col, min_jaccard)},
+    WITH RECURSIVE {_sql_components_ctes('documents', 'text', NEARDUP_MIN_JACCARD)},
     sizes AS (
         SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
         FROM clusters GROUP BY 1
@@ -943,15 +840,10 @@ def sql_neardup_cluster_sizes(
     """
 
 
-def sql_neardup_dedup(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_neardup_dedup() -> str:
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(table, text_col, min_jaccard)}
-    SELECT d.* FROM {table} d
+    WITH RECURSIVE {_sql_components_ctes('documents', 'text', NEARDUP_MIN_JACCARD)}
+    SELECT d.* FROM documents d
     ANTI JOIN (
         SELECT node FROM clusters WHERE node <> cluster_id
     ) l ON d.doc_id = l.node
@@ -965,14 +857,7 @@ def sql_neardup_dedup(
 DUPFRAC_MAX = 0.5  # drop documents with more than half their spans duplicated
 
 
-def dup_ngram_doc_fraction(
-    df: DataFrame,
-    *,
-    max_frac: float = DUPFRAC_MAX,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    feats: DataFrame | None = None,
-) -> DataFrame:
+def dup_ngram_doc_fraction(df: DataFrame) -> DataFrame:
     """(doc_id, n_grams, dup_grams, dup_frac, kept): the fraction of each
     document's word n-grams that appear in at least one OTHER document —
     the span-level duplication signal (RefinedWeb/MassiveText's
@@ -989,13 +874,13 @@ def dup_ngram_doc_fraction(
     rows only; document text never leaves the scan. Documents too short to
     shingle have no feature rows and are absent (same contract as
     ``minhash_signatures``)."""
-    feats = feats if feats is not None else shingle_features(df, text_col, id_col)
-    exploded = feats.select(F.col(id_col), F.explode("_hs").alias("h"))
+    feats = shingle_features(df)
+    exploded = feats.select(F.col("doc_id"), F.explode("_hs").alias("h"))
     docfreq = exploded.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     dup_frac = F.col("dup_grams").cast("double") / F.col("n_grams").cast("double")
     return (
         exploded.join(docfreq, "h")
-        .groupBy(F.col(id_col).alias("doc_id"))
+        .groupBy(F.col("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
@@ -1007,20 +892,15 @@ def dup_ngram_doc_fraction(
             "n_grams",
             "dup_grams",
             dup_frac.alias("dup_frac"),
-            (dup_frac <= max_frac).alias("kept"),
+            (dup_frac <= DUPFRAC_MAX).alias("kept"),
         )
     )
 
 
-def sql_dup_ngram_doc_fraction(
-    table: str = "documents",
-    *,
-    max_frac: float = DUPFRAC_MAX,
-    text_col: str = "text",
-) -> str:
+def sql_dup_ngram_doc_fraction() -> str:
     return f"""
     WITH toks AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     feats AS (
         SELECT doc_id, {sql_shingle_hashes_over_w()} AS hs FROM toks
@@ -1041,7 +921,7 @@ def sql_dup_ngram_doc_fraction(
     )
     SELECT doc_id, n_grams, dup_grams,
            CAST(dup_grams AS DOUBLE) / CAST(n_grams AS DOUBLE) AS dup_frac,
-           CAST(dup_grams AS DOUBLE) / CAST(n_grams AS DOUBLE) <= {max_frac}
+           CAST(dup_grams AS DOUBLE) / CAST(n_grams AS DOUBLE) <= {DUPFRAC_MAX}
              AS kept
     FROM agg
     """
@@ -1052,13 +932,7 @@ def sql_dup_ngram_doc_fraction(
 # ---------------------------------------------------------------------------
 
 
-def minhash_jaccard_estimate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    feats: DataFrame | None = None,
-) -> DataFrame:
+def minhash_jaccard_estimate(df: DataFrame) -> DataFrame:
     """(doc_a, doc_b, est_jaccard, jaccard, est_err) for every LSH
     candidate pair: the MinHash estimate (fraction of the 12 hash
     functions whose minima agree — E[est] = true Jaccard) next to the
@@ -1071,22 +945,22 @@ def minhash_jaccard_estimate(
     buys and costs on the live corpus. All joins are id-equi against the
     cached features; the estimate is integer compares, the exact value
     one intersect/union — both engines produce bit-identical doubles."""
-    feats = feats if feats is not None else shingle_features(df, text_col, id_col)
-    cands = lsh_candidate_pairs(df, text_col, id_col, feats=feats)
+    feats = shingle_features(df)
+    cands = lsh_candidate_pairs(df, feats=feats)
     n_mh = len(MINHASH_COEFFS)
     mh_arr = F.expr(
         "array("
         + ", ".join(_minhash_sql("_hs", a, b) for a, b in MINHASH_COEFFS)
         + ")"
     )
-    sig = feats.select(F.col(id_col), F.col("_hs"), mh_arr.alias("_mh"))
+    sig = feats.select(F.col("doc_id"), F.col("_hs"), mh_arr.alias("_mh"))
     a = sig.select(
-        F.col(id_col).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         F.col("_hs").alias("hs_a"),
         F.col("_mh").alias("mh_a"),
     )
     b = sig.select(
-        F.col(id_col).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         F.col("_hs").alias("hs_b"),
         F.col("_mh").alias("mh_b"),
     )
@@ -1110,12 +984,10 @@ def minhash_jaccard_estimate(
     )
 
 
-def sql_minhash_jaccard_estimate(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_minhash_jaccard_estimate() -> str:
     n_mh = len(MINHASH_COEFFS)
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     cands AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -1145,12 +1017,7 @@ def sql_minhash_jaccard_estimate(
 # ---------------------------------------------------------------------------
 
 
-def source_overlap(
-    documents: DataFrame,
-    *,
-    content_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_overlap(documents: DataFrame) -> DataFrame:
     """Pairwise content overlap between sources: for every source pair,
     how many distinct word-``SHINGLE_N``-gram shingles they share and the
     Jaccard overlap of their shingle sets — the corpus-mixing report that
@@ -1190,13 +1057,11 @@ def source_overlap(
     # discipline).
     grouped = (
         ensure_parallelism(
-            documents.filter(
-                F.col(source_col).isNotNull() & F.col(content_col).isNotNull()
-            )
+            documents.filter(F.col("source").isNotNull() & F.col("text").isNotNull())
         )
         .select(
-            F.col(source_col).alias("src"),
-            F.explode(shingle_hashes(F.col(content_col))).alias("h"),
+            F.col("source").alias("src"),
+            F.explode(shingle_hashes(F.col("text"))).alias("h"),
         )
         .groupBy("h")
         .agg(F.array_sort(F.collect_set("src")).alias("ss"))
@@ -1252,22 +1117,18 @@ def source_overlap(
     )
 
 
-def sql_source_overlap(
-    table: str = "documents",
-    content_col: str = "text",
-    source_col: str = "source",
-) -> str:
+def sql_source_overlap() -> str:
     return f"""
     WITH hs AS (
         SELECT DISTINCT src, h
         FROM (
-            SELECT {source_col} AS src,
+            SELECT source AS src,
                    unnest({sql_shingle_hashes_over_w()}) AS h
             FROM (
-                SELECT {source_col}, {sql_tokens(content_col)} AS w
-                FROM {table}
-                WHERE {source_col} IS NOT NULL
-                  AND {content_col} IS NOT NULL
+                SELECT source, {sql_tokens('text')} AS w
+                FROM documents
+                WHERE source IS NOT NULL
+                  AND text IS NOT NULL
             )
         )
     ),
@@ -1293,15 +1154,9 @@ def sql_source_overlap(
 SOURCE_MINHASH_K = 64
 
 
-def source_overlap_minhash(
-    documents: DataFrame,
-    *,
-    content_col: str = "text",
-    source_col: str = "source",
-    k: int = SOURCE_MINHASH_K,
-) -> DataFrame:
+def source_overlap_minhash(documents: DataFrame) -> DataFrame:
     """Sketch lane of :func:`source_overlap` — the 100 TB production path:
-    one ``k``-component MinHash signature per source (k independent
+    one ``SOURCE_MINHASH_K``-component MinHash signature per source (k independent
     ``xxhash64(i, shingle)`` mins), pairwise agreement fraction estimates
     the shingle Jaccard. The exact lane must materialize (and, since
     round 11, cache) the full distinct (source, shingle) table —
@@ -1318,19 +1173,17 @@ def source_overlap_minhash(
     reports all pairs and lets the consumer threshold.
     """
     sigs = (
-        documents.filter(
-            F.col(source_col).isNotNull() & F.col(content_col).isNotNull()
-        )
+        documents.filter(F.col("source").isNotNull() & F.col("text").isNotNull())
         .select(
-            F.col(source_col).alias("src"),
-            F.explode(shingle_hashes(F.col(content_col))).alias("h"),
+            F.col("source").alias("src"),
+            F.explode(shingle_hashes(F.col("text"))).alias("h"),
         )
         .groupBy("src")
         .agg(
             F.array(
                 *[
                     F.min(F.xxhash64(F.lit(i), F.col("h")))
-                    for i in range(k)
+                    for i in range(SOURCE_MINHASH_K)
                 ]
             ).alias("sig")
         )
@@ -1355,7 +1208,7 @@ def source_overlap_minhash(
             "source_a",
             "source_b",
             agree.cast("bigint").alias("n_agree"),
-            (agree.cast("double") / F.lit(float(k))).alias("jaccard_est"),
+            (agree.cast("double") / F.lit(float(SOURCE_MINHASH_K))).alias("jaccard_est"),
         )
     )
 
@@ -1365,12 +1218,7 @@ def source_overlap_minhash(
 # ---------------------------------------------------------------------------
 
 
-def doc_ngram_novelty(
-    documents: DataFrame,
-    *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_ngram_novelty(documents: DataFrame) -> DataFrame:
     """(doc_id, n_shingles, n_novel, novelty): how much NEW content each
     document contributes in corpus order — the fraction of its distinct
     word shingles whose first occurrence (minimum doc id over the corpus)
@@ -1388,9 +1236,9 @@ def doc_ngram_novelty(
     to shingle (< n tokens) have no feature set and no row, the
     ``minhash_signatures`` contract.
     """
-    hs = documents.filter(F.col(content_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingle_hashes(F.col(content_col))).alias("h"),
+    hs = documents.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"),
+        F.explode(shingle_hashes(F.col("text"))).alias("h"),
     )
     first = hs.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -1405,7 +1253,7 @@ def doc_ngram_novelty(
             .alias("n_novel"),
         )
         .select(
-            F.col("doc_id").alias(id_col),
+            F.col("doc_id"),
             "n_shingles",
             "n_novel",
             (
@@ -1416,17 +1264,15 @@ def doc_ngram_novelty(
     )
 
 
-def sql_doc_ngram_novelty(
-    table: str = "documents", content_col: str = "text"
-) -> str:
+def sql_doc_ngram_novelty() -> str:
     return f"""
     WITH hs AS (
         SELECT doc_id, unnest(hs) AS h
         FROM (
             SELECT doc_id, {sql_shingle_hashes_over_w()} AS hs
             FROM (
-                SELECT doc_id, {sql_tokens(content_col)} AS w
-                FROM {table} WHERE {content_col} IS NOT NULL
+                SELECT doc_id, {sql_tokens('text')} AS w
+                FROM documents WHERE text IS NOT NULL
             )
         )
     ),
@@ -1455,17 +1301,12 @@ SUBSTRING_MAX_GRAM_DOCS = 50  # hot-gram cap: a gram in more docs than this is
 #                               boilerplate, not copying — drop before the join
 
 
-# Persisted positioned-gram frames keyed by (input plan, gram width,
-# columns).
+# Persisted positioned-gram frames keyed by (input plan, gram width).
 _GRAMS_MEMO = SessionMemo(8, persisted=True)
 
 
 def positioned_gram_features(
-    df: DataFrame,
-    *,
-    gram_n: int = SUBSTRING_GRAM_N,
-    content_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, *, gram_n: int = SUBSTRING_GRAM_N
 ) -> DataFrame:
     """(doc_id, pos, gh): 1-based positioned word-``gram_n``-gram 60-bit
     hashes, persisted (H3 cache, the :func:`shingle_features` contract):
@@ -1477,12 +1318,10 @@ def positioned_gram_features(
 
     def build() -> DataFrame:
         return (
-            ensure_parallelism(df.filter(F.col(content_col).isNotNull()))
+            ensure_parallelism(df.filter(F.col("text").isNotNull()))
             .select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(
-                    gram_strings(F.col(content_col), gram_n)
-                ).alias("pos0", "gram"),
+                F.col("doc_id"),
+                F.posexplode(gram_strings(F.col("text"), gram_n)).alias("pos0", "gram"),
             )
             .select(
                 "doc_id",
@@ -1493,7 +1332,7 @@ def positioned_gram_features(
 
     return _GRAMS_MEMO.get(
         df.sparkSession,
-        (df.semanticHash(), gram_n, content_col, id_col),
+        (df.semanticHash(), gram_n),
         build,
     )
 
@@ -1504,8 +1343,6 @@ def substring_run_pairs(
     gram_n: int = SUBSTRING_GRAM_N,
     min_run_tokens: int = SUBSTRING_MIN_RUN,
     max_gram_docs: int = SUBSTRING_MAX_GRAM_DOCS,
-    content_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_a, doc_b, n_matched_grams, longest_run_tokens): document pairs
     sharing a verbatim run of at least ``min_run_tokens`` consecutive
@@ -1535,9 +1372,7 @@ def substring_run_pairs(
     diagonal). Documents shorter than ``gram_n`` tokens produce no grams
     and no rows.
     """
-    g = positioned_gram_features(
-        documents, gram_n=gram_n, content_col=content_col, id_col=id_col
-    )
+    g = positioned_gram_features(documents, gram_n=gram_n)
     keep = (
         g.groupBy("gh")
         .agg(F.count_distinct("doc_id").alias("gram_df"))
@@ -1587,14 +1422,7 @@ def substring_run_pairs(
     )
 
 
-def sql_substring_run_pairs(
-    table: str = "documents",
-    *,
-    gram_n: int = SUBSTRING_GRAM_N,
-    min_run_tokens: int = SUBSTRING_MIN_RUN,
-    max_gram_docs: int = SUBSTRING_MAX_GRAM_DOCS,
-    content_col: str = "text",
-) -> str:
+def sql_substring_run_pairs() -> str:
     """DuckDB twin of :func:`substring_run_pairs` (same hash, same
     gaps-and-islands run decomposition)."""
     return f"""
@@ -1603,16 +1431,16 @@ def sql_substring_run_pairs(
                CAST(generate_subscripts(gs, 1) AS BIGINT) AS pos,
                {sql_hash60("unnest(gs)")} AS gh
         FROM (
-            SELECT doc_id, {sql_gram_strings_over_w(gram_n)} AS gs
+            SELECT doc_id, {sql_gram_strings_over_w(SUBSTRING_GRAM_N)} AS gs
             FROM (
-                SELECT doc_id, {sql_tokens(content_col)} AS w
-                FROM {table} WHERE {content_col} IS NOT NULL
+                SELECT doc_id, {sql_tokens('text')} AS w
+                FROM documents WHERE text IS NOT NULL
             )
         )
     ),
     keep AS (
         SELECT gh FROM g GROUP BY gh
-        HAVING COUNT(DISTINCT doc_id) <= {max_gram_docs}
+        HAVING COUNT(DISTINCT doc_id) <= {SUBSTRING_MAX_GRAM_DOCS}
     ),
     matched AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1633,11 +1461,11 @@ def sql_substring_run_pairs(
     )
     SELECT doc_a, doc_b,
            CAST(SUM(run_grams) AS BIGINT) AS n_matched_grams,
-           CAST(MAX(run_grams) + {gram_n - 1} AS BIGINT)
+           CAST(MAX(run_grams) + {SUBSTRING_GRAM_N - 1} AS BIGINT)
                AS longest_run_tokens
     FROM runs
     GROUP BY doc_a, doc_b
-    HAVING MAX(run_grams) + {gram_n - 1} >= {min_run_tokens}
+    HAVING MAX(run_grams) + {SUBSTRING_GRAM_N - 1} >= {SUBSTRING_MIN_RUN}
     """
 
 
@@ -1646,15 +1474,7 @@ def sql_substring_run_pairs(
 # ---------------------------------------------------------------------------
 
 
-def leakage_free_split(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    train_pct: int = 80,
-    salt: str = "split:v1",
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> DataFrame:
+def leakage_free_split(df: DataFrame) -> DataFrame:
     """(doc_id, group_id, split): the salted-hash train/test split drawn
     at near-duplicate-GROUP granularity — an eval set that shares a
     near-duplicate with the training side is contaminated before a
@@ -1667,7 +1487,7 @@ def leakage_free_split(
 
     Inherits every guarantee of the per-doc split (membership a pure
     function of (salt, group); re-runs/growth/repartitioning never move
-    existing groups; raising ``train_pct`` only grows train) because it
+    existing groups; raising the train share only grows train) because it
     IS that split, keyed one level up.
 
     Scale shape: the cluster label table is proportional to the
@@ -1680,53 +1500,42 @@ def leakage_free_split(
     """
     from .corpus import SPLIT_BUCKETS
 
-    clusters = neardup_clusters(
-        df, text_col, id_col, min_jaccard=min_jaccard
-    ).withColumnRenamed("cluster_id", "_cl")
+    clusters = neardup_clusters(df).withColumnRenamed("cluster_id", "_cl")
     grouped = (
-        df.select(id_col)
-        .join(clusters, id_col, "left")
+        df.select("doc_id")
+        .join(clusters, "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("_cl"), F.col(id_col)).alias("group_id"),
+            F.col("doc_id"),
+            F.coalesce(F.col("_cl"), F.col("doc_id")).alias("group_id"),
         )
     )
     bucket = (
-        hash60(F.concat(F.lit(salt), F.col("group_id").cast("string")))
+        hash60(F.concat(F.lit("split:v1"), F.col("group_id").cast("string")))
         % SPLIT_BUCKETS
     )
     return grouped.select(
-        id_col,
+        "doc_id",
         "group_id",
-        F.when(bucket < train_pct, F.lit("train"))
+        F.when(bucket < 80, F.lit("train"))
         .otherwise(F.lit("test"))
         .alias("split"),
     )
 
 
-def sql_leakage_free_split(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    train_pct: int = 80,
-    salt: str = "split:v1",
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_leakage_free_split() -> str:
     """DuckDB twin: the same recursive-CTE transitive closure as the
     cluster oracles, left-joined to the corpus, with the split hash drawn
     on COALESCE(cluster, doc)."""
     from .corpus import SPLIT_BUCKETS
 
-    h = sql_hash60(
-        f"'{salt}' || CAST(COALESCE(c.cluster_id, d.doc_id) AS VARCHAR)"
-    )
+    h = sql_hash60("'split:v1' || CAST(COALESCE(c.cluster_id, d.doc_id) AS VARCHAR)")
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(table, text_col, min_jaccard)}
+    WITH RECURSIVE {_sql_components_ctes('documents', 'text', NEARDUP_MIN_JACCARD)}
     SELECT d.doc_id,
            COALESCE(c.cluster_id, d.doc_id) AS group_id,
-           CASE WHEN ({h}) % {SPLIT_BUCKETS} < {train_pct}
+           CASE WHEN ({h}) % {SPLIT_BUCKETS} < 80
                 THEN 'train' ELSE 'test' END AS split
-    FROM {table} d LEFT JOIN clusters c ON d.doc_id = c.node
+    FROM documents d LEFT JOIN clusters c ON d.doc_id = c.node
     """
 
 
@@ -1735,13 +1544,7 @@ def sql_leakage_free_split(
 # ---------------------------------------------------------------------------
 
 
-def dedup_disposition(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> DataFrame:
+def dedup_disposition(df: DataFrame) -> DataFrame:
     """(doc_id, status, survivor_id): per-document disposition across the
     dedup lanes — the provenance line a corpus-governance audit needs
     ("why is this document not in the training set, and which one
@@ -1766,46 +1569,39 @@ def dedup_disposition(
     is proportional to the duplicate fraction (AQE-broadcast). Output is
     one row per document, three scalar columns.
     """
-    w = Window.partitionBy("_h", text_col)
+    w = Window.partitionBy("_h", "text")
     ex = (
         ensure_parallelism(df)
-        .select(id_col, text_col)
-        .withColumn("_h", hash60(F.col(text_col)))
-        .withColumn("_ex_surv", F.min(id_col).over(w))
+        .select("doc_id", "text")
+        .withColumn("_h", hash60(F.col("text")))
+        .withColumn("_ex_surv", F.min("doc_id").over(w))
     )
-    clusters = neardup_clusters(
-        df, text_col, id_col, min_jaccard=min_jaccard
-    ).withColumnRenamed("cluster_id", "_cl")
-    joined = ex.join(clusters, id_col, "left")
-    is_exact_dup = F.col(id_col) != F.col("_ex_surv")
-    is_near_dup = F.col("_cl").isNotNull() & (F.col(id_col) != F.col("_cl"))
+    clusters = neardup_clusters(df).withColumnRenamed("cluster_id", "_cl")
+    joined = ex.join(clusters, "doc_id", "left")
+    is_exact_dup = F.col("doc_id") != F.col("_ex_surv")
+    is_near_dup = F.col("_cl").isNotNull() & (F.col("doc_id") != F.col("_cl"))
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(is_exact_dup, F.lit("exact_dup"))
         .when(is_near_dup, F.lit("near_dup"))
         .otherwise(F.lit("kept"))
         .alias("status"),
         F.when(is_exact_dup, F.col("_ex_surv"))
         .when(is_near_dup, F.col("_cl"))
-        .otherwise(F.col(id_col))
+        .otherwise(F.col("doc_id"))
         .alias("survivor_id"),
     )
 
 
-def sql_dedup_disposition(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_dedup_disposition() -> str:
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(table, text_col, min_jaccard)},
+    WITH RECURSIVE {_sql_components_ctes('documents', 'text', NEARDUP_MIN_JACCARD)},
     ex AS (
         SELECT doc_id,
                MIN(doc_id) OVER (
-                   PARTITION BY {sql_hash60(text_col)}, {text_col}
+                   PARTITION BY {sql_hash60('text')}, text
                ) AS ex_surv
-        FROM {table}
+        FROM documents
     )
     SELECT e.doc_id,
            CASE WHEN e.ex_surv != e.doc_id THEN 'exact_dup'
@@ -1825,13 +1621,7 @@ def sql_dedup_disposition(
 # ---------------------------------------------------------------------------
 
 
-def lsh_band_load_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    feats: DataFrame | None = None,
-) -> DataFrame:
+def lsh_band_load_profile(df: DataFrame) -> DataFrame:
     """Per-band load report of the MinHash-LSH blocking key: how many
     buckets the band splits the corpus into, the biggest bucket, and the
     EXACT candidate-pair volume sum over buckets of s*(s-1)/2 that the
@@ -1849,7 +1639,7 @@ def lsh_band_load_profile(
     even. The same profile shape applies to any blocking key (SimHash
     bands, embedding buckets); MinHash bands are the registered instance.
     """
-    sigs = minhash_signatures(df, text_col, id_col, feats=feats)
+    sigs = minhash_signatures(df)
     buckets = sigs.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("s"))
     d19 = "decimal(19,0)"
     pair2 = F.col("s").cast(d19) * (F.col("s") - 1).cast(d19)
@@ -1865,11 +1655,9 @@ def lsh_band_load_profile(
     )
 
 
-def sql_lsh_band_load_profile(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_lsh_band_load_profile() -> str:
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     buckets AS (
         SELECT band, sig, COUNT(*) AS s FROM sigs GROUP BY 1, 2
     )
@@ -1892,10 +1680,7 @@ def sql_lsh_band_load_profile(
 def incremental_neardup(
     base: DataFrame,
     increment: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
     base_feats: DataFrame | None = None,
     inc_feats: DataFrame | None = None,
 ) -> DataFrame:
@@ -1907,7 +1692,7 @@ def incremental_neardup(
 
     - no BASE document verifies as a near-dup (LSH candidates from joining
       increment signatures against base signatures, exact shingle-set
-      Jaccard >= ``min_jaccard``), and
+      Jaccard >= ``NEARDUP_MIN_JACCARD``), and
     - no LOWER-ID increment document verifies as a near-dup (pairwise
       first-arrival-wins — deliberately NOT the transitive closure: the
       incremental setting processes arrivals greedily, matching what the
@@ -1925,33 +1710,25 @@ def incremental_neardup(
     feats_b = (
         base_feats
         if base_feats is not None
-        else shingle_features(base, text_col, id_col)
+        else shingle_features(base)
     )
-    sigs_b = minhash_signatures(base, text_col, id_col, feats=feats_b)
+    sigs_b = minhash_signatures(base, feats=feats_b)
     return _incremental_neardup_against(
         increment,
         sigs_b,
-        feats_b.select(F.col(id_col), F.col("_hs")),
-        text_col,
-        id_col,
-        min_jaccard,
+        feats_b.select(F.col("doc_id"), F.col("_hs")),
+        NEARDUP_MIN_JACCARD,
         inc_feats=inc_feats,
     )
 
 
 def sql_incremental_neardup(
-    base_pred: str,
-    inc_pred: str,
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-    out_cols: str = "*",
+    base_pred: str, inc_pred: str, *, out_cols: str = "*"
 ) -> str:
     """DuckDB twin of :func:`incremental_neardup` where base and increment
     are predicate-split slices of one table."""
-    base_t = f"(SELECT * FROM {table} WHERE {base_pred})"
-    inc_t = f"(SELECT * FROM {table} WHERE {inc_pred})"
+    base_t = f"(SELECT * FROM documents WHERE {base_pred})"
+    inc_t = f"(SELECT * FROM documents WHERE {inc_pred})"
     jac = (
         "len(list_intersect(i.hs, b.hs))::DOUBLE"
         " / len(list_distinct(list_concat(i.hs, b.hs)))"
@@ -1961,8 +1738,8 @@ def sql_incremental_neardup(
         " / len(list_distinct(list_concat(x.hs, y.hs)))"
     )
     return f"""
-    WITH {_sql_sigs_cte(base_t, text_col, "b_")},
-    {_sql_sigs_cte(inc_t, text_col, "i_")},
+    WITH {_sql_sigs_cte(base_t, 'text', "b_")},
+    {_sql_sigs_cte(inc_t, 'text', "i_")},
     cands AS (
         SELECT DISTINCT i.doc_id AS inc_id, b.doc_id AS base_id
         FROM i_sigs i JOIN b_sigs b ON i.band = b.band AND i.sig = b.sig
@@ -1972,7 +1749,7 @@ def sql_incremental_neardup(
         FROM cands c
         JOIN i_feats i ON c.inc_id = i.doc_id
         JOIN b_feats b ON c.base_id = b.doc_id
-        WHERE {jac} >= {min_jaccard}
+        WHERE {jac} >= {NEARDUP_MIN_JACCARD}
     ),
     intra_cands AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1984,7 +1761,7 @@ def sql_incremental_neardup(
         FROM intra_cands c
         JOIN i_feats x ON c.doc_a = x.doc_id
         JOIN i_feats y ON c.doc_b = y.doc_id
-        WHERE {jac_ii} >= {min_jaccard}
+        WHERE {jac_ii} >= {NEARDUP_MIN_JACCARD}
     )
     SELECT {out_cols} FROM {inc_t} inc
     WHERE inc.doc_id NOT IN (SELECT doc_id FROM dup_vs_base)
@@ -2001,16 +1778,10 @@ PR_ITER = 3  # fixed power-iteration count, unrolled on both engines
 PR_DAMPING = 0.85
 
 
-def neardup_pagerank(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    n_iter: int = PR_ITER,
-) -> DataFrame:
+def neardup_pagerank(df: DataFrame) -> DataFrame:
     """PageRank centrality of each document in the near-dup CANDIDATE
     graph (undirected: both directions of every LSH candidate pair) after
-    ``n_iter`` fixed power iterations — the template-hub detector: a
+    ``PR_ITER`` fixed power iterations — the template-hub detector: a
     boilerplate page that collides with everything accumulates score from
     its whole neighborhood, where raw degree only counts direct edges.
     Output: ``(doc_id, degree, score_micro)`` for every node with >= 1
@@ -2032,7 +1803,7 @@ def neardup_pagerank(
     0.85*sum once per node per round. Every node has degree >= 1 by
     construction, so there are no dangling-mass corrections.
     """
-    pairs = lsh_candidate_pairs(df, text_col, id_col)
+    pairs = lsh_candidate_pairs(df)
     # Both directions of every pair via ONE explode, not a unionAll of
     # two selects: the union form inlined the whole signature + self-join
     # pipeline once per side — twice the planning work at construction
@@ -2070,7 +1841,7 @@ def neardup_pagerank(
         .cast("bigint")
         .alias("base"),
     )
-    for _ in range(n_iter):
+    for _ in range(PR_ITER):
         contrib = (
             edges.join(
                 scores.select(
@@ -2104,21 +1875,16 @@ def neardup_pagerank(
             )
         )
     return scores.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("doc_id"),
         F.col("deg").alias("degree"),
         F.col("score").alias("score_micro"),
     )
 
 
-def sql_neardup_pagerank(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    n_iter: int = PR_ITER,
-) -> str:
+def sql_neardup_pagerank() -> str:
     """DuckDB twin: the same fixed iterations unrolled as CTEs s0..sN."""
     rounds = []
-    for i in range(n_iter):
+    for i in range(PR_ITER):
         prev, cur = f"s{i}", f"s{i + 1}"
         rounds.append(f"""
     c{i + 1} AS (
@@ -2135,7 +1901,7 @@ def sql_neardup_pagerank(
         FROM s0 d LEFT JOIN c{i + 1} c ON d.node = c.node
     )""")
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     cands AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -2158,7 +1924,7 @@ def sql_neardup_pagerank(
     SELECT node AS doc_id,
            CAST(deg AS BIGINT) AS degree,
            score AS score_micro
-    FROM s{n_iter}
+    FROM s{PR_ITER}
     """
 
 
@@ -2166,8 +1932,6 @@ def _incremental_neardup_against(
     increment: DataFrame,
     base_sigs: DataFrame,
     base_feats: DataFrame,
-    text_col: str,
-    id_col: str,
     min_jaccard: float,
     inc_feats: DataFrame | None = None,
 ) -> DataFrame:
@@ -2180,25 +1944,17 @@ def _incremental_neardup_against(
     feats_i = (
         inc_feats
         if inc_feats is not None
-        else shingle_features(increment, text_col, id_col)
+        else shingle_features(increment)
     )
-    sigs_i = minhash_signatures(
-        increment, text_col, id_col, feats=feats_i
-    ).select(F.col(id_col).alias("inc_id"), "band", "sig")
-    sigs_b = base_sigs.select(
-        F.col(id_col).alias("base_id"), "band", "sig"
-    )
+    sigs_i = minhash_signatures(increment, feats=feats_i).select(F.col("doc_id").alias("inc_id"), "band", "sig")
+    sigs_b = base_sigs.select(F.col("doc_id").alias("base_id"), "band", "sig")
     cands = (
         sigs_i.join(sigs_b, ["band", "sig"])
         .select("inc_id", "base_id")
         .dropDuplicates()
     )
-    fi = feats_i.select(
-        F.col(id_col).alias("inc_id"), F.col("_hs").alias("hs_i")
-    )
-    fb = base_feats.select(
-        F.col(id_col).alias("base_id"), F.col("_hs").alias("hs_b")
-    )
+    fi = feats_i.select(F.col("doc_id").alias("inc_id"), F.col("_hs").alias("hs_i"))
+    fb = base_feats.select(F.col("doc_id").alias("base_id"), F.col("_hs").alias("hs_b"))
     jac = F.size(F.array_intersect("hs_i", "hs_b")).cast("double") / F.size(
         F.array_union("hs_i", "hs_b")
     )
@@ -2206,22 +1962,16 @@ def _incremental_neardup_against(
         cands.join(fi, "inc_id")
         .join(fb, "base_id")
         .filter(jac >= F.lit(min_jaccard))
-        .select(F.col("inc_id").alias(id_col))
+        .select(F.col("inc_id").alias("doc_id"))
         .distinct()
     )
     dup_within = (
-        neardup_pairs(
-            increment,
-            text_col,
-            id_col,
-            min_jaccard=min_jaccard,
-            feats=feats_i,
-        )
-        .select(F.col("doc_b").alias(id_col))
+        neardup_pairs(increment, min_jaccard=min_jaccard, feats=feats_i)
+        .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
-    return increment.join(dup_vs_base, id_col, "left_anti").join(
-        dup_within, id_col, "left_anti"
+    return increment.join(dup_vs_base, "doc_id", "left_anti").join(
+        dup_within, "doc_id", "left_anti"
     )
 
 
@@ -2230,13 +1980,7 @@ def _incremental_neardup_against(
 # ---------------------------------------------------------------------------
 
 
-def quality_survivor_clusters(
-    documents: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> DataFrame:
+def quality_survivor_clusters(documents: DataFrame) -> DataFrame:
     """Per near-dup cluster, the KEEP-BEST survivor instead of keep-first:
     ``(cluster_id, survivor_doc_id, survivor_distinct_tokens, n_members)``
     where the survivor maximizes lexical richness (distinct-token count,
@@ -2255,23 +1999,21 @@ def quality_survivor_clusters(
     cluster key — no window over an unpartitioned frame, no second
     shuffle. Output is cluster-count-sized (duplicate clusters only).
     """
-    labels = neardup_clusters(
-        documents, text_col, id_col, min_jaccard=min_jaccard
-    )
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    labels = neardup_clusters(documents)
+    text = F.coalesce(F.col("text"), F.lit(""))
     richness = documents.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.array_distinct(F.split(text, " ")))
         .cast("bigint")
         .alias("_ndt"),
     )
-    scored = labels.join(richness, id_col)
+    scored = labels.join(richness, "doc_id")
     best = scored.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.max(
             F.struct(
                 F.col("_ndt").alias("ndt"),
-                (-F.col(id_col)).alias("nid"),
+                (-F.col("doc_id")).alias("nid"),
             )
         ).alias("_best"),
     )
@@ -2283,21 +2025,16 @@ def quality_survivor_clusters(
     )
 
 
-def sql_quality_survivor_clusters(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_quality_survivor_clusters() -> str:
     """Oracle twin over the recursive-CTE transitive closure; the argmax
     via a ROW_NUMBER window — different algorithm, same answer."""
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(table, text_col, min_jaccard)},
+    WITH RECURSIVE {_sql_components_ctes('documents', 'text', NEARDUP_MIN_JACCARD)},
     rich AS (
         SELECT doc_id,
-               len(list_distinct(string_split(COALESCE({text_col}, ''), ' ')))::BIGINT
+               len(list_distinct(string_split(COALESCE(text, ''), ' ')))::BIGINT
                    AS ndt
-        FROM {table}
+        FROM documents
     ),
     scored AS (
         SELECT c.cluster_id, c.node AS doc_id, r.ndt
@@ -2328,16 +2065,9 @@ def sql_quality_survivor_clusters(
 NGRAM_CONTAM_N = 13
 
 
-def eval_ngram_contamination(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    n: int = NGRAM_CONTAM_N,
-) -> DataFrame:
+def eval_ngram_contamination(train: DataFrame, eval_df: DataFrame) -> DataFrame:
     """(train_doc, n_grams, n_collisions, collision_frac): training docs
-    sharing at least one EXACT word ``n``-gram with the evaluation set —
+    sharing at least one EXACT word ``NGRAM_CONTAM_N``-gram with the evaluation set —
     the published decontamination standard (13-gram collision check),
     complementing :func:`eval_contamination`'s MinHash lane: the sketch
     lane finds whole-document near-copies, this one catches a verbatim
@@ -2354,10 +2084,10 @@ def eval_ngram_contamination(
     """
     from .text import shingle_hashes
 
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     tg = ensure_parallelism(train).select(
-        F.col(id_col).alias("train_doc"),
-        shingle_hashes(text, n).alias("_g"),
+        F.col("doc_id").alias("train_doc"),
+        shingle_hashes(text, NGRAM_CONTAM_N).alias("_g"),
     )
     ex = tg.select(
         "train_doc",
@@ -2365,7 +2095,7 @@ def eval_ngram_contamination(
         F.explode("_g").alias("g"),
     )
     eg = F.broadcast(
-        eval_df.select(F.explode(shingle_hashes(text, n)).alias("g")).distinct()
+        eval_df.select(F.explode(shingle_hashes(text, NGRAM_CONTAM_N)).alias("g")).distinct()
     )
     return (
         ex.join(eg, "g")
@@ -2384,26 +2114,19 @@ def eval_ngram_contamination(
     )
 
 
-def sql_eval_ngram_contamination(
-    train_pred: str,
-    eval_pred: str,
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    n: int = NGRAM_CONTAM_N,
-) -> str:
+def sql_eval_ngram_contamination(train_pred: str, eval_pred: str) -> str:
     """DuckDB twin over predicate-split slices of one table."""
     from .text import sql_shingle_hashes_over_w
 
-    grams = sql_shingle_hashes_over_w(n)
+    grams = sql_shingle_hashes_over_w(NGRAM_CONTAM_N)
     return f"""
     WITH tr AS (
-        SELECT doc_id, string_split(COALESCE({text_col}, ''), ' ') AS w
-        FROM {table} WHERE doc_id {train_pred}
+        SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w
+        FROM documents WHERE doc_id {train_pred}
     ),
     ev AS (
-        SELECT doc_id, string_split(COALESCE({text_col}, ''), ' ') AS w
-        FROM {table} WHERE doc_id {eval_pred}
+        SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w
+        FROM documents WHERE doc_id {eval_pred}
     ),
     tg AS (
         SELECT doc_id AS train_doc,
@@ -2433,12 +2156,7 @@ LSH_MAX_BUCKET = 64
 
 
 def lsh_capped_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    max_bucket: int = LSH_MAX_BUCKET,
-    feats: DataFrame | None = None,
+    df: DataFrame, *, max_bucket: int = LSH_MAX_BUCKET
 ) -> DataFrame:
     """:func:`lsh_candidate_pairs` with a hard cap on bucket size: bands
     whose (band, sig) bucket holds more than ``max_bucket`` documents are
@@ -2458,7 +2176,7 @@ def lsh_capped_candidate_pairs(
     fact shuffle — and guarantees every join task is ≤ max_bucket²
     pair-work regardless of input skew.
     """
-    sigs = minhash_signatures(df, text_col, id_col, feats=feats)
+    sigs = minhash_signatures(df)
     ok = (
         sigs.groupBy("band", "sig")
         .agg(F.count(F.lit(1)).alias("_s"))
@@ -2466,8 +2184,8 @@ def lsh_capped_candidate_pairs(
         .select("band", "sig")
     )
     kept = sigs.join(ok, ["band", "sig"])
-    a = kept.select(F.col(id_col).alias("doc_a"), "band", "sig")
-    b = kept.select(F.col(id_col).alias("doc_b"), "band", "sig")
+    a = kept.select(F.col("doc_id").alias("doc_a"), "band", "sig")
+    b = kept.select(F.col("doc_id").alias("doc_b"), "band", "sig")
     return (
         a.join(b, ["band", "sig"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -2476,14 +2194,9 @@ def lsh_capped_candidate_pairs(
     )
 
 
-def sql_lsh_capped_candidate_pairs(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    max_bucket: int = LSH_MAX_BUCKET,
-) -> str:
+def sql_lsh_capped_candidate_pairs(*, max_bucket: int = LSH_MAX_BUCKET) -> str:
     return f"""
-    WITH {_sql_sigs_cte(table, text_col)},
+    WITH {_sql_sigs_cte('documents', 'text')},
     ok AS (
         SELECT band, sig FROM sigs
         GROUP BY 1, 2 HAVING COUNT(*) <= {max_bucket}
@@ -2503,15 +2216,9 @@ def sql_lsh_capped_candidate_pairs(
 LSH_PLAN_GRID = 100
 
 
-def lsh_param_planner(
-    spark,
-    *,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    grid: int = LSH_PLAN_GRID,
-) -> DataFrame:
+def lsh_param_planner(spark) -> DataFrame:
     """The MinHash-LSH tuning table for the configured banding (b, r): for
-    each Jaccard similarity s on a 1/``grid`` lattice, the candidate
+    each Jaccard similarity s on a 1/``LSH_PLAN_GRID`` lattice, the candidate
     probability ``P(candidate | s) = 1 − (1 − s^r)^b`` — the published
     S-curve every LSH deployment reads before picking b and r (Leskovec
     et al., MMDS ch. 3). Output also flags the half-power threshold
@@ -2530,7 +2237,7 @@ def lsh_param_planner(
     exact-lattice doubles in fixed association, so both engines emit
     identical doubles before the micro-quantization.
     """
-    s = F.col("s_centi").cast("double") / F.lit(float(grid))
+    s = F.col("s_centi").cast("double") / F.lit(float(LSH_PLAN_GRID))
 
     def int_pow(base: Column, n: int) -> Column:
         acc = base
@@ -2538,41 +2245,36 @@ def lsh_param_planner(
             acc = acc * base
         return acc
 
-    p_band = int_pow(s, rows)  # one band all-equal
-    p_cand = F.lit(1.0) - int_pow(F.lit(1.0) - p_band, bands)
+    p_band = int_pow(s, LSH_ROWS)  # one band all-equal
+    p_cand = F.lit(1.0) - int_pow(F.lit(1.0) - p_band, LSH_BANDS)
     p_micro = F.round(p_cand * F.lit(1_000_000.0)).cast("bigint")
     return (
-        spark.range(1, grid + 1)
+        spark.range(1, LSH_PLAN_GRID + 1)
         .select(F.col("id").cast("int").alias("s_centi"))
         .select(
             "s_centi",
-            F.lit(bands).cast("int").alias("bands"),
-            F.lit(rows).cast("int").alias("rows"),
+            F.lit(LSH_BANDS).cast("int").alias("bands"),
+            F.lit(LSH_ROWS).cast("int").alias("rows"),
             p_micro.alias("p_candidate_micro"),
             (p_micro > 500_000).alias("is_above_half"),
         )
     )
 
 
-def sql_lsh_param_planner(
-    *,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    grid: int = LSH_PLAN_GRID,
-) -> str:
-    s = f"(CAST(g.s AS DOUBLE) / {float(grid)})"
-    p_band = " * ".join([s] * rows)
+def sql_lsh_param_planner() -> str:
+    s = f"(CAST(g.s AS DOUBLE) / {float(LSH_PLAN_GRID)})"
+    p_band = " * ".join([s] * LSH_ROWS)
     one_minus = f"(1.0 - ({p_band}))"
-    p_not = " * ".join([one_minus] * bands)
+    p_not = " * ".join([one_minus] * LSH_BANDS)
     return f"""
     SELECT CAST(g.s AS INT) AS s_centi,
-           CAST({bands} AS INT) AS bands,
-           CAST({rows} AS INT) AS rows,
+           CAST({LSH_BANDS} AS INT) AS bands,
+           CAST({LSH_ROWS} AS INT) AS rows,
            CAST(round((1.0 - ({p_not})) * 1000000.0) AS BIGINT)
                AS p_candidate_micro,
            CAST(round((1.0 - ({p_not})) * 1000000.0) AS BIGINT) > 500000
                AS is_above_half
-    FROM generate_series(1, {grid}) AS g(s)
+    FROM generate_series(1, {LSH_PLAN_GRID}) AS g(s)
     """
 
 
@@ -2592,20 +2294,13 @@ BATCH_MOD = 9
 BATCH_MOD_BASE = 10
 
 
-# Persisted contamination-base projections keyed by (input plan, params).
+# Persisted contamination-base projections keyed by input plan.
 # Closes the ADVICE r13 leak: every batch_contamination_diff call
 # persisted a fresh identical projection and never released it.
 _CONTAM_BASE_MEMO = SessionMemo(4, persisted=True)
 
 
-def batch_contamination_diff(
-    documents: DataFrame,
-    *,
-    batch_mod: int = BATCH_MOD,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = NGRAM_CONTAM_N,
-) -> DataFrame:
+def batch_contamination_diff(documents: DataFrame) -> DataFrame:
     """Per-batch-document contamination report against the accreted index:
     (doc_id, n_grams, exact_dup, n_gram_collisions, contaminated) — for
     every document in the incoming batch, did its EXACT content hash
@@ -2629,18 +2324,18 @@ def batch_contamination_diff(
     from .text import shingle_hashes
 
     def build() -> DataFrame:
-        text = F.coalesce(F.col(text_col), F.lit(""))
+        text = F.coalesce(F.col("text"), F.lit(""))
         return documents.select(
-            F.col(id_col).alias("doc_id"),
-            ((F.col(id_col) % F.lit(BATCH_MOD_BASE)) == F.lit(batch_mod))
+            F.col("doc_id"),
+            ((F.col("doc_id") % F.lit(BATCH_MOD_BASE)) == F.lit(BATCH_MOD))
             .alias("_is_batch"),
             F.md5(text).alias("_h"),
-            shingle_hashes(text, n).alias("_g"),
+            shingle_hashes(text, NGRAM_CONTAM_N).alias("_g"),
         )
 
     base = _CONTAM_BASE_MEMO.get(
         documents.sparkSession,
-        (documents.semanticHash(), batch_mod, id_col, text_col, n),
+        (documents.semanticHash(),),
         build,
     )
     batch = base.filter("_is_batch")
@@ -2709,23 +2404,18 @@ def contamination_report(
 
 
 
-def sql_batch_contamination_diff(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    n: int = NGRAM_CONTAM_N,
-) -> str:
+def sql_batch_contamination_diff() -> str:
     from .text import sql_shingle_hashes_over_w
 
-    grams = sql_shingle_hashes_over_w(n)
+    grams = sql_shingle_hashes_over_w(NGRAM_CONTAM_N)
     pred = f"doc_id % {BATCH_MOD_BASE} = {BATCH_MOD}"
     return f"""
     WITH base AS (
         SELECT doc_id,
                ({pred}) AS is_batch,
-               md5(COALESCE({text_col}, '')) AS h,
-               string_split(COALESCE({text_col}, ''), ' ') AS w
-        FROM {table}
+               md5(COALESCE(text, '')) AS h,
+               string_split(COALESCE(text, ''), ' ') AS w
+        FROM documents
     ),
     g AS (SELECT doc_id, is_batch, h, {grams} AS gs FROM base),
     idx_h AS (SELECT DISTINCT h FROM g WHERE NOT is_batch),

@@ -91,12 +91,7 @@ def sql_takedown_impact(
 KANON_K = 5
 
 
-def kanon_risk_report(
-    documents: "DataFrame",
-    *,
-    k: int = KANON_K,
-    text_col: str = "text",
-) -> "DataFrame":
+def kanon_risk_report(documents: "DataFrame", *, k: int = KANON_K) -> "DataFrame":
     """Per-cell k-anonymity census over the corpus's quasi-identifier
     tuple (lang, source, power-of-two length bucket): cells with fewer
     than ``k`` documents are re-identification risks — a released corpus
@@ -111,7 +106,7 @@ def kanon_risk_report(
     NULL lang/source group as their own cells (NULL is itself a
     quasi-identifier value and can be the rarest one).
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     bucket = (
         F.length(F.bin(F.length(text).cast("bigint"))) - F.lit(1)
     ).cast("int")
@@ -133,18 +128,16 @@ def kanon_risk_report(
     )
 
 
-def sql_kanon_risk_report(
-    table: str = "documents", *, k: int = KANON_K, text_col: str = "text"
-) -> str:
+def sql_kanon_risk_report() -> str:
     return f"""
     SELECT lang, source, len_bucket,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           COUNT(*) < {k} AS at_risk
+           COUNT(*) < {KANON_K} AS at_risk
     FROM (
         SELECT lang, source,
-               CAST(length(bin((length(COALESCE({text_col}, '')))::BIGINT))
+               CAST(length(bin((length(COALESCE(text, '')))::BIGINT))
                     - 1 AS INT) AS len_bucket
-        FROM {table}
+        FROM documents
     )
     GROUP BY 1, 2, 3
     """

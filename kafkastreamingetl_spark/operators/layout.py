@@ -24,14 +24,14 @@ from pyspark.sql import functions as F
 Z_BITS = 16  # bits kept per dimension; 2*Z_BITS-bit Morton code
 
 
-def zvalue(x: Column, y: Column, bits: int = Z_BITS) -> Column:
-    """Morton code: interleave the low ``bits`` bits of two non-negative
+def zvalue(x: Column, y: Column) -> Column:
+    """Morton code: interleave the low ``Z_BITS`` bits of two non-negative
     integer columns (x in even positions, y in odd). Pure shift/mask
     expression tree — whole-stage-codegen eligible."""
-    xb = x.cast("bigint").bitwiseAND(F.lit((1 << bits) - 1))
-    yb = y.cast("bigint").bitwiseAND(F.lit((1 << bits) - 1))
+    xb = x.cast("bigint").bitwiseAND(F.lit((1 << Z_BITS) - 1))
+    yb = y.cast("bigint").bitwiseAND(F.lit((1 << Z_BITS) - 1))
     z = F.lit(0).cast("bigint")
-    for k in range(bits):
+    for k in range(Z_BITS):
         z = z + F.shiftleft(F.shiftright(xb, k).bitwiseAND(F.lit(1)), 2 * k)
         z = z + F.shiftleft(
             F.shiftright(yb, k).bitwiseAND(F.lit(1)), 2 * k + 1
@@ -39,13 +39,13 @@ def zvalue(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return z
 
 
-def sql_zvalue(x: str, y: str, bits: int = Z_BITS) -> str:
+def sql_zvalue(x: str, y: str) -> str:
     """DuckDB twin of :func:`zvalue` (same shift/mask terms)."""
-    mask = (1 << bits) - 1
+    mask = (1 << Z_BITS) - 1
     # Every term fully parenthesized: DuckDB (like PostgreSQL) binds `+`
     # TIGHTER than `<<`, so unwrapped `a << 0 + b << 1` cascades the shifts.
     terms = []
-    for k in range(bits):
+    for k in range(Z_BITS):
         terms.append(f"(((({x} & {mask}) >> {k}) & 1) << {2 * k})")
         terms.append(f"(((({y} & {mask}) >> {k}) & 1) << {2 * k + 1})")
     return "(" + " + ".join(terms) + ")"
@@ -86,7 +86,7 @@ def events_zcoded(events: DataFrame) -> DataFrame:
     )
 
 
-def zorder_layout_report(events: DataFrame, n_buckets: int = 32) -> DataFrame:
+def zorder_layout_report(events: DataFrame) -> DataFrame:
     """Range-bucket rows by Morton code (each bucket standing in for one
     output file) and report each bucket's bounding box in BOTH source
     dimensions — small boxes on both axes are what make z-order layouts
@@ -103,7 +103,7 @@ def zorder_layout_report(events: DataFrame, n_buckets: int = 32) -> DataFrame:
     from .rankstats import exact_ntile_cuts
 
     z = events_zcoded(events)
-    b = exact_ntile_cuts(z, [(n_buckets, ["zval", "event_id"], "bucket")])
+    b = exact_ntile_cuts(z, [(32, ["zval", "event_id"], "bucket")])
     return b.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("zval").alias("z_min"),
@@ -115,7 +115,7 @@ def zorder_layout_report(events: DataFrame, n_buckets: int = 32) -> DataFrame:
     )
 
 
-def sql_zorder_layout_report(n_buckets: int = 32) -> str:
+def sql_zorder_layout_report() -> str:
     top = (1 << Z_BITS) - 1
     zexpr = sql_zvalue("ux", "tx")
     return f"""
@@ -142,7 +142,7 @@ def sql_zorder_layout_report(n_buckets: int = 32) -> str:
         FROM scaled
     ),
     b AS (
-        SELECT *, CAST(ntile({n_buckets}) OVER (
+        SELECT *, CAST(ntile(32) OVER (
             ORDER BY zval ASC NULLS FIRST, event_id ASC NULLS FIRST
         ) AS INT) AS bucket
         FROM z

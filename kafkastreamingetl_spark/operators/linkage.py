@@ -26,15 +26,13 @@ def blocked_name_match(
     right_key: str,
     left_name: str,
     right_name: str,
-    block_mod: int = 100,
-    max_dist: int = 1,
 ) -> DataFrame:
-    """Match entities whose name *suffix digits* are within ``max_dist``
-    edits, blocking on suffix mod ``block_mod``.
+    """Match entities whose name *suffix digits* are within one edit,
+    blocking on suffix mod 100.
 
     Blocking contract: the key must be insensitive to the edits the verify
     stage tolerates — here the block key is the numeric suffix modulo
-    ``block_mod``, so candidate pairs always share a block and no true
+    100, so candidate pairs always share a block and no true
     match at distance 0 escapes; single-edit matches that change the
     residue are deliberately traded away (recall/cost dial, documented at
     the query site).
@@ -51,34 +49,34 @@ def blocked_name_match(
         F.col(left_name),
         digits(left_name).alias("l_digits"),
     ).filter(ok(F.col("l_digits"))).withColumn(
-        "_blk", F.col("l_digits").cast("bigint") % block_mod
+        "_blk", F.col("l_digits").cast("bigint") % 100
     )
     r = right.select(
         F.col(right_key),
         F.col(right_name),
         digits(right_name).alias("r_digits"),
     ).filter(ok(F.col("r_digits"))).withColumn(
-        "_blk", F.col("r_digits").cast("bigint") % block_mod
+        "_blk", F.col("r_digits").cast("bigint") % 100
     )
     cand = l.join(r, "_blk")
     return (
         cand.withColumn(
             "edit_dist", F.levenshtein(F.col("l_digits"), F.col("r_digits"))
         )
-        .filter(F.col("edit_dist") <= max_dist)
+        .filter(F.col("edit_dist") <= 1)
         .select(left_key, right_key, left_name, right_name, "edit_dist")
     )
 
 
-def sql_blocked_name_match(block_mod: int = 100, max_dist: int = 1) -> str:
-    return f"""
+def sql_blocked_name_match() -> str:
+    return """
     WITH ld AS (
         SELECT c_custkey, c_name,
                regexp_replace(c_name, '[^0-9]', '', 'g') AS l_digits
         FROM customer
     ),
     l AS (
-        SELECT *, CAST(l_digits AS BIGINT) % {block_mod} AS blk
+        SELECT *, CAST(l_digits AS BIGINT) % 100 AS blk
         FROM ld WHERE length(l_digits) BETWEEN 1 AND 18
     ),
     rd AS (
@@ -87,11 +85,11 @@ def sql_blocked_name_match(block_mod: int = 100, max_dist: int = 1) -> str:
         FROM supplier
     ),
     r AS (
-        SELECT *, CAST(r_digits AS BIGINT) % {block_mod} AS blk
+        SELECT *, CAST(r_digits AS BIGINT) % 100 AS blk
         FROM rd WHERE length(r_digits) BETWEEN 1 AND 18
     )
     SELECT l.c_custkey, r.s_suppkey, l.c_name, r.s_name,
            CAST(levenshtein(l.l_digits, r.r_digits) AS INT) AS edit_dist
     FROM l JOIN r ON l.blk = r.blk
-    WHERE levenshtein(l.l_digits, r.r_digits) <= {max_dist}
+    WHERE levenshtein(l.l_digits, r.r_digits) <= 1
     """

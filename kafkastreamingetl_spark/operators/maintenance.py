@@ -68,7 +68,6 @@ def compact_partitions(
     partition_col: str,
     partition_values: list[str] | None = None,
     *,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     max_records_per_file: int | None = 10_000_000,
     sort_cols: list[str] | None = None,
 ) -> dict[str, int]:
@@ -100,7 +99,7 @@ def compact_partitions(
     written: dict[str, int] = {}
     for value in partition_values:
         n_files, total_bytes = stats[value]
-        target = max(1, -(-total_bytes // target_file_bytes))  # ceil
+        target = max(1, -(-total_bytes // DEFAULT_TARGET_FILE_BYTES))  # ceil
         if target >= n_files:
             continue  # already at-or-under target: rewriting would churn
         part = spark.read.parquet(path).where(F.col(partition_col) == value)

@@ -48,16 +48,14 @@ def _fake_decode(digest_hex: str) -> tuple[int, int]:
     return w, h
 
 
-def with_binary_payload(
-    df: DataFrame, source_col: str = "text", payload_col: str = "payload"
-) -> DataFrame:
+def with_binary_payload(df: DataFrame) -> DataFrame:
     """Materialize an opaque binary column (UTF-8 bytes of a string column).
 
     Stand-in producer: the testdata has no real media, so documents' text
     doubles as the payload. Real pipelines read media bytes from parquet
     ``binary`` columns or ``spark.read.format("binaryFile")``.
     """
-    return df.withColumn(payload_col, F.encode(F.col(source_col), "utf-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
 def _slim(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -83,15 +81,13 @@ def _opt_bytes(p) -> bytes | None:
     return None if p is None else bytes(p)
 
 
-def extract_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched per-item feature extraction over a binary column.
 
     Output: (doc_id, n_bytes, content_md5, fake_width, fake_height);
     null payloads yield null features.
     """
-    slim = _slim(df, id_col, payload_col)
+    slim = _slim(df, "doc_id", "payload")
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -114,16 +110,16 @@ def extract_features(
     return slim.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-def sql_extract_features(table: str = "documents", source_col: str = "text") -> str:
+def sql_extract_features() -> str:
     """DuckDB twin of encode→extract_features over an ASCII source column."""
-    h = f"md5({source_col})"
+    h = "md5(text)"
     return f"""
     SELECT doc_id,
-           length({source_col})::BIGINT AS n_bytes,
+           length(text)::BIGINT AS n_bytes,
            {h} AS content_md5,
            (1 + ('0x' || substr({h}, 1, 8))::BIGINT % 1920)::INT AS fake_width,
            (1 + ('0x' || substr({h}, 9, 8))::BIGINT % 1080)::INT AS fake_height
-    FROM {table}
+    FROM documents
     """
 
 
@@ -135,11 +131,7 @@ RESIZE_TARGET_BYTES = 64
 
 
 def resize_payloads(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    *,
-    target_bytes: int = RESIZE_TARGET_BYTES,
+    df: DataFrame, *, target_bytes: int = RESIZE_TARGET_BYTES
 ) -> DataFrame:
     """The resize/downsample plumbing: binary in → smaller binary out, 1:1.
 
@@ -148,7 +140,7 @@ def resize_payloads(
     the decoded pixels inside the same batch loop; the Arrow batch shape,
     output schema, and 1:1 row contract are what this operator pins down).
     """
-    slim = _slim(df, id_col, payload_col)
+    slim = _slim(df, "doc_id", "payload")
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -179,19 +171,14 @@ def resize_payloads(
     )
 
 
-def sql_resize_payloads(
-    table: str = "documents",
-    source_col: str = "text",
-    *,
-    target_bytes: int = RESIZE_TARGET_BYTES,
-) -> str:
+def sql_resize_payloads() -> str:
     return f"""
     SELECT doc_id,
-           base64(encode(substr({source_col}, 1, {target_bytes})))
+           base64(encode(substr(text, 1, {RESIZE_TARGET_BYTES})))
                AS payload_b64,
-           length({source_col})::BIGINT AS n_bytes_in,
-           least(length({source_col}), {target_bytes})::BIGINT AS n_bytes_out
-    FROM {table}
+           length(text)::BIGINT AS n_bytes_in,
+           least(length(text), {RESIZE_TARGET_BYTES})::BIGINT AS n_bytes_out
+    FROM documents
     """
 
 
@@ -204,12 +191,7 @@ FRAME_STRIDE = 4  # keep every 4th frame
 
 
 def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    *,
-    frame_bytes: int = FRAME_BYTES,
-    stride: int = FRAME_STRIDE,
+    df: DataFrame, *, frame_bytes: int = FRAME_BYTES, stride: int = FRAME_STRIDE
 ) -> DataFrame:
     """Video-style frame sampling: each payload explodes into every
     ``stride``-th fixed-width chunk — the 1→N ``mapInPandas`` shape
@@ -217,7 +199,7 @@ def sample_frames(
     Chunking stands in for ffmpeg keyframe extraction; frame_idx keeps the
     original frame position so downstream work can reconstruct timing.
     """
-    slim = _slim(df, id_col, payload_col)
+    slim = _slim(df, "doc_id", "payload")
 
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -249,26 +231,20 @@ def sample_frames(
     )
 
 
-def sql_sample_frames(
-    table: str = "documents",
-    source_col: str = "text",
-    *,
-    frame_bytes: int = FRAME_BYTES,
-    stride: int = FRAME_STRIDE,
-) -> str:
-    n_frames = f"((length({source_col}) + {frame_bytes - 1}) // {frame_bytes})"
+def sql_sample_frames() -> str:
+    n_frames = f"((length(text) + {FRAME_BYTES - 1}) // {FRAME_BYTES})"
     return f"""
     WITH exploded AS (
-        SELECT doc_id, {source_col} AS src,
+        SELECT doc_id, text AS src,
                {n_frames}::INT AS n_frames_total,
                unnest(range(0, {n_frames})) AS frame_idx
-        FROM {table}
+        FROM documents
     )
     SELECT doc_id,
            frame_idx::INT AS frame_idx,
-           base64(encode(substr(src, frame_idx::INT * {frame_bytes} + 1,
-                                {frame_bytes}))) AS frame_b64,
+           base64(encode(substr(src, frame_idx::INT * {FRAME_BYTES} + 1,
+                                {FRAME_BYTES}))) AS frame_b64,
            n_frames_total
     FROM exploded
-    WHERE frame_idx % {stride} = 0
+    WHERE frame_idx % {FRAME_STRIDE} = 0
     """

@@ -40,16 +40,8 @@ MIN_TOKENS = 20
 MIN_TYPE_TOKEN_RATIO = 0.30
 
 
-def training_set_sample(
-    documents: DataFrame,
-    embeddings: DataFrame,
-    *,
-    k_per_label: int = 10,
-    min_tokens: int = MIN_TOKENS,
-    min_ttr: float = MIN_TYPE_TOKEN_RATIO,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> DataFrame:
-    """Per-label top-``k_per_label`` quality-ranked, deduplicated sample.
+def training_set_sample(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
+    """Per-label top-10 quality-ranked, deduplicated sample.
 
     Returns (doc_id, label, n_tokens, quality_score, sample_rank) where
     quality_score is the type-token ratio (exact double division — the
@@ -63,10 +55,10 @@ def training_set_sample(
         "doc_id",
         n_tok.cast("bigint").alias("n_tokens"),
         ttr.alias("quality_score"),
-    ).filter((F.col("n_tokens") >= min_tokens) & (F.col("quality_score") >= min_ttr))
+    ).filter((F.col("n_tokens") >= MIN_TOKENS) & (F.col("quality_score") >= MIN_TYPE_TOKEN_RATIO))
 
     losers = (
-        neardup_clusters(documents, min_jaccard=min_jaccard)
+        neardup_clusters(documents, min_jaccard=NEARDUP_MIN_JACCARD)
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )
@@ -82,31 +74,23 @@ def training_set_sample(
     )
     return (
         labeled.withColumn("sample_rank", F.row_number().over(w))
-        .filter(F.col("sample_rank") <= k_per_label)
+        .filter(F.col("sample_rank") <= 10)
         .select("doc_id", "label", "n_tokens", "quality_score", "sample_rank")
     )
 
 
-def sql_training_set_sample(
-    doc_table: str = "documents",
-    emb_table: str = "embeddings",
-    *,
-    k_per_label: int = 10,
-    min_tokens: int = MIN_TOKENS,
-    min_ttr: float = MIN_TYPE_TOKEN_RATIO,
-    min_jaccard: float = NEARDUP_MIN_JACCARD,
-) -> str:
+def sql_training_set_sample() -> str:
     from .dedup import _sql_components_ctes
 
     w = sql_tokens("text")
     return f"""
-    WITH RECURSIVE {_sql_components_ctes(doc_table, "text", min_jaccard)},
+    WITH RECURSIVE {_sql_components_ctes('documents', "text", NEARDUP_MIN_JACCARD)},
     qual AS (
         SELECT doc_id,
                len({w})::BIGINT AS n_tokens,
                len(list_distinct({w}))::DOUBLE / len({w}) AS quality_score
-        FROM {doc_table}
-        WHERE n_tokens >= {min_tokens} AND quality_score >= {min_ttr}
+        FROM documents
+        WHERE n_tokens >= {MIN_TOKENS} AND quality_score >= {MIN_TYPE_TOKEN_RATIO}
     ),
     deduped AS (
         SELECT q.* FROM qual q
@@ -120,19 +104,13 @@ def sql_training_set_sample(
                ORDER BY d.quality_score DESC NULLS LAST, d.doc_id ASC NULLS FIRST
            ) AS INT) AS sample_rank
     FROM deduped d
-    JOIN {emb_table} e ON d.doc_id = e.vec_id
-    QUALIFY sample_rank <= {k_per_label}
+    JOIN embeddings e ON d.doc_id = e.vec_id
+    QUALIFY sample_rank <= 10
     """
 
 
 def run_corpus_refresh(
-    documents: DataFrame,
-    embeddings: DataFrame,
-    output_path: str,
-    *,
-    k_per_label: int = 10,
-    train_pct: int = 80,
-    fail_below_rows: int = 1,
+    documents: DataFrame, embeddings: DataFrame, output_path: str
 ) -> dict[str, int]:
     """The operational north-star job, end-to-end: deduplicated corpus →
     quality-ranked per-label sample → salted train/test split → partitioned
@@ -145,7 +123,7 @@ def run_corpus_refresh(
     trainers read ``split=train`` with partition pruning and never see
     held-out rows. Returns row counts per output for the scheduler's QC
     (fails the run when the training set collapses below
-    ``fail_below_rows`` — the guard the warn-only reference check lacks).
+    one row — the guard the warn-only reference check lacks).
 
     Cost shape: the corpus dedup and the sample's cluster branch share the
     memoized shingle features + resolved cluster labels, so text is hashed
@@ -163,14 +141,10 @@ def run_corpus_refresh(
     corpus = neardup_dedup(documents)
     corpus.write.mode("overwrite").parquet(f"{output_path}/corpus")
 
-    sample = training_set_sample(
-        documents, embeddings, k_per_label=k_per_label
-    )
+    sample = training_set_sample(documents, embeddings)
     training = sample.withColumn(
         "split",
-        F.when(split_bucket_col("doc_id") < train_pct, F.lit("train")).otherwise(
-            F.lit("test")
-        ),
+        F.when(split_bucket_col() < 80, F.lit("train")).otherwise(F.lit("test")),
     )
     (
         training.write.mode("overwrite")
@@ -197,9 +171,9 @@ def run_corpus_refresh(
         "corpus": _count(f"{output_path}/corpus"),
         "training_set": _count(f"{output_path}/training_set"),
     }
-    if counts["training_set"] < fail_below_rows:
+    if counts["training_set"] < 1:
         raise ValueError(
             f"corpus refresh produced {counts['training_set']} training rows"
-            f" (< {fail_below_rows})"
+            " (< 1)"
         )
     return counts

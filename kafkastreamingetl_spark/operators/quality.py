@@ -57,8 +57,8 @@ def events_quality_report(df: DataFrame) -> DataFrame:
     )
 
 
-def sql_events_quality_report(table: str = "events") -> str:
-    return f"""
+def sql_events_quality_report() -> str:
+    return """
     SELECT COUNT(*) AS n_rows,
            CAST(SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT)
                AS null_event_type,
@@ -69,7 +69,7 @@ def sql_events_quality_report(table: str = "events") -> str:
            CAST(SUM(CASE WHEN ts < TIMESTAMP '2020-01-01' THEN 1 ELSE 0 END)
                AS BIGINT) AS ts_out_of_domain,
            COUNT(*) - COUNT(DISTINCT event_id) AS dup_event_ids
-    FROM {table}
+    FROM events
     """
 
 
@@ -120,9 +120,7 @@ def profile_columns(
     )
 
 
-def winsorized_type_stats(
-    events: DataFrame, *, lo_q: float = 0.05, hi_q: float = 0.95
-) -> DataFrame:
+def winsorized_type_stats(events: DataFrame) -> DataFrame:
     """Robust (winsorized) per-type value statistics: clamp each value to
     the group's [lo_q, hi_q] order statistics, then aggregate — the
     outlier-resistant mean/total a metrics pipeline reports when raw
@@ -151,12 +149,12 @@ def winsorized_type_stats(
         F.min(
             F.when(
                 F.col("_rn")
-                == F.greatest(F.lit(1), F.ceil(lo_q * F.col("_n"))),
+                == F.greatest(F.lit(1), F.ceil(0.05 * F.col("_n"))),
                 F.col("value"),
             )
         ).alias("lo"),
         F.min(
-            F.when(F.col("_rn") == F.ceil(hi_q * F.col("_n")), F.col("value"))
+            F.when(F.col("_rn") == F.ceil(0.95 * F.col("_n")), F.col("value"))
         ).alias("hi"),
     )
     return clamp_and_aggregate(e, thresholds)
@@ -185,7 +183,7 @@ def clamp_and_aggregate(e: DataFrame, thresholds: DataFrame) -> DataFrame:
     )
 
 
-def sql_winsorized_type_stats(lo_q: float = 0.05, hi_q: float = 0.95) -> str:
+def sql_winsorized_type_stats() -> str:
     return f"""
     WITH e AS (
         SELECT event_type, value, event_id
@@ -202,9 +200,9 @@ def sql_winsorized_type_stats(lo_q: float = 0.05, hi_q: float = 0.95) -> str:
     ),
     t AS (
         SELECT event_type,
-               MIN(CASE WHEN rn = GREATEST(1, CEIL({lo_q} * n))
+               MIN(CASE WHEN rn = GREATEST(1, CEIL(0.05 * n))
                         THEN value END) AS lo,
-               MIN(CASE WHEN rn = CEIL({hi_q} * n) THEN value END) AS hi
+               MIN(CASE WHEN rn = CEIL(0.95 * n) THEN value END) AS hi
         FROM ranked GROUP BY 1
     ),
     clamped AS (
@@ -288,7 +286,7 @@ def observe_qc(
 # ---------------------------------------------------------------------------
 
 
-def value_drift_profile(events: DataFrame, *, key_col: str = "event_type") -> DataFrame:
+def value_drift_profile(events: DataFrame) -> DataFrame:
     """Per-key distribution drift between the first and second half of the
     observed time span: total-variation distance over value-magnitude
     buckets — the "did this metric's distribution move" monitor that a
@@ -313,7 +311,7 @@ def value_drift_profile(events: DataFrame, *, key_col: str = "event_type") -> Da
     ev = events.filter(
         F.col("value").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.col(key_col).alias("key"),
+        F.col("event_type").alias("key"),
         F.unix_micros("ts").alias("t_us"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
@@ -354,7 +352,7 @@ def value_drift_profile(events: DataFrame, *, key_col: str = "event_type") -> Da
         F.count(F.lit(1)).alias("n_buckets"), F.sum(num).alias("_num")
     )
     return agg.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("event_type"),
         F.col("n1").alias("n_first"),
         F.col("n2").alias("n_second"),
         "n_buckets",
@@ -367,10 +365,10 @@ def value_drift_profile(events: DataFrame, *, key_col: str = "event_type") -> Da
     )
 
 
-def sql_value_drift_profile(key_col: str = "event_type") -> str:
-    return f"""
+def sql_value_drift_profile() -> str:
+    return """
     WITH ev AS (
-        SELECT {key_col} AS key, epoch_us(ts) AS t_us,
+        SELECT event_type AS key, epoch_us(ts) AS t_us,
                CAST(ROUND(value * 100) AS BIGINT) AS cents
         FROM events
         WHERE value IS NOT NULL AND ts IS NOT NULL
@@ -404,7 +402,7 @@ def sql_value_drift_profile(key_col: str = "event_type") -> str:
                SUM(ABS(CAST(c1 AS HUGEINT) * n2 - CAST(c2 AS HUGEINT) * n1)) AS num
         FROM with_tot GROUP BY 1, 2, 3
     )
-    SELECT key AS {key_col}, n1 AS n_first, n2 AS n_second, n_buckets,
+    SELECT key AS event_type, n1 AS n_first, n2 AS n_second, n_buckets,
            CASE WHEN n1 > 0 AND n2 > 0
                 THEN CAST(num AS DOUBLE)
                      / CAST(CAST(n1 AS HUGEINT) * n2 AS DOUBLE) / 2.0

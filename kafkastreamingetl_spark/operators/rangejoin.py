@@ -41,13 +41,7 @@ BUCKET_SECONDS = 300
 
 
 def interval_join(
-    left: DataFrame,
-    intervals: DataFrame,
-    *,
-    ts_col: str = "ts",
-    start_col: str = "w_start",
-    end_col: str = "w_end",
-    bucket_seconds: int = BUCKET_SECONDS,
+    left: DataFrame, intervals: DataFrame, *, bucket_seconds: int = BUCKET_SECONDS
 ) -> DataFrame:
     """Rows of ``left`` joined to every interval with
     ``start <= ts < end`` (half-open). Degenerate intervals (end <= start)
@@ -57,22 +51,20 @@ def interval_join(
     def bucket_of(c):
         return F.floor(F.unix_micros(c) / F.lit(b_us)).cast("long")
 
-    l_tagged = left.withColumn("_b", bucket_of(F.col(ts_col)))
-    iv = intervals.filter(F.col(end_col) > F.col(start_col)).withColumn(
+    l_tagged = left.withColumn("_b", bucket_of(F.col("ts")))
+    iv = intervals.filter(F.col("w_end") > F.col("w_start")).withColumn(
         "_b",
         F.explode(
             F.sequence(
-                bucket_of(F.col(start_col)),
+                bucket_of(F.col("w_start")),
                 # end is exclusive: the last covered bucket holds end - 1µs
-                F.floor((F.unix_micros(F.col(end_col)) - 1) / F.lit(b_us)).cast(
-                    "long"
-                ),
+                F.floor((F.unix_micros(F.col("w_end")) - 1) / F.lit(b_us)).cast("long"),
             )
         ),
     )
     return (
         l_tagged.join(iv, "_b")
-        .filter((F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col)))
+        .filter((F.col("ts") >= F.col("w_start")) & (F.col("ts") < F.col("w_end")))
         .drop("_b")
     )
 
@@ -89,28 +81,26 @@ def error_impact_windows(events: DataFrame) -> DataFrame:
         (F.col("ts") - F.expr(f"INTERVAL {WINDOW_BEFORE}")).alias("w_start"),
         (F.col("ts") + F.expr(f"INTERVAL {WINDOW_AFTER}")).alias("w_end"),
     )
-    joined = interval_join(
-        events.select("ts", "value"), anchors, bucket_seconds=BUCKET_SECONDS
-    )
+    joined = interval_join(events.select("ts", "value"), anchors)
     return joined.groupBy("anchor_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         dsum("value", "window_value"),
     )
 
 
-def sql_error_impact_windows(table: str = "events") -> str:
+def sql_error_impact_windows() -> str:
     return f"""
     WITH anchors AS (
         SELECT event_id AS anchor_id,
                ts - INTERVAL {WINDOW_BEFORE} AS w_start,
                ts + INTERVAL {WINDOW_AFTER} AS w_end
-        FROM {table}
+        FROM events
         WHERE event_type = 'error' AND value > {ANCHOR_VALUE_MIN}
     )
     SELECT a.anchor_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            {sql_dsum('e.value')} AS window_value
     FROM anchors a
-    JOIN {table} e ON e.ts >= a.w_start AND e.ts < a.w_end
+    JOIN events e ON e.ts >= a.w_start AND e.ts < a.w_end
     GROUP BY 1
     """

@@ -29,19 +29,14 @@ from ..functions import dsum
 PREMIUM_BALANCE_THRESHOLD = 5000.0
 
 
-def with_event_date(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def with_event_date(df: DataFrame) -> DataFrame:
     """F5/F7: timestamp -> date (reference spark/app.py:179,
     kafka_spark_etl.py:54)."""
-    return df.withColumn("event_date", F.to_date(F.col(ts_col)))
+    return df.withColumn("event_date", F.to_date(F.col("ts")))
 
 
 def daily_aggregate(
-    events: DataFrame,
-    customer: DataFrame,
-    *,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    approx_distinct: bool = False,
+    events: DataFrame, customer: DataFrame, *, approx_distinct: bool = False
 ) -> DataFrame:
     """A2: per-(date, event_type, segment) revenue + distinct-event count.
 
@@ -63,39 +58,27 @@ def daily_aggregate(
         F.col("c_mktsegment").alias("segment"),
     )
     d = F.approx_count_distinct if approx_distinct else F.countDistinct
-    enriched = with_event_date(events, ts_col).join(dim, "user_id", "left")
+    enriched = with_event_date(events).join(dim, "user_id", "left")
     return enriched.groupBy("event_date", "event_type", "segment").agg(
-        dsum(value_col, "daily_revenue"),
+        dsum("value", "daily_revenue"),
         d("event_id").alias("daily_events"),
     )
 
 
-def daily_segment_metrics(
-    events: DataFrame,
-    customer: DataFrame,
-    *,
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def daily_segment_metrics(events: DataFrame, customer: DataFrame) -> DataFrame:
     """A2 + W1: daily aggregate plus in-group revenue rank.
 
     row_number by revenue within (event_date, event_type), with a segment
     tiebreaker so results are deterministic under ties (SURVEY.md §7.2d).
     """
-    daily = daily_aggregate(events, customer, ts_col=ts_col, value_col=value_col)
+    daily = daily_aggregate(events, customer)
     w = Window.partitionBy("event_date", "event_type").orderBy(
         F.desc("daily_revenue"), F.asc("segment")
     )
     return daily.withColumn("revenue_rank_in_type", F.row_number().over(w))
 
 
-def premium_rollup(
-    events: DataFrame,
-    customer: DataFrame,
-    *,
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def premium_rollup(events: DataFrame, customer: DataFrame) -> DataFrame:
     """P7 + J3 + A3: segment-dim dedup-join then premium-level rollup
     (reference kafka_spark_etl.py:81-100).
 
@@ -103,7 +86,7 @@ def premium_rollup(
     (max over the segment) replacing the reference's order-dependent
     ``drop_duplicates`` pick.
     """
-    daily = daily_aggregate(events, customer, ts_col=ts_col, value_col=value_col)
+    daily = daily_aggregate(events, customer)
     seg_dim = (
         customer.select(
             F.col("c_mktsegment").alias("segment"),
@@ -127,7 +110,7 @@ def premium_rollup(
 # ---------------------------------------------------------------------------
 
 
-def filter_run_date(df: DataFrame, run_date: str, ts_col: str = "ts") -> DataFrame:
+def filter_run_date(df: DataFrame, run_date: str) -> DataFrame:
     """P4/F8: keep one day of events (reference kafka_spark_etl.py:54-57).
 
     The predicate is a half-open *timestamp range*, not
@@ -139,27 +122,20 @@ def filter_run_date(df: DataFrame, run_date: str, ts_col: str = "ts") -> DataFra
     """
     start = F.lit(run_date).cast("date").cast("timestamp")
     return df.filter(
-        (F.col(ts_col) >= start)
-        & (F.col(ts_col) < start + F.expr("INTERVAL 1 DAY"))
+        (F.col("ts") >= start)
+        & (F.col("ts") < start + F.expr("INTERVAL 1 DAY"))
     )
 
 
 def daily_segment_metrics_for_date(
-    events: DataFrame,
-    customer: DataFrame,
-    run_date: str,
-    *,
-    ts_col: str = "ts",
-    value_col: str = "value",
+    events: DataFrame, customer: DataFrame, run_date: str
 ) -> DataFrame:
     """The reference's parameterized daily batch (X1+P4+A2+W1): one day's
     segment metrics. The day filter sits *under* the join and aggregate, so
     at scale the job reads one day's row groups, not the lake."""
     return daily_segment_metrics(
-        filter_run_date(events, run_date, ts_col),
+        filter_run_date(events, run_date),
         customer,
-        ts_col=ts_col,
-        value_col=value_col,
     )
 
 

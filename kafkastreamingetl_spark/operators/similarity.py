@@ -136,34 +136,21 @@ def _topk_two_stage(
     )
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k of every corpus vector against each query vector.
 
     ``queries`` must be small (it is broadcast — the crossJoin is map-side,
     one corpus scan total). Self-matches (same id) are excluded.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col), F.col(query_vec_col)
-        )
-    )
+    q = F.broadcast(queries.select(F.col("query_id"), F.col("query_vec")))
     scored = (
         ensure_parallelism(embeddings)
         .crossJoin(q)
-        .filter(F.col(id_col) != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
-            F.col(id_col).alias("vec_id"),
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cos"),
+            "query_id",
+            F.col("vec_id"),
+            cosine(F.col("embedding"), F.col("query_vec")).alias("cos"),
         )
     )
     return _topk_two_stage(scored, k)
@@ -186,16 +173,7 @@ def self_labeled_queries(embeddings: DataFrame, n_queries: int = 8) -> DataFrame
 
 
 def hard_negative_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    query_label_col: str = "query_label",
+    embeddings: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Per-query top-``k`` most-similar corpus vectors whose label DIFFERS
     from the query's — hard-negative mining, the training-data step that
@@ -213,42 +191,38 @@ def hard_negative_topk(
     the same label filter — the mining semantics don't change.
     """
     q = F.broadcast(
-        queries.select(
-            F.col(query_id_col), F.col(query_vec_col), F.col(query_label_col)
-        )
+        queries.select(F.col("query_id"), F.col("query_vec"), F.col("query_label"))
     )
     scored = (
         ensure_parallelism(embeddings)
         .crossJoin(q)
         .filter(
-            (F.col(id_col) != F.col(query_id_col))
-            & (F.col(label_col) != F.col(query_label_col))
+            (F.col("vec_id") != F.col("query_id"))
+            & (F.col("label") != F.col("query_label"))
         )
         .select(
-            query_id_col,
-            F.col(id_col).alias("vec_id"),
-            F.col(label_col).alias("neg_label"),
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cos"),
+            "query_id",
+            F.col("vec_id"),
+            F.col("label").alias("neg_label"),
+            cosine(F.col("embedding"), F.col("query_vec")).alias("cos"),
         )
     )
     return _topk_two_stage(scored, k, extra_cols=("neg_label",))
 
 
-def sql_hard_negative_topk(
-    table: str = "embeddings", k: int = 10, n_queries: int = 8
-) -> str:
+def sql_hard_negative_topk() -> str:
     """DuckDB twin of :func:`hard_negative_topk` over
     :func:`self_labeled_queries`."""
     return f"""
     WITH q AS (
         SELECT vec_id AS query_id, embedding AS query_vec,
                label AS query_label
-        FROM {table} WHERE vec_id < {n_queries}
+        FROM embeddings WHERE vec_id < 8
     ),
     scored AS (
         SELECT q.query_id, e.vec_id, e.label AS neg_label,
                {sql_cosine('e.embedding', 'q.query_vec')} AS cos
-        FROM {table} e CROSS JOIN q
+        FROM embeddings e CROSS JOIN q
         WHERE e.vec_id != q.query_id AND e.label != q.query_label
     )
     SELECT query_id, vec_id, neg_label, cos,
@@ -257,7 +231,7 @@ def sql_hard_negative_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -272,15 +246,7 @@ def _flip_bit(bucket: Column, i: int, width: int = ANN_N_PLANES) -> Column:
 
 
 def ann_hyperplane_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    hamming_probes: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
+    embeddings: DataFrame, queries: DataFrame, k: int = 10, *, hamming_probes: int = 0
 ) -> DataFrame:
     """Approximate top-k: compare only within the query's hyperplane
     bucket(s).
@@ -305,9 +271,9 @@ def ann_hyperplane_topk(
     if hamming_probes not in (0, 1):
         raise ValueError("hamming_probes supports 0 (single) or 1 (multi-probe)")
     q = queries.select(
-        F.col(query_id_col),
-        F.col(query_vec_col),
-        bucket_signature(F.col(query_vec_col)).alias("_bucket"),
+        F.col("query_id"),
+        F.col("query_vec"),
+        bucket_signature(F.col("query_vec")).alias("_bucket"),
     )
     if hamming_probes == 1:
         probe_arr = F.array(
@@ -315,23 +281,23 @@ def ann_hyperplane_topk(
             *[_flip_bit(F.col("_bucket"), i) for i in range(ANN_N_PLANES)],
         )
         q = q.select(
-            query_id_col,
-            query_vec_col,
+            "query_id",
+            "query_vec",
             F.explode(probe_arr).alias("_bucket"),
         )
     q = F.broadcast(q)
     corpus = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col),
-        bucket_signature(F.col(vec_col)).alias("_bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        bucket_signature(F.col("embedding")).alias("_bucket"),
     )
     scored = (
         corpus.join(q, "_bucket")
-        .filter(F.col("vec_id") != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
+            "query_id",
             "vec_id",
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cos"),
+            cosine(F.col("embedding"), F.col("query_vec")).alias("cos"),
         )
     )
     return _topk_two_stage(scored, k)
@@ -351,8 +317,6 @@ def embedding_neardup_pairs(
     embeddings: DataFrame,
     *,
     min_cos: float = EMB_NEARDUP_MIN_COS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = ANN_N_PLANES,
 ) -> DataFrame:
     """(vec_a, vec_b, cos): near-duplicate vector pairs by cosine — the
@@ -387,9 +351,9 @@ def embedding_neardup_pairs(
     """
     planes = planes_for(n_planes)
     corpus = ensure_parallelism(embeddings).select(
-        F.col(id_col),
-        F.col(vec_col),
-        bucket_signature(F.col(vec_col), planes).alias("_bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        bucket_signature(F.col("embedding"), planes).alias("_bucket"),
     )
     probe_arr = F.array(
         F.col("_bucket"),
@@ -399,12 +363,12 @@ def embedding_neardup_pairs(
         ],
     )
     a = corpus.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("_va"),
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("_va"),
         F.explode(probe_arr).alias("_bucket"),
     )
     b = corpus.select(
-        F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"), "_bucket"
+        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("_vb"), "_bucket"
     )
     cos = cosine(F.col("_va"), F.col("_vb"))
     return (
@@ -415,15 +379,7 @@ def embedding_neardup_pairs(
     )
 
 
-def embedding_cross_contamination(
-    train: DataFrame,
-    eval_df: DataFrame,
-    *,
-    min_cos: float = EMB_NEARDUP_MIN_COS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = ANN_N_PLANES,
-) -> DataFrame:
+def embedding_cross_contamination(train: DataFrame, eval_df: DataFrame) -> DataFrame:
     """(train_vec, eval_vec, cos): SEMANTIC benchmark decontamination —
     training vectors whose embeddings near-duplicate an evaluation set.
     The embedding-space twin of dedup.eval_contamination (which catches
@@ -438,26 +394,26 @@ def embedding_cross_contamination(
     (train, eval) pair matches exactly one probe row (a vector's 9 probes
     are distinct), so no post-join dedup.
 
-    ``n_planes`` is the same blocking-width dial as
-    :func:`embedding_neardup_pairs` — candidate volume here is
+    The signature width is :func:`embedding_neardup_pairs`'s
+    ``ANN_N_PLANES`` — candidate volume here is
     n_train × |eval|/2^planes per probe, so widening the signature keeps
     the verify volume flat as the TRAIN corpus grows.
     """
-    planes = planes_for(n_planes)
+    planes = planes_for(ANN_N_PLANES)
     t = ensure_parallelism(train).select(
-        F.col(id_col).alias("train_vec"),
-        F.col(vec_col).alias("_vt"),
-        bucket_signature(F.col(vec_col), planes).alias("_bucket"),
+        F.col("vec_id").alias("train_vec"),
+        F.col("embedding").alias("_vt"),
+        bucket_signature(F.col("embedding"), planes).alias("_bucket"),
     )
     probe_arr = F.array(
         F.col("_b0"),
-        *[_flip_bit(F.col("_b0"), i, n_planes) for i in range(n_planes)],
+        *[_flip_bit(F.col("_b0"), i) for i in range(ANN_N_PLANES)],
     )
     e = (
         eval_df.select(
-            F.col(id_col).alias("eval_vec"),
-            F.col(vec_col).alias("_ve"),
-            bucket_signature(F.col(vec_col), planes).alias("_b0"),
+            F.col("vec_id").alias("eval_vec"),
+            F.col("embedding").alias("_ve"),
+            bucket_signature(F.col("embedding"), planes).alias("_b0"),
         )
         .select("eval_vec", "_ve", F.explode(probe_arr).alias("_bucket"))
     )
@@ -465,17 +421,11 @@ def embedding_cross_contamination(
     return (
         t.join(F.broadcast(e), "_bucket")
         .select("train_vec", "eval_vec", cos.alias("cos"))
-        .filter(F.col("cos") >= F.lit(min_cos))
+        .filter(F.col("cos") >= F.lit(EMB_NEARDUP_MIN_COS))
     )
 
 
-def sql_embedding_cross_contamination(
-    train_pred: str,
-    eval_pred: str,
-    table: str = "embeddings",
-    *,
-    min_cos: float = EMB_NEARDUP_MIN_COS,
-) -> str:
+def sql_embedding_cross_contamination(train_pred: str, eval_pred: str) -> str:
     """DuckDB twin of :func:`embedding_cross_contamination` where train and
     eval are predicate-split slices of one table. Hamming-1 admission is
     symmetric, so the oracle may flip either side; it flips eval to mirror
@@ -488,7 +438,7 @@ def sql_embedding_cross_contamination(
     return f"""
     WITH corpus AS (
         SELECT vec_id, embedding, {_sql_bucket('embedding')} AS bucket
-        FROM {table}
+        FROM embeddings
     ),
     eprobes AS (
         SELECT vec_id, embedding, bucket AS probe
@@ -506,13 +456,11 @@ def sql_embedding_cross_contamination(
     )
     SELECT train_vec, eval_vec, {sql_cosine('ea', 'eb')} AS cos
     FROM cand
-    WHERE {sql_cosine('ea', 'eb')} >= {min_cos}
+    WHERE {sql_cosine('ea', 'eb')} >= {EMB_NEARDUP_MIN_COS}
     """
 
 
-def sql_embedding_neardup_pairs(
-    table: str = "embeddings", *, min_cos: float = EMB_NEARDUP_MIN_COS
-) -> str:
+def sql_embedding_neardup_pairs() -> str:
     flip = (
         "substr(bucket, 1, i) || "
         "(CASE WHEN substr(bucket, i + 1, 1) = '1' THEN '0' ELSE '1' END)"
@@ -521,7 +469,7 @@ def sql_embedding_neardup_pairs(
     return f"""
     WITH corpus AS (
         SELECT vec_id, embedding, {_sql_bucket('embedding')} AS bucket
-        FROM {table}
+        FROM embeddings
     ),
     probes AS (
         SELECT vec_id, embedding, bucket AS probe FROM corpus
@@ -537,7 +485,7 @@ def sql_embedding_neardup_pairs(
     )
     SELECT vec_a, vec_b, {sql_cosine('ea', 'eb')} AS cos
     FROM cand
-    WHERE {sql_cosine('ea', 'eb')} >= {min_cos}
+    WHERE {sql_cosine('ea', 'eb')} >= {EMB_NEARDUP_MIN_COS}
     """
 
 
@@ -577,12 +525,7 @@ def _memo(embeddings: DataFrame, tail: tuple, build):
     )
 
 
-def fit_label_centroids(
-    embeddings: DataFrame,
-    *,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
+def fit_label_centroids(embeddings: DataFrame) -> list[tuple[int, list[float]]]:
     """"Train" the IVF coarse quantizer: per-label mean vectors.
 
     Decimal partial sums (order-independent) make the centroids bit-stable,
@@ -596,8 +539,8 @@ def fit_label_centroids(
 
     def build() -> list[tuple[int, list[float]]]:
         long = embeddings.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(vec_col).alias("dim", "v"),
+            F.col("label"),
+            F.posexplode("embedding").alias("dim", "v"),
         ).select("label", "dim", F.col("v").cast("double").alias("v"))
         cent = long.groupBy("label", "dim").agg(
             (dsum("v") / F.count(F.lit(1))).alias("c")
@@ -614,7 +557,7 @@ def fit_label_centroids(
             for lbl, dims in by_label.items()
         )
 
-    return _memo(embeddings, ("label_centroids", label_col, vec_col), build)
+    return _memo(embeddings, ("label_centroids",), build)
 
 
 def ann_ivf_topk(
@@ -624,10 +567,6 @@ def ann_ivf_topk(
     *,
     nprobe: int = 2,
     centroids: list[tuple[int, list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF search: assign corpus vectors to their nearest centroid bucket
     (packed-broadcast-model argmin inside a projection — no aggregate, no
@@ -642,7 +581,7 @@ def ann_ivf_topk(
     cents = (
         centroids
         if centroids is not None
-        else fit_label_centroids(embeddings, vec_col=vec_col)
+        else fit_label_centroids(embeddings)
     )
     packed = _km_df(
         embeddings.sparkSession, [(int(lbl), cv) for lbl, cv in cents]
@@ -663,23 +602,23 @@ def ann_ivf_topk(
 
     corpus = (
         ensure_parallelism(embeddings)
-        .select(F.col(id_col).alias("vec_id"), F.col(vec_col))
+        .select(F.col("vec_id"), F.col("embedding"))
         .crossJoin(F.broadcast(packed))
         .select(
             "vec_id",
-            vec_col,
-            F.element_at(ranked(F.col(vec_col)), 1).getField("cl").alias("_bucket"),
+            "embedding",
+            F.element_at(ranked(F.col("embedding")), 1).getField("cl").alias("_bucket"),
         )
     )
     probes = F.broadcast(
-        queries.select(F.col(query_id_col), F.col(query_vec_col))
+        queries.select(F.col("query_id"), F.col("query_vec"))
         .crossJoin(F.broadcast(packed))
         .select(
-            query_id_col,
-            query_vec_col,
+            "query_id",
+            "query_vec",
             F.explode(
                 F.transform(
-                    F.slice(ranked(F.col(query_vec_col)), 1, nprobe),
+                    F.slice(ranked(F.col("query_vec")), 1, nprobe),
                     lambda e: e.getField("cl"),
                 )
             ).alias("_bucket"),
@@ -687,11 +626,11 @@ def ann_ivf_topk(
     )
     scored = (
         corpus.join(probes, "_bucket")
-        .filter(F.col("vec_id") != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
+            "query_id",
             "vec_id",
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cos"),
+            cosine(F.col("embedding"), F.col("query_vec")).alias("cos"),
         )
     )
     return _topk_two_stage(scored, k)
@@ -713,18 +652,16 @@ def sql_cosine(a: str, b: str) -> str:
     return f"({dot} / ({_SQL_NORM.format(a=a)} * {_SQL_NORM.format(a=b)}))"
 
 
-def sql_cosine_topk(
-    table: str = "embeddings", k: int = 10, n_queries: int = 8
-) -> str:
+def sql_cosine_topk() -> str:
     return f"""
     WITH q AS (
         SELECT vec_id AS query_id, embedding AS query_vec
-        FROM {table} WHERE vec_id < {n_queries}
+        FROM embeddings WHERE vec_id < 8
     ),
     scored AS (
         SELECT q.query_id, e.vec_id,
                {sql_cosine('e.embedding', 'q.query_vec')} AS cos
-        FROM {table} e CROSS JOIN q
+        FROM embeddings e CROSS JOIN q
         WHERE e.vec_id != q.query_id
     )
     SELECT query_id, vec_id, cos,
@@ -733,7 +670,7 @@ def sql_cosine_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -748,13 +685,7 @@ def _sql_bucket(
     return " || ".join(bits)
 
 
-def sql_ann_hyperplane_topk(
-    table: str = "embeddings",
-    k: int = 10,
-    n_queries: int = 8,
-    *,
-    hamming_probes: int = 0,
-) -> str:
+def sql_ann_hyperplane_topk(*, hamming_probes: int = 0) -> str:
     if hamming_probes == 0:
         probes_cte = "probes AS (SELECT query_id, query_vec, bucket FROM q)"
     else:
@@ -773,12 +704,12 @@ def sql_ann_hyperplane_topk(
     WITH q AS (
         SELECT vec_id AS query_id, embedding AS query_vec,
                {_sql_bucket('embedding')} AS bucket
-        FROM {table} WHERE vec_id < {n_queries}
+        FROM embeddings WHERE vec_id < 8
     ),
     {probes_cte},
     corpus AS (
         SELECT vec_id, embedding, {_sql_bucket('embedding')} AS bucket
-        FROM {table}
+        FROM embeddings
     ),
     scored AS (
         SELECT p.query_id, c.vec_id,
@@ -792,15 +723,11 @@ def sql_ann_hyperplane_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
-def ann_recall_report(
-    embeddings: DataFrame,
-    queries: DataFrame | None = None,
-    k: int = 10,
-) -> DataFrame:
+def ann_recall_report(embeddings: DataFrame, k: int = 10) -> DataFrame:
     """Per-query recall@k of the hyperplane-LSH serving path against the
     exact top-k — the measurement that turns "LSH trades recall for a
     bounded compare volume" from a claim into a number. Output one row per
@@ -826,7 +753,7 @@ def ann_recall_report(
     # serving path, the irreducible by-design cost). The persisted frames
     # are k×|queries| rows (exact/approx) and |queries| rows (q) — driver-
     # memo-sized, never corpus-sized.
-    q = (self_queries(embeddings) if queries is None else queries).persist()
+    q = self_queries(embeddings).persist()
     exact = (
         cosine_topk(embeddings, q, k).select("query_id", "vec_id").persist()
     )
@@ -859,15 +786,13 @@ def ann_recall_report(
     )
 
 
-def sql_ann_recall_report(
-    table: str = "embeddings", k: int = 10, n_queries: int = 8
-) -> str:
+def sql_ann_recall_report() -> str:
     """DuckDB twin of :func:`ann_recall_report`: the two registered
     serving-path oracles nested as CTEs, then the same k-bounded
     intersection arithmetic."""
     return f"""
-    WITH exact AS ({sql_cosine_topk(table, k, n_queries)}),
-    approx AS ({sql_ann_hyperplane_topk(table, k, n_queries)}),
+    WITH exact AS ({sql_cosine_topk()}),
+    approx AS ({sql_ann_hyperplane_topk()}),
     hit AS (
         SELECT e.query_id, e.vec_id FROM exact e
         SEMI JOIN approx a ON e.query_id = a.query_id AND e.vec_id = a.vec_id
@@ -892,13 +817,7 @@ _SQL_SQDIST = (
 )
 
 
-def sql_ann_ivf_topk(
-    table: str = "embeddings",
-    k: int = 10,
-    n_queries: int = 8,
-    nprobe: int = 2,
-    dim: int = 64,
-) -> str:
+def sql_ann_ivf_topk() -> str:
     """DuckDB twin of the full IVF pipeline: re-fits the label centroids
     (bit-identical decimal means), re-derives assignments and probes, and
     ranks within probed buckets — no values are smuggled from the Spark
@@ -908,8 +827,8 @@ def sql_ann_ivf_topk(
         SELECT label, d.dim,
                CAST(SUM(CAST(CAST(embedding[d.dim] AS DOUBLE) AS DECIMAL(18,4))) AS DOUBLE)
                  / COUNT(*) AS c
-        FROM {table}
-        CROSS JOIN (SELECT unnest(range(1, {dim + 1})) AS dim) d
+        FROM embeddings
+        CROSS JOIN (SELECT unnest(range(1, 65)) AS dim) d
         GROUP BY 1, 2
     ),
     cents AS (
@@ -917,7 +836,7 @@ def sql_ann_ivf_topk(
     ),
     corpus AS (
         SELECT e.vec_id, e.embedding, c.label AS bucket
-        FROM {table} e CROSS JOIN cents c
+        FROM embeddings e CROSS JOIN cents c
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY e.vec_id
             ORDER BY {_SQL_SQDIST.format(a='e.embedding', b='c.cv')} ASC,
@@ -926,13 +845,13 @@ def sql_ann_ivf_topk(
     ),
     probes AS (
         SELECT q.vec_id AS query_id, q.embedding AS query_vec, c.label AS bucket
-        FROM {table} q CROSS JOIN cents c
-        WHERE q.vec_id < {n_queries}
+        FROM embeddings q CROSS JOIN cents c
+        WHERE q.vec_id < 8
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY q.vec_id
             ORDER BY {_SQL_SQDIST.format(a='q.embedding', b='c.cv')} ASC,
                      c.label ASC
-        ) <= {nprobe}
+        ) <= 2
     ),
     scored AS (
         SELECT p.query_id, a.vec_id,
@@ -946,7 +865,7 @@ def sql_ann_ivf_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -1095,13 +1014,7 @@ def _assign_codes(
     )
 
 
-def fit_pq_codebook_label(
-    embeddings: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> list[tuple[int, int, list[float]]]:
+def fit_pq_codebook_label(embeddings: DataFrame) -> list[tuple[int, int, list[float]]]:
     """Collected PQ codebook [(s, code, centroid_8d)] from the label-derived
     quantizer: decimal-exact mean per (subspace, in-subspace dim,
     label % 16). Only codes with ≥ 1 member exist, exactly like the SQL
@@ -1109,12 +1022,12 @@ def fit_pq_codebook_label(
     per (session, input plan) so a session fits once and serves many."""
 
     def build() -> list[tuple[int, int, list[float]]]:
-        sub = _explode_sub(embeddings, id_col, vec_col, "vec_id").join(
-            embeddings.select(F.col(id_col).alias("vec_id"), F.col(label_col)),
+        sub = _explode_sub(embeddings, "vec_id", "embedding", "vec_id").join(
+            embeddings.select(F.col("vec_id"), F.col("label")),
             "vec_id",
         )
         cb = (
-            sub.withColumn("code", (F.col(label_col) % PQ_N_CODES).cast("int"))
+            sub.withColumn("code", (F.col("label") % PQ_N_CODES).cast("int"))
             .groupBy("s", "j", "code")
             .agg((dsum("v") / F.count(F.lit(1))).alias("cv"))
         )
@@ -1125,23 +1038,17 @@ def fit_pq_codebook_label(
             (s, code, [js[j] for j in sorted(js)]) for (s, code), js in m.items()
         )
 
-    return _memo(embeddings, ("pq_label", id_col, vec_col, label_col), build)
+    return _memo(embeddings, ("pq_label",), build)
 
 
-def fit_pq_codebook_kmeans(
-    embeddings: DataFrame,
-    *,
-    n_iter: int = PQ_KM_ITER,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, int, list[float]]]:
+def fit_pq_codebook_kmeans(embeddings: DataFrame) -> list[tuple[int, int, list[float]]]:
     """Unsupervised PQ codebook: per-subspace Lloyd's k-means, no labels.
 
     Deterministic and oracle-replayable by construction: seeds are the
     subvectors of the first ``PQ_N_CODES`` ids (requires ids 0..15 present),
     iteration count is fixed, assignment ties break to the lower code, and
     centroid updates are decimal-exact means — so the DuckDB twin unrolls
-    the identical ``n_iter`` rounds and lands on bit-identical doubles.
+    the identical ``PQ_KM_ITER`` rounds and lands on bit-identical doubles.
     A code that loses all members keeps its previous centroid (standard
     empty-cluster rule, mirrored by the twin's LEFT JOIN + COALESCE).
 
@@ -1154,8 +1061,8 @@ def fit_pq_codebook_kmeans(
     def build() -> list[tuple[int, int, list[float]]]:
         seeds = sorted(
             (int(r[0]), [float(x) for x in r[1]])
-            for r in embeddings.filter(F.col(id_col) < PQ_N_CODES)
-            .select(id_col, vec_col)
+            for r in embeddings.filter(F.col("vec_id") < PQ_N_CODES)
+            .select("vec_id", "embedding")
             .collect()
         )
         cb: list[tuple[int, int, list[float]]] = sorted(
@@ -1163,12 +1070,12 @@ def fit_pq_codebook_kmeans(
             for code, vec in seeds
             for s in range(PQ_N_SUB)
         )
-        for _ in range(n_iter):
+        for _ in range(PQ_KM_ITER):
             assign = _assign_codes(
                 embeddings,
                 _cbl_df(embeddings.sparkSession, cb),
-                id_col,
-                vec_col,
+                "vec_id",
+                "embedding",
                 with_subvec=True,
             )
             means = (
@@ -1192,20 +1099,14 @@ def fit_pq_codebook_kmeans(
             ]
         return cb
 
-    return _memo(embeddings, ("pq_kmeans", n_iter, id_col, vec_col), build)
+    return _memo(embeddings, ("pq_kmeans",), build)
 
 
 def pq_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     *,
     codebook: list[tuple[int, int, list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation (ADC) over PQ
     codes: rank corpus vectors by the sum of per-subspace squared distances
@@ -1235,19 +1136,15 @@ def pq_topk(
     cb = (
         codebook
         if codebook is not None
-        else fit_pq_codebook_label(
-            embeddings, id_col=id_col, vec_col=vec_col, label_col=label_col
-        )
+        else fit_pq_codebook_label(embeddings)
     )
     cbl = _cbl_df(embeddings.sparkSession, cb)
-    codes = _assign_codes(embeddings, cbl, id_col, vec_col)
+    codes = _assign_codes(embeddings, cbl, "vec_id", "embedding")
     lut = F.broadcast(
-        queries.select(
-            F.col(query_id_col), F.col(query_vec_col).alias("_qv")
-        )
+        queries.select(F.col("query_id"), F.col("query_vec").alias("_qv"))
         .crossJoin(F.broadcast(cbl))
         .select(
-            query_id_col,
+            "query_id",
             "s",
             "code",
             _sub_dist(F.col("_qv"), F.col("cvl"), F.col("s")).alias("lut_d"),
@@ -1255,21 +1152,21 @@ def pq_topk(
     )
     scored = (
         codes.join(lut, ["s", "code"])
-        .filter(F.col("vec_id") != F.col(query_id_col))
-        .groupBy(query_id_col, "vec_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
         .agg(dsum("lut_d", "adc"))
     )
-    local_w = Window.partitionBy(query_id_col, "_pid").orderBy(
+    local_w = Window.partitionBy("query_id", "_pid").orderBy(
         F.asc("adc"), F.asc("vec_id")
     )
-    final_w = Window.partitionBy(query_id_col).orderBy(F.asc("adc"), F.asc("vec_id"))
+    final_w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("_pid", F.spark_partition_id())
         .withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") <= k)
+        .filter(F.col("_lr") <= 10)
         .withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "vec_id", "adc", "rank")
+        .filter(F.col("rank") <= 10)
+        .select("query_id", "vec_id", "adc", "rank")
     )
 
 
@@ -1313,9 +1210,9 @@ def _sql_pq_label_cbl(table: str) -> str:
     )"""
 
 
-def _sql_pq_kmeans_cbl(table: str, n_iter: int = PQ_KM_ITER) -> str:
+def _sql_pq_kmeans_cbl(table: str) -> str:
     """CTE chain ending in ``cbl(s, code, cvl)`` — the per-subspace Lloyd's
-    codebook, unrolled ``n_iter`` assignment/update rounds from the
+    codebook, unrolled ``PQ_KM_ITER`` assignment/update rounds from the
     first-16-ids seeds (the twin of :func:`fit_pq_codebook_kmeans`)."""
     from ..functions import sql_dsum
 
@@ -1329,7 +1226,7 @@ def _sql_pq_kmeans_cbl(table: str, n_iter: int = PQ_KM_ITER) -> str:
         CROSS JOIN (SELECT unnest(range(0, {PQ_N_SUB})) AS s) s
         WHERE e.vec_id < {PQ_N_CODES}
     )"""]
-    for i in range(1, n_iter + 1):
+    for i in range(1, PQ_KM_ITER + 1):
         prev = f"cbl{i - 1}"
         dist = _sql_subdist("e.embedding", "c.s", "c.cvl")
         ctes.append(f"""
@@ -1358,7 +1255,7 @@ def _sql_pq_kmeans_cbl(table: str, n_iter: int = PQ_KM_ITER) -> str:
         ) n USING (s, code)
     )""")
     ctes.append(f"""
-    cbl AS (SELECT s, code, cvl FROM cbl{n_iter})""")
+    cbl AS (SELECT s, code, cvl FROM cbl{PQ_KM_ITER})""")
     return ",".join(ctes)
 
 
@@ -1403,30 +1300,19 @@ def _sql_pq_serving(table: str, k: int, n_queries: int) -> str:
     """
 
 
-def sql_pq_topk(
-    table: str = "embeddings",
-    k: int = 10,
-    *,
-    n_queries: int = 8,
-) -> str:
+def sql_pq_topk() -> str:
     """DuckDB twin of :func:`pq_topk` (label codebook) over
     :func:`self_queries` — recomputes the codebook from scratch, then runs
     the identical encode/LUT/ADC serving semantics."""
-    return f"WITH {_sql_pq_label_cbl(table)}, {_sql_pq_serving(table, k, n_queries)}"
+    return f"WITH {_sql_pq_label_cbl('embeddings')}, {_sql_pq_serving('embeddings', 10, 8)}"
 
 
-def sql_pq_kmeans_topk(
-    table: str = "embeddings",
-    k: int = 10,
-    *,
-    n_queries: int = 8,
-    n_iter: int = PQ_KM_ITER,
-) -> str:
+def sql_pq_kmeans_topk() -> str:
     """DuckDB twin of :func:`pq_topk` with the k-means codebook — unrolls
     the full per-subspace Lloyd's training before the same serving tail."""
     return (
-        f"WITH {_sql_pq_kmeans_cbl(table, n_iter)},"
-        f" {_sql_pq_serving(table, k, n_queries)}"
+        f"WITH {_sql_pq_kmeans_cbl('embeddings')},"
+        f" {_sql_pq_serving('embeddings', 10, 8)}"
     )
 
 
@@ -1490,12 +1376,7 @@ def _assign_clusters(
 
 
 def fit_kmeans(
-    embeddings: DataFrame,
-    *,
-    k: int = KM_K,
-    n_iter: int = KM_ITER,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, *, k: int = KM_K, n_iter: int = KM_ITER
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's k-means over the full 64-dim vectors — the
     unsupervised replacement for :func:`fit_label_centroids` on unlabeled
@@ -1516,16 +1397,16 @@ def fit_kmeans(
     def build() -> list[tuple[int, list[float]]]:
         model = sorted(
             (int(r[0]), [float(x) for x in r[1]])
-            for r in embeddings.filter(F.col(id_col) < k)
-            .select(id_col, vec_col)
+            for r in embeddings.filter(F.col("vec_id") < k)
+            .select("vec_id", "embedding")
             .collect()
         )
         for _ in range(n_iter):
             assign = _assign_clusters(
                 embeddings,
                 _km_df(embeddings.sparkSession, model),
-                id_col,
-                vec_col,
+                "vec_id",
+                "embedding",
                 with_vec=True,
             )
             means = (
@@ -1543,31 +1424,22 @@ def fit_kmeans(
             ]
         return model
 
-    return _memo(embeddings, ("kmeans", k, n_iter, id_col, vec_col), build)
+    return _memo(embeddings, ("kmeans", k, n_iter), build)
 
 
-def kmeans_centroid_stats(
-    embeddings: DataFrame,
-    *,
-    k: int = KM_K,
-    n_iter: int = KM_ITER,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_centroid_stats(embeddings: DataFrame) -> DataFrame:
     """(cluster, dim, centroid, n_vectors): the distributed final update
     under the fitted model — assignment against the converged broadcast
     centroids, then a map-side-combined per-(cluster, dim) decimal mean.
     Empty clusters have no members and therefore no rows (matching the
     twin's plain GROUP BY). ``dim`` is 1-based, like
     ``embedding_label_centroids``."""
-    model = fit_kmeans(
-        embeddings, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
-    )
+    model = fit_kmeans(embeddings)
     assign = _assign_clusters(
         embeddings,
         _km_df(embeddings.sparkSession, model),
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         with_vec=True,
     )
     long = assign.select(
@@ -1583,18 +1455,18 @@ def kmeans_centroid_stats(
     )
 
 
-def _sql_kmeans_ctes(table: str, k: int = KM_K, n_iter: int = KM_ITER) -> str:
+def _sql_kmeans_ctes(table: str) -> str:
     """CTE chain ending in ``km(cl, cvl)`` — the fitted k-means model after
-    ``n_iter`` unrolled Lloyd's rounds (twin of :func:`fit_kmeans`)."""
+    ``KM_ITER`` unrolled Lloyd's rounds (twin of :func:`fit_kmeans`)."""
     from ..functions import sql_dsum
 
     ctes = [f"""
     km0 AS (
         SELECT vec_id::INT AS cl,
                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvl
-        FROM {table} WHERE vec_id < {k}
+        FROM {table} WHERE vec_id < {KM_K}
     )"""]
-    for i in range(1, n_iter + 1):
+    for i in range(1, KM_ITER + 1):
         prev = f"km{i - 1}"
         dist = _SQL_SQDIST.format(a="e.embedding", b="c.cvl")
         ctes.append(f"""
@@ -1623,23 +1495,21 @@ def _sql_kmeans_ctes(table: str, k: int = KM_K, n_iter: int = KM_ITER) -> str:
         ) n USING (cl)
     )""")
     ctes.append(f"""
-    km AS (SELECT cl, cvl FROM km{n_iter})""")
+    km AS (SELECT cl, cvl FROM km{KM_ITER})""")
     return ",".join(ctes)
 
 
-def sql_kmeans_centroids(
-    table: str = "embeddings", k: int = KM_K, n_iter: int = KM_ITER
-) -> str:
+def sql_kmeans_centroids() -> str:
     """DuckDB twin of :func:`kmeans_centroid_stats`: unrolled training, then
     the final assignment + per-(cluster, dim) decimal mean."""
     from ..functions import sql_dsum
 
     dist = _SQL_SQDIST.format(a="e.embedding", b="c.cvl")
     return f"""
-    WITH {_sql_kmeans_ctes(table, k, n_iter)},
+    WITH {_sql_kmeans_ctes('embeddings')},
     fa AS (
         SELECT e.vec_id, c.cl
-        FROM {table} e CROSS JOIN km c
+        FROM embeddings e CROSS JOIN km c
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY e.vec_id
             ORDER BY {dist} ASC NULLS FIRST, c.cl ASC NULLS FIRST
@@ -1649,28 +1519,21 @@ def sql_kmeans_centroids(
            CAST(d.dim AS BIGINT) AS dim,
            {sql_dsum('CAST(e.embedding[d.dim] AS DOUBLE)')} / COUNT(*) AS centroid,
            CAST(COUNT(*) AS BIGINT) AS n_vectors
-    FROM fa a JOIN {table} e USING (vec_id)
+    FROM fa a JOIN embeddings e USING (vec_id)
     CROSS JOIN (SELECT unnest(range(1, 65)) AS dim) d
     GROUP BY 1, 2
     """
 
 
-def sql_ann_ivf_kmeans_topk(
-    table: str = "embeddings",
-    k: int = 10,
-    n_queries: int = 8,
-    nprobe: int = 2,
-    kk: int = KM_K,
-    n_iter: int = KM_ITER,
-) -> str:
+def sql_ann_ivf_kmeans_topk() -> str:
     """DuckDB twin of :func:`ann_ivf_topk` with ``fit_kmeans`` centroids:
     unrolled Lloyd's training feeding the same assign/probe/score/rank
     pipeline as :func:`sql_ann_ivf_topk`."""
     return f"""
-    WITH {_sql_kmeans_ctes(table, kk, n_iter)},
+    WITH {_sql_kmeans_ctes('embeddings')},
     corpus AS (
         SELECT e.vec_id, e.embedding, c.cl AS bucket
-        FROM {table} e CROSS JOIN km c
+        FROM embeddings e CROSS JOIN km c
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY e.vec_id
             ORDER BY {_SQL_SQDIST.format(a='e.embedding', b='c.cvl')} ASC,
@@ -1679,13 +1542,13 @@ def sql_ann_ivf_kmeans_topk(
     ),
     probes AS (
         SELECT q.vec_id AS query_id, q.embedding AS query_vec, c.cl AS bucket
-        FROM {table} q CROSS JOIN km c
-        WHERE q.vec_id < {n_queries}
+        FROM embeddings q CROSS JOIN km c
+        WHERE q.vec_id < 8
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY q.vec_id
             ORDER BY {_SQL_SQDIST.format(a='q.embedding', b='c.cvl')} ASC,
                      c.cl ASC
-        ) <= {nprobe}
+        ) <= 2
     ),
     scored AS (
         SELECT p.query_id, a.vec_id,
@@ -1699,7 +1562,7 @@ def sql_ann_ivf_kmeans_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -1724,16 +1587,7 @@ def _int8_quantize(vec: Column) -> Column:
     )
 
 
-def int8_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def int8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k over int8-quantized vectors: cosine is scale-invariant,
     so the per-vector absmax scale cancels and similarity runs on the
     CODES — integer dot products and integer squared norms, exact in
@@ -1748,13 +1602,13 @@ def int8_topk(
     cosine is undefined for them in either domain."""
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col),
-            _int8_quantize(F.col(query_vec_col)).alias("_qq"),
+            F.col("query_id"),
+            _int8_quantize(F.col("query_vec")).alias("_qq"),
         )
     )
     corpus = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("vec_id"),
-        _int8_quantize(F.col(vec_col)).alias("_qv"),
+        F.col("vec_id"),
+        _int8_quantize(F.col("embedding")).alias("_qv"),
     )
 
     def isum(arr: Column) -> Column:
@@ -1765,9 +1619,9 @@ def int8_topk(
     nb = isum(F.transform(F.col("_qq"), lambda x: (x * x).cast("bigint")))
     scored = (
         corpus.crossJoin(q)
-        .filter(F.col("vec_id") != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
+            "query_id",
             "vec_id",
             dot.alias("_dot"),
             na.alias("_na"),
@@ -1775,7 +1629,7 @@ def int8_topk(
         )
         .filter((F.col("_na") > 0) & (F.col("_nb") > 0))
         .select(
-            query_id_col,
+            "query_id",
             "vec_id",
             (
                 F.col("_dot").cast("double")
@@ -1783,23 +1637,21 @@ def int8_topk(
             ).alias("cos_q"),
         )
     )
-    local_w = Window.partitionBy(query_id_col, "_pid").orderBy(
+    local_w = Window.partitionBy("query_id", "_pid").orderBy(
         F.desc("cos_q"), F.asc("vec_id")
     )
-    final_w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_q"), F.asc("vec_id"))
+    final_w = Window.partitionBy("query_id").orderBy(F.desc("cos_q"), F.asc("vec_id"))
     return (
         scored.withColumn("_pid", F.spark_partition_id())
         .withColumn("_lr", F.row_number().over(local_w))
         .filter(F.col("_lr") <= k)
         .withColumn("rank", F.row_number().over(final_w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "vec_id", "cos_q", "rank")
+        .select("query_id", "vec_id", "cos_q", "rank")
     )
 
 
-def sql_int8_topk(
-    table: str = "embeddings", k: int = 10, *, n_queries: int = 8
-) -> str:
+def sql_int8_topk() -> str:
     """DuckDB twin of :func:`int8_topk`: the identical quantize rule, then
     integer dot/norm arithmetic (exact — no fold-order concerns)."""
     qz = (
@@ -1815,11 +1667,11 @@ def sql_int8_topk(
     norm = "list_reduce([CAST(x * x AS BIGINT) for x in {a}], (p, s) -> p + s)"
     return f"""
     WITH c AS (
-        SELECT vec_id, {qz.format(v='embedding')} AS qv FROM {table}
+        SELECT vec_id, {qz.format(v='embedding')} AS qv FROM embeddings
     ),
     q AS (
         SELECT vec_id AS query_id, {qz.format(v='embedding')} AS qq
-        FROM {table} WHERE vec_id < {n_queries}
+        FROM embeddings WHERE vec_id < 8
     ),
     scored AS (
         SELECT q.query_id, c.vec_id,
@@ -1836,7 +1688,7 @@ def sql_int8_topk(
                ORDER BY cos_q DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -1853,8 +1705,6 @@ def cluster_balanced_sample(
     per_cluster: int = CBS_PER_CLUSTER,
     k: int = KM_K,
     n_iter: int = KM_ITER,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(cluster, vec_id, rank): up to ``per_cluster`` vectors from each
     k-means cluster — diversity sampling for training-set construction
@@ -1869,11 +1719,9 @@ def cluster_balanced_sample(
     rank window sorts only within clusters; swap the deterministic id
     order for a salted-hash order to make the draw pseudo-random while
     keeping it replayable."""
-    model = fit_kmeans(
-        embeddings, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
-    )
+    model = fit_kmeans(embeddings, k=k, n_iter=n_iter)
     assign = _assign_clusters(
-        embeddings, _km_df(embeddings.sparkSession, model), id_col, vec_col
+        embeddings, _km_df(embeddings.sparkSession, model), "vec_id", "embedding"
     )
     w = Window.partitionBy("cl").orderBy(F.col("vec_id").asc_nulls_first())
     return (
@@ -1883,21 +1731,15 @@ def cluster_balanced_sample(
     )
 
 
-def sql_cluster_balanced_sample(
-    table: str = "embeddings",
-    *,
-    per_cluster: int = CBS_PER_CLUSTER,
-    k: int = KM_K,
-    n_iter: int = KM_ITER,
-) -> str:
+def sql_cluster_balanced_sample() -> str:
     """DuckDB twin: unrolled Lloyd's training (shared CTE chain), final
     assignment, per-cluster id-ordered rank."""
     dist = _SQL_SQDIST.format(a="e.embedding", b="c.cvl")
     return f"""
-    WITH {_sql_kmeans_ctes(table, k, n_iter)},
+    WITH {_sql_kmeans_ctes('embeddings')},
     fa AS (
         SELECT e.vec_id, c.cl
-        FROM {table} e CROSS JOIN km c
+        FROM embeddings e CROSS JOIN km c
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY e.vec_id
             ORDER BY {dist} ASC NULLS FIRST, c.cl ASC NULLS FIRST
@@ -1908,7 +1750,7 @@ def sql_cluster_balanced_sample(
                PARTITION BY cl ORDER BY vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM fa
-    QUALIFY rank <= {per_cluster}
+    QUALIFY rank <= {CBS_PER_CLUSTER}
     """
 
 
@@ -1918,19 +1760,14 @@ def sql_cluster_balanced_sample(
 
 
 # Resolved semantic-cluster labels, memoized per (session, input plan,
-# threshold), like dedup._CLUSTERS_MEMO: the closure is an eager
+# signature width), like dedup._CLUSTERS_MEMO: the closure is an eager
 # checkpointed computation, so clusters + scrub + any downstream consumer
 # over one corpus resolve components once, not once per query.
 _EMB_CLUSTERS_MEMO = SessionMemo(8)
 
 
 def embedding_clusters(
-    embeddings: DataFrame,
-    *,
-    min_cos: float = EMB_NEARDUP_MIN_COS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = ANN_N_PLANES,
+    embeddings: DataFrame, *, n_planes: int = ANN_N_PLANES
 ) -> DataFrame:
     """(vec_id, cluster_id): connected components over the verified
     embedding near-dup pairs — semantic duplicate groups, the
@@ -1944,30 +1781,20 @@ def embedding_clusters(
     def build() -> DataFrame:
         pairs = embedding_neardup_pairs(
             embeddings,
-            min_cos=min_cos,
-            id_col=id_col,
-            vec_col=vec_col,
             n_planes=n_planes,
         )
         return connected_components(
             pairs, src_col="vec_a", dst_col="vec_b"
-        ).select(F.col("node").alias(id_col), "cluster_id")
+        ).select(F.col("node").alias("vec_id"), "cluster_id")
 
     return _EMB_CLUSTERS_MEMO.get(
         embeddings.sparkSession,
-        (embeddings.semanticHash(), id_col, vec_col, round(min_cos, 9), n_planes),
+        (embeddings.semanticHash(), n_planes),
         build,
     )
 
 
-def dedup_embeddings_semantic(
-    embeddings: DataFrame,
-    *,
-    min_cos: float = EMB_NEARDUP_MIN_COS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = ANN_N_PLANES,
-) -> DataFrame:
+def dedup_embeddings_semantic(embeddings: DataFrame) -> DataFrame:
     """(vec_id, label): the semantically deduplicated corpus — one
     canonical (min-id) survivor per embedding-cosine duplicate cluster,
     singletons untouched. The anti-join's right side is the non-survivor
@@ -1977,23 +1804,15 @@ def dedup_embeddings_semantic(
     MinHash but embed to the same point."""
     labels = embedding_clusters(
         embeddings,
-        min_cos=min_cos,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_planes=n_planes,
     )
-    losers = labels.filter(F.col(id_col) != F.col("cluster_id")).select(
-        id_col
-    )
+    losers = labels.filter(F.col("vec_id") != F.col("cluster_id")).select("vec_id")
     # survivors keep every payload column; only the vector is projected
     # away (the deduped corpus is what downstream joins on, not raw vecs)
-    payload = [c for c in embeddings.columns if c != vec_col]
-    return embeddings.select(*payload).join(losers, id_col, "left_anti")
+    payload = [c for c in embeddings.columns if c != "embedding"]
+    return embeddings.select(*payload).join(losers, "vec_id", "left_anti")
 
 
-def _sql_emb_components_ctes(
-    table: str = "embeddings", *, min_cos: float = EMB_NEARDUP_MIN_COS
-) -> str:
+def _sql_emb_components_ctes() -> str:
     """Recursive-CTE chain ending in ``clusters(node, cluster_id)`` — the
     DuckDB fixpoint twin of :func:`embedding_clusters` (same shape as
     ``dedup._sql_components_ctes`` over cosine edges)."""
@@ -2005,7 +1824,7 @@ def _sql_emb_components_ctes(
     return f"""
     corpus AS (
         SELECT vec_id, embedding, {_sql_bucket('embedding')} AS bucket
-        FROM {table}
+        FROM embeddings
     ),
     probes AS (
         SELECT vec_id, embedding, bucket AS probe FROM corpus
@@ -2017,7 +1836,7 @@ def _sql_emb_components_ctes(
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM probes a JOIN corpus b ON a.probe = b.bucket
         WHERE a.vec_id < b.vec_id
-          AND {sql_cosine('a.embedding', 'b.embedding')} >= {min_cos}
+          AND {sql_cosine('a.embedding', 'b.embedding')} >= {EMB_NEARDUP_MIN_COS}
     ),
     edges AS (
         SELECT vec_a AS src, vec_b AS dst FROM pairs
@@ -2036,21 +1855,17 @@ def _sql_emb_components_ctes(
     """
 
 
-def sql_embedding_clusters(
-    table: str = "embeddings", *, min_cos: float = EMB_NEARDUP_MIN_COS
-) -> str:
+def sql_embedding_clusters() -> str:
     return f"""
-    WITH RECURSIVE {_sql_emb_components_ctes(table, min_cos=min_cos)}
+    WITH RECURSIVE {_sql_emb_components_ctes()}
     SELECT node AS vec_id, cluster_id FROM clusters
     """
 
 
-def sql_dedup_embeddings_semantic(
-    table: str = "embeddings", *, min_cos: float = EMB_NEARDUP_MIN_COS
-) -> str:
+def sql_dedup_embeddings_semantic() -> str:
     return f"""
-    WITH RECURSIVE {_sql_emb_components_ctes(table, min_cos=min_cos)}
-    SELECT e.vec_id, e.label FROM {table} e
+    WITH RECURSIVE {_sql_emb_components_ctes()}
+    SELECT e.vec_id, e.label FROM embeddings e
     ANTI JOIN (
         SELECT node FROM clusters WHERE node <> cluster_id
     ) l ON e.vec_id = l.node
@@ -2063,15 +1878,7 @@ def sql_dedup_embeddings_semantic(
 
 
 def ann_multitable_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    n_tables: int = len(ANN_TABLES),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
+    embeddings: DataFrame, queries: DataFrame, *, n_tables: int = len(ANN_TABLES)
 ) -> DataFrame:
     """Approximate top-k over ``n_tables`` INDEPENDENT hyperplane signature
     tables: a neighbor is found if it shares the query's bucket in ANY
@@ -2093,50 +1900,40 @@ def ann_multitable_topk(
             f"(fixed seed tables available), got {n_tables}"
         )
     tables = ANN_TABLES[:n_tables]
-    q_sigs = F.array(
-        *[bucket_signature(F.col(query_vec_col), planes=t) for t in tables]
-    )
+    q_sigs = F.array(*[bucket_signature(F.col("query_vec"), planes=t) for t in tables])
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col),
-            F.col(query_vec_col),
+            F.col("query_id"),
+            F.col("query_vec"),
             F.posexplode(q_sigs).alias("_t", "_bucket"),
         )
     )
-    c_sigs = F.array(
-        *[bucket_signature(F.col(vec_col), planes=t) for t in tables]
-    )
+    c_sigs = F.array(*[bucket_signature(F.col("embedding"), planes=t) for t in tables])
     corpus = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.posexplode(c_sigs).alias("_t", "_bucket"),
     )
     scored = (
         corpus.join(q, ["_t", "_bucket"])
-        .filter(F.col("vec_id") != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
+            "query_id",
             "vec_id",
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cos"),
+            cosine(F.col("embedding"), F.col("query_vec")).alias("cos"),
         )
-        .groupBy(query_id_col, "vec_id")
+        .groupBy("query_id", "vec_id")
         .agg(F.max("cos").alias("cos"))
     )
-    return _topk_two_stage(scored, k)
+    return _topk_two_stage(scored, 10)
 
 
-def sql_ann_multitable_topk(
-    table: str = "embeddings",
-    k: int = 10,
-    n_queries: int = 8,
-    *,
-    n_tables: int = len(ANN_TABLES),
-) -> str:
-    if not 1 <= n_tables <= len(ANN_TABLES):
+def sql_ann_multitable_topk() -> str:
+    if not 1 <= len(ANN_TABLES) <= len(ANN_TABLES):
         raise ValueError(
-            f"n_tables must be in [1, {len(ANN_TABLES)}], got {n_tables}"
+            f"n_tables must be in [1, {len(ANN_TABLES)}], got {len(ANN_TABLES)}"
         )
-    tables = ANN_TABLES[:n_tables]
+    tables = ANN_TABLES[:len(ANN_TABLES)]
     ql = "\n        UNION ALL\n        ".join(
         f"SELECT query_id, query_vec, {t} AS t,"
         f" {_sql_bucket('query_vec', planes=pl)} AS bucket FROM q"
@@ -2144,13 +1941,13 @@ def sql_ann_multitable_topk(
     )
     cl = "\n        UNION ALL\n        ".join(
         f"SELECT vec_id, embedding, {t} AS t,"
-        f" {_sql_bucket('embedding', planes=pl)} AS bucket FROM {table}"
+        f" {_sql_bucket('embedding', planes=pl)} AS bucket FROM embeddings"
         for t, pl in enumerate(tables)
     )
     return f"""
     WITH q AS (
         SELECT vec_id AS query_id, embedding AS query_vec
-        FROM {table} WHERE vec_id < {n_queries}
+        FROM embeddings WHERE vec_id < 8
     ),
     ql AS (
         {ql}
@@ -2171,7 +1968,7 @@ def sql_ann_multitable_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -2182,12 +1979,7 @@ def sql_ann_multitable_topk(
 COV_DIMS = 16  # leading dimension slice (full d² fan-out is quadratic in d)
 
 
-def embedding_covariance(
-    embeddings: DataFrame,
-    *,
-    n_dims: int = COV_DIMS,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_covariance(embeddings: DataFrame, *, n_dims: int = COV_DIMS) -> DataFrame:
     """(dim_i, dim_j, cov): the covariance matrix of the leading
     ``n_dims`` embedding dimensions — the statistic behind whitening and
     anisotropy checks (embedding spaces collapse toward dominant
@@ -2199,7 +1991,7 @@ def embedding_covariance(
     reduce merges the partials. No d²-row fan-out ever crosses an
     exchange — the A/B against the relational explode form measured
     2.15 → 1.16 s at sf0.1 and the partial state is what makes the shape
-    honest at 100 TB. Guide §4 discipline: only ``vec_col`` crosses the
+    honest at 100 TB. Guide §4 discipline: only ``embedding`` crosses the
     Python boundary, Arrow-batched, zero row-at-a-time UDFs.
 
     EXACTNESS is the load-bearing subtlety. The oracle contract sums
@@ -2225,7 +2017,7 @@ def embedding_covariance(
         sx: dict[int, int] = {}
         n = 0
         for pdf in batches:
-            for vec in pdf[vec_col]:
+            for vec in pdf["embedding"]:
                 xs = [float(v) for v in vec[:d]]
                 n += 1
                 for i in range(d):
@@ -2258,7 +2050,7 @@ def embedding_covariance(
             rows, columns=["dim_i", "dim_j", "sxy", "sx", "sy", "n"]
         )
 
-    part = ensure_parallelism(embeddings.select(vec_col)).mapInPandas(
+    part = ensure_parallelism(embeddings.select("embedding")).mapInPandas(
         partials,
         "dim_i int, dim_j int, sxy string, sx string, sy string, n long",
     )
@@ -2286,9 +2078,7 @@ def embedding_covariance(
     )
 
 
-def sql_embedding_covariance(
-    table: str = "embeddings", *, n_dims: int = COV_DIMS
-) -> str:
+def sql_embedding_covariance() -> str:
     from ..functions import sql_dsum
 
     return f"""
@@ -2296,9 +2086,9 @@ def sql_embedding_covariance(
         SELECT i.dim_i, j.dim_j,
                CAST(embedding[i.dim_i] AS DOUBLE) AS xi,
                CAST(embedding[j.dim_j] AS DOUBLE) AS xj
-        FROM {table}
-        CROSS JOIN (SELECT unnest(range(1, {n_dims + 1})) AS dim_i) i
-        CROSS JOIN (SELECT unnest(range(1, {n_dims + 1})) AS dim_j) j
+        FROM embeddings
+        CROSS JOIN (SELECT unnest(range(1, {COV_DIMS + 1})) AS dim_i) i
+        CROSS JOIN (SELECT unnest(range(1, {COV_DIMS + 1})) AS dim_j) j
     ),
     agg AS (
         SELECT dim_i, dim_j,
@@ -2321,12 +2111,7 @@ def sql_embedding_covariance(
 
 
 def embedding_label_drift(
-    first: DataFrame,
-    second: DataFrame,
-    *,
-    n_dims: int = ANN_DIM,
-    vec_col: str = "embedding",
-    label_col: str = "label",
+    first: DataFrame, second: DataFrame, *, n_dims: int = ANN_DIM
 ) -> DataFrame:
     """(label, dim, n_first, n_second, c_first, c_second, shift): per-label
     per-dimension centroid displacement between two corpus snapshots — the
@@ -2355,13 +2140,13 @@ def embedding_label_drift(
                 F.sequence(F.lit(1), F.lit(n_dims)),
                 lambda i: F.struct(
                     i.alias("dim"),
-                    F.element_at(F.col(vec_col), i).cast("double").alias("x"),
+                    F.element_at(F.col("embedding"), i).cast("double").alias("x"),
                 ),
             )
         )
         return (
-            df.filter(F.col(label_col).isNotNull() & F.col(vec_col).isNotNull())
-            .select(F.col(label_col).alias("label"), p.alias("p"))
+            df.filter(F.col("label").isNotNull() & F.col("embedding").isNotNull())
+            .select(F.col("label"), p.alias("p"))
             .select(
                 "label",
                 F.col("p.dim").alias("dim"),
@@ -2394,13 +2179,7 @@ def embedding_label_drift(
     )
 
 
-def sql_embedding_label_drift(
-    first_pred: str,
-    second_pred: str,
-    table: str = "embeddings",
-    *,
-    n_dims: int = ANN_DIM,
-) -> str:
+def sql_embedding_label_drift(first_pred: str, second_pred: str) -> str:
     """DuckDB twin of :func:`embedding_label_drift` where the snapshots are
     predicate-split slices of one table (the registered query's parity
     split; real deployments pass two snapshot scans)."""
@@ -2411,8 +2190,8 @@ def sql_embedding_label_drift(
         SELECT label, d.dim,
                CAST(embedding[d.dim] AS DOUBLE) AS x,
                CASE WHEN {second_pred} THEN 1 ELSE 0 END AS half
-        FROM {table}
-        CROSS JOIN (SELECT unnest(range(1, {n_dims + 1})) AS dim) d
+        FROM embeddings
+        CROSS JOIN (SELECT unnest(range(1, {ANN_DIM + 1})) AS dim) d
         WHERE label IS NOT NULL AND embedding IS NOT NULL
           AND (({first_pred}) OR ({second_pred}))
     ),
@@ -2444,7 +2223,7 @@ RP_D_OUT = 16
 RP_QUANT = 1000
 
 
-def _rp_signs(d_in: int = 64, d_out: int = RP_D_OUT) -> list[list[int]]:
+def _rp_signs(d_in: int = 64) -> list[list[int]]:
     """The ±1 projection matrix, derived from md5 so BOTH engines (and the
     oracle SQL text) share the identical matrix without any RNG."""
     import hashlib
@@ -2456,11 +2235,11 @@ def _rp_signs(d_in: int = 64, d_out: int = RP_D_OUT) -> list[list[int]]:
             else -1
             for i in range(d_in)
         ]
-        for j in range(d_out)
+        for j in range(RP_D_OUT)
     ]
 
 
-def rp_project(vec: Column, d_in: int = 64) -> Column:
+def rp_project(vec: Column) -> Column:
     """array<bigint>[RP_D_OUT]: the sign random projection of a float
     vector, computed EXACTLY — each input coordinate is fixed-point
     quantized (round(x·1000), the proven int8-quantize arithmetic) and
@@ -2468,7 +2247,7 @@ def rp_project(vec: Column, d_in: int = 64) -> Column:
     is bit-identical across engines and order-independent by construction
     (integer addition commutes). Pure per-row expression: no shuffle, no
     model, nothing to fit or broadcast."""
-    signs = _rp_signs(d_in)
+    signs = _rp_signs()
     # transpose to columns-of-the-matrix so the WHOLE projection is ONE
     # fold over the input coordinates with a d_out-wide array accumulator
     # (the original 16-independent-folds form traversed the vector 16
@@ -2477,7 +2256,7 @@ def rp_project(vec: Column, d_in: int = 64) -> Column:
     # sf0.1; this form is ~16x smaller and one pass).
     cols = [
         [int(signs[j][i]) for j in range(len(signs))]
-        for i in range(d_in)
+        for i in range(64)
     ]
     # ONE array<array<bigint>> literal in ONE py4j round trip (not per-row
     # CreateArray of 1024 lit nodes — that alone was ~4 s/5k rows
@@ -2551,9 +2330,7 @@ def rp_topk(
     return _topk_two_stage(scored, k)
 
 
-def sql_rp_topk(
-    table: str = "embeddings", k: int = 10, n_queries: int = 8
-) -> str:
+def sql_rp_topk() -> str:
     """DuckDB twin: the identical md5-derived sign matrix is inlined as
     ±1 literals; integer sums make term order irrelevant."""
     signs = _rp_signs()
@@ -2575,12 +2352,12 @@ def sql_rp_topk(
     )
     return f"""
     WITH base AS (
-        SELECT vec_id, {qv} AS qv FROM {table}
+        SELECT vec_id, {qv} AS qv FROM embeddings
     ),
     proj AS (
         SELECT vec_id, [{proj_terms}] AS p FROM base
     ),
-    q AS (SELECT vec_id AS query_id, p FROM proj WHERE vec_id < {n_queries}),
+    q AS (SELECT vec_id AS query_id, p FROM proj WHERE vec_id < 8),
     scored AS (
         SELECT q.query_id, e.vec_id,
                CAST({dot} AS DOUBLE) / ({norm('e')} * {norm('q')}) AS cos
@@ -2593,7 +2370,7 @@ def sql_rp_topk(
                ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS FIRST
            ) AS INT) AS rank
     FROM scored
-    QUALIFY rank <= {k}
+    QUALIFY rank <= 10
     """
 
 
@@ -2606,13 +2383,7 @@ def sql_rp_topk(
 QC_NORM_MICRO = 1_000_000.0
 
 
-def embedding_qc_report(
-    embeddings: DataFrame,
-    *,
-    dim: int = ANN_DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_qc_report(embeddings: DataFrame, *, dim: int = ANN_DIM) -> DataFrame:
     """One-row embedding-corpus health report: vector count, NULL vectors,
     wrong-dimension vectors, NULL-element vectors (right length but some
     element is NULL), non-finite vectors (any NaN/±Inf element), zero
@@ -2639,7 +2410,7 @@ def embedding_qc_report(
     damaged rows are COUNTED, never averaged in. avg is an exact-int
     ratio (sum/count) divided once into double.
     """
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     is_null = vec.isNull()
     wrong_dim = ~is_null & (F.size(vec) != dim)
     null_elem = ~is_null & ~wrong_dim & F.exists(vec, lambda x: x.isNull())
@@ -2682,29 +2453,23 @@ def embedding_qc_report(
     )
 
 
-def sql_embedding_qc_report(
-    table: str = "embeddings",
-    *,
-    dim: int = ANN_DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
+def sql_embedding_qc_report(*, dim: int = ANN_DIM) -> str:
     sumsq = "list_reduce([x::DOUBLE * x::DOUBLE for x in v], (p, q) -> p + q)"
     return f"""
     WITH flags AS (
-        SELECT {vec_col} AS v,
-               ({vec_col} IS NULL) AS is_null,
-               ({vec_col} IS NOT NULL AND len({vec_col}) != {dim})
+        SELECT embedding AS v,
+               (embedding IS NULL) AS is_null,
+               (embedding IS NOT NULL AND len(embedding) != {dim})
                    AS wrong_dim,
-               ({vec_col} IS NOT NULL AND len({vec_col}) = {dim}
-                AND len(list_filter({vec_col}, x -> x IS NULL)) > 0)
+               (embedding IS NOT NULL AND len(embedding) = {dim}
+                AND len(list_filter(embedding, x -> x IS NULL)) > 0)
                    AS null_elem,
-               ({vec_col} IS NOT NULL AND len({vec_col}) = {dim}
-                AND len(list_filter({vec_col}, x -> x IS NULL)) = 0
-                AND len(list_filter({vec_col},
+               (embedding IS NOT NULL AND len(embedding) = {dim}
+                AND len(list_filter(embedding, x -> x IS NULL)) = 0
+                AND len(list_filter(embedding,
                         x -> isnan(x::DOUBLE) OR isinf(x::DOUBLE))) > 0)
                    AS nonfinite
-        FROM {table}
+        FROM embeddings
     ),
     m AS (
         SELECT is_null, wrong_dim, null_elem, nonfinite,

@@ -63,17 +63,13 @@ def _row_salt(df: DataFrame, n_salts: int) -> Column:
 
 
 def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    *,
-    n_salts: int = 16,
+    df: DataFrame, keys: list[str], aggs: dict[str, tuple[str, str]]
 ) -> DataFrame:
     """Two-phase skew-proof aggregation.
 
     ``aggs`` maps output column -> (agg_name, input_col) with agg_name in
     {sum, count, min, max}. Phase 1 groups by (keys..., salt) where salt is
-    a uniform [0, n_salts) int — a hot key's rows spread over ``n_salts``
+    a uniform [0, 16) int — a hot key's rows spread over 16
     reducers; phase 2 re-aggregates the per-salt partials by the true keys.
     Results are identical to a direct groupBy for decomposable aggregates
     (decimal-exact for sums), verified in tests/test_skew.py.
@@ -81,9 +77,7 @@ def salted_agg(
     unknown = {a for a, _ in aggs.values()} - set(DECOMPOSABLE)
     if unknown:
         raise ValueError(f"non-decomposable aggregates cannot be salted: {unknown}")
-    phase1 = df.withColumn("_salt", _row_salt(df, n_salts)).groupBy(
-        *keys, "_salt"
-    ).agg(
+    phase1 = df.withColumn("_salt", _row_salt(df, 16)).groupBy(*keys, "_salt").agg(
         *[DECOMPOSABLE[name][0](col, out) for out, (name, col) in aggs.items()]
     )
     return phase1.groupBy(*keys).agg(

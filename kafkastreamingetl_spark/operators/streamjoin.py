@@ -31,26 +31,19 @@ from pyspark.sql import functions as F
 from ..functions import dsum, normalize_string, sql_dsum
 
 
-def split_typed_legs(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    *,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> tuple[DataFrame, DataFrame]:
+def split_typed_legs(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split one event lineage into two typed legs with disjoint column
     names (self-join hygiene: renaming beats ``df["col"]`` disambiguation,
     and works identically for batch and streaming inputs)."""
-    norm = normalize_string(type_col)
-    left = events.where(norm == left_type).select(
+    norm = normalize_string("event_type")
+    left = events.where(norm == "click").select(
         F.col("user_id"),
-        F.col(ts_col).alias(f"{left_type}_ts"),
+        F.col("ts").alias("click_ts"),
     )
-    right = events.where(norm == right_type).select(
+    right = events.where(norm == "purchase").select(
         F.col("user_id").alias("r_user_id"),
-        F.col(ts_col).alias(f"{right_type}_ts"),
-        F.coalesce(F.col("value"), F.lit(0.0)).alias(f"{right_type}_value"),
+        F.col("ts").alias("purchase_ts"),
+        F.coalesce(F.col("value"), F.lit(0.0)).alias("purchase_value"),
     )
     return left, right
 
@@ -61,7 +54,6 @@ def interval_pairs(
     *,
     left_ts: str,
     right_ts: str,
-    horizon: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """All (left, right) pairs with the same user and ``right_ts`` in
@@ -82,35 +74,35 @@ def interval_pairs(
     cond = (
         (left["user_id"] == right["r_user_id"])
         & (right[right_ts] > left[left_ts])
-        & (right[right_ts] <= left[left_ts] + F.expr(f"INTERVAL {horizon}"))
+        & (right[right_ts] <= left[left_ts] + F.expr("INTERVAL 10 minutes"))
     )
     return left.join(right, cond, how).drop("r_user_id")
 
 
-def attribution_rollup(pairs: DataFrame, value_col: str = "purchase_value") -> DataFrame:
+def attribution_rollup(pairs: DataFrame) -> DataFrame:
     """Per-user attribution totals over the pair stream/frame."""
     return (
         pairs.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("attributed_pairs"),
-            dsum(value_col, "attributed_value"),
+            dsum("purchase_value", "attributed_value"),
         )
         .orderBy("user_id")
     )
 
 
-def purchase_attribution(events: DataFrame, *, horizon: str = "10 minutes") -> DataFrame:
-    """Batch twin: clicks ⋈ purchases within ``horizon``, rolled up per
+def purchase_attribution(events: DataFrame) -> DataFrame:
+    """Batch twin: clicks ⋈ purchases within 10 minutes, rolled up per
     user. This exact plan is the driver-checked oracle twin of the
     streaming join."""
     clicks, purchases = split_typed_legs(events)
     pairs = interval_pairs(
-        clicks, purchases, left_ts="click_ts", right_ts="purchase_ts", horizon=horizon
+        clicks, purchases, left_ts="click_ts", right_ts="purchase_ts"
     )
     return attribution_rollup(pairs)
 
 
-def sql_purchase_attribution(horizon_sql: str = "INTERVAL 10 MINUTE") -> str:
+def sql_purchase_attribution() -> str:
     """DuckDB oracle for :func:`purchase_attribution`."""
     return f"""
     WITH clicks AS (
@@ -131,7 +123,7 @@ def sql_purchase_attribution(horizon_sql: str = "INTERVAL 10 MINUTE") -> str:
     JOIN purchases p
       ON c.user_id = p.user_id
      AND p.purchase_ts > c.click_ts
-     AND p.purchase_ts <= c.click_ts + {horizon_sql}
+     AND p.purchase_ts <= c.click_ts + INTERVAL 10 MINUTE
     GROUP BY c.user_id
     ORDER BY c.user_id
     """

@@ -39,32 +39,21 @@ from ..functions import dsum, sql_dsum
 # ---------------------------------------------------------------------------
 
 
-def scd2_history(
-    events: DataFrame,
-    *,
-    key: str = "user_id",
-    state_col: str = "event_type",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-    value_col: str | None = "value",
-) -> DataFrame:
-    """Collapse consecutive runs of equal ``state_col`` (per ``key``, in
+def scd2_history(events: DataFrame) -> DataFrame:
+    """Collapse consecutive runs of equal ``event_type`` (per ``user_id``, in
     (ts, seq) order) into SCD2 rows: ``valid_from``/``valid_to`` bound the
     observed run, ``run_seq`` numbers runs per key.
 
-    One hash shuffle on ``key`` + a per-partition sort; run detection is a
+    One hash shuffle on ``user_id`` + a per-partition sort; run detection is a
     lag comparison (null-safe — a run of NULL states is one run, matching
     ``IS DISTINCT FROM``), run ids a running sum. The grouped collapse
     reuses the same partitioning, so Catalyst plans a single Exchange.
     """
-    w = Window.partitionBy(key).orderBy(F.asc(ts_col), F.asc(seq_col))
-    cols = [key, ts_col, seq_col, state_col] + (
-        [value_col] if value_col else []
-    )
-    marked = events.select(*cols).withColumn(
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    marked = events.select("user_id", "ts", "event_id", "event_type", "value").withColumn(
         "_chg",
         F.when(F.row_number().over(w) == 1, F.lit(1))
-        .when(~F.lag(state_col).over(w).eqNullSafe(F.col(state_col)), F.lit(1))
+        .when(~F.lag("event_type").over(w).eqNullSafe(F.col("event_type")), F.lit(1))
         .otherwise(F.lit(0)),
     )
     runs = marked.withColumn(
@@ -74,21 +63,20 @@ def scd2_history(
         .cast("int"),
     )
     aggs = [
-        F.min(state_col).alias(state_col),
-        F.min(ts_col).alias("valid_from"),
-        F.max(ts_col).alias("valid_to"),
+        F.min("event_type").alias("event_type"),
+        F.min("ts").alias("valid_from"),
+        F.max("ts").alias("valid_to"),
         F.count(F.lit(1)).alias("n_events"),
+        dsum("value", "run_value"),
     ]
-    if value_col:
-        aggs.append(dsum(value_col, "run_value"))
-    return runs.groupBy(key, "run_seq").agg(*aggs)
+    return runs.groupBy("user_id", "run_seq").agg(*aggs)
 
 
-def sql_scd2_history(max_user: int = 100) -> str:
+def sql_scd2_history() -> str:
     return f"""
     WITH e AS (
         SELECT user_id, ts, event_id, event_type, value
-        FROM events WHERE user_id < {max_user}
+        FROM events WHERE user_id < 100
     ),
     m AS (
         SELECT *,
@@ -272,7 +260,7 @@ def sql_user_daily_streaks() -> str:
 EWMA_WINDOW = 16  # trailing rows contributing weight (alpha = 1/2)
 
 
-def user_value_ewma(events: DataFrame, *, max_user: int = 50) -> DataFrame:
+def user_value_ewma(events: DataFrame) -> DataFrame:
     """Trailing EWMA (alpha = 1/2) of ``value`` over each user's event
     sequence, windowed to the last :data:`EWMA_WINDOW` events.
 
@@ -300,9 +288,7 @@ def user_value_ewma(events: DataFrame, *, max_user: int = 50) -> DataFrame:
     k = EWMA_WINDOW
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     e = (
-        events.filter(
-            (F.col("user_id") < max_user) & F.col("value").isNotNull()
-        )
+        events.filter((F.col("user_id") < 50) & F.col("value").isNotNull())
         .select(
             "user_id",
             "ts",
@@ -356,7 +342,7 @@ def user_value_ewma(events: DataFrame, *, max_user: int = 50) -> DataFrame:
     )
 
 
-def sql_user_value_ewma(max_user: int = 50) -> str:
+def sql_user_value_ewma() -> str:
     k = EWMA_WINDOW
     return f"""
     WITH e AS (
@@ -367,7 +353,7 @@ def sql_user_value_ewma(max_user: int = 50) -> str:
                    ORDER BY ts ASC NULLS FIRST, event_id ASC NULLS FIRST
                ) AS seq
         FROM events
-        WHERE user_id < {max_user} AND value IS NOT NULL
+        WHERE user_id < 50 AND value IS NOT NULL
     )
     SELECT c.user_id, c.ts, c.event_id,
            CAST(SUM(p.cents << ({k - 1} - (c.seq - p.seq))) AS DOUBLE)
@@ -467,18 +453,13 @@ def sql_event_transition_matrix() -> str:
 CONTEXT_LEN = 3
 
 
-def next_event_training_pairs(
-    events: DataFrame,
-    *,
-    context_len: int = CONTEXT_LEN,
-    key_col: str = "user_id",
-) -> DataFrame:
+def next_event_training_pairs(events: DataFrame) -> DataFrame:
     """(user_id, event_id, context, target): one autoregressive training
-    example per event — the up-to-``context_len`` preceding event types
+    example per event — the up-to-``CONTEXT_LEN`` preceding event types
     in the user's timeline, '>'-joined, paired with the event that
     actually came next. The dataset builder for next-action /
     session-recommendation models, and the n-gram generalization of the
-    bigram :func:`event_transition_matrix` (context_len=1 reproduces its
+    bigram :func:`event_transition_matrix` (a context of 1 reproduces its
     pair stream).
 
     Determinism: the timeline order is (ts, event_id) — event ids are
@@ -491,19 +472,19 @@ def next_event_training_pairs(
 
     Scale shape: one shuffle, partitioned by user (never an
     unpartitioned window); rows carry (user, id, type, ts) only and each
-    emitted context is bounded by ``context_len`` tokens, so output is
+    emitted context is bounded by ``CONTEXT_LEN`` tokens, so output is
     O(input) with a small constant. At 100 TB the user key is the same
     granularity every session/retention operator already shuffles on.
     """
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
-        .rowsBetween(-context_len, -1)
+        .rowsBetween(-CONTEXT_LEN, -1)
     )
     return (
         events.filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
         .select(
-            key_col,
+            "user_id",
             "event_id",
             F.concat_ws(">", F.collect_list("event_type").over(w)).alias(
                 "context"
@@ -514,21 +495,19 @@ def next_event_training_pairs(
     )
 
 
-def sql_next_event_training_pairs(
-    *, context_len: int = CONTEXT_LEN, key_col: str = "user_id"
-) -> str:
+def sql_next_event_training_pairs() -> str:
     return f"""
     WITH e AS (
-        SELECT {key_col}, event_id, ts, event_type
+        SELECT user_id, event_id, ts, event_type
         FROM events
         WHERE event_type IS NOT NULL AND ts IS NOT NULL
     )
-    SELECT {key_col}, event_id,
+    SELECT user_id, event_id,
            array_to_string(
                array_agg(event_type) OVER (
-                   PARTITION BY {key_col}
+                   PARTITION BY user_id
                    ORDER BY ts ASC, event_id ASC
-                   ROWS BETWEEN {context_len} PRECEDING AND 1 PRECEDING
+                   ROWS BETWEEN {CONTEXT_LEN} PRECEDING AND 1 PRECEDING
                ), '>') AS context,
            event_type AS target
     FROM e

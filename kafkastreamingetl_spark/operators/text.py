@@ -121,7 +121,7 @@ def sql_shingle_hashes_over_w(n: int = SHINGLE_N) -> str:
 # ---------------------------------------------------------------------------
 
 
-def doc_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_quality(df: DataFrame) -> DataFrame:
     """Per-document quality metrics: counts, ratios, a language guess.
 
     Pure projection — no shuffle; at 100 TB this is a single scan that
@@ -132,7 +132,7 @@ def doc_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     posture as rolling_hash/language_id), not as all-NULL metrics that
     silently fall out of downstream ratio filters.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     t = tokens(text)
     n_tok = F.size(t)
     n_distinct = F.size(F.array_distinct(t))
@@ -152,14 +152,14 @@ def doc_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def sql_doc_quality(table: str = "documents", text_col: str = "text") -> str:
+def sql_doc_quality() -> str:
     stop = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
     return f"""
     WITH toks AS (
         SELECT doc_id,
-               COALESCE({text_col}, '') AS text,
-               {sql_tokens(f"COALESCE({text_col}, '')")} AS w
-        FROM {table}
+               COALESCE(text, '') AS text,
+               {sql_tokens("COALESCE(text, '')")} AS w
+        FROM documents
     )
     SELECT doc_id,
            length(text) AS n_chars,
@@ -180,33 +180,33 @@ def sql_doc_quality(table: str = "documents", text_col: str = "text") -> str:
 # ---------------------------------------------------------------------------
 
 
-def doc_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_token_stats(df: DataFrame) -> DataFrame:
     """Per-(lang, source) corpus stats: docs, tokens, chars, mean doc length.
 
     One hash-shuffle on the (low-cardinality) group keys; token counting
     happens map-side inside the partial aggregate, so the exchange carries
     only pre-aggregated rows — the same plan shape at any scale.
     """
-    n_tok = F.size(tokens(text_col)).cast("bigint")
+    n_tok = F.size(tokens("text")).cast("bigint")
     return df.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(n_tok).alias("total_tokens"),
-        F.sum(F.length(text_col).cast("bigint")).alias("total_chars"),
+        F.sum(F.length("text").cast("bigint")).alias("total_chars"),
         dsum(n_tok.cast("double"), "sum_doc_tokens"),
         F.max(n_tok).alias("max_doc_tokens"),
     )
 
 
-def sql_doc_token_stats(table: str = "documents", text_col: str = "text") -> str:
-    w = sql_tokens(text_col)
+def sql_doc_token_stats() -> str:
+    w = sql_tokens("text")
     return f"""
     SELECT lang, source,
            COUNT(*) AS n_docs,
            SUM(len({w})::BIGINT)::BIGINT AS total_tokens,
-           SUM(length({text_col})::BIGINT)::BIGINT AS total_chars,
+           SUM(length(text)::BIGINT)::BIGINT AS total_chars,
            {sql_dsum(f'len({w})::DOUBLE')} AS sum_doc_tokens,
            MAX(len({w})::BIGINT) AS max_doc_tokens
-    FROM {table}
+    FROM documents
     GROUP BY 1, 2
     """
 
@@ -223,14 +223,14 @@ def sql_doc_token_stats(table: str = "documents", text_col: str = "text") -> str
 BPE_TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def regex_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def regex_token_stats(df: DataFrame) -> DataFrame:
     """Per-doc token counts under the BPE-ish regex split — the
     token-budget accounting pass of a training-data pipeline (whitespace
     counting over-merges 'foo,bar' into one token; a BPE pre-tokenizer
     does not). Pure projection: ``regexp_extract_all`` + higher-order
     filters, one scan, no shuffle, no Python.
     """
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), F.lit(0))
+    toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), F.lit(0))
     alpha = F.filter(toks, lambda x: x.rlike("^[a-z]+$"))
     num = F.filter(toks, lambda x: x.rlike("^[0-9]+$"))
     return df.select(
@@ -242,10 +242,10 @@ def regex_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def sql_regex_token_stats(table: str = "documents", text_col: str = "text") -> str:
-    toks = f"regexp_extract_all({text_col}, '{BPE_TOKEN_RE}')"
+def sql_regex_token_stats() -> str:
+    toks = f"regexp_extract_all(text, '{BPE_TOKEN_RE}')"
     return f"""
-    WITH t AS (SELECT doc_id, {toks} AS toks FROM {table})
+    WITH t AS (SELECT doc_id, {toks} AS toks FROM documents)
     SELECT doc_id,
            len(toks)::BIGINT AS n_re_tokens,
            len(list_distinct(toks))::BIGINT AS n_distinct_re_tokens,
@@ -262,7 +262,7 @@ def sql_regex_token_stats(table: str = "documents", text_col: str = "text") -> s
 # ---------------------------------------------------------------------------
 
 
-def simhash(col: str | Column, n: int = SHINGLE_N) -> Column:
+def simhash(col: str | Column) -> Column:
     """60-bit SimHash fingerprint over the shingle-hash feature set.
 
     Classic Charikar construction: for each bit position, sum +1/-1 votes
@@ -281,7 +281,7 @@ def simhash(col: str | Column, n: int = SHINGLE_N) -> Column:
     pipeline per bit — measured 4.1× slower at sf0.1 (5000 docs: 1.36 s vs
     0.33 s for the full doc_fingerprint projection).
     """
-    return _bind(shingle_hashes(col, n), simhash_from_hashes)
+    return _bind(shingle_hashes(col), simhash_from_hashes)
 
 
 def simhash_from_hashes(hs: Column) -> Column:
@@ -323,7 +323,7 @@ def sql_simhash_over_hs() -> str:
     )
 
 
-def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_fingerprint(df: DataFrame) -> DataFrame:
     """(doc_id, simhash, content_hash): per-doc fingerprints in one scan.
 
     The SimHash fold is the most expression-heavy operator in the engine
@@ -332,16 +332,16 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     return ensure_parallelism(df).select(
         "doc_id",
-        simhash(text_col).alias("simhash"),
-        hash60(F.col(text_col)).alias("content_hash"),
+        simhash("text").alias("simhash"),
+        hash60(F.col("text")).alias("content_hash"),
     )
 
 
-def sql_doc_fingerprint(table: str = "documents", text_col: str = "text") -> str:
+def sql_doc_fingerprint() -> str:
     return f"""
     WITH toks AS (
-        SELECT doc_id, {text_col} AS text, {sql_tokens(text_col)} AS w
-        FROM {table}
+        SELECT doc_id, text AS text, {sql_tokens('text')} AS w
+        FROM documents
     ),
     feats AS (
         SELECT doc_id, text, {sql_shingle_hashes_over_w()} AS hs FROM toks
@@ -381,19 +381,19 @@ def rolling_hash(col: str | Column) -> Column:
     )
 
 
-def doc_rolling_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_rolling_hash(df: DataFrame) -> DataFrame:
     """Per-document rolling-hash fingerprint + token count (the count
     disambiguates the empty document from a real zero-hash collision)."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     return ensure_parallelism(df).select(
         "doc_id",
-        rolling_hash(text_col).alias("rolling_hash"),
+        rolling_hash("text").alias("rolling_hash"),
         F.size(tokens(c)).alias("n_tokens"),
     )
 
 
-def sql_doc_rolling_hash(table: str = "documents", text_col: str = "text") -> str:
-    c = f"coalesce({text_col}, '')"
+def sql_doc_rolling_hash() -> str:
+    c = "coalesce(text, '')"
     token_hashes = (
         f"[{sql_hash60('x')} % {ROLL_M} for x in string_split({c}, '{TOKEN_SEP}')]"
     )
@@ -404,7 +404,7 @@ def sql_doc_rolling_hash(table: str = "documents", text_col: str = "text") -> st
                (acc, x) -> (acc * {ROLL_B} + x) % {ROLL_P}
            ) AS rolling_hash,
            len(string_split({c}, '{TOKEN_SEP}'))::INT AS n_tokens
-    FROM {table}
+    FROM documents
     """
 
 
@@ -445,7 +445,7 @@ def _sql_occurrences(expr: str, gram: str) -> str:
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Per-document n-gram language ID: integer profile scores + argmax.
 
     Pure projection (no shuffle, no Python): each profile score is a sum of
@@ -456,7 +456,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     recover the label; the operator contract (deterministic scores +
     argmax) is what the oracle checks.
     """
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     scores = {
         lang: sum(
             (_occurrences(c, g) for g in grams), start=F.lit(0).cast("bigint")
@@ -473,8 +473,8 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def sql_language_id(table: str = "documents", text_col: str = "text") -> str:
-    c = f"coalesce({text_col}, '')"
+def sql_language_id() -> str:
+    c = "coalesce(text, '')"
     score_exprs = ",\n           ".join(
         " + ".join(_sql_occurrences(c, g) for g in grams) + f" AS score_{lang}"
         for lang, grams in LANG_PROFILES.items()
@@ -488,7 +488,7 @@ def sql_language_id(table: str = "documents", text_col: str = "text") -> str:
     WITH scored AS (
         SELECT doc_id,
            {score_exprs}
-        FROM {table}
+        FROM documents
     )
     SELECT *,
            CASE {whens}
@@ -523,16 +523,9 @@ TOKEN_VOCAB: tuple[str, ...] = (
 VOCAB_PREFIX_CHARS = 160
 
 
-def vocab_token_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    vocab: tuple[str, ...] = TOKEN_VOCAB,
-    prefix_chars: int = VOCAB_PREFIX_CHARS,
-) -> DataFrame:
+def vocab_token_counts(df: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_unk): greedy longest-match tokenization of the
-    first ``prefix_chars`` chars against the vocab; a position matching no
+    first ``VOCAB_PREFIX_CHARS`` chars against the vocab; a position matching no
     piece consumes one char as an <unk> token (counted in both columns).
 
     This is the documented slow-path exception: iterative longest-prefix
@@ -550,7 +543,7 @@ def vocab_token_counts(
     """
     import pandas as pd
 
-    pieces = sorted(set(vocab), key=len, reverse=True)
+    pieces = sorted(set(TOKEN_VOCAB), key=len, reverse=True)
 
     def tokenize_batches(batches):
         for pdf in batches:
@@ -574,41 +567,33 @@ def vocab_token_counts(
             )
 
     pruned = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, prefix_chars).alias(
+        F.col("doc_id"),
+        F.substring(F.coalesce(F.col("text"), F.lit("")), 1, VOCAB_PREFIX_CHARS).alias(
             "_prefix"
         ),
     )
     # the id field's type follows the INPUT column (a hardcoded `long`
-    # would crash Arrow conversion for string ids), and the output keeps
-    # the caller's id_col name so joins back are name-stable
+    # would crash Arrow conversion for string ids)
     id_type = pruned.schema["doc_id"].dataType.simpleString()
-    out = pruned.mapInPandas(
+    return pruned.mapInPandas(
         tokenize_batches,
         schema=f"doc_id {id_type}, n_tokens long, n_unk long",
     )
-    return out.withColumnRenamed("doc_id", id_col) if id_col != "doc_id" else out
 
 
-def sql_vocab_token_counts(
-    table: str = "documents",
-    text_col: str = "text",
-    *,
-    vocab: tuple[str, ...] = TOKEN_VOCAB,
-    prefix_chars: int = VOCAB_PREFIX_CHARS,
-) -> str:
+def sql_vocab_token_counts() -> str:
     """DuckDB twin of :func:`vocab_token_counts`: the same greedy walk as a
     recursive CTE — each step consumes the longest matching piece (or one
     <unk> char) and the recursion ends when every document is exhausted."""
-    pieces_sql = ", ".join("'" + p.replace("'", "''") + "'" for p in sorted(set(vocab)))
+    pieces_sql = ", ".join("'" + p.replace("'", "''") + "'" for p in sorted(set(TOKEN_VOCAB)))
     return f"""
     WITH RECURSIVE vocab(piece) AS (
         SELECT unnest([{pieces_sql}])
     ),
     base AS (
         SELECT doc_id,
-               substr(coalesce({text_col}, ''), 1, {prefix_chars}) AS rem
-        FROM {table}
+               substr(coalesce(text, ''), 1, {VOCAB_PREFIX_CHARS}) AS rem
+        FROM documents
     ),
     walk(doc_id, rem, n_tokens, n_unk) AS (
         SELECT doc_id, rem, 0::BIGINT, 0::BIGINT FROM base
@@ -641,7 +626,7 @@ REP_DUP_BIGRAM_MAX = 0.60
 REP_MIN_DISTINCT = 0.20
 
 
-def doc_repetition_stats(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def doc_repetition_stats(docs: DataFrame) -> DataFrame:
     """Per-document repetition profile: distinct-token fraction, most-
     frequent-token fraction, most-frequent-bigram fraction, and the
     fraction of bigram instances that are duplicates (occur >1 time in
@@ -662,7 +647,7 @@ def doc_repetition_stats(docs: DataFrame, *, text_col: str = "text") -> DataFram
 
     docs = ensure_parallelism(docs)
     items = bind(
-        tokens(text_col),
+        tokens("text"),
         lambda t: F.concat(
             F.transform(t, lambda x: F.struct(F.lit(0).alias("kind"), x.alias("g"))),
             F.transform(
@@ -716,10 +701,10 @@ def doc_repetition_stats(docs: DataFrame, *, text_col: str = "text") -> DataFram
     )
 
 
-def sql_doc_repetition_stats(table: str = "documents", text_col: str = "text") -> str:
+def sql_doc_repetition_stats() -> str:
     return f"""
     WITH toks AS (
-        SELECT doc_id, {sql_tokens(text_col)} AS w FROM {table}
+        SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     tok AS (SELECT doc_id, unnest(w) AS t FROM toks),
     tc AS (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
@@ -776,9 +761,7 @@ def sql_doc_repetition_stats(table: str = "documents", text_col: str = "text") -
 ENT_MICRO = 1_000_000  # log quantization: integer micro-nats
 
 
-def doc_char_entropy(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def doc_char_entropy(df: DataFrame) -> DataFrame:
     """Per-document character-distribution entropy in micro-nats — the
     CCNet-style gibberish signal: natural language sits in a narrow
     entropy band (~2.5-3.5 nats for English char distributions), while
@@ -802,14 +785,14 @@ def doc_char_entropy(
     from pyspark.sql import Window
 
     chars = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.explode(
             # (?s) makes '.' match EVERY character on both engines: Java's
             # '.' excludes \r, U+0085, U+2028, U+2029 while DuckDB's RE2 '.'
             # excludes only \n — a crawl corpus with \r would silently skew
             # n_chars/entropy against the oracle without the DOTALL flag
             # (ADVICE r10).
-            F.expr(f"regexp_extract_all({text_col}, '(?s).', 0)")
+            F.expr("regexp_extract_all(text, '(?s).', 0)")
         ).alias("ch"),
     )
     counts = chars.groupBy("doc_id", "ch").agg(
@@ -840,13 +823,11 @@ def doc_char_entropy(
     )
 
 
-def sql_doc_char_entropy(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_doc_char_entropy() -> str:
     return f"""
     WITH chars AS (
-        SELECT doc_id, unnest(regexp_extract_all({text_col}, '(?s).')) AS ch
-        FROM {table}
+        SELECT doc_id, unnest(regexp_extract_all(text, '(?s).')) AS ch
+        FROM documents
     ),
     counts AS (
         SELECT doc_id, ch, COUNT(*) AS c FROM chars GROUP BY 1, 2
@@ -903,7 +884,7 @@ def _sql_count_occurrences(expr: str, needle_sql: str, needle_len: int) -> str:
     )
 
 
-def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """Per-document Gopher rule metrics + the keep/drop verdict.
 
     The published format filters (word-count bounds, mean-word-length
@@ -920,7 +901,7 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     NULL text scores as the empty document (P5 posture) and fails the
     word-count rule, so ``keep`` is FALSE — never silently passes.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     words = F.filter(tokens(text), lambda x: x != "")
     n_words = F.size(words).cast("bigint")
     n_words1 = F.greatest(n_words, F.lit(1).cast("bigint"))
@@ -976,11 +957,9 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def sql_gopher_quality_flags(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_gopher_quality_flags() -> str:
     stops = ", ".join(f"'{s}'" for s in GOPHER_STOPWORDS)
-    t = f"COALESCE({text_col}, '')"
+    t = "COALESCE(text, '')"
     n_hash = _sql_count_occurrences("text", "'#'", 1)
     n_dots = _sql_count_occurrences("text", "'...'", 3)
     n_uell = _sql_count_occurrences("text", "chr(8230)", 1)
@@ -989,7 +968,7 @@ def sql_gopher_quality_flags(
         SELECT doc_id, {t} AS text,
                list_filter({sql_tokens(t)}, x -> x <> '') AS w,
                string_split({t}, chr(10)) AS lines
-        FROM {table}
+        FROM documents
     ),
     m AS (
         SELECT doc_id,
@@ -1043,7 +1022,7 @@ def sql_gopher_quality_flags(
 ENCODING_ANOMALY_RATIO = 0.001
 
 
-def doc_encoding_anomalies(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_encoding_anomalies(df: DataFrame) -> DataFrame:
     """Per-document encoding-damage report: replacement characters
     (U+FFFD), classic UTF-8-decoded-as-Latin-1 mojibake markers
     (``Ã``, ``â€``), C0 control characters (other than tab/newline/CR),
@@ -1064,7 +1043,7 @@ def doc_encoding_anomalies(df: DataFrame, text_col: str = "text") -> DataFrame:
     as the empty document (zero anomalies, not-suspect): absent text is
     a completeness problem, not decode damage.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(text).cast("bigint")
     n_repl = _count_occurrences(text, "�")
     n_moji = F.regexp_count(
@@ -1087,10 +1066,8 @@ def doc_encoding_anomalies(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def sql_doc_encoding_anomalies(
-    table: str = "documents", text_col: str = "text"
-) -> str:
-    t = f"COALESCE({text_col}, '')"
+def sql_doc_encoding_anomalies() -> str:
+    t = "COALESCE(text, '')"
     n_repl = _sql_count_occurrences("text", "chr(65533)", 1)
     n_moji = (
         r"CAST(len(regexp_extract_all(text,"
@@ -1101,7 +1078,7 @@ def sql_doc_encoding_anomalies(
     ctl = r"[\x00-\x08\x0b\x0c\x0e-\x1f]"
     return f"""
     WITH base AS (
-        SELECT doc_id, {t} AS text FROM {table}
+        SELECT doc_id, {t} AS text FROM documents
     ),
     m AS (
         SELECT doc_id,
@@ -1128,7 +1105,7 @@ def sql_doc_encoding_anomalies(
 # ---------------------------------------------------------------------------
 
 
-def doc_dedup_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_dedup_lines(df: DataFrame) -> DataFrame:
     """(doc_id, n_lines, n_removed, text_clean): each document with every
     repeated line dropped, keeping the FIRST occurrence in order — the
     within-document half of CCNet's line-level dedup (nav menus, footers,
@@ -1145,7 +1122,7 @@ def doc_dedup_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from ..functions import bind
 
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     out = bind(
         F.split(text, "\n"),
         lambda lines: bind(
@@ -1171,12 +1148,12 @@ def doc_dedup_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def sql_doc_dedup_lines(table: str = "documents", text_col: str = "text") -> str:
-    return f"""
+def sql_doc_dedup_lines() -> str:
+    return """
     WITH base AS (
         SELECT doc_id,
-               string_split(COALESCE({text_col}, ''), chr(10)) AS lines
-        FROM {table}
+               string_split(COALESCE(text, ''), chr(10)) AS lines
+        FROM documents
     ),
     kept AS (
         SELECT doc_id, lines,
@@ -1212,9 +1189,7 @@ QCLF_WEIGHTS_MILLI = tuple(
 )
 
 
-def quality_classifier_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_classifier_score(df: DataFrame) -> DataFrame:
     """fastText-style hashed-linear quality-classifier INFERENCE: token →
     feature-hash bucket (``hash60 % buckets``) → weight lookup in the
     broadcast-literal table → exact integer sum → logistic score — the
@@ -1237,7 +1212,7 @@ def quality_classifier_score(
     # "int" keeps the element type the old per-element F.lit(int) form
     # produced, so downstream sum/schema types are unchanged
     w_lit = array_lit([int(w) for w in QCLF_WEIGHTS_MILLI], "int")
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     score = bind(
         tokens(text),
         lambda t: F.struct(
@@ -1253,7 +1228,7 @@ def quality_classifier_score(
         ),
     )
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         score["n"].alias("n_tokens"),
         score["s"].alias("score_milli"),
         F.round(
@@ -1274,16 +1249,14 @@ def quality_classifier_score(
     )
 
 
-def sql_quality_classifier_score(
-    table: str = "documents", text_col: str = "text"
-) -> str:
+def sql_quality_classifier_score() -> str:
     weights = ", ".join(str(int(w)) for w in QCLF_WEIGHTS_MILLI)
     h = sql_hash60("tok")
     return f"""
     WITH base AS (
         SELECT doc_id,
-               {sql_tokens(f"COALESCE({text_col}, '')")} AS w
-        FROM {table}
+               {sql_tokens("COALESCE(text, '')")} AS w
+        FROM documents
     ),
     scored AS (
         SELECT doc_id,

@@ -34,13 +34,7 @@ from pyspark.sql import functions as F
 from ..functions import dsum, sql_dsum
 
 
-def daily_dense_series(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def daily_dense_series(events: DataFrame) -> DataFrame:
     """(key, day, revenue, n_events, close, is_observed): the gap-filled
     daily series per key over the full observed span.
 
@@ -49,12 +43,12 @@ def daily_dense_series(
     forward-filled across missing days and 0.0 before a key's first
     observation; ``revenue``/``n_events`` zero-fill. Null keys are
     excluded (they would form a phantom series)."""
-    ev = events.filter(F.col(key_col).isNotNull()).select(
-        F.col(key_col).alias("key"),
-        F.to_date(ts_col).alias("day"),
-        F.col(ts_col).alias("_ts"),
+    ev = events.filter(F.col("event_type").isNotNull()).select(
+        F.col("event_type").alias("key"),
+        F.to_date("ts").alias("day"),
+        F.col("ts").alias("_ts"),
         "event_id",
-        F.col(value_col).alias("_v"),
+        F.col("value").alias("_v"),
     )
     last_first = Window.partitionBy("key", "day").orderBy(
         F.col("_ts").desc_nulls_last(), F.col("event_id").desc_nulls_last()
@@ -105,19 +99,13 @@ def daily_dense_series(
     )
 
 
-def sql_daily_dense_series(
-    table: str = "events",
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_daily_dense_series() -> str:
     return f"""
     WITH ev AS (
-        SELECT {key_col} AS key, CAST({ts_col} AS DATE) AS day,
-               {ts_col} AS _ts, event_id, {value_col} AS _v
-        FROM {table}
-        WHERE {key_col} IS NOT NULL
+        SELECT event_type AS key, CAST(ts AS DATE) AS day,
+               ts AS _ts, event_id, value AS _v
+        FROM events
+        WHERE event_type IS NOT NULL
     ),
     daily AS (
         SELECT key, day,
@@ -157,7 +145,7 @@ def sql_daily_dense_series(
 # ---------------------------------------------------------------------------
 
 
-def daily_value_trend(events: DataFrame, *, key_col: str = "event_type") -> DataFrame:
+def daily_value_trend(events: DataFrame) -> DataFrame:
     """Per-key linear trend over the daily value series: OLS slope and
     intercept of (day index, daily total) via the closed-form sums — the
     in-SQL trend detector behind "is this metric drifting" alerts.
@@ -173,17 +161,17 @@ def daily_value_trend(events: DataFrame, *, key_col: str = "event_type") -> Data
     """
     daily = (
         events.filter(F.col("value").isNotNull())
-        .groupBy(key_col, F.col("ts").cast("date").alias("d"))
+        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
         .agg(
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents")
         )
     )
     # day offsets need the per-key min day; compute it first, join back
     # (broadcast — |keys| rows), then aggregate the OLS sums exactly once.
-    mins = daily.groupBy(key_col).agg(F.min("d").alias("_d0"))
+    mins = daily.groupBy("event_type").agg(F.min("d").alias("_d0"))
     x = F.datediff(F.col("d"), F.col("_d0")).cast("bigint")
-    terms = daily.join(F.broadcast(mins), key_col).select(
-        key_col,
+    terms = daily.join(F.broadcast(mins), "event_type").select(
+        "event_type",
         x.alias("x"),
         F.col("cents").alias("y"),
     )
@@ -192,7 +180,7 @@ def daily_value_trend(events: DataFrame, *, key_col: str = "event_type") -> Data
     # so x·y (and the det/numerator cross terms) can wrap int64 silently
     # for a ~1e15-cent daily total over a multi-year span.
     d19 = "decimal(19,0)"
-    agg = terms.groupBy(key_col).agg(
+    agg = terms.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
@@ -218,17 +206,17 @@ def daily_value_trend(events: DataFrame, *, key_col: str = "event_type") -> Data
         F.col("sy").cast("double") - slope_cents * F.col("sx").cast("double")
     ) / n.cast("double")
     return agg.select(
-        key_col,
+        "event_type",
         "n_days",
         (slope_cents / 100.0).alias("slope_per_day"),
         (intercept_cents / 100.0).alias("intercept"),
     )
 
 
-def sql_daily_value_trend(key_col: str = "event_type") -> str:
-    return f"""
+def sql_daily_value_trend() -> str:
+    return """
     WITH daily AS (
-        SELECT {key_col},
+        SELECT event_type,
                CAST(ts AS DATE) AS d,
                CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
                    AS cents
@@ -236,15 +224,15 @@ def sql_daily_value_trend(key_col: str = "event_type") -> str:
         WHERE value IS NOT NULL
         GROUP BY 1, 2
     ),
-    mins AS (SELECT {key_col}, MIN(d) AS d0 FROM daily GROUP BY 1),
+    mins AS (SELECT event_type, MIN(d) AS d0 FROM daily GROUP BY 1),
     terms AS (
-        SELECT daily.{key_col},
+        SELECT daily.event_type,
                CAST(daily.d - mins.d0 AS BIGINT) AS x,
                daily.cents AS y
-        FROM daily JOIN mins USING ({key_col})
+        FROM daily JOIN mins USING (event_type)
     ),
     agg AS (
-        SELECT {key_col},
+        SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_days,
                CAST(SUM(x) AS BIGINT) AS sx,
                CAST(SUM(y) AS BIGINT) AS sy,
@@ -253,7 +241,7 @@ def sql_daily_value_trend(key_col: str = "event_type") -> str:
         FROM terms GROUP BY 1
     ),
     slopes AS (
-        SELECT {key_col}, n_days, sx, sy,
+        SELECT event_type, n_days, sx, sy,
                CASE WHEN n_days * sxx - CAST(sx AS HUGEINT) * sx > 0
                     THEN CAST(n_days * sxy - CAST(sx AS HUGEINT) * sy
                               AS DOUBLE)
@@ -262,7 +250,7 @@ def sql_daily_value_trend(key_col: str = "event_type") -> str:
                     END AS slope_cents
         FROM agg
     )
-    SELECT {key_col}, n_days,
+    SELECT event_type, n_days,
            slope_cents / 100.0 AS slope_per_day,
            ((CAST(sy AS DOUBLE) - slope_cents * CAST(sx AS DOUBLE))
             / CAST(n_days AS DOUBLE)) / 100.0 AS intercept
@@ -277,14 +265,12 @@ def sql_daily_value_trend(key_col: str = "event_type") -> str:
 ROLLING_DISTINCT_DAYS = 7
 
 
-def rolling_distinct_users(
-    events: DataFrame, *, window_days: int = ROLLING_DISTINCT_DAYS
-) -> DataFrame:
-    """Trailing ``window_days``-day distinct active users per day — the
+def rolling_distinct_users(events: DataFrame) -> DataFrame:
+    """Trailing ``ROLLING_DISTINCT_DAYS``-day distinct active users per day — the
     rolling-reach metric. Distincts don't add across days, so the naive
     sum-of-daily-distincts is wrong and a per-day full rescan is
     quadratic; the exact scalable form is a BOUNDED EXPLODE: each
-    distinct (user, active_day) contributes to the ≤ ``window_days``
+    distinct (user, active_day) contributes to the ≤ ``ROLLING_DISTINCT_DAYS``
     window anchor days it falls inside, then one distinct-agg per anchor.
     Row amplification is a fixed ×7, shuffles carry (user, day) pairs —
     never raw events. The sketch-merge production lane
@@ -302,7 +288,7 @@ def rolling_distinct_users(
         "user_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(window_days - 1)),
+                F.sequence(F.lit(0), F.lit(ROLLING_DISTINCT_DAYS - 1)),
                 lambda i: F.date_add(F.col("d"), i),
             )
         ).alias("anchor"),
@@ -316,24 +302,24 @@ def rolling_distinct_users(
         fanout.join(observed, "anchor")
         .groupBy("anchor")
         .agg(
-            F.count_distinct("user_id").alias(f"n_users_{window_days}d")
+            F.count_distinct("user_id").alias(f"n_users_{ROLLING_DISTINCT_DAYS}d")
         )
     )
 
 
-def sql_rolling_distinct_users(window_days: int = ROLLING_DISTINCT_DAYS) -> str:
+def sql_rolling_distinct_users() -> str:
     return f"""
     WITH pairs AS (
         SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
     ),
     fanout AS (
         SELECT user_id, d + CAST(i AS INT) AS anchor
-        FROM pairs, range(0, {window_days}) t(i)
+        FROM pairs, range(0, {ROLLING_DISTINCT_DAYS}) t(i)
     ),
     observed AS (SELECT DISTINCT CAST(ts AS DATE) AS anchor FROM events)
     SELECT f.anchor,
            CAST(COUNT(DISTINCT f.user_id) AS BIGINT)
-               AS n_users_{window_days}d
+               AS n_users_{ROLLING_DISTINCT_DAYS}d
     FROM fanout f JOIN observed USING (anchor)
     GROUP BY 1
     """
@@ -433,7 +419,7 @@ def sql_pending_backlog() -> str:
 # ---------------------------------------------------------------------------
 
 
-def time_weighted_value(events: DataFrame, *, key_col: str = "event_type") -> DataFrame:
+def time_weighted_value(events: DataFrame) -> DataFrame:
     """Per-key TIME-weighted average of ``value``: each event's value holds
     until the key's next event (a step function), and the average weights
     each step by how long it held — the TWAP / time-weighted telemetry mean
@@ -459,7 +445,7 @@ def time_weighted_value(events: DataFrame, *, key_col: str = "event_type") -> Da
     ev = events.filter(
         F.col("value").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.col(key_col).alias("key"),
+        F.col("event_type").alias("key"),
         F.unix_micros("ts").alias("t_us"),
         "event_id",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -481,7 +467,7 @@ def time_weighted_value(events: DataFrame, *, key_col: str = "event_type") -> Da
         F.sum(F.col("cents").cast(d19) * dt.cast(d19)).alias("wsum"),
     )
     return agg.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("event_type"),
         "n_steps",
         (F.col("span_us").cast("double") / 1e6).alias("span_seconds"),
         F.when(
@@ -493,10 +479,10 @@ def time_weighted_value(events: DataFrame, *, key_col: str = "event_type") -> Da
     )
 
 
-def sql_time_weighted_value(key_col: str = "event_type") -> str:
-    return f"""
+def sql_time_weighted_value() -> str:
+    return """
     WITH ev AS (
-        SELECT {key_col} AS key, epoch_us(ts) AS t_us, event_id,
+        SELECT event_type AS key, epoch_us(ts) AS t_us, event_id,
                CAST(ROUND(value * 100) AS BIGINT) AS cents
         FROM events
         WHERE value IS NOT NULL AND ts IS NOT NULL
@@ -516,7 +502,7 @@ def sql_time_weighted_value(key_col: str = "event_type") -> str:
                SUM(CAST(cents AS HUGEINT) * dt) AS wsum
         FROM steps WHERE dt IS NOT NULL GROUP BY 1
     )
-    SELECT key AS {key_col}, n_steps,
+    SELECT key AS event_type, n_steps,
            CAST(span_us AS DOUBLE) / 1e6 AS span_seconds,
            CASE WHEN span_us > 0
                 THEN CAST(wsum AS DOUBLE) / CAST(span_us AS DOUBLE) / 100.0
@@ -530,7 +516,7 @@ def sql_time_weighted_value(key_col: str = "event_type") -> str:
 # ---------------------------------------------------------------------------
 
 
-def daily_autocorr(events: DataFrame, *, key_col: str = "event_type") -> DataFrame:
+def daily_autocorr(events: DataFrame) -> DataFrame:
     """Per-key lag-1 autocorrelation of the daily value series: Pearson r
     between consecutive observed days' totals — the "is today predicted by
     yesterday" signal behind seasonality/drift triage (r→1 trending, r→0
@@ -547,7 +533,7 @@ def daily_autocorr(events: DataFrame, *, key_col: str = "event_type") -> DataFra
     daily = (
         events.filter(F.col("value").isNotNull())
         .groupBy(
-            F.col(key_col).alias("key"), F.col("ts").cast("date").alias("d")
+            F.col("event_type").alias("key"), F.col("ts").cast("date").alias("d")
         )
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"))
     )
@@ -575,16 +561,16 @@ def daily_autocorr(events: DataFrame, *, key_col: str = "event_type") -> DataFra
     vx = n * F.col("sxx").cast("double") - sx * sx
     vy = n * F.col("syy").cast("double") - sy * sy
     return agg.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("event_type"),
         "n_pairs",
         F.when(vx * vy > 0, cov / F.sqrt(vx * vy)).alias("autocorr_lag1"),
     )
 
 
-def sql_daily_autocorr(key_col: str = "event_type") -> str:
-    return f"""
+def sql_daily_autocorr() -> str:
+    return """
     WITH daily AS (
-        SELECT {key_col} AS key, CAST(ts AS DATE) AS d,
+        SELECT event_type AS key, CAST(ts AS DATE) AS d,
                CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
                    AS cents
         FROM events
@@ -608,7 +594,7 @@ def sql_daily_autocorr(key_col: str = "event_type") -> str:
                SUM(CAST(y AS HUGEINT) * y) AS syy
         FROM pairs GROUP BY 1
     )
-    SELECT key AS {key_col}, n_pairs,
+    SELECT key AS event_type, n_pairs,
            CASE WHEN (CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
                    * (CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
@@ -629,7 +615,7 @@ def sql_daily_autocorr(key_col: str = "event_type") -> str:
 # ---------------------------------------------------------------------------
 
 
-def daily_volume_cusum(events: DataFrame, *, key_col: str = "event_type") -> DataFrame:
+def daily_volume_cusum(events: DataFrame) -> DataFrame:
     """(key, n_days, peak_day, max_cusum_scaled, shift_share): one-sided
     CUSUM changepoint detection over each key's daily event volume — the
     "did this stream's rate step up, and when" alert a volume monitor
@@ -664,12 +650,12 @@ def daily_volume_cusum(events: DataFrame, *, key_col: str = "event_type") -> Dat
     d19 = "decimal(19,0)"
     daily = (
         events.filter(F.col("ts").isNotNull())
-        .groupBy(key_col, F.col("ts").cast("date").alias("d"))
+        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
         .agg(F.count(F.lit(1)).alias("x"))
     )
     # NB: Spark resolves case-insensitively, so the totals' columns must
     # not collide with the date column `d`
-    tot = daily.groupBy(key_col).agg(
+    tot = daily.groupBy("event_type").agg(
         F.sum("x").alias("tot_n"), F.count(F.lit(1)).alias("tot_d")
     )
     dev = (
@@ -677,18 +663,18 @@ def daily_volume_cusum(events: DataFrame, *, key_col: str = "event_type") -> Dat
         - F.col("tot_n").cast(d19)
     )
     run = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy(F.col("d").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    keyed = Window.partitionBy(key_col)
+    keyed = Window.partitionBy("event_type")
     rows = (
-        daily.join(F.broadcast(tot), key_col)
+        daily.join(F.broadcast(tot), "event_type")
         .withColumn("_s", F.sum(dev).over(run))
         .withColumn("_c", F.col("_s") - F.min("_s").over(run))
         .withColumn("_mc", F.max("_c").over(keyed))
     )
-    return rows.groupBy(key_col).agg(
+    return rows.groupBy("event_type").agg(
         F.max("tot_d").alias("n_days"),
         F.min(F.when(F.col("_c") == F.col("_mc"), F.col("d"))).alias(
             "peak_day"
@@ -703,10 +689,10 @@ def daily_volume_cusum(events: DataFrame, *, key_col: str = "event_type") -> Dat
     )
 
 
-def sql_daily_volume_cusum(key_col: str = "event_type") -> str:
-    return f"""
+def sql_daily_volume_cusum() -> str:
+    return """
     WITH daily AS (
-        SELECT {key_col} AS key, CAST(ts AS DATE) AS d,
+        SELECT event_type AS key, CAST(ts AS DATE) AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
     ),
@@ -734,7 +720,7 @@ def sql_daily_volume_cusum(key_col: str = "event_type") -> str:
         SELECT key, MAX(c) OVER (PARTITION BY key) AS mc, c, d, n, dd
         FROM cus
     )
-    SELECT key AS {key_col},
+    SELECT key AS event_type,
            MAX(dd) AS n_days,
            MIN(CASE WHEN c = mc THEN d END) AS peak_day,
            CAST(MAX(c) AS DOUBLE) AS max_cusum_scaled,
@@ -753,9 +739,7 @@ def sql_daily_volume_cusum(key_col: str = "event_type") -> str:
 BURST_GAP_US = 60_000_000  # gaps under a minute count as burst behavior
 
 
-def user_interarrival_stats(
-    events: DataFrame, *, key_col: str = "user_id"
-) -> DataFrame:
+def user_interarrival_stats(events: DataFrame) -> DataFrame:
     """Per-user inter-arrival profile of the event stream: gap count,
     mean/min/max gap seconds, and how many gaps were sub-minute bursts —
     the rate-anomaly fingerprint that separates organic users from bots
@@ -772,7 +756,7 @@ def user_interarrival_stats(
     0/0. Null timestamps are non-observations.
     """
     ev = events.filter(F.col("ts").isNotNull()).select(
-        F.col(key_col).alias("key"),
+        F.col("user_id").alias("key"),
         F.unix_micros("ts").alias("t_us"),
         "event_id",
     )
@@ -793,7 +777,7 @@ def user_interarrival_stats(
             ).alias("_n_burst"),
         )
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "n_events",
             "n_gaps",
             F.when(
@@ -811,10 +795,10 @@ def user_interarrival_stats(
     )
 
 
-def sql_user_interarrival_stats(key_col: str = "user_id") -> str:
+def sql_user_interarrival_stats() -> str:
     return f"""
     WITH ev AS (
-        SELECT {key_col} AS key, epoch_us(ts) AS t_us, event_id
+        SELECT user_id AS key, epoch_us(ts) AS t_us, event_id
         FROM events WHERE ts IS NOT NULL
     ),
     gaps AS (
@@ -825,7 +809,7 @@ def sql_user_interarrival_stats(key_col: str = "user_id") -> str:
                ) AS gap_us
         FROM ev
     )
-    SELECT key AS {key_col},
+    SELECT key AS user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(gap_us) AS BIGINT) AS n_gaps,
            CASE WHEN COUNT(gap_us) > 0

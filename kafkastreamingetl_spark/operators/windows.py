@@ -20,19 +20,15 @@ from ..functions import dsum
 def windowed_agg(
     df: DataFrame,
     *,
-    ts_col: str = "ts",
     window: str = "1 hour",
     slide: str | None = None,
     keys: list[str] | None = None,
-    value_col: str = "value",
-    id_col: str = "event_id",
-    user_col: str = "user_id",
     approx_distinct: bool = False,
 ) -> DataFrame:
     """Tumbling (slide=None) or sliding event-time window aggregation.
 
     Aggregates mirror reference spark/app.py:168-173: total of the metric
-    column, distinct-count of the event id (``id_col`` — the reference's
+    column, distinct-count of the event id (``event_id`` — the reference's
     ``unique_events``, spark/app.py:171), distinct users, max event time,
     and a row count. ``approx_distinct=True`` uses HyperLogLog++
     (``approx_count_distinct``, the reference's streaming-safe choice,
@@ -46,13 +42,13 @@ def windowed_agg(
     see flat columns.
     """
     keys = keys or []
-    win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
+    win = F.window("ts", window, slide) if slide else F.window("ts", window)
     d = F.approx_count_distinct if approx_distinct else F.countDistinct
     agg = df.groupBy(win.alias("window"), *keys).agg(
-        dsum(value_col, "total_value"),
-        d(id_col).alias("unique_events"),
-        d(user_col).alias("unique_users"),
-        F.max(ts_col).alias("max_ts"),
+        dsum("value", "total_value"),
+        d("event_id").alias("unique_events"),
+        d("user_id").alias("unique_users"),
+        F.max("ts").alias("max_ts"),
         F.count(F.lit(1)).alias("n_events"),
     )
     return (
@@ -66,14 +62,7 @@ def windowed_agg(
     )
 
 
-def session_agg(
-    df: DataFrame,
-    *,
-    ts_col: str = "ts",
-    gap: str = "2 hours",
-    key: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def session_agg(df: DataFrame, *, gap: str = "2 hours") -> DataFrame:
     """Session windows: per-key activity bursts separated by ≥ ``gap``.
 
     ``F.session_window`` (not in the reference — SURVEY.md §2.8 T2 notes it
@@ -83,13 +72,13 @@ def session_agg(
     the same cost shape as any keyed aggregation. DuckDB oracle twin: the
     classic gaps-and-islands (lag → new-session flag → running sum id).
     """
-    w = F.session_window(ts_col, gap)
-    agg = df.groupBy(w.alias("w"), key).agg(
-        dsum(value_col, "total_value"),
+    w = F.session_window("ts", gap)
+    agg = df.groupBy(w.alias("w"), "user_id").agg(
+        dsum("value", "total_value"),
         F.count(F.lit(1)).alias("n_events"),
     )
     return agg.select(
-        key,
+        "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
         "total_value",
@@ -97,14 +86,7 @@ def session_agg(
     )
 
 
-def sql_session_agg(
-    table: str = "events",
-    *,
-    ts_col: str = "ts",
-    gap_sql: str = "INTERVAL 2 HOUR",
-    key: str = "user_id",
-    value_col: str = "value",
-) -> str:
+def sql_session_agg() -> str:
     """DuckDB gaps-and-islands twin of :func:`session_agg`.
 
     New-session predicate is ``diff >= gap`` to match Spark exactly: a
@@ -115,25 +97,25 @@ def sql_session_agg(
 
     return f"""
     WITH marked AS (
-        SELECT {key}, {ts_col}, {value_col},
-               CASE WHEN LAG({ts_col}) OVER w IS NULL
-                      OR {ts_col} - LAG({ts_col}) OVER w >= {gap_sql}
+        SELECT user_id, ts, value,
+               CASE WHEN LAG(ts) OVER w IS NULL
+                      OR ts - LAG(ts) OVER w >= INTERVAL 2 HOUR
                     THEN 1 ELSE 0 END AS is_new
-        FROM {table}
-        WINDOW w AS (PARTITION BY {key} ORDER BY {ts_col} ASC NULLS FIRST)
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC NULLS FIRST)
     ),
     sess AS (
         SELECT *, SUM(is_new) OVER (
-            PARTITION BY {key} ORDER BY {ts_col} ASC NULLS FIRST
+            PARTITION BY user_id ORDER BY ts ASC NULLS FIRST
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
         ) AS sid
         FROM marked
     )
-    SELECT {key},
-           MIN({ts_col}) AS session_start,
-           MAX({ts_col}) + {gap_sql} AS session_end,
-           {sql_dsum(value_col)} AS total_value,
+    SELECT user_id,
+           MIN(ts) AS session_start,
+           MAX(ts) + INTERVAL 2 HOUR AS session_end,
+           {sql_dsum('value')} AS total_value,
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM sess
-    GROUP BY {key}, sid
+    GROUP BY user_id, sid
     """

@@ -125,9 +125,7 @@ def q_clean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_windowed_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/T2 (tumbling; exact-distinct oracle twin) — reference
     spark/app.py:163-181."""
-    return windowed_agg(
-        _t(spark, sf_dir, "events"), window="1 hour", keys=["event_type"]
-    )
+    return windowed_agg(_t(spark, sf_dir, "events"), keys=["event_type"])
 
 
 @query(
@@ -157,7 +155,6 @@ def q_windowed_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets k in [0, window/slide)."""
     return windowed_agg(
         _t(spark, sf_dir, "events"),
-        window="1 hour",
         slide="30 minutes",
         keys=["event_type"],
     )
@@ -2514,7 +2511,6 @@ def a_windowed_tumbling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-safe choice, spark/app.py:171)."""
     return windowed_agg(
         _t(spark, sf_dir, "events"),
-        window="1 hour",
         keys=["event_type"],
         approx_distinct=True,
     )
@@ -2524,7 +2520,6 @@ def a_windowed_tumbling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_windowed_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_agg(
         _t(spark, sf_dir, "events"),
-        window="1 hour",
         slide="30 minutes",
         keys=["event_type"],
         approx_distinct=True,
@@ -2662,7 +2657,7 @@ def a_user_ltv_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@query("scd2_event_type_history", oracle=temporal_ops.sql_scd2_history(100))
+@query("scd2_event_type_history", oracle=temporal_ops.sql_scd2_history())
 def q_scd2_event_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 collapse of the event log: consecutive runs of equal
     event_type per user become validity intervals (operators/temporal.py
@@ -2693,7 +2688,7 @@ def q_user_daily_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temporal_ops.user_daily_streaks(_t(spark, sf_dir, "events"))
 
 
-@query("user_value_ewma", oracle=temporal_ops.sql_user_value_ewma(50))
+@query("user_value_ewma", oracle=temporal_ops.sql_user_value_ewma())
 def q_user_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing EWMA (alpha=1/2, 16-row window) per user in exact integer
     arithmetic — cents scaled by power-of-two weights, one double divide

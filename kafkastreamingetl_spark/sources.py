@@ -53,12 +53,7 @@ MESSY_EVENT_TYPES = tuple(
 # ---------------------------------------------------------------------------
 
 
-def kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
+def kafka_source(spark: SparkSession, bootstrap_servers: str, topic: str) -> DataFrame:
     """S1/T7: Kafka streaming reader (reference spark/app.py:53-59).
 
     ``startingOffsets=earliest`` replays the full topic on a fresh
@@ -69,19 +64,17 @@ def kafka_source(
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "earliest")
         .load()
     )
 
 
-def decode_json_events(
-    df: DataFrame, schema: T.StructType = EVENT_SCHEMA, value_col: str = "value"
-) -> DataFrame:
+def decode_json_events(df: DataFrame, schema: T.StructType = EVENT_SCHEMA) -> DataFrame:
     """S2/F1/F2: bytes→string→``from_json``→flatten (reference
     spark/app.py:61-63). Malformed JSON yields null fields (PERMISSIVE),
     matching the reference's behavior."""
     return df.select(
-        F.from_json(F.col(value_col).cast("string"), schema).alias("data")
+        F.from_json(F.col("value").cast("string"), schema).alias("data")
     ).select("data.*")
 
 
@@ -135,9 +128,7 @@ def synthetic_events_batch(
     n: int,
     *,
     seed: int = 42,
-    n_users: int = 1500,
     base_ts: str = "2024-01-01 00:00:00",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Seed-deterministic dirty events for tests (S9 batch twin).
 
@@ -145,31 +136,22 @@ def synthetic_events_batch(
     so generation parallelizes linearly (contrast: the reference's
     single-threaded 5 msg/s Python loop).
     """
-    rng = spark.range(0, n, numPartitions=n_partitions or spark.sparkContext.defaultParallelism)
+    rng = spark.range(0, n, numPartitions=spark.sparkContext.defaultParallelism)
     return _event_columns(
         rng.select(F.col("id").alias("seq")),
         seed=seed,
-        n_users=n_users,
+        n_users=1500,
         base_ts=base_ts,
     )
 
 
-def synthetic_events_stream(
-    spark: SparkSession,
-    rows_per_second: int = 1000,
-    *,
-    seed: int = 42,
-    n_users: int = 1500,
-    base_ts: str = "2024-01-01 00:00:00",
-) -> DataFrame:
+def synthetic_events_stream(spark: SparkSession) -> DataFrame:
     """S9 streaming: ``rate`` source + the same column pack (reference
     producer loop, producer/producer.py:54-63, minus the sleep)."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
     return _event_columns(
         rate.select(F.col("value").alias("seq")),
-        seed=seed,
-        n_users=n_users,
-        base_ts=base_ts,
+        seed=42,
+        n_users=1500,
+        base_ts="2024-01-01 00:00:00",
     )

@@ -110,11 +110,7 @@ def write_console_stream(
 
 
 def write_memory_stream(
-    df: DataFrame,
-    name: str,
-    *,
-    output_mode: str = "append",
-    available_now: bool = True,
+    df: DataFrame, name: str, *, output_mode: str = "append"
 ) -> StreamingQuery:
     """Memory sink for tests: results land in the temp view ``name``.
 
@@ -122,7 +118,7 @@ def write_memory_stream(
     production path.
     """
     w = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    return _start(w, available_now)
+    return _start(w, True)
 
 
 def write_kafka_stream(
@@ -415,8 +411,6 @@ def alltime_dedup_sink(
     index_path: str,
     checkpoint: str,
     *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
     available_now: bool = False,
 ) -> StreamingQuery:
     """UNBOUNDED all-time streaming dedup with bounded state: the semantics
@@ -440,19 +434,15 @@ def alltime_dedup_sink(
     from .operators.cleaning import dedup_deterministic
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        hashed = batch.withColumn("_h", hash60(F.col(content_col)))
-        seen = _earlier(
-            index_path, "batch_id", batch_id, hashed.select("_h", content_col)
-        )
+        hashed = batch.withColumn("_h", hash60(F.col("text")))
+        seen = _earlier(index_path, "batch_id", batch_id, hashed.select("_h", "text"))
         survivors = dedup_deterministic(
-            hashed.join(seen, ["_h", content_col], "left_anti"),
-            ["_h", content_col],
-            [F.asc(id_col)],
+            hashed.join(seen, ["_h", "text"], "left_anti"),
+            ["_h", "text"],
+            [F.asc("doc_id")],
         ).localCheckpoint(eager=True)
         _write_tagged(survivors.drop("_h"), out_path, "batch_id", batch_id)
-        _write_tagged(
-            survivors.select("_h", content_col), index_path, "batch_id", batch_id
-        )
+        _write_tagged(survivors.select("_h", "text"), index_path, "batch_id", batch_id)
 
     return foreach_batch_sink(
         df, dedup_batch, checkpoint, available_now=available_now
@@ -510,8 +500,6 @@ def neardup_flag_sink(
     index_path: str,
     checkpoint: str,
     *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
     available_now: bool = False,
 ) -> StreamingQuery:
     """Streaming NEAR-duplicate detection with zero executor state: the
@@ -538,15 +526,13 @@ def neardup_flag_sink(
     from .operators.dedup import minhash_signatures
 
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signatures(batch, content_col, id_col).localCheckpoint(
-            eager=True
-        )
+        sigs = minhash_signatures(batch).localCheckpoint(eager=True)
         seen = _earlier(
             index_path, "batch_id", batch_id, sigs.select("band", "sig")
         ).distinct()
         report = _flag_report(
-            sigs.select(id_col).distinct(), sigs, sigs, seen, ["band", "sig"],
-            id_col, "n_index_bands",
+            sigs.select("doc_id").distinct(), sigs, sigs, seen, ["band", "sig"],
+            "doc_id", "n_index_bands",
         )
         _write_tagged(report, out_path, "batch_id", batch_id)
         _write_tagged(sigs, index_path, "batch_id", batch_id)
@@ -563,8 +549,6 @@ def neardup_ingest_step(
     tag_col: str,
     tag,
     *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
     min_jaccard: float | None = None,
 ) -> tuple[DataFrame, bool]:
     """One batch of the near-dup ingest loop, shared by
@@ -596,30 +580,28 @@ def neardup_ingest_step(
     mj = NEARDUP_MIN_JACCARD if min_jaccard is None else min_jaccard
     sigs_path = os.path.join(index_path, "sigs")
     feats_path = os.path.join(index_path, "feats")
-    batch_feats = shingle_features(batch, content_col, id_col)
+    batch_feats = shingle_features(batch)
     base_sigs = _earlier(
         sigs_path,
         tag_col,
         tag,
-        minhash_signatures(batch, content_col, id_col, feats=batch_feats),
+        minhash_signatures(batch, feats=batch_feats),
     )
     base_feats = _earlier(feats_path, tag_col, tag, batch_feats)
     # rows-below-current, not path existence, decides bootstrap: a
     # replayed FIRST batch re-runs the same bootstrap code path
     bootstrapped = base_sigs.isEmpty()
     if bootstrapped:
-        survivors = neardup_dedup(batch, content_col, id_col, min_jaccard=mj)
+        survivors = neardup_dedup(batch, min_jaccard=mj)
     else:
-        survivors = _incremental_neardup_against(
-            batch, base_sigs, base_feats, content_col, id_col, mj
-        )
+        survivors = _incremental_neardup_against(batch, base_sigs, base_feats, mj)
     # eager lineage cut: the index writes below touch the very paths the
     # survivor plan reads; a merely-persisted survivors would be
     # invalidated by Spark's post-write refreshByPath and silently
     # recompute against its own written signatures
     survivors = survivors.localCheckpoint(eager=True)
-    feats = shingle_features(survivors, content_col, id_col)
-    sigs = minhash_signatures(survivors, content_col, id_col, feats=feats)
+    feats = shingle_features(survivors)
+    sigs = minhash_signatures(survivors, feats=feats)
     _write_tagged(sigs, sigs_path, tag_col, tag)
     _write_tagged(feats, feats_path, tag_col, tag)
     _write_tagged(survivors, corpus_path, tag_col, tag)
@@ -632,9 +614,6 @@ def neardup_ingest_sink(
     index_path: str,
     checkpoint: str,
     *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard: float | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Streaming form of the daily near-dup ingest loop: per micro-batch,
@@ -651,8 +630,7 @@ def neardup_ingest_sink(
     return foreach_batch_sink(
         df,
         lambda batch, batch_id: neardup_ingest_step(
-            batch, corpus_path, index_path, "batch_id", batch_id,
-            content_col=content_col, id_col=id_col, min_jaccard=min_jaccard,
+            batch, corpus_path, index_path, "batch_id", batch_id
         ),
         checkpoint,
         available_now=available_now,
@@ -665,16 +643,12 @@ def contamination_step(
     index_path: str,
     tag_col: str,
     tag,
-    *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int | None = None,
 ) -> tuple[DataFrame, bool]:
     """One batch of the accreted-index contamination diff, shared by
     :func:`contamination_diff_sink` (tag ``batch_id``) and the
     ``contamination-diff`` job (tag ``day``): report what ``batch`` drags
     in against the index's earlier tags — exact content-hash re-crawls
-    and ``n``-gram verbatim-passage collisions — then write the batch's
+    and ``NGRAM_CONTAM_N``-gram verbatim-passage collisions — then write the batch's
     own hashes (``index_path/hashes``) and distinct grams
     (``index_path/grams``), then the report. All three are tagged indexes
     (module docstring). The report is ``contamination_report``, the same
@@ -696,13 +670,13 @@ def contamination_step(
 
     h_path = os.path.join(index_path, "hashes")
     g_path = os.path.join(index_path, "grams")
-    text = F.coalesce(F.col(content_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     # eager lineage cuts: the writes below touch the paths a lazy plan
     # would re-read after Spark's post-write refresh
     proj = batch.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.md5(text).alias("_h"),
-        shingle_hashes(text, NGRAM_CONTAM_N if n is None else n).alias("_g"),
+        shingle_hashes(text, NGRAM_CONTAM_N).alias("_g"),
     ).localCheckpoint(eager=True)
     hashes = proj.select("doc_id", "_h")
     grams = proj.select(F.explode("_g").alias("g")).distinct()
@@ -723,9 +697,6 @@ def contamination_diff_sink(
     index_path: str,
     checkpoint: str,
     *,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Streaming form of ``operators.dedup.batch_contamination_diff``: per
@@ -742,8 +713,7 @@ def contamination_diff_sink(
     return foreach_batch_sink(
         df,
         lambda batch, batch_id: contamination_step(
-            batch, report_path, index_path, "batch_id", batch_id,
-            content_col=content_col, id_col=id_col, n=n,
+            batch, report_path, index_path, "batch_id", batch_id
         ),
         checkpoint,
         available_now=available_now,
@@ -804,9 +774,6 @@ def semantic_flag_sink(
     index_path: str,
     checkpoint: str,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Streaming SEMANTIC near-duplicate flagging — the embedding-space
@@ -830,20 +797,19 @@ def semantic_flag_sink(
     State discipline is the text twin's: zero executor state, horizon =
     life of the index, report and index tagged by ``batch_id`` (module
     docstring). The index stores only (signature, batch_id) — never
-    vectors. ``n_planes`` is the same
-    blocking-width dial as the batch operator (defaults to the session's
-    batch default; scale it ~log2(corpus) — ``similarity.planes_for``)."""
+    vectors. The signature width is the batch operator's,
+    ``similarity.ANN_N_PLANES``."""
     from pyspark.sql import functions as F
 
     from .operators import similarity as sim
 
-    width = sim.ANN_N_PLANES if n_planes is None else n_planes
+    width = sim.ANN_N_PLANES
     planes = sim.planes_for(width)
 
     def flag_batch(batch: DataFrame, batch_id: int) -> None:
-        base = batch.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col),
-            sim.bucket_signature(F.col(vec_col), planes).alias("_sig"),
+        base = batch.filter(F.col("embedding").isNotNull()).select(
+            F.col("vec_id"),
+            sim.bucket_signature(F.col("embedding"), planes).alias("_sig"),
         )
         probe_arr = F.array(
             F.col("_sig"),
@@ -853,17 +819,17 @@ def semantic_flag_sink(
             ],
         )
         probes = base.select(
-            F.col(id_col), F.explode(probe_arr).alias("_bucket")
+            F.col("vec_id"), F.explode(probe_arr).alias("_bucket")
         ).localCheckpoint(eager=True)
         seen = (
             _earlier(index_path, "batch_id", batch_id, base.select("_sig"))
             .select(F.col("_sig").alias("_bucket"))
             .distinct()
         )
-        keyed = base.select(F.col(id_col), F.col("_sig").alias("_bucket"))
+        keyed = base.select(F.col("vec_id"), F.col("_sig").alias("_bucket"))
         report = _flag_report(
-            base.select(id_col), probes, keyed, seen, ["_bucket"],
-            id_col, "n_index_buckets",
+            base.select("vec_id"), probes, keyed, seen, ["_bucket"],
+            "vec_id", "n_index_buckets",
         )
         _write_tagged(report, out_path, "batch_id", batch_id)
         _write_tagged(base.select("_sig"), index_path, "batch_id", batch_id)

@@ -1,17 +1,26 @@
-"""No dead code in the package: every top-level function and class in
-``kafkastreamingetl_spark/`` is reached from code that runs outside tests.
+"""No dead code in the package, and no parameter default nobody moves.
 
-A reference is an AST ``Name``, ``Attribute`` or import-alias node;
-docstrings and comments never count. The roots are the package's
-module-level statements, its registry-decorated definitions (the query
-registry, the approx variants and the UDTF find them through their
-decorator), and all of ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
-``perfbench/``. ``tests/`` is not a root. Reach is taken to a fixpoint from
-the roots, so a definition that only other dead code (or only itself)
-refers to is dead too. ``ALLOW`` keeps the few definitions that have no
-such caller on purpose, each with its reason. Names are matched without
-their module, so a reference reaches every definition of that name. A
-pure AST scan, no Spark."""
+Every top-level function and class in ``kafkastreamingetl_spark/`` is
+reached from code that runs outside tests. A reference is an AST ``Name``,
+``Attribute`` or import-alias node; docstrings and comments never count.
+The roots are the package's module-level statements, its
+registry-decorated definitions (the query registry and the approx variants
+find them through their decorator), and all of ``bench.py``,
+``__spark_entry__.py``, ``tools/`` and ``perfbench/``. ``tests/`` is not a
+root. Reach is taken to a fixpoint from the roots, so a definition that
+only other dead code (or only itself) refers to is dead too. ``ALLOW``
+keeps the few definitions that have no such caller on purpose, each with
+its reason.
+
+Every defaulted parameter of a top-level package function is passed by
+some ``Call``, by keyword or by position, in the package, ``bench.py``,
+``__spark_entry__.py``, ``tools/``, ``perfbench/`` or ``tests/``; a
+``*``/``**`` spread at a call passes all of that function's parameters.
+A default no call moves is a constant, not an option. ``OPTION_ALLOW``
+keeps the deployment settings, each with its reason.
+
+Names are matched without their module, so a reference reaches (and a
+call sets) every definition of that name. A pure AST scan, no Spark."""
 
 from __future__ import annotations
 
@@ -20,7 +29,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "kafkastreamingetl_spark"
-REGISTRY = {"query", "approx_variant", "udtf"}
+REGISTRY = {"query", "approx_variant"}
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 _REFERENCE_ROW = "reference capability that COVERAGE maps to reference lines"
@@ -48,6 +57,12 @@ ALLOW = {
     "read_upserted": _UPSERT,
 }
 
+_CONF = "deployment: the Spark conf a launch sets (SCALE.md's JFR and codegen recipes)"
+OPTION_ALLOW = {
+    "get_spark.extra_conf": _CONF,
+    "get_spark.shuffle_partitions": _CONF,
+}
+
 
 def _refs(tree: ast.AST) -> set[str]:
     out = set()
@@ -66,14 +81,18 @@ def _is_registered(node) -> bool:
     return any(getattr(d, "id", getattr(d, "attr", None)) in REGISTRY for d in calls)
 
 
+def _outside(*dirs: str) -> list[Path]:
+    out = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    for d in ("tools", "perfbench", *dirs):
+        out += sorted((REPO / d).rglob("*.py"))
+    return out
+
+
 def _scan() -> tuple[set[str], dict[str, list[tuple[Path, ast.AST]]]]:
     """(names the roots refer to, candidate definitions by name)."""
     roots: set[str] = set()
     defs: dict[str, list[tuple[Path, ast.AST]]] = {}
-    outside = [REPO / "bench.py", REPO / "__spark_entry__.py"]
-    for d in ("tools", "perfbench"):
-        outside += sorted((REPO / d).rglob("*.py"))
-    for p in outside:
+    for p in _outside():
         roots |= _refs(ast.parse(p.read_text()))
     for p in sorted(PKG.rglob("*.py")):
         for node in ast.parse(p.read_text()).body:
@@ -111,3 +130,48 @@ def test_every_top_level_function_has_a_caller():
         f"{p}:{line} {name} ({n} lines)" for p, line, name, n in unused
     )
     assert not stale, f"ALLOW entries that are reached or gone: {stale}"
+
+
+def _passes() -> dict[str, list[tuple[int, set[str], bool]]]:
+    """Callee name -> (positional count, keyword names, spread) per call."""
+    out: dict[str, list[tuple[int, set[str], bool]]] = {}
+    for p in sorted(PKG.rglob("*.py")) + _outside("tests"):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            kws = {k.arg for k in node.keywords}
+            spread = None in kws or any(isinstance(a, ast.Starred) for a in node.args)
+            out.setdefault(name, []).append((len(node.args), kws, spread))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef):
+    """(param, its position or None if keyword-only) per defaulted param."""
+    pos = fn.args.posonlyargs + fn.args.args
+    for i in range(len(pos) - len(fn.args.defaults), len(pos)):
+        yield pos[i], i
+    for arg, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+        if d is not None:
+            yield arg, None
+
+
+def test_every_parameter_default_is_moved_by_a_call():
+    passes = _passes()
+    unset = []
+    for p in sorted(PKG.rglob("*.py")):
+        for fn in ast.parse(p.read_text()).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for arg, i in _defaulted(fn):
+                if not any(
+                    spread or arg.arg in kws or (i is not None and n > i)
+                    for n, kws, spread in passes.get(fn.name, ())
+                ):
+                    unset.append((p.relative_to(REPO), arg.lineno, f"{fn.name}.{arg.arg}"))
+    dials = [u for u in unset if u[2] not in OPTION_ALLOW]
+    stale = sorted(OPTION_ALLOW.keys() - {key for _, _, key in unset})
+    assert not dials, "defaulted parameters no call passes:\n" + "\n".join(
+        f"{p}:{line} {key}" for p, line, key in dials
+    )
+    assert not stale, f"OPTION_ALLOW entries that a call passes or that are gone: {stale}"
